@@ -22,6 +22,10 @@ class BatchExecutor(initialStore: GraphStore,
   private val seedCtl = new Compiler.IdSeedControl(forcedIdSeed)
 
   final case class Result(
+      /** Unexecuted: the caller's render is the one Spark action per
+        * returned result. Entries not returned ran before execute
+        * returned, so their runtime errors already failed the batch.
+        */
       results: Map[String, DataFrame],
       store: GraphStore,
       /** First id-allocation seed the batch used (None: allocated no
@@ -31,19 +35,29 @@ class BatchExecutor(initialStore: GraphStore,
 
   def execute(batch: Batch): Result = {
     val vars = mutable.Map.empty[String, Stream]
-    val results = mutable.LinkedHashMap.empty[String, DataFrame]
+    val results = mutable.LinkedHashMap.empty[String, (DataFrame, Probe)]
+    // every executed entry's probe, in order (entries, not frames: a
+    // returned stream renders cleanStream(stream), a different frame)
+    val probes = mutable.ArrayBuffer.empty[Probe]
+    // one probe per bound stream, so every condition naming it and the
+    // entry that bound it share one job
+    val streamProbes = new java.util.IdentityHashMap[Stream, Probe]()
     var store = initialStore
-    var prevNonEmpty = true
+    var prev = new Probe(true)
+
+    def probeOf(s: Stream): Probe =
+      streamProbes.computeIfAbsent(s, s => new Probe(!s.df.isEmpty))
 
     def cond(c: BatchCondition): Boolean = c match {
-      case BatchCondition.VarNotEmpty(n) => vars.get(n).exists(!_.df.isEmpty)
-      case BatchCondition.VarEmpty(n) => vars.get(n).forall(_.df.isEmpty)
+      case BatchCondition.VarNotEmpty(n) => vars.get(n).exists(probeOf(_).nonEmpty)
+      case BatchCondition.VarEmpty(n) => vars.get(n).forall(!probeOf(_).nonEmpty)
+      case BatchCondition.VarMinSize(n, 1) => vars.get(n).exists(probeOf(_).nonEmpty)
       // limit(k) bounds the scan: "at least k rows" never needs the
       // full count of a 100 TB variable
       case BatchCondition.VarMinSize(n, k) =>
         vars.get(n).exists(
           _.df.limit(math.min(k, Int.MaxValue.toLong).toInt).count() >= k)
-      case BatchCondition.PrevNotEmpty => prevNonEmpty
+      case BatchCondition.PrevNotEmpty => prev.nonEmpty
     }
 
     def runEntries(entries: Seq[BatchEntry], params: Map[String, PropertyValue]): Unit =
@@ -53,15 +67,16 @@ class BatchExecutor(initialStore: GraphStore,
             val comp = new Compiler(store, params, vars, writeEnabled = batch.write, idSeedCtl = seedCtl)
             comp.compilePublic(q.traversal) match {
               case Left(df) =>
-                q.name.foreach(n => results(n) = df)
-                prevNonEmpty = !df.isEmpty
+                prev = new Probe(!df.isEmpty)
+                q.name.foreach(n => results(n) = (df, prev))
               case Right(stream) =>
+                prev = probeOf(stream)
                 q.name.foreach { n =>
                   vars(n) = stream
-                  results(n) = comp.cleanStream(stream)
+                  results(n) = (comp.cleanStream(stream), prev)
                 }
-                prevNonEmpty = !stream.df.isEmpty
             }
+            probes += prev
             store = comp.store
           }
         case BatchEntry.ForEach(param, body) =>
@@ -89,8 +104,10 @@ class BatchExecutor(initialStore: GraphStore,
       * cross-iteration variable dependence, every iteration except the
       * last is dead work: the loop is equivalent to ONE evaluation with
       * the last element's fields. The driver loop would build one plan
-      * and run one isEmpty job PER ELEMENT — a 1k-element lookup array
-      * costs 1k Spark jobs for a result only its last element defines.
+      * PER ELEMENT, and every element but the last is an entry nothing
+      * returns, so each still costs its error-surfacing probe job — a
+      * 1k-element lookup array costs 1k plans and 1k Spark jobs for a
+      * result only its last element defines.
       * (An exploded-params join would accumulate ALL elements' rows —
       * different semantics than the loop; rebinding is what the parity
       * corpus pins.)
@@ -165,8 +182,10 @@ class BatchExecutor(initialStore: GraphStore,
         try {
           val created = comp.addNodesBulk(label, props,
             items.map(_.asInstanceOf[PropertyValue.VObject].v))
-          name.foreach { n => vars(n) = created; results(n) = comp.cleanStream(created) }
-          prevNonEmpty = true
+          // items is non-empty, so the appended rows are too: no job
+          prev = new Probe(true)
+          streamProbes.put(created, prev)
+          name.foreach { n => vars(n) = created; results(n) = (comp.cleanStream(created), prev) }
           store = comp.store
           true
         } catch {
@@ -180,7 +199,20 @@ class BatchExecutor(initialStore: GraphStore,
     val returned =
       if (batch.returns.isEmpty) results.toMap
       else batch.returns.flatMap(n => results.get(n).map(n -> _)).toMap
-    Result(returned, store, seedCtl.firstSeed)
+    // the caller's render is the one action on a returned entry; every
+    // other entry runs here (at most once), so its runtime error still
+    // fails the batch
+    val rendered = returned.values.map(_._2).toSet
+    probes.foreach(p => if (!rendered(p)) p.nonEmpty)
+    Result(returned.map { case (n, (df, _)) => n -> df }, store, seedCtl.firstSeed)
+  }
+
+  /** Whether one executed entry's frame has rows: run on first read, at
+    * most once (a Catalyst pass plus a Spark job), so an entry nothing
+    * asks about costs no action during the build.
+    */
+  private final class Probe(probe: => Boolean) {
+    lazy val nonEmpty: Boolean = probe
   }
 
   /** Deep scan over the case-class tree (steps, nested traversals,

@@ -33,9 +33,6 @@ object TextAnalysis {
     "es" -> Seq("el", "los", "las", "y", "un", "una", "es", "para", "por", "como"),
   )
 
-  def langScore(c: Column, markers: Seq[String]): Column =
-    size(array_intersect(array_distinct(tokens(c)), array(markers.map(lit): _*)))
-
   /** Heuristic language ID: argmax of marker-set overlap; ties resolve
     * in Markers order; no markers at all -> "und". `langId` is the
     * expression form over a raw text column — it re-tokenizes once per
@@ -208,16 +205,6 @@ object TextAnalysis {
     }
     if (eager && (counts eq built)) counts.count()
     counts
-  }
-
-  /** Drop and unpersist every cached term-count model. */
-  def clearLmCache(): Unit = {
-    lmCache.synchronized {
-      val it = lmCache.values.iterator()
-      while (it.hasNext) it.next().unpersist(false)
-      lmCache.clear()
-    }
-    lmBiCache.clear()
   }
 
   /** Mapped-closure corpus counts — unigram occurrences AND bigram

@@ -192,9 +192,8 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
       paramsJson: String): (graft.ast.Batch, Map[String, graft.ast.PropertyValue]) = {
     val route = Option(stored.get(name))
       .getOrElse(throw new IllegalArgumentException(s"unknown stored query: $name"))
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val tree = if (paramsJson.trim.isEmpty) mapper.createObjectNode()
-      else mapper.readTree(paramsJson)
+    val tree = if (paramsJson.trim.isEmpty) QueryBundle.mapper.createObjectNode()
+      else QueryBundle.mapper.readTree(paramsJson)
     val types = route.params.toMap
     val params = tree.properties().iterator()
     val pmap = scala.collection.mutable.Map.empty[String, graft.ast.PropertyValue]
@@ -223,9 +222,13 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
     if (batch.write) writeLock.synchronized {
       val prev = store
       val out = new BatchExecutor(store, params).execute(batch)
-      // commit order: segment durable first, then the store publishes —
-      // a crash between the two replays the batch on recovery (same
-      // deterministic result), never loses an acked write
+      // commit order: render, then segment, then publish. The render is
+      // the one action on every returned result, so a write whose
+      // result fails to execute is rejected before anything commits;
+      // the segment is durable before the store publishes, so a crash
+      // between the two replays the batch on recovery (same
+      // deterministic result) and never loses an acked write
+      val rendered = renderResults(out.results)
       walRoot.foreach(graft.model.GraphWal.logWrite(_, batch, params, out.idSeed))
       // copy-on-write: labels whose tables kept reference identity are
       // untouched by this batch — their index artifacts migrate to the
@@ -240,7 +243,7 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
       graft.search.IndexCache.migrate(prev.version, out.store.version, unchanged)
       store = out.store
       graft.search.IndexCache.evictOthers(store.version, liveVersions())
-      renderResults(out.results)
+      rendered
     } else {
       val out = new BatchExecutor(store, params).execute(batch)
       renderResults(out.results)

@@ -1,6 +1,6 @@
 package graft.server
 
-import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.JsonNodeFactory
 
 import graft.ast.{Batch, Json, PropertyValue}
@@ -38,6 +38,10 @@ object QueryBundle {
   }
 
   private val F = JsonNodeFactory.instance
+  /** Thread-safe once configured: shared by bundle parsing and every
+    * stored-route request's parameter decode.
+    */
+  private[server] val mapper = new ObjectMapper()
 
   private def writePTy(t: PTy): JsonNode = t match {
     case Scalar(n) => F.textNode(n)
@@ -86,7 +90,7 @@ object QueryBundle {
     * deserialize_query_bundle does — query_generator.rs:196-205).
     */
   def parse(json: String): Map[String, StoredRoute] = {
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    val root = mapper.readTree(json)
     val v = Option(root.get("version")).map(_.asInt)
       .getOrElse(throw new IllegalArgumentException("bundle missing version"))
     if (!SupportedVersions.contains(v))

@@ -9,6 +9,9 @@ import graft.exec.BatchExecutor
   * the parity corpus (013); this spec pins the READ-side fast path —
   * per-iteration rebinding makes only the last element observable, so
   * an eligible read body runs ONE evaluation, not one per element.
+  * It also pins the entry emptiness probes: run only when a condition
+  * reads them, shared by conditions on one entry, and still run for
+  * entries nothing returns.
   */
 class BatchExecutorSpec extends GraftSuite {
 
@@ -25,26 +28,16 @@ class BatchExecutorSpec extends GraftSuite {
     })
 
   test("a 1k-element read foreach runs a bounded number of jobs, not one per element") {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
+    val (got, jobs) = countJobs {
       val r = new BatchExecutor(TestBase.parityGraph(),
         Map("lookups" -> lookups(1000)))
         .execute(Batch(Seq(BatchEntry.ForEach("lookups", lookupBody())),
           returns = Seq("matched")))
-      val got = r.results("matched").collect().map(_.getString(0))
-      assert(got.toSeq == Seq("u3")) // last iteration's binding
-      // listener events are async; give the bus a beat to drain
-      Thread.sleep(500)
-      assert(jobs.get() < 20,
-        s"expected a bounded job count, got ${jobs.get()} (driver loop would be >1000)")
-    } finally sc.removeSparkListener(listener)
+      r.results("matched").collect().map(_.getString(0))
+    }
+    assert(got.toSeq == Seq("u3")) // last iteration's binding
+    assert(jobs < 20,
+      s"expected a bounded job count, got $jobs (driver loop would be >1000)")
   }
 
   test("fast-path result equals the driver loop's (forced via a body condition)") {
@@ -140,4 +133,62 @@ class BatchExecutorSpec extends GraftSuite {
       .select("name").collect().map(_.getString(0)).toSet
     assert(Set("D1", "D2").subsetOf(names), s"got $names")
   }
+
+  private val users = BatchEntry.Query(NamedQuery(Some("users"),
+    g().nWithLabel("ParityUser").t))
+
+  private def gatedCount(name: String, c: BatchCondition) =
+    BatchEntry.Query(NamedQuery(Some(name),
+      g().nWithLabel("ParityUser").count().t, Some(c)))
+
+  test("PrevNotEmpty gates on the entry before it, non-empty or empty") {
+    val none = BatchEntry.Query(NamedQuery(Some("none"),
+      g().nWithLabel("ParityUser")
+        .where(Predicate.Eq("name", VString("Nobody"))).t))
+    val r = new BatchExecutor(TestBase.parityGraph()).execute(Batch(Seq(
+      users, gatedCount("afterUsers", BatchCondition.PrevNotEmpty),
+      none, gatedCount("afterNone", BatchCondition.PrevNotEmpty)),
+      returns = Seq("afterUsers", "afterNone")))
+    assert(r.results.keySet == Set("afterUsers"))
+    assert(singleLong(r.results("afterUsers")) == 3L)
+  }
+
+  test("conditions on one variable share its entry's probe: one job in all") {
+    // PrevNotEmpty, VarNotEmpty and VarMinSize(_, 1) all ask whether
+    // 'users' has rows; 'users' itself is not returned, so its probe
+    // is also the one that surfaces its errors
+    val store = TestBase.parityGraphOnDisk()
+    val (r, jobs) = countJobs(new BatchExecutor(store)
+      .execute(Batch(Seq(users,
+        gatedCount("prev", BatchCondition.PrevNotEmpty),
+        gatedCount("notEmpty", BatchCondition.VarNotEmpty("users")),
+        gatedCount("minOne", BatchCondition.VarMinSize("users", 1))),
+        returns = Seq("prev", "notEmpty", "minOne"))))
+    assert(r.results.keySet == Set("prev", "notEmpty", "minOne"))
+    assert(jobs == 1, s"one shared probe expected, got $jobs jobs")
+  }
+
+  test("an entry that is not returned still fails the batch when its frame fails to run") {
+    val bad = BatchEntry.Query(NamedQuery(Some("bad"), BatchExecutorSpec.failsWhenRun))
+    val count = BatchEntry.Query(NamedQuery(Some("n"), g().nWithLabel("ParityUser").count().t))
+    intercept[Exception] {
+      new BatchExecutor(TestBase.parityGraph())
+        .execute(Batch(Seq(bad, count), returns = Seq("n")))
+    }
+    // returned, the same frame runs only when the caller renders it
+    val r = new BatchExecutor(TestBase.parityGraph())
+      .execute(Batch(Seq(bad, count), returns = Seq("n", "bad")))
+    assert(singleLong(r.results("n")) == 3L)
+    intercept[Exception](r.results("bad").collect())
+  }
+}
+
+object BatchExecutorSpec {
+  /** ParityUsers whose age divided by zero exceeds 1: analyzes fine and
+    * fails when run (ANSI mode, Spark's default, raises DIVIDE_BY_ZERO).
+    */
+  val failsWhenRun: Traversal = g().nWithLabel("ParityUser")
+    .where(Predicate.Compare(
+      Expr.Div(Expr.Property("age"), Expr.Constant(VI64(0))),
+      CompareOp.Gt, Expr.Constant(VI64(1)))).t
 }

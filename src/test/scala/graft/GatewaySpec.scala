@@ -799,4 +799,77 @@ class GatewaySpec extends GraftSuite {
         warmedBody.trim == """{"result":"names","row":{"name":"Carol"}}""")
     } finally gw.stop()
   }
+
+  test("an entry that is not returned and fails when run answers HTTP 400") {
+    import graft.ast._
+    import graft.dsl.Dsl._
+    val gw = new Gateway(TestBase.parityGraph(), port = 16980)
+    gw.registerQuery("count_after_bad", Batch(Seq(
+      BatchEntry.Query(NamedQuery(Some("bad"), BatchExecutorSpec.failsWhenRun)),
+      BatchEntry.Query(NamedQuery(Some("n"), g().nWithLabel("ParityUser").count().t))),
+      returns = Seq("n")))
+    gw.start()
+    try {
+      val conn = new java.net.URL("http://localhost:16980/v1/query/count_after_bad")
+        .openConnection().asInstanceOf[java.net.HttpURLConnection]
+      conn.setRequestMethod("POST"); conn.setDoOutput(true)
+      conn.getOutputStream.write("{}".getBytes("UTF-8"))
+      assert(conn.getResponseCode == 400)
+      val body = new String(conn.getErrorStream.readAllBytes(), "UTF-8")
+      assert(body.contains("error"), body)
+    } finally gw.stop()
+  }
+
+  test("a write whose returned result fails to render commits no segment and publishes nothing") {
+    import graft.ast._
+    import graft.model.GraphWal
+    val dir = java.nio.file.Files.createTempDirectory("gwal-render").toString
+    GraphWal.checkpoint(TestBase.parityGraph(), dir)
+    val gw = new Gateway(GraphWal.recover(spark, dir), walRoot = Some(dir))
+    val before = gw.currentStore
+    val addN = BatchEntry.Query(NamedQuery(Some("made"), Traversal(Vector(
+      Step.AddN("ParityUser", Seq("name" -> PropertyInput.Value(PropertyValue.VString("Zed"))))))))
+    gw.registerQuery("add_then_bad", Batch(Seq(addN,
+      BatchEntry.Query(NamedQuery(Some("bad"), BatchExecutorSpec.failsWhenRun))),
+      returns = Seq("bad"), write = true))
+    intercept[Exception](gw.handleStored("add_then_bad", ""))
+    assert(gw.currentStore.version == before.version)
+    assert(GraphWal.commitPosition(dir) == 0L)
+    val segs = Option(new java.io.File(dir, "wal").list()).toSeq.flatten
+      .filter(_.startsWith("seg-"))
+    assert(segs.isEmpty, s"no segment expected, found $segs")
+    // the same write with a result that renders commits one segment
+    gw.registerQuery("add", Batch(Seq(addN), returns = Seq("made"), write = true))
+    gw.handleStored("add", "")
+    assert(GraphWal.commitPosition(dir) == 1L)
+    assert(gw.currentStore.version != before.version)
+  }
+
+  test("job budget: build starts no Spark job; a stored point lookup costs only its render") {
+    import graft.ast._
+    import graft.dsl.Dsl._
+    import graft.exec.BatchExecutor
+    // an eager action back in the build path fails here, not only in
+    // the serving benchmark
+    val lookup = Batch(Seq(BatchEntry.Query(NamedQuery(Some("user"),
+      g().nWithLabel("ParityUser")
+        .where(Predicate.EqExpr("externalId", Expr.Param("externalId")))
+        .valueMap("externalId", "name").t))), returns = Seq("user"))
+    val params = Map("externalId" -> PropertyValue.VString("u3"))
+    // on disk: actions over the in-memory tables start no job at all
+    val store = TestBase.parityGraphOnDisk()
+    val (built, buildJobs) =
+      countJobs(new BatchExecutor(store, params).execute(lookup))
+    assert(buildJobs == 0, s"execute started $buildJobs jobs")
+    // the gateway's render collect (default maxResponseRows = 10000)
+    val (_, renderJobs) = countJobs(built.results("user").limit(10001).collect())
+    assert(renderJobs > 0)
+    val gw = new Gateway(store)
+    gw.registerQuery("user_by_ext", lookup)
+    val (resp, servedJobs) =
+      countJobs(gw.handleStored("user_by_ext", """{"externalId":"u3"}"""))
+    assert(resp.contains("Carol"), resp)
+    assert(servedJobs <= renderJobs,
+      s"served lookup ran $servedJobs jobs, its render collect alone $renderJobs")
+  }
 }

@@ -51,6 +51,17 @@ object TestBase {
       Map("FOLLOWS" -> EdgeMeta(Set("ParityUser"), Set("ParityUser"))))
   }
 
+  /** The parity graph read back from a parquet snapshot. The in-memory
+    * tables are local relations, which Spark answers on the driver
+    * without a job; every action on this copy starts one, so job
+    * counts over it see each action.
+    */
+  def parityGraphOnDisk(): GraphStore = {
+    val dir = java.nio.file.Files.createTempDirectory("parity-snap").toString
+    graft.model.GraphWal.checkpoint(parityGraph(), dir)
+    graft.model.GraphWal.recover(spark, dir)
+  }
+
   def compiler(store: GraphStore = parityGraph(),
       params: Map[String, graft.ast.PropertyValue] = Map.empty,
       write: Boolean = false): Compiler =
@@ -64,4 +75,38 @@ abstract class GraftSuite extends AnyFunSuite {
   def singleLong(df: DataFrame): Long = df.collect()(0).getLong(0)
   def ids(df: DataFrame): Seq[Long] =
     df.select("id").collect().toSeq.map(_.getLong(0)).sorted
+
+  /** Runs `body` and counts the Spark jobs it starts from this thread.
+    * Jobs carry a per-call local property; a marker job started after
+    * `body` proves the in-order listener bus delivered every earlier
+    * job start, so the count needs no sleep.
+    */
+  def countJobs[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.countJobs"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty(key)).foreach { t =>
+          if (t == tag) jobs.incrementAndGet()
+          else if (t == tag + "-marker") drained.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val out = body
+      sc.setLocalProperty(key, tag + "-marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the marker job")
+      (out, jobs.get())
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
