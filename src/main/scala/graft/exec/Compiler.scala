@@ -3,8 +3,9 @@ package graft.exec
 import graft.ast._
 import graft.model.{EdgeMeta, GraphStore}
 import graft.pipeline.Scratch
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable
 
@@ -757,7 +758,7 @@ class Compiler(
   }
 
   /** Re-stamp the allocation mark after an id-allocating mutation (the
-    * withNodes/withEdges copy carried the pre-allocation mark).
+    * published copy carried the pre-allocation mark).
     */
   private def stampIds(): Unit = store = store.withIdHighWater(idBase.get() - 1)
 
@@ -902,20 +903,88 @@ class Compiler(
     val rows = resolved.zipWithIndex.map { case (vals, i) =>
       org.apache.spark.sql.Row.fromSeq((base + i) +: label +: vals.map(jval))
     }
-    val df = spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, schema)
-    store = store.withNodes(label,
-      store.nodeTables.get(label).map(_.unionByName(df, allowMissingColumns = true))
-        .getOrElse(df))
+    publish(label, isEdges = false, schema, rows)
     stampIds()
-    Stream(store.nodesFor(label).where(col("_id") >= base && col("_id") < base + items.size),
-      isEdges = false, Some(Set(label)))
+    written(label, isEdges = false, rows.map(_.getLong(0)))
+  }
+
+  // One materialization per mutation step: a step runs its output once
+  // (AddN not even that: its row is a literal), merges the delta into
+  // the label overlays on the driver (GraphStore.publish), and continues
+  // with a local frame over the same rows, so neither later steps nor
+  // the rendered result re-run it.
+
+  /** The one data-mutating path: merge a delta into a label's overlay. */
+  private def publish(label: String, isEdges: Boolean, schema: StructType,
+      rows: Seq[Row] = Nil, dead: Iterable[Long] = Nil,
+      meta: Option[EdgeMeta] = None): Unit =
+    store = store.publish(label, isEdges, schema, rows, dead, meta)
+
+  /** Tombstone every (`_id`, `_label`) row of `hit` in its label. */
+  private def publishDrops(hit: Seq[Row], isEdges: Boolean): Unit =
+    hit.groupMap(_.getString(1))(_.getLong(0)).foreach { case (l, ids) =>
+      publish(l, isEdges, StructType(Nil), dead = ids)
+    }
+
+  /** Run a frame once, on the driver. */
+  private def materialize(df: DataFrame): (StructType, Seq[Row]) =
+    (df.schema, df.collect().toSeq)
+
+  /** The stream of a label's just-written rows, read from its overlay. */
+  private def written(label: String, isEdges: Boolean, ids: Seq[Long]): Stream = {
+    val o = store.overlayOf(label, isEdges).get
+    Stream(GraphStore.localFrame(spark, o.schema, ids.flatMap(o.live.get)), isEdges,
+      Some(Set(label)))
+  }
+
+  /** Publish a property write. `out` is the materialized stream with
+    * the written value in column `name`; each of its elements takes that
+    * value on top of its current row: the overlay's version when the row
+    * was written before, else the stream's own columns, else (a stream
+    * that lacks some of the label's columns) the row read back by id.
+    * Every label in `labels` holding, or with `addColumn` gaining, the
+    * column takes its widened type, as a whole-table rewrite would.
+    */
+  private def publishProperty(schema: StructType, out: Seq[Row], labels: Set[String],
+      name: String, isEdges: Boolean, addColumn: Boolean): Unit = {
+    val (idIx, labelIx, valueIx) =
+      (schema.fieldIndex("_id"), schema.fieldIndex("_label"), schema.fieldIndex(name))
+    val byLabel = out.groupBy(_.getString(labelIx))
+    labels.toSeq.sorted.foreach { l =>
+      store.schemaOf(l, isEdges).filter(t => addColumn || t.fieldNames.contains(name))
+        .foreach { t =>
+          val pos = Some(t.fieldNames.indexOf(name)).filter(_ >= 0)
+          val valueField = schema(valueIx)
+          val d = pos.map(i => StructType(t.fields.updated(i, valueField)))
+            .getOrElse(t.add(valueField))
+          def patch(row: Row, v: Any): Row =
+            Row.fromSeq(pos.map(row.toSeq.updated(_, v)).getOrElse(row.toSeq :+ v))
+          val o = store.overlayOf(l, isEdges)
+          val hits = byLabel.getOrElse(l, Nil).distinctBy(_.getLong(idIx))
+            .filterNot(r => o.exists(_.dead(r.getLong(idIx))))
+          val (again, fresh) = hits.partition(r => o.exists(_.live.contains(r.getLong(idIx))))
+          val rewritten = again.map(r => patch(o.get.live(r.getLong(idIx)), r.get(valueIx)))
+          val firsts =
+            if (fresh.isEmpty) Nil
+            else if (d.fieldNames.forall(schema.fieldNames.contains))
+              GraphStore.conform(spark, fresh, schema, d)
+            else {
+              val value = fresh.map(r => r.getLong(idIx) -> r.get(valueIx)).toMap
+              val table = if (isEdges) store.edgesFor(l) else store.nodesFor(l)
+              val id = t.fieldIndex("_id")
+              GraphStore.conform(spark,
+                table.where(col("_id").isin(value.keys.toSeq: _*)).collect().toSeq,
+                table.schema, t).map(r => patch(r, value(r.getLong(id))))
+            }
+          publish(l, isEdges, d, rewritten ++ firsts)
+        }
+    }
   }
 
   /** Write steps (SURVEY §2.8; dsl.rs:3121-3167). Single-writer
     * semantics (the reference cloud is single-writer too, README.md:221):
-    * ids allocate from a session counter; tables are rebuilt
-    * copy-on-write so later batch entries read their own writes.
+    * ids allocate from a session counter; each step publishes its delta
+    * into a new store copy, so later batch entries read their own writes.
     */
   private def applyMutation(step: Step, cur: Option[Stream],
       env: mutable.Map[String, Stream]): Stream = {
@@ -928,18 +997,17 @@ class Compiler(
           scala.util.Try(resolveInputValue(in)).toOption.map(k -> _)
         }.toMap)
         val id = idBase.getAndIncrement()
-        val dummy = spark.range(1)
-        val cols = Seq(lit(id).cast("long").as("_id"), lit(label).as("_label")) ++
+        val one = GraphStore.localFrame(spark, StructType(Nil), Seq(Row.empty))
+        val cols = Seq(lit(id).as("_id"), lit(label).as("_label")) ++
           props.map { case (k, in) =>
-            embedIfIndexed(label, k, inputCol(dummy.toDF(), in), dummy.toDF(),
-              isEdges = false).as(k)
+            embedIfIndexed(label, k, inputCol(one, in), one, isEdges = false).as(k)
           }
-        val row = dummy.select(cols: _*)
-        store = store.withNodes(label,
-          store.nodeTables.get(label).map(_.unionByName(row, allowMissingColumns = true))
-            .getOrElse(row))
+        // a projection of a one-row local relation: the row is computed
+        // while the plan is optimized, and collecting it runs no job
+        val (schema, row) = materialize(one.select(cols: _*))
+        publish(label, isEdges = false, schema, row)
         stampIds()
-        Stream(store.nodesFor(label).where(col("_id") === id), isEdges = false, Some(Set(label)))
+        written(label, isEdges = false, Seq(id))
 
       case Step.AddE(label, to, props) =>
         val target = sourceNodes(to, env)
@@ -949,52 +1017,49 @@ class Compiler(
         val srcProps = s.df.columns.toSeq.filterNot(c =>
           c.startsWith("_b_") || c == "_came" || c == "_score" ||
             c == "_id" || c == "_label" || c == "_src" || c == "_dst")
-        val left = s.df.select(col("_id").as("_src") +: srcProps.map(col): _*)
-        val right = target.df.select(col("_id").as("_dst"))
-        // id allocation without a global single-partition window and
-        // without a per-call count() action: hash-band the rows, number
-        // within each band (parallel windows), and reserve a fixed id
-        // band per AddE call. Deterministic, collision-free, and the
-        // counter advances by arithmetic — the shape that survives a
-        // billion-edge AddE on a real cluster.
+        val left = s.df.select(col("_id").as("_src") +: col("_label").as("__srcl") +:
+          srcProps.map(col): _*)
+        val right = target.df.select(col("_id").as("_dst"), col("_label").as("__dstl"))
+        // id allocation without a global window and without a count()
+        // job: rows hash into AddEBands bands, each band numbers its rows
+        // in (_src, _dst) order, and the call reserves a fixed id range
+        // per band, so the counter advances by arithmetic. The rows are
+        // collected anyway, so the numbering runs on the driver and the
+        // job needs no exchange.
         val base = idBase.getAndAdd(Compiler.AddEBands * Compiler.AddEBandCap)
-        val win = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("__band")).orderBy(col("_src"), col("_dst"))
-        // a band past its reserved range (AddEBandCap rows) would
-        // silently collide with the adjacent band's ids — raise in the
-        // same window pass instead (no extra action)
-        val rn = row_number().over(win).cast("long")
-        val rnChecked = when(rn <= Compiler.AddEBandCap, rn).otherwise(
-          raise_error(lit(s"AddE band overflow: one hash band exceeded " +
-            s"${Compiler.AddEBandCap} rows in a single call")).cast("long"))
-        val cols = Seq(
-          (lit(base) + col("__band") * Compiler.AddEBandCap +
-            rnChecked - 1).as("_id"),
+        val (made, hit) = materialize(left.crossJoin(right).select(Seq(
+          pmod(hash(col("_src"), col("_dst")), lit(Compiler.AddEBands)).cast("long").as("_id"),
           lit(label).as("_label"), col("_src"), col("_dst")) ++
           props.map { case (k, in) =>
             embedIfIndexed(label, k, inputCol(left, in), left, isEdges = true).as(k)
+          } ++ Seq(col("__srcl"), col("__dstl")): _*))
+        val n = made.length - 2
+        val schema = StructType(made.fields.take(n))
+        val rows = hit.groupBy(_.getLong(0)).toSeq.sortBy(_._1).flatMap { case (band, rs) =>
+          // past its reserved range a band would collide with the next
+          if (rs.size > Compiler.AddEBandCap) throw new TraversalException(
+            s"AddE band overflow: one hash band exceeded ${Compiler.AddEBandCap} rows in a single call")
+          rs.sortBy(r => (r.getLong(2), r.getLong(3))).zipWithIndex.map { case (r, i) =>
+            Row.fromSeq((base + band * Compiler.AddEBandCap + i) +: r.toSeq.slice(1, n))
           }
-        val rows = left.crossJoin(right)
-          .withColumn("__band",
-            pmod(hash(col("_src"), col("_dst")), lit(Compiler.AddEBands)).cast("long"))
-          .select(cols: _*)
-        val meta = EdgeMeta(
-          s.labels.getOrElse(store.nodeLabels) ++ store.edgeMeta.get(label).map(_.srcLabels).getOrElse(Set.empty),
-          target.labels.getOrElse(store.nodeLabels) ++ store.edgeMeta.get(label).map(_.dstLabels).getOrElse(Set.empty))
-        store = store.withEdges(label,
-          store.edgeTables.get(label).map(_.unionByName(rows, allowMissingColumns = true))
-            .getOrElse(rows), Some(meta))
+        }
+        // the endpoint labels the new rows actually carry: a target given
+        // by ids reports every node label, and recording that would send
+        // every later traversal of this label through all node tables
+        val meta = store.edgeMeta.get(label) match {
+          case Some(m) => Some(EdgeMeta(m.srcLabels ++ hit.map(_.getString(n)),
+            m.dstLabels ++ hit.map(_.getString(n + 1))))
+          case None if store.edgeLabels(label) => None // unknown endpoints stay unknown
+          case None if hit.isEmpty => Some(EdgeMeta(s.labels.getOrElse(store.nodeLabels),
+            target.labels.getOrElse(store.nodeLabels)))
+          case None => Some(EdgeMeta(hit.map(_.getString(n)).toSet,
+            hit.map(_.getString(n + 1)).toSet))
+        }
+        publish(label, isEdges = true, schema, rows, meta = meta)
         stampIds()
-        Stream(store.edgesFor(label)
-          .where(col("_id") >= base && col("_id") < base + Compiler.AddEBands * Compiler.AddEBandCap),
-          isEdges = true, Some(Set(label)))
+        written(label, isEdges = true, rows.map(_.getLong(0)))
 
       case Step.SetProperty(name, in) =>
-        // a stream may visit the same element twice (e.g. n().out() with
-        // no dedup): without dedup the left join would MULTIPLY matching
-        // rows in the rebuilt table — permanent store corruption. The
-        // computed value is a function of the element's own columns, so
-        // duplicates carry identical values and any survivor is correct.
         // Per-label update column: a vector-indexed property embeds
         // string inputs engine-side (embedIfIndexed doc).
         val labels = s.labels.getOrElse(if (s.isEdges) store.edgeLabels else store.nodeLabels)
@@ -1013,74 +1078,48 @@ class Compiler(
             s"SetProperty($name): string input would embed on vector-indexed " +
               s"label(s) ${embLabels.mkString(",")} but store raw text on " +
               s"${(labels -- embLabels).mkString(",")} — split the traversal per label")
-        labels.foreach { l =>
-          val updates = s.df.select(col("_id").as("__uid"),
-            embedIfIndexed(l, name, inputCol(s.df, in), s.df, s.isEdges).as("__newv"))
-            .dropDuplicates("__uid")
-          val table = if (s.isEdges) store.edgesFor(l) else store.nodesFor(l)
-          val joined = table.join(updates, table("_id") === updates("__uid"), "left")
-          val existing = if (table.columns.contains(name)) col(name) else lit(null)
-          val upd = joined
-            .withColumn("__tmp", when(col("__uid").isNotNull, col("__newv")).otherwise(existing))
-            .drop(name, "__uid", "__newv").withColumnRenamed("__tmp", name)
-          store = if (s.isEdges) store.withEdges(l, upd) else store.withNodes(l, upd)
-        }
-        // the continuing stream mirrors the store write exactly: the
+        // the continuing stream is exactly what the store takes: the
         // mixed case was rejected above, so either every label embeds
-        // or none does
+        // or none does. A stream visiting an element twice carries the
+        // same value both times (it is a function of the element's own
+        // columns), so publishProperty keeps one.
         val streamCol =
           if (labels.nonEmpty && embLabels == labels)
             embedIfIndexed(labels.head, name, inputCol(s.df, in), s.df, s.isEdges)
           else inputCol(s.df, in)
-        s.copy(df = s.df.withColumn(name, streamCol))
+        val (schema, out) = materialize(s.df.withColumn(name, streamCol))
+        publishProperty(schema, out, labels, name, s.isEdges, addColumn = true)
+        s.copy(df = GraphStore.localFrame(spark, schema, out))
 
       case Step.RemoveProperty(name) =>
-        val ids = s.df.select(col("_id").as("__uid")).dropDuplicates("__uid")
         val labels = s.labels.getOrElse(if (s.isEdges) store.edgeLabels else store.nodeLabels)
-        labels.foreach { l =>
-          val table = if (s.isEdges) store.edgesFor(l) else store.nodesFor(l)
-          if (table.columns.contains(name)) {
-            val joined = table.join(ids, table("_id") === ids("__uid"), "left")
-            val upd = joined
-              .withColumn("__tmp", when(col("__uid").isNotNull, lit(null)).otherwise(col(name)))
-              .drop(name, "__uid").withColumnRenamed("__tmp", name)
-            store = if (s.isEdges) store.withEdges(l, upd) else store.withNodes(l, upd)
-          }
-        }
-        s.copy(df = s.df.withColumn(name, lit(null)))
+        val (schema, out) = materialize(s.df.withColumn(name, lit(null)))
+        publishProperty(schema, out, labels, name, s.isEdges, addColumn = false)
+        s.copy(df = GraphStore.localFrame(spark, schema, out))
 
       case Step.Drop =>
-        val ids = s.df.select(col("_id").as("__did"))
-        if (!s.isEdges) {
-          val labels = s.labels.getOrElse(store.nodeLabels)
-          labels.foreach { l =>
-            store = store.withNodes(l,
-              store.nodesFor(l).join(ids, col("_id") === col("__did"), "left_anti"))
-          }
-          // cascade: drop incident edges (dsl.rs:3147 doc)
-          store.edgeLabels.foreach { l =>
-            store = store.withEdges(l, store.edgesFor(l)
-              .join(ids, col("_src") === col("__did"), "left_anti")
-              .join(ids, col("_dst") === col("__did"), "left_anti"))
-          }
-        } else {
-          val labels = s.labels.getOrElse(store.edgeLabels)
-          labels.foreach { l =>
-            store = store.withEdges(l,
-              store.edgesFor(l).join(ids, col("_id") === col("__did"), "left_anti"))
+        val hit = s.df.select("_id", "_label").collect().toSeq
+        publishDrops(hit, s.isEdges)
+        if (!s.isEdges && hit.nonEmpty) {
+          // cascade: drop incident edges (dsl.rs:3147 doc), only from the
+          // edge labels that can touch the dropped nodes' labels
+          val ls = Some(hit.map(_.getString(1)).toSet)
+          val cascade = store.outEdgeLabels(ls) ++ store.inEdgeLabels(ls)
+          if (cascade.nonEmpty) {
+            val ids = hit.map(_.getLong(0))
+            publishDrops(store.edgesUnion(cascade)
+              .where(col("_src").isin(ids: _*) || col("_dst").isin(ids: _*))
+              .select("_id", "_label").collect().toSeq, isEdges = true)
           }
         }
-        s.copy(df = s.df.limit(0))
+        s.copy(df = GraphStore.localFrame(spark, s.df.schema, Nil))
 
       case Step.DropEdge(to) => dropEdges(s, to, None, env)
       case Step.DropEdgeLabeled(to, label) => dropEdges(s, to, Some(label), env)
 
       case Step.DropEdgeById(ref) =>
-        val ids = sourceEdges(ref, env).df.select(col("_id").as("__did"))
-        store.edgeLabels.foreach { l =>
-          store = store.withEdges(l,
-            store.edgesFor(l).join(ids, col("_id") === col("__did"), "left_anti"))
-        }
+        publishDrops(sourceEdges(ref, env).df.select("_id", "_label").collect().toSeq,
+          isEdges = true)
         s
 
       // index DDL needs no source stream (fixtures 020/024 issue bare
@@ -1126,14 +1165,11 @@ class Compiler(
     val srcIds = s.df.select(col("_id").as("__sid"))
     val dstIds = sourceNodes(to, env).df.select(col("_id").as("__tid"))
     val labels = label.map(Set(_)).getOrElse(store.edgeLabels)
-    labels.foreach { l =>
-      val table = store.edgesFor(l)
-      val bad = table
+    if (labels.nonEmpty)
+      publishDrops(store.edgesUnion(labels)
         .join(srcIds, col("_src") === col("__sid"), "left_semi")
         .join(dstIds, col("_dst") === col("__tid"), "left_semi")
-        .select(col("_id").as("__bid"))
-      store = store.withEdges(l, table.join(bad, col("_id") === col("__bid"), "left_anti"))
-    }
+        .select("_id", "_label").collect().toSeq, isEdges = true)
     s
   }
 

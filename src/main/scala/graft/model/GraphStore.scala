@@ -1,7 +1,11 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{NullType, StructType}
+
+import scala.collection.immutable.VectorMap
+import scala.jdk.CollectionConverters._
 
 /** Labeled-property-graph storage for the Spark engine.
   *
@@ -19,22 +23,60 @@ import org.apache.spark.sql.functions._
   * Reserved columns: `_id`, `_label` on nodes; plus `_src`, `_dst` on
   * edges (GraphFrames-style, cf. SURVEY.md §1.1). Reference virtual
   * fields `$id` / `$label` (dsl.rs:2948-2951) resolve to `_id`/`_label`.
+  *
+  * Writes never rewrite a table's plan: each label is a base frame plus
+  * an [[Overlay]] of the rows written since (see [[LabelTable]]), so a
+  * read plan has the same shape after one write or ten thousand.
   */
 final case class EdgeMeta(srcLabels: Set[String], dstLabels: Set[String])
 
-final class GraphStore(
+/** The rows of one label written since its base frame, held on the
+  * driver: the current version of every written row keyed by `_id` (in
+  * write order), and the ids of dropped rows. `schema` is the label
+  * table's schema: the base's columns in order, then the columns writes
+  * added, with types widened as `unionByName` widens them.
+  */
+final class Overlay(val schema: StructType, val live: VectorMap[Long, Row],
+    val dead: Set[Long])
+
+/** One label's table: its base frame (a snapshot scan, or a whole frame
+  * set by `withNodes`/`withEdges`) and the overlay written since.
+  */
+private[model] final class LabelTable(spark: SparkSession, val base: Option[DataFrame],
+    val overlay: Option[Overlay]) {
+  def schema: StructType = overlay.map(_.schema).getOrElse(base.get.schema)
+
+  /** `base ⋈anti overlay._id ∪ live(overlay)`, built once: a store copy
+    * that leaves this label alone carries the same object, so the
+    * label's frame keeps reference identity across writes.
+    */
+  lazy val frame: DataFrame = overlay match {
+    case None => base.get
+    case Some(o) =>
+      val local = GraphStore.localFrame(spark, o.schema, o.live.values.toSeq)
+      val ids = o.live.keys ++ o.dead
+      base match {
+        case None => local
+        case Some(b) =>
+          val kept = if (ids.isEmpty) b else b.where(!col("_id").isin(ids.toSeq: _*))
+          kept.unionByName(local, allowMissingColumns = true)
+      }
+  }
+}
+
+final class GraphStore private (
     val spark: SparkSession,
-    val nodeTables: Map[String, DataFrame],
-    val edgeTables: Map[String, DataFrame],
+    tabs: GraphStore.Tabs,
     val edgeMeta: Map[String, EdgeMeta],
-    val indexes: Set[graft.ast.IndexSpec] = Set.empty,
+    val indexes: Set[graft.ast.IndexSpec],
     /** Store identity for index-artifact caching: every DATA mutation
-      * (withNodes/withEdges) mints a new version, so cached postings/IVF
-      * artifacts can never be served for stale data. DDL-only changes
-      * (withIndexes) keep the version — the data behind any existing
-      * artifact is unchanged, so evicting it would only force rebuilds.
+      * (withNodes/withEdges/publish) mints a new version, so cached
+      * postings/IVF artifacts can never be served for stale data.
+      * DDL-only changes (withIndexes) keep the version — the data behind
+      * any existing artifact is unchanged, so evicting it would only
+      * force rebuilds.
       */
-    val version: String = GraphStore.newVersion(),
+    val version: String,
     /** Highest id ever allocated in this store, when known — the write
       * path seeds its id counter from `idHighWater + 1` instead of a
       * full-table `max(_id)` aggregation (a whole-corpus scan at
@@ -44,29 +86,90 @@ final class GraphStore(
       * path that merges rows with EXTERNAL ids (streaming overlay) must
       * clear it. Persisted in graph_meta.json across save/load.
       */
-    val idHighWater: Option[Long] = None) {
+    val idHighWater: Option[Long]) {
 
-  def withNodes(label: String, df: DataFrame): GraphStore =
-    new GraphStore(spark, nodeTables + (label -> df), edgeTables, edgeMeta,
-      indexes, GraphStore.newVersion(), idHighWater)
-  def withEdges(label: String, df: DataFrame, meta: Option[EdgeMeta] = None): GraphStore =
-    new GraphStore(spark, nodeTables, edgeTables + (label -> df),
-      meta.map(m => edgeMeta + (label -> m)).getOrElse(edgeMeta), indexes,
-      GraphStore.newVersion(), idHighWater)
-  def withIndexes(ix: Set[graft.ast.IndexSpec]): GraphStore =
-    new GraphStore(spark, nodeTables, edgeTables, edgeMeta, ix, version, idHighWater)
-  /** Stamp the durable id allocation mark (no data change — version kept). */
-  def withIdHighWater(n: Long): GraphStore =
-    new GraphStore(spark, nodeTables, edgeTables, edgeMeta, indexes, version, Some(n))
-  /** Forget the allocation mark (rows with external ids were merged). */
-  def clearIdHighWater: GraphStore =
-    new GraphStore(spark, nodeTables, edgeTables, edgeMeta, indexes, version, None)
+  private def nodeTabs = tabs.nodes
+  private def edgeTabs = tabs.edges
+
+  def this(spark: SparkSession, nodeTables: Map[String, DataFrame],
+      edgeTables: Map[String, DataFrame], edgeMeta: Map[String, EdgeMeta],
+      indexes: Set[graft.ast.IndexSpec] = Set.empty,
+      version: String = GraphStore.newVersion(), idHighWater: Option[Long] = None) =
+    this(spark, GraphStore.Tabs(
+      nodeTables.transform((_, df) => new LabelTable(spark, Some(df), None)),
+      edgeTables.transform((_, df) => new LabelTable(spark, Some(df), None))),
+      edgeMeta, indexes, version, idHighWater)
 
   /** Empty store bound to a session (write batches can build a graph
     * from scratch via AddN/AddE).
     */
   def this(spark: SparkSession) =
-    this(spark, Map.empty, Map.empty, Map.empty)
+    this(spark, Map.empty[String, DataFrame], Map.empty[String, DataFrame], Map.empty)
+
+  private def copy(nodeTabs: Map[String, LabelTable] = nodeTabs,
+      edgeTabs: Map[String, LabelTable] = edgeTabs, edgeMeta: Map[String, EdgeMeta] = edgeMeta,
+      indexes: Set[graft.ast.IndexSpec] = indexes, version: String = GraphStore.newVersion(),
+      idHighWater: Option[Long] = idHighWater): GraphStore =
+    new GraphStore(spark, GraphStore.Tabs(nodeTabs, edgeTabs), edgeMeta, indexes, version,
+      idHighWater)
+
+  /** Replace a label's whole frame (its overlay goes with it). */
+  def withNodes(label: String, df: DataFrame): GraphStore =
+    copy(nodeTabs = nodeTabs + (label -> new LabelTable(spark, Some(df), None)))
+  def withEdges(label: String, df: DataFrame, meta: Option[EdgeMeta] = None): GraphStore =
+    copy(edgeTabs = edgeTabs + (label -> new LabelTable(spark, Some(df), None)),
+      edgeMeta = meta.map(m => edgeMeta + (label -> m)).getOrElse(edgeMeta))
+  def withIndexes(ix: Set[graft.ast.IndexSpec]): GraphStore = copy(indexes = ix, version = version)
+  /** Stamp the durable id allocation mark (no data change — version kept). */
+  def withIdHighWater(n: Long): GraphStore = copy(version = version, idHighWater = Some(n))
+  /** Forget the allocation mark (rows with external ids were merged). */
+  def clearIdHighWater: GraphStore = copy(version = version, idHighWater = None)
+
+  /** Merge one mutation's delta into a label's overlay, on the driver:
+    * `rows` (laid out as `schema`) become the current version of their
+    * ids and `dead` ids are dropped. Columns `schema` adds append to the
+    * table and conflicting types widen as `unionByName` would widen
+    * them. Runs no Spark job. A delta that changes nothing returns this
+    * store, so the label keeps its frame and the store its version.
+    */
+  def publish(label: String, isEdges: Boolean, schema: StructType,
+      rows: Seq[Row] = Nil, dead: Iterable[Long] = Nil,
+      meta: Option[EdgeMeta] = None): GraphStore = {
+    val prior = (if (isEdges) edgeTabs else nodeTabs).get(label)
+    if (prior.isEmpty && schema.isEmpty) return this
+    val before = prior.map(_.schema).getOrElse(StructType(Nil))
+    val after = GraphStore.widen(spark, before, schema)
+    if (prior.isDefined && rows.isEmpty && dead.isEmpty &&
+        after == GraphStore.nullable(before) &&
+        meta.forall(edgeMeta.get(label).contains)) return this
+    val o = prior.flatMap(_.overlay)
+    lazy val id = after.fieldIndex("_id")
+    val kept = o.map { ov =>
+      if (ov.schema == after) ov.live
+      else VectorMap.from(ov.live.keys.zip(
+        GraphStore.conform(spark, ov.live.values.toSeq, ov.schema, after)))
+    }.getOrElse(VectorMap.empty[Long, Row])
+    val delta = GraphStore.conform(spark, rows, schema, after)
+    val next = new Overlay(after, (kept -- dead) ++ delta.map(r => r.getLong(id) -> r),
+      o.map(_.dead).getOrElse(Set.empty) ++ dead)
+    val t = new LabelTable(spark, prior.flatMap(_.base), Some(next))
+    if (isEdges)
+      copy(edgeTabs = edgeTabs + (label -> t),
+        edgeMeta = meta.map(m => edgeMeta + (label -> m)).getOrElse(edgeMeta))
+    else copy(nodeTabs = nodeTabs + (label -> t))
+  }
+
+  /** A label's table schema, when the label exists. */
+  def schemaOf(label: String, isEdges: Boolean): Option[StructType] =
+    (if (isEdges) edgeTabs else nodeTabs).get(label).map(_.schema)
+
+  /** A label's overlay, when it has been written since its base. */
+  def overlayOf(label: String, isEdges: Boolean): Option[Overlay] =
+    (if (isEdges) edgeTabs else nodeTabs).get(label).flatMap(_.overlay)
+
+  /** Node / edge frames per label (base plus overlay). */
+  lazy val nodeTables: Map[String, DataFrame] = nodeTabs.transform((_, t) => t.frame)
+  lazy val edgeTables: Map[String, DataFrame] = edgeTabs.transform((_, t) => t.frame)
 
   /** Expose the graph to Spark SQL: `nodes_<label>` / `edges_<label>`
     * temp views — `spark.sql("SELECT ... FROM nodes_Customer JOIN
@@ -78,8 +181,8 @@ final class GraphStore(
   }
 
   /** All node labels that can be reached out of / into the given edge labels. */
-  def nodeLabels: Set[String] = nodeTables.keySet
-  def edgeLabels: Set[String] = edgeTables.keySet
+  def nodeLabels: Set[String] = nodeTabs.keySet
+  def edgeLabels: Set[String] = edgeTabs.keySet
 
   def nodesFor(label: String): DataFrame =
     nodeTables.getOrElse(label, sys.error(s"unknown node label: $label"))
@@ -144,7 +247,53 @@ final class GraphStore(
 }
 
 object GraphStore {
+  /** Both label maps in one parameter, so the private constructor does
+    * not erase to the same signature as the public one.
+    */
+  private final case class Tabs(nodes: Map[String, LabelTable], edges: Map[String, LabelTable])
+
   def newVersion(): String = java.util.UUID.randomUUID().toString
+
+  /** A driver-local frame over `rows` (a `LocalRelation`: projections
+    * and filters over it fold into the plan, so collecting them runs no
+    * Spark job).
+    */
+  def localFrame(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
+  private[model] def nullable(s: StructType): StructType =
+    StructType(s.fields.map(_.copy(nullable = true)))
+
+  /** `to` with the columns of `from` it lacks appended and conflicting
+    * types widened: the schema `unionByName(allowMissingColumns = true)`
+    * gives (analysis over empty relations, no job). Fields nullable.
+    */
+  private[model] def widen(spark: SparkSession, to: StructType,
+      from: StructType): StructType =
+    if (to.isEmpty) nullable(from)
+    else if (from.forall(f => to.fieldNames.contains(f.name) &&
+        (to(f.name).dataType == f.dataType || f.dataType == NullType)))
+      nullable(to)
+    else nullable(localFrame(spark, to, Nil)
+      .unionByName(localFrame(spark, from, Nil), allowMissingColumns = true).schema)
+
+  /** `rows` laid out as `from`, re-laid as `to`: columns by name, absent
+    * ones null, differing types cast (the cast runs as a projection of a
+    * local relation, on the driver, with no job).
+    */
+  def conform(spark: SparkSession, rows: Seq[Row], from: StructType,
+      to: StructType): Seq[Row] = {
+    val idx = to.fieldNames.toSeq.map(from.fieldNames.indexOf(_))
+    val direct = to.fields.toSeq.zip(idx).forall { case (f, i) =>
+      i < 0 || from(i).dataType == f.dataType || from(i).dataType == NullType
+    }
+    if (rows.isEmpty || from == to) rows
+    else if (direct) rows.map(r => Row.fromSeq(idx.map(i => if (i < 0) null else r.get(i))))
+    else localFrame(spark, from, rows).select(to.fields.toSeq.map { f =>
+      (if (from.fieldNames.contains(f.name)) col(f.name) else lit(null))
+        .cast(f.dataType).as(f.name)
+    }: _*).collect().toSeq
+  }
 }
 
 /** Builds the graph projection of the driver's TPC-H-ish testdata

@@ -45,9 +45,12 @@ import scala.jdk.CollectionConverters._
   * `checkpoint` folds the log into the next snapshot and truncates the
   * manifest — the standard compaction step that bounds replay cost
   * (run it on a cadence; every segment since the last checkpoint
-  * replays on recovery). Superseded snapshot dirs are left for an
-  * external GC once no live reader references them (same discipline as
-  * any MVCC table format).
+  * replays on recovery). It saves each label's merged frame, so it also
+  * folds the write overlays (the driver-held rows written since the
+  * base, GraphStore.publish) into the snapshot the next load reads as
+  * its base: the checkpoint cadence bounds driver memory too.
+  * Superseded snapshot dirs are left for an external GC once no live
+  * reader references them (same discipline as any MVCC table format).
   *
   * Streaming ingest unification: a Structured Streaming file sink is
   * ALREADY durable (its `_spark_metadata` manifest gives exactly-once

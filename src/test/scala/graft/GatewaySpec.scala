@@ -872,4 +872,65 @@ class GatewaySpec extends GraftSuite {
     assert(servedJobs <= renderJobs,
       s"served lookup ran $servedJobs jobs, its render collect alone $renderJobs")
   }
+
+  private def writeReq(steps: String): String =
+    s"""{"request_type":"write","query":{"queries":[{"Query":{"name":"w",
+      "steps":[$steps],"condition":null}}],"returns":["w"]},"parameters":{}}"""
+
+  test("a written label keeps its column order, so rendered key order does not change") {
+    val gw = new Gateway(TestBase.parityGraph())
+    val read = """{"request_type":"read","query":{"queries":[{"Query":{"name":"u",
+      "steps":[{"N":{"Ids":[1]}}],"condition":null}}],"returns":["u"]},"parameters":{}}"""
+    val before = gw.handle(read)
+    gw.handle(writeReq("""{"N":{"Ids":[1]}},{"SetProperty":["city",{"Value":{"String":"Oslo"}}]}"""))
+    gw.handle(writeReq("""{"AddN":{"label":"ParityUser","properties":[
+      ["name",{"Value":{"String":"Dave"}}]]}}"""))
+    assert(gw.handle(read) == before.replace("\"London\"", "\"Oslo\""))
+  }
+
+  test("writes to one label leave every other label's frame identical, overlaid ones too") {
+    val gw = new Gateway(TestBase.parityGraph())
+    gw.handle(writeReq("""{"AddN":{"label":"Audit","properties":[["note",{"Value":{"String":"a"}}]]}}"""))
+    val s0 = gw.currentStore
+    // Audit now has an overlay; a ParityUser write must not rebuild it
+    gw.handle(writeReq("""{"NWhere":{"And":[{"Eq":["$label",{"String":"ParityUser"}]},
+      {"Eq":["name",{"String":"Alice"}]}]}},
+      {"SetProperty":["city",{"Value":{"String":"Oslo"}}]}"""))
+    val s1 = gw.currentStore
+    assert(s1.version != s0.version)
+    assert(s1.nodesFor("Audit") eq s0.nodesFor("Audit"))
+    assert(s1.edgesFor("FOLLOWS") eq s0.edgesFor("FOLLOWS"))
+    assert(!(s1.nodesFor("ParityUser") eq s0.nodesFor("ParityUser")))
+  }
+
+  test("job budget: an AddN write and its render run no Spark job; a point SetProperty runs one") {
+    import graft.ast._
+    import graft.dsl.Dsl._
+    import graft.exec.BatchExecutor
+    // on disk, so a scan would show up as a job; the allocation mark
+    // set, so the first write does not scan for the highest id
+    val store = TestBase.parityGraphOnDisk().withIdHighWater(1000L)
+    val add = Batch(Seq(BatchEntry.Query(NamedQuery(Some("made"),
+      g().addN("ParityUser", "name" -> PropertyValue.VString("Zoe")).t))),
+      returns = Seq("made"), write = true)
+    val (made, addJobs) = countJobs(new BatchExecutor(store).execute(add))
+    assert(addJobs == 0, s"AddN execute started $addJobs jobs")
+    val (rendered, renderJobs) = countJobs(made.results("made").limit(10001).collect())
+    assert(renderJobs == 0, s"AddN render started $renderJobs jobs")
+    assert(rendered.map(_.getAs[String]("name")).toSeq == Seq("Zoe"))
+    val set = Batch(Seq(BatchEntry.Query(NamedQuery(Some("upd"),
+      g().nWithLabelWhere("ParityUser", Predicate.Eq("externalId", PropertyValue.VString("u2")))
+        .setProperty("city", PropertyValue.VString("Rome")).t))),
+      returns = Seq("upd"), write = true)
+    val (upd, setJobs) = countJobs(new BatchExecutor(made.store).execute(set))
+    assert(setJobs <= 1, s"point SetProperty execute started $setJobs jobs")
+    val (city, cityJobs) = countJobs(upd.results("upd").select("city").collect())
+    assert(cityJobs == 0 && city.map(_.getString(0)).toSeq == Seq("Rome"))
+    // the whole AddN request through the gateway: decode, execute, render
+    val gw = new Gateway(store)
+    val (resp, gwJobs) = countJobs(gw.handle(writeReq(
+      """{"AddN":{"label":"ParityUser","properties":[["name",{"Value":{"String":"Ann"}}]]}}""")))
+    assert(resp.contains("Ann"), resp)
+    assert(gwJobs == 0, s"AddN request started $gwJobs jobs")
+  }
 }

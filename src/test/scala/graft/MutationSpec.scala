@@ -202,4 +202,90 @@ class MutationSpec extends GraftSuite {
     ), returns = Seq("total"), write = true)
     assert(singleLong(exec.execute(batch).results("total")) == 2)
   }
+
+  private def entry(name: String, t: Traversal) =
+    BatchEntry.Query(NamedQuery(Some(name), t))
+
+  test("AddN, SetProperty and Drop on one id inside one batch read their own writes") {
+    val dora = g().nWithLabelWhere("ParityUser", Predicate.Eq("name", VString("Dora")))
+    val r = new BatchExecutor(TestBase.parityGraph()).execute(Batch(Seq(
+      entry("made", g().addN("ParityUser", "name" -> VString("Dora"), "age" -> VI64(40)).t),
+      entry("madeAge", dora.values("age").t),
+      entry("set", g().nVar("made").setProperty("age", VI64(41)).t),
+      entry("setAge", dora.values("age").t),
+      entry("gone", g().nVar("made").drop().t),
+      entry("left", dora.count().t),
+      entry("users", g().nWithLabel("ParityUser").count().t)),
+      returns = Seq("madeAge", "setAge", "left", "users"), write = true))
+    assert(rows(r.results("madeAge")) == Seq(Seq(40L)))
+    assert(rows(r.results("setAge")) == Seq(Seq(41L)))
+    assert(singleLong(r.results("left")) == 0L)
+    assert(singleLong(r.results("users")) == 3L)
+    // the dropped row stays dropped in the published store
+    assert(singleLong(TestBase.compiler(r.store).run(g().nWithLabel("ParityUser").count().t)) == 3L)
+  }
+
+  test("a property write through a stream bound before another write keeps that write") {
+    // 'u' is read before 'city' is written; writing 'age' through it
+    // must start from the row as it is now, not as 'u' saw it
+    val r = new BatchExecutor(TestBase.parityGraph()).execute(Batch(Seq(
+      entry("u", g().n(1L).t),
+      entry("v", g().n(3L).t),
+      entry("city", g().n(1L).setProperty("city", VString("Oslo")).t),
+      entry("age", g().nVar("u").setProperty("age", VI64(99)).t),
+      entry("read", g().n(1L).values("city", "age").t),
+      // 'v' predates the 'rank' column, so its row is read back by id
+      entry("rank", g().n(2L).setProperty("rank", VI64(5)).t),
+      entry("vAge", g().nVar("v").setProperty("age", VI64(43)).t),
+      entry("readV", g().n(3L).values("name", "age", "rank").t)),
+      returns = Seq("read", "readV"), write = true))
+    assert(rows(r.results("read")) == Seq(Seq("Oslo", 99L)))
+    assert(rows(r.results("readV")) == Seq(Seq("Carol", 43L, null)))
+  }
+
+  test("SetProperty adds a new column and widens a changed type as a table rewrite did") {
+    import org.apache.spark.sql.types.{DoubleType, LongType}
+    val comp = TestBase.compiler(write = true)
+    val before = comp.store.nodesFor("ParityUser").columns.toSeq
+    comp.run(g().n(1L).setProperty("rank", VI64(7)).t)
+    comp.run(g().n(2L).setProperty("age", VF64(27.5)).t)
+    val table = comp.store.nodesFor("ParityUser")
+    // a new column appends; an existing one keeps its place
+    assert(table.columns.toSeq == before :+ "rank")
+    assert(table.schema("rank").dataType == LongType)
+    assert(table.schema("age").dataType == DoubleType) // long and double widen to double
+    val got = comp.run(g().nWithLabel("ParityUser").orderBy("$id").values("rank", "age").t)
+    assert(rows(got) == Seq(Seq(7L, 31.0), Seq(null, 27.5), Seq(null, 42.0)))
+  }
+
+  test("AddE records the endpoint labels its rows carry, not every label an id list could name") {
+    val s = spark
+    import s.implicits._
+    val docs = Seq((10L, "Doc", "d")).toDF("_id", "_label", "title")
+    val store = TestBase.parityGraph().withNodes("Doc", docs)
+    val comp = TestBase.compiler(store, write = true)
+    comp.run(g().n(1L).addE("LIKES", NodeRef.Ids(Seq(2L))).t)
+    assert(comp.store.edgeMeta("LIKES") ==
+      graft.model.EdgeMeta(Set("ParityUser"), Set("ParityUser")))
+    comp.run(g().n(1L).addE("LIKES", NodeRef.Ids(Seq(10L))).t)
+    assert(comp.store.edgeMeta("LIKES").dstLabels == Set("ParityUser", "Doc"))
+    assert(ids(comp.run(g().n(1L).out("LIKES").id().t)) == Seq(2L, 10L))
+  }
+
+  test("Drop cascades only into edge labels that can touch the dropped labels") {
+    val s = spark
+    import s.implicits._
+    val docs = Seq((10L, "Doc", "d")).toDF("_id", "_label", "title")
+    val cites = Seq((500L, "CITES", 10L, 10L)).toDF("_id", "_label", "_src", "_dst")
+    val store = TestBase.parityGraph().withNodes("Doc", docs)
+      .withEdges("CITES", cites, Some(graft.model.EdgeMeta(Set("Doc"), Set("Doc"))))
+    val comp = TestBase.compiler(store, write = true)
+    val citesFrame = comp.store.edgesFor("CITES")
+    comp.run(g().n(2L).drop().t)
+    assert(singleLong(comp.run(g().eWithLabel("FOLLOWS").count().t)) == 0)
+    // CITES cannot reach a ParityUser: its table is left as it was
+    assert(comp.store.edgesFor("CITES") eq citesFrame)
+    comp.run(g().n(10L).drop().t)
+    assert(singleLong(comp.run(g().eWithLabel("CITES").count().t)) == 0)
+  }
 }

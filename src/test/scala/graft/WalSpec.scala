@@ -136,11 +136,13 @@ class WalSpec extends GraftSuite {
     // real Structured Streaming file sink into the store's stream area;
     // one streamed row (_id 1) collides with a batch row — the batch
     // copy must win (anti-join overlay)
+    // rows go in before start: an AvailableNow query reads only the
+    // data present when it starts
     val mem = MemoryStream[(Long, String)]
+    mem.addData((50L, "Stream50"), (51L, "Stream51"), (1L, "NotAlice"))
     val q = graft.streaming.GraphStream.nodeIngest(
       mem.toDF().toDF("uid", "name"), "ParityUser", "uid", s"$dir/stream",
       buckets = 4).trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    mem.addData((50L, "Stream50"), (51L, "Stream51"), (1L, "NotAlice"))
     q.awaitTermination(60000)
     GraphWal.attachStream(dir, "nodes", "ParityUser", s"$dir/stream/nodes/ParityUser")
 
@@ -219,10 +221,10 @@ class WalSpec extends GraftSuite {
     // snapshot+segments base does not — only the recorded seed can
     // make replay agree
     val mem = MemoryStream[(Long, String)]
+    mem.addData((500L, "Stream500"), (501L, "Stream501"))
     val q = graft.streaming.GraphStream.nodeIngest(
       mem.toDF().toDF("uid", "name"), "ParityUser", "uid", s"$dir/stream",
       buckets = 4).trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    mem.addData((500L, "Stream500"), (501L, "Stream501"))
     q.awaitTermination(60000)
     GraphWal.attachStream(dir, "nodes", "ParityUser", s"$dir/stream/nodes/ParityUser")
 
@@ -246,16 +248,91 @@ class WalSpec extends GraftSuite {
     val dir = java.nio.file.Files.createTempDirectory("gwal-estream").toString
     GraphWal.checkpoint(TestBase.parityGraph(), dir)
     val mem = MemoryStream[(Long, Long, Long)]
+    mem.addData((900L, 2L, 3L))
     val q = graft.streaming.GraphStream.edgeIngest(
       mem.toDF().toDF("eid", "from", "to"), "FOLLOWS", "eid", "from", "to",
       s"$dir/stream", buckets = 4)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    mem.addData((900L, 2L, 3L))
     q.awaitTermination(60000)
     GraphWal.attachStream(dir, "edges", "FOLLOWS", s"$dir/stream/edges/FOLLOWS")
     val rec = GraphWal.recover(spark, dir)
     val ids = rec.edgesFor("FOLLOWS").select("_id").collect().map(_.getLong(0)).toSet
     assert(ids.contains(900L))
     assert(ids.size == rec.edgesFor("FOLLOWS").count()) // no duplicates
+  }
+
+  private def write(steps: String): String =
+    s"""{"request_type":"write","query":{"queries":[{"Query":{"name":"w",
+      "steps":[$steps],"condition":null}}],"returns":["w"]},"parameters":{}}"""
+
+  private def tableRows(df: org.apache.spark.sql.DataFrame) =
+    (df.columns.toSeq, df.collect().map(_.toSeq).toSet)
+
+  test("checkpoint folds the write overlays: a reload holds the same rows") {
+    val dir = java.nio.file.Files.createTempDirectory("gwal-fold").toString
+    GraphWal.checkpoint(TestBase.parityGraph(), dir)
+    val gw = new Gateway(GraphWal.recover(spark, dir), walRoot = Some(dir))
+    gw.handle(addN("Dana", 28))
+    gw.handle(write("""{"N":{"Ids":[2]}},{"SetProperty":["age",{"Value":{"I64":28}}]}"""))
+    gw.handle(write("""{"N":{"Ids":[1]}},{"SetProperty":["rank",{"Value":{"F64":0.5}}]}"""))
+    gw.handle(write("""{"N":{"Ids":[1]}},{"AddE":{"label":"FOLLOWS","to":{"Ids":[3]},
+      "properties":[["weight",{"Value":{"F64":0.25}}]]}}"""))
+    gw.handle(write("""{"N":{"Ids":[3]}},"Drop""""))
+    val live = gw.currentStore
+    GraphWal.checkpoint(live, dir) // snap-2: the first checkpoint wrote snap-1
+    val loaded = graft.model.GraphPersistence.load(spark, s"$dir/snap-2")
+    assert(loaded.nodeLabels == live.nodeLabels && loaded.edgeLabels == live.edgeLabels)
+    live.nodeLabels.foreach(l =>
+      assert(tableRows(loaded.nodesFor(l)) == tableRows(live.nodesFor(l)), l))
+    live.edgeLabels.foreach(l =>
+      assert(tableRows(loaded.edgesFor(l)) == tableRows(live.edgesFor(l)), l))
+    assert(loaded.nodesFor("ParityUser").count() == 3L) // Dana in, Carol out
+    assert(loaded.edgesFor("FOLLOWS").count() == 1L) // both edges into Carol cascaded
+  }
+
+  test("write batches keep the read plan bounded, live and after replica replay") {
+    val s = spark
+    import s.implicits._
+    val customers = (1L to 3L).map(k => (k, "Customer", k, s"c$k", 10.0 * k))
+      .toDF("_id", "_label", "c_custkey", "c_name", "c_acctbal")
+    val dir = java.nio.file.Files.createTempDirectory("gwal-bounded").toString
+    GraphWal.checkpoint(new graft.model.GraphStore(s, Map("Customer" -> customers),
+      Map.empty, Map.empty), dir)
+    val gw = new Gateway(GraphWal.recover(spark, dir), walRoot = Some(dir))
+    def planNodes(st: graft.model.GraphStore): Int =
+      st.nodesFor("Customer").queryExecution.logical.collect { case p => p }.size
+    // one batch: a SetProperty on an existing customer plus an AddN
+    def batch(i: Int): String =
+      s"""{"request_type":"write","query":{"queries":[
+        {"Query":{"name":"s","steps":[{"NWhere":{"And":[
+          {"Eq":["$$label",{"String":"Customer"}]},
+          {"Eq":["c_custkey",{"I64":${1 + i % 3}}]}]}},
+          {"SetProperty":["c_acctbal",{"Value":{"F64":${100 + i}.5}}]},"Count"],
+          "condition":null}},
+        {"Query":{"name":"a","steps":[{"AddN":{"label":"Customer","properties":[
+          ["c_custkey",{"Value":{"I64":${100 + i}}}],
+          ["c_name",{"Value":{"String":"new$i"}}],
+          ["c_acctbal",{"Value":{"F64":$i.25}}]]}},{"Values":["c_custkey"]}],
+          "condition":null}}],
+        "returns":["s","a"]},"parameters":{}}"""
+    assert(gw.handle(batch(1)) == """{"a":101,"s":1}""")
+    val bound = planNodes(gw.currentStore)
+    (2 to 12).foreach { i =>
+      assert(gw.handle(batch(i)) == s"""{"a":${100 + i},"s":1}""")
+      assert(planNodes(gw.currentStore) == bound, s"plan grew at batch $i")
+    }
+    val read = """{"request_type":"read","query":{"queries":[{"Query":{"name":"r",
+      "steps":[{"NWhere":{"Eq":["$label",{"String":"Customer"}]}},
+      {"OrderBy":["c_custkey","Asc"]},{"Values":["c_custkey","c_name","c_acctbal"]}],
+      "condition":null}}],"returns":["r"]},"parameters":{}}"""
+    // the last write to each of customers 1..3 was batch 12, 10 and 11
+    val expected = (Seq((1, "c1", "112.5"), (2, "c2", "110.5"), (3, "c3", "111.5")) ++
+      (1 to 12).map(i => (100 + i, s"new$i", s"$i.25")))
+      .map { case (k, n, b) => s"""{"c_custkey":$k,"c_name":"$n","c_acctbal":$b}""" }
+      .mkString("""{"r":[""", ",", "]}")
+    assert(gw.handle(read) == expected)
+    val replica = GraphWal.openReplica(spark, dir).served
+    assert(planNodes(replica) == bound)
+    assert(new Gateway(replica).handle(read) == expected)
   }
 }
