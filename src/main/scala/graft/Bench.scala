@@ -194,11 +194,14 @@ object Bench {
     // is standard JVM benchmarking discipline (measure steady-state,
     // not Janino compilation), not result caching.
     // INVARIANT this warm-up relies on: every cache in the engine must
-    // key on the scan path / canonicalized plan (shingleCache, sigCache, lmCache,
-    // rowCountCache, IndexCache) or on store identity (one GraphStore
-    // per dir). A future cache keyed path-independently would silently
-    // turn this warm-up into result caching for the timed run — check
-    // this invariant when adding caches.
+    // key on the content it summarises — the plan-keyed artifact
+    // caches (graft.pipeline.ArtifactCache) key on Dedup.planKey, whose
+    // file-listing digest names every file (path, length, mtime) a
+    // scan reads, so sf0.001 and sf0.1 never share a key — or on store
+    // identity (IndexCache; one GraphStore per dir). A future cache
+    // keyed path-independently would silently turn this warm-up into
+    // result caching for the timed run — check this invariant when
+    // adding caches.
     // warm with the SAME action the timed loop uses (noop write): the
     // count-pruned plan compiles different codegen classes than the
     // full-evaluation plan, so a count() warm-up would leave the timed

@@ -24,6 +24,13 @@ object ProbeAB {
   }
 
   def main(args: Array[String]): Unit = {
+    // args: [reps] [pairName...] — names select pairs (r17 set by
+    // default); "r16" selects the r16 baseline set. Parsed before any
+    // Spark work; a non-numeric first argument is a pair name.
+    val repsArg = args.headOption.flatMap(_.toIntOption)
+    val reps = repsArg.getOrElse(5)
+    require(reps > 0, s"reps must be positive, got $reps")
+    val nameArgs = args.drop(repsArg.size).toSet
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -659,17 +666,14 @@ object ProbeAB {
       ("decontam_keep", () => decontamKeepOld, () => decontamKeepNew),
       ("audio_shingle_band", () => audioShingle, () => audioShingle))
 
-    // args: [reps] [pairName...] — names select pairs (r17 set by
-    // default); "r16" selects the r16 baseline set
-    val nameArgs = args.drop(1).toSet
     val pairs =
       if (nameArgs.contains("r16")) r16Pairs
       else if (nameArgs.nonEmpty)
         (r17Pairs ++ r16Pairs).filter(p => nameArgs.contains(p._1))
       else r17Pairs
+    require(pairs.nonEmpty, s"no A/B pair named ${nameArgs.mkString(", ")}")
 
     pairs.foreach { case (_, a, b) => time(a()); time(b()) }
-    val reps = args.headOption.map(_.toInt).getOrElse(5)
     pairs.foreach { case (name, a, b) =>
       val ta = scala.collection.mutable.ArrayBuffer.empty[Double]
       val tb = scala.collection.mutable.ArrayBuffer.empty[Double]

@@ -206,18 +206,18 @@ object Bpe {
     * column, k) — the merge table is a write-time artifact of the
     * corpus (like IVF centroids or BM25 postings), not something to
     * retrain per query. Keyed on Dedup.planKey (canonical plan + file
-    * root paths + local-data digest): a bare canonicalized string
+    * listing digest + local-data digest): a bare canonicalized string
     * makes two same-schema corpora from DIFFERENT directories key
     * together and silently share a merge table.
     */
   def trainMergesCached(docs: DataFrame, textCol: String,
       k: Int): Seq[(Int, String, String)] =
-    mergeCache.computeIfAbsent(
-      Dedup.planKey(docs) + "|" + textCol + "|" + k,
-      _ => { Scratch.noteBuild("bpeMerges"); trainMerges(docs, textCol, k) })
+    mergeCache.getOrCompute(Dedup.planKey(docs) + "|" + textCol + "|" + k)(
+      trainMerges(docs, textCol, k))
 
+  private final val MergeCacheMax = 16
   private val mergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, String, String)]]()
+    new ArtifactCache[String, Seq[(Int, String, String)]]("bpeMerges", MergeCacheMax)
 
   /** The trained merge table as a DataFrame; columns avoid the SQL
     * reserved words rank/left/right for oracle portability.
@@ -401,9 +401,9 @@ object Bpe {
   /** [[trainByteMerges]] memoized like [[trainMergesCached]]. */
   def trainByteMergesCached(docs: DataFrame, textCol: String,
       k: Int): Seq[(Int, String, String)] =
-    mergeCache.computeIfAbsent(
-      "bytes|" + Dedup.planKey(docs) + "|" + textCol + "|" + k,
-      _ => { Scratch.noteBuild("bpeByteMerges"); trainByteMerges(docs, textCol, k) })
+    mergeCache.getOrCompute(
+        "bytes|" + Dedup.planKey(docs) + "|" + textCol + "|" + k,
+        "bpeByteMerges")(trainByteMerges(docs, textCol, k))
 
   /** Per-doc BYTE-LEVEL BPE token count — the budget production
     * tokenizers actually bill (whitespace and case included, every

@@ -131,42 +131,26 @@ object Dedup {
     * apply DOWNSTREAM of it, so every winnowing query serves from one
     * build. Tokens and k-gram hashes are staged as attributes inside
     * (each lambda slices a computed ARRAY — the r9
-    * inlined-expression-quadratic fix). FIFO-bounded, unpersists on
+    * inlined-expression-quadratic fix). LRU-bounded, unpersists on
     * evict, cleared by [[clearShingleCache]].
     */
   def winnowFingerprintSetCached(df: DataFrame, textCol: String,
       idCol: String, k: Int, w: Int, eager: Boolean = true): DataFrame = {
-    val key = (planKey(df), s"$textCol|$idCol", k, w)
-    var built: DataFrame = null
-    val fps = winnowFpCache.synchronized {
-      val hit = winnowFpCache.get(key)
-      if (hit != null) hit
-      else {
-        built = df
-          .select(col(idCol).as("_id"), tokens(col(textCol)).as("_t"))
-          .select(col("_id"), winnowKgramHashes(col("_t"), k).as("_gh"))
-          .select(col("_id"),
-            explode(winnowFromHashes(col("_gh"), w)).as("_fp"))
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        winnowFpCache.put(key, built)
-        Scratch.noteBuild("winnowFingerprintSet")
-        built
-      }
+    val (fps, built) = winnowFpCache.getOrBuild(
+        (planKey(df), s"$textCol|$idCol", k, w)) {
+      df.select(col(idCol).as("_id"), tokens(col(textCol)).as("_t"))
+        .select(col("_id"), winnowKgramHashes(col("_t"), k).as("_gh"))
+        .select(col("_id"),
+          explode(winnowFromHashes(col("_gh"), w)).as("_fp"))
+        .distinct()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    if (eager && (fps eq built)) fps.count()
+    if (eager && built) fps.count()
     fps
   }
 
-  private val winnowFpCache =
-    new java.util.LinkedHashMap[(String, String, Int, Int), DataFrame](16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Int, Int), DataFrame]): Boolean = {
-        val evict = size() > ShingleCacheMax
-        if (evict) e.getValue.unpersist(false)
-        evict
-      }
-    }
+  private val winnowFpCache = ArtifactCache.frames[(String, String, Int, Int)](
+    "winnowFingerprintSet", ShingleCacheMax)
 
   /** Exact dedup: canonical (min) id per distinct text digest. */
   def exact(df: DataFrame, textCol: String, idCol: String): DataFrame =
@@ -229,28 +213,28 @@ object Dedup {
     * plan + (textCol, idCol, n). The shingle set is the shared artifact
     * of every dedup variant (minhash, ngram, …) — at scale it is a
     * write-time table; here, running two dedup ops over the same corpus
-    * builds it once. Entries own their persisted frames; eviction (FIFO
+    * builds it once. Entries own their persisted frames; eviction (LRU
     * past `ShingleCacheMax`) unpersists.
     */
-  private val ShingleCacheMax = 8
-  private val shingleCache =
-    new java.util.LinkedHashMap[(String, String, Int), DataFrame](16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Int), DataFrame]): Boolean = {
-        val evict = size() > ShingleCacheMax
-        if (evict) e.getValue.unpersist(false)
-        evict
-      }
-    }
+  private final val ShingleCacheMax = 8
+  private val shingleCache = ArtifactCache.frames[(String, String, Int)](
+    "shingleHashSet", ShingleCacheMax)
 
-  /** Cache key for a plan-keyed artifact: the FULL canonicalized plan
-    * string PLUS a content hash of every in-memory LocalRelation in it.
-    * The plan string alone names parquet scans by path (distinct
-    * corpora never collide) but prints a LocalRelation as its SCHEMA
-    * only — two same-shaped in-memory frames with different rows would
-    * silently share one artifact (caught by SuffixDedupSpec's
-    * cross-validation: a cached dup-position frame served another
-    * corpus's positions).
+  /** Cache key for a plan-keyed artifact ([[ArtifactCache]]): the FULL
+    * canonicalized plan string PLUS a name for the CONTENT of every
+    * leaf the canonical string leaves out — a hash of each in-memory
+    * LocalRelation's rows, a digest of each file relation's file
+    * listing, the id of each RDD-backed leaf. The plan string prints a
+    * LocalRelation as its SCHEMA only — two same-shaped in-memory
+    * frames with different rows would silently share one artifact
+    * (caught by SuffixDedupSpec's cross-validation: a cached
+    * dup-position frame served another corpus's positions).
+    *
+    * A file source is named by the listing its relation was resolved
+    * with (every file's path, length and modification time), not by
+    * its root path: a fresh read of a directory that gained, lost or
+    * rewrote files keys apart from the earlier read, while re-reads of
+    * an unchanged directory — and reuse of one frame — still hit.
     */
   private[graft] def planKey(df: DataFrame): String = {
     // ANALYZED, not logical: Spark 4 defers source resolution, so a
@@ -270,15 +254,20 @@ object Dedup {
     }
     // a LogicalRelation's canonical string does NOT include its file
     // paths — two same-schema parquet reads of DIFFERENT directories
-    // canonicalize identically, so any plan-keyed artifact cache
-    // would silently serve one corpus's shingles/signatures to the
-    // other within a session (observed: an sf0.1 artifact answered an
-    // sf1 corpus's query). Append every file relation's root paths.
+    // canonicalize identically (observed: an sf0.1 artifact answered an
+    // sf1 corpus's query), and root paths alone miss files added to or
+    // rewritten in one directory between reads (a stale row count and
+    // term-count model were served). Name each file relation by its
+    // listing.
     val fileData = canon.collect {
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         lr.relation match {
           case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.rootPaths.mkString(",")
+            fs.location match {
+              case idx: org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex =>
+                listingDigest(df.sparkSession, idx)
+              case idx => idx.rootPaths.mkString(",")
+            }
           case other => other.toString
         }
       case v2: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
@@ -303,6 +292,39 @@ object Dedup {
       (if (rddData.isEmpty) "" else rddData.mkString("|rdds:", ",", ""))
   }
 
+  /** MD5 over the (path, length, mtime) of every file `idx` lists —
+    * `allFiles` reads the listing the read already built, no new
+    * listing call.
+    *
+    * Spark's own plan cache matches file scans by ROOT PATH
+    * (`InMemoryFileIndex.equals`), so an artifact persisted over an
+    * earlier listing of the same directory would still answer a fresh
+    * read's plan. When a root-path set shows a listing other than the
+    * last one seen, the persisted data over it is refreshed
+    * (`refreshByPath`) before anything new is built on it.
+    */
+  private def listingDigest(spark: org.apache.spark.sql.SparkSession,
+      idx: org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex)
+      : String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    idx.allFiles().map(f =>
+      s"${f.getPath}|${f.getLen}|${f.getModificationTime}").sorted
+      .foreach(e => md.update((e + "\n").getBytes("UTF-8")))
+    val digest = md.digest().map("%02x".format(_)).mkString
+    val roots = idx.rootPaths.map(_.toString).sorted
+    // bounded: past the cap the history restarts (a change to a
+    // directory first seen before the restart then goes undetected)
+    if (listingSeen.size > ListingSeenMax) listingSeen.clear()
+    val seen = listingSeen.put(roots.mkString(","), digest)
+    if (seen != null && seen != digest)
+      roots.foreach(spark.catalog.refreshByPath)
+    digest
+  }
+
+  private final val ListingSeenMax = 4096
+  private val listingSeen =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+
   /** `eager = false` skips the materializing count on a cache MISS —
     * valid only when the caller's own next action reads the frame
     * exactly once before any self-join fans out over it (the persist
@@ -310,29 +332,21 @@ object Dedup {
     *
     * Keyed by the FULL canonicalized source plan, not a 32-bit hash —
     * a hash collision would silently serve another corpus's shingles.
-    * Caveat shared by any plan-keyed cache: overwriting the files
-    * behind an identical plan mid-session requires clearShingleCache().
+    * A changed directory keys apart on a FRESH read (see [[planKey]]);
+    * a frame whose files change underneath it keeps the key of the
+    * listing it was read with.
     * The eager count runs OUTSIDE the cache lock so a build doesn't
     * block other dedup calls for a whole Spark job; a concurrent
     * reader may briefly duplicate compute, never see wrong data.
     */
   def shingleHashSetCached(df: DataFrame, textCol: String, idCol: String, n: Int,
       eager: Boolean = true): DataFrame = {
-    val key = (planKey(df),
-      s"$textCol|$idCol", n)
-    var built: DataFrame = null
-    val ss = shingleCache.synchronized {
-      val hit = shingleCache.get(key)
-      if (hit != null) hit
-      else {
-        built = shingleHashSet(df, textCol, idCol, n)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        shingleCache.put(key, built)
-        Scratch.noteBuild("shingleHashSet")
-        built
-      }
+    val (ss, built) = shingleCache.getOrBuild((planKey(df),
+      s"$textCol|$idCol", n)) {
+      shingleHashSet(df, textCol, idCol, n)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    if (eager && (ss eq built)) ss.count()
+    if (eager && built) ss.count()
     ss
   }
 
@@ -341,17 +355,10 @@ object Dedup {
     * at ingest (the reference's vector/text indexes are the same
     * write-time trade), so serving latency doesn't re-aggregate the
     * corpus's shingles per query. Key includes the hash-family params;
-    * lifecycle owned by the bounded cache (FIFO unpersist).
+    * lifecycle owned by the bounded cache (LRU unpersist).
     */
-  private val sigCache =
-    new java.util.LinkedHashMap[(String, String, Int, Int), DataFrame](16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Int, Int), DataFrame]): Boolean = {
-        val evict = size() > ShingleCacheMax
-        if (evict) e.getValue.unpersist(false)
-        evict
-      }
-    }
+  private val sigCache = ArtifactCache.frames[(String, String, Int, Int)](
+    "minhashSignature", ShingleCacheMax)
 
   /** Signature artifact: mh0..mhK + `_sz` per `_did`. On a cache miss
     * the aggregation reads the (cached) shingle set once; `eager`
@@ -359,38 +366,22 @@ object Dedup {
     */
   def minhashSignatureCached(df: DataFrame, textCol: String, idCol: String,
       n: Int, numHashes: Int, eager: Boolean = true): DataFrame = {
-    val key = (planKey(df),
-      s"$textCol|$idCol", n, numHashes)
-    var built: DataFrame = null
-    val sig = sigCache.synchronized {
-      val hit = sigCache.get(key)
-      if (hit != null) hit
-      else {
-        val ss = shingleHashSetCached(df, textCol, idCol, n, eager = false)
-        val aggs = minhashSeeds(numHashes).zipWithIndex.map { case (seed, j) =>
-          min(col("_sh").bitwiseXOR(lit(seed))).as(s"mh$j")
-        } :+ count(lit(1)).as("_sz") // set size rides the same agg —
-        // the verify stage reads it from here, not a second shingle scan
-        built = ss.groupBy(col("_did")).agg(aggs.head, aggs.tail: _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        sigCache.put(key, built)
-        Scratch.noteBuild("minhashSignature")
-        built
-      }
+    val (sig, built) = sigCache.getOrBuild((planKey(df),
+      s"$textCol|$idCol", n, numHashes)) {
+      val ss = shingleHashSetCached(df, textCol, idCol, n, eager = false)
+      val aggs = minhashSeeds(numHashes).zipWithIndex.map { case (seed, j) =>
+        min(col("_sh").bitwiseXOR(lit(seed))).as(s"mh$j")
+      } :+ count(lit(1)).as("_sz") // set size rides the same agg —
+      // the verify stage reads it from here, not a second shingle scan
+      ss.groupBy(col("_did")).agg(aggs.head, aggs.tail: _*)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    if (eager && (sig eq built)) sig.count()
+    if (eager && built) sig.count()
     sig
   }
 
-  private val arrCache =
-    new java.util.LinkedHashMap[(String, String, Int), DataFrame](16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Int), DataFrame]): Boolean = {
-        val evict = size() > ShingleCacheMax
-        if (evict) e.getValue.unpersist(false)
-        evict
-      }
-    }
+  private val arrCache = ArtifactCache.frames[(String, String, Int)](
+    "shingleArray", ShingleCacheMax)
 
   /** Per-doc shingle-hash ARRAY artifact (`_did`, `_sha`) — the same
     * write-time material as [[shingleHashSetCached]] in the row shape
@@ -401,49 +392,23 @@ object Dedup {
     */
   def shingleArrayCached(df: DataFrame, textCol: String, idCol: String,
       n: Int, eager: Boolean = true): DataFrame = {
-    val key = (planKey(df), s"$textCol|$idCol", n)
-    var built: DataFrame = null
-    val arr = arrCache.synchronized {
-      val hit = arrCache.get(key)
-      if (hit != null) hit
-      else {
-        val ss = shingleHashSetCached(df, textCol, idCol, n, eager = false)
-        built = ss.groupBy(col("_did"))
-          .agg(collect_list(col("_sh")).as("_sha"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        arrCache.put(key, built)
-        Scratch.noteBuild("shingleArray")
-        built
-      }
+    val (arr, built) = arrCache.getOrBuild(
+        (planKey(df), s"$textCol|$idCol", n)) {
+      shingleHashSetCached(df, textCol, idCol, n, eager = false)
+        .groupBy(col("_did"))
+        .agg(collect_list(col("_sh")).as("_sha"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    if (eager && (arr eq built)) arr.count()
+    if (eager && built) arr.count()
     arr
   }
 
   /** Drop and unpersist every cached shingle set / signature artifact. */
   def clearShingleCache(): Unit = {
-    shingleCache.synchronized {
-      shingleCache.values.asScalaIterator.foreach(_.unpersist(false))
-      shingleCache.clear()
-    }
-    sigCache.synchronized {
-      sigCache.values.asScalaIterator.foreach(_.unpersist(false))
-      sigCache.clear()
-    }
-    simhashSigCache.synchronized {
-      simhashSigCache.values.asScalaIterator.foreach(_.unpersist(false))
-      simhashSigCache.clear()
-    }
-    winnowFpCache.synchronized {
-      winnowFpCache.values.asScalaIterator.foreach(_.unpersist(false))
-      winnowFpCache.clear()
-    }
-  }
-  private implicit class JIter[T](v: java.util.Collection[T]) {
-    def asScalaIterator: Iterator[T] = {
-      val it = v.iterator()
-      new Iterator[T] { def hasNext = it.hasNext; def next() = it.next() }
-    }
+    shingleCache.clear()
+    sigCache.clear()
+    simhashSigCache.clear()
+    winnowFpCache.clear()
   }
 
   /** Fixed xor-seed family: one md5 per shingle, `numHashes` derived
@@ -840,36 +805,20 @@ object Dedup {
     * read this frame, and at scale it is a write-time artifact of the
     * same family as the shingle sets and minhash signatures.
     */
-  private val dupPosCache =
-    new java.util.LinkedHashMap[(String, String, Int), DataFrame](16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Int), DataFrame]): Boolean = {
-        val evict = size() > ShingleCacheMax
-        if (evict) e.getValue.unpersist(false)
-        evict
-      }
-    }
+  private val dupPosCache = ArtifactCache.frames[(String, String, Int)](
+    "duplicatedPositions", ShingleCacheMax)
 
   private[graft] def duplicatedPositionsCached(df: DataFrame, textCol: String,
       idCol: String, n: Int, eager: Boolean = true): DataFrame = {
-    val key = (planKey(df),
-      s"$textCol|$idCol", n)
-    var built: DataFrame = null
-    val out = dupPosCache.synchronized {
-      val hit = dupPosCache.get(key)
-      if (hit != null) hit
-      else {
-        val pos = windowPositions(df, textCol, idCol, n)
-        val occ = pos.groupBy(col("_sh")).agg(count(lit(1)).as("_c"))
-          .where(col("_c") >= 2)
-        built = pos.join(occ, "_sh").select(col("_did"), col("_nw"), col("_p"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        dupPosCache.put(key, built)
-        Scratch.noteBuild("duplicatedPositions")
-        built
-      }
+    val (out, built) = dupPosCache.getOrBuild((planKey(df),
+      s"$textCol|$idCol", n)) {
+      val pos = windowPositions(df, textCol, idCol, n)
+      val occ = pos.groupBy(col("_sh")).agg(count(lit(1)).as("_c"))
+        .where(col("_c") >= 2)
+      pos.join(occ, "_sh").select(col("_did"), col("_nw"), col("_p"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    if (eager && (out eq built)) out.count()
+    if (eager && built) out.count()
     out
   }
 
@@ -957,23 +906,14 @@ object Dedup {
     */
   private[graft] def windowCountsCached(corpus: DataFrame, textCol: String,
       idCol: String, n: Int): DataFrame = {
-    val key = (planKey(corpus),
-      s"wc|$textCol|$idCol", n)
-    var built: DataFrame = null
-    val out = dupPosCache.synchronized {
-      val hit = dupPosCache.get(key)
-      if (hit != null) hit
-      else {
-        windowCountBuilds.incrementAndGet()
-        built = windowPositions(corpus, textCol, idCol, n)
-          .groupBy(col("_sh")).agg(count(lit(1)).as("_cc"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        dupPosCache.put(key, built)
-        Scratch.noteBuild("windowCounts")
-        built
-      }
+    val (out, built) = dupPosCache.getOrBuild((planKey(corpus),
+      s"wc|$textCol|$idCol", n), "windowCounts") {
+      windowCountBuilds.incrementAndGet()
+      windowPositions(corpus, textCol, idCol, n)
+        .groupBy(col("_sh")).agg(count(lit(1)).as("_cc"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    if (out eq built) out.count()
+    if (built) out.count()
     out
   }
 
@@ -1000,7 +940,7 @@ object Dedup {
     * Size stays linear by construction: the artifact has one row per
     * DISTINCT window hash of the union (counts merge, rows don't
     * multiply), and the bounded cache unpersists superseded
-    * generations FIFO — k successive ingests pin at most
+    * generations LRU — k successive ingests pin at most
     * ShingleCacheMax generations and build the corpus from scratch
     * exactly once.
     */
@@ -1008,19 +948,15 @@ object Dedup {
       textCol: String, idCol: String, n: Int): DataFrame = {
     val old = windowCountsCached(corpus, textCol, idCol, n)
     val next = corpus.unionAll(batch)
-    val key = (planKey(next), s"wc|$textCol|$idCol", n)
-    dupPosCache.synchronized {
-      if (dupPosCache.get(key) != null) return next
-    }
-    val merged = old
-      .unionAll(windowPositions(batch, textCol, idCol, n)
-        .groupBy(col("_sh")).agg(count(lit(1)).as("_cc")))
-      .groupBy(col("_sh")).agg(sum(col("_cc")).as("_cc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    merged.count() // materialize BEFORE any superseded unpersist
-    dupPosCache.synchronized {
-      if (dupPosCache.get(key) == null) dupPosCache.put(key, merged)
-      else merged.unpersist(false)
+    dupPosCache.getOrCompute((planKey(next), s"wc|$textCol|$idCol", n),
+        "windowCounts") {
+      val merged = old
+        .unionAll(windowPositions(batch, textCol, idCol, n)
+          .groupBy(col("_sh")).agg(count(lit(1)).as("_cc")))
+        .groupBy(col("_sh")).agg(sum(col("_cc")).as("_cc"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      merged.count() // materialize BEFORE any superseded unpersist
+      merged
     }
     next
   }
@@ -1388,27 +1324,17 @@ object Dedup {
     * frame, deliberately stays on the uncached direct call.
     */
   def minhashClustersCached(df: DataFrame, textCol: String, idCol: String,
-      n: Int, numHashes: Int, bands: Int, num: Int, den: Int): DataFrame = {
-    val key = (planKey(df), textCol, idCol, n, numHashes, bands, num, den)
-    clusterCache.synchronized {
-      val hit = clusterCache.get(key)
-      if (hit != null) return hit
+      n: Int, numHashes: Int, bands: Int, num: Int, den: Int): DataFrame =
+    clusterCache.getOrCompute(
+        (planKey(df), textCol, idCol, n, numHashes, bands, num, den)) {
+      dupClusters(
+        minhashPairs(df, textCol, idCol, n, numHashes, bands, num, den))
     }
-    val built = dupClusters(
-      minhashPairs(df, textCol, idCol, n, numHashes, bands, num, den))
-    clusterCache.synchronized { clusterCache.put(key, built) }
-    Scratch.noteBuild("minhashClusters")
-    built
-  }
 
-  private val ClusterCacheMax = 8
-  private val clusterCache =
-    new java.util.LinkedHashMap[(String, String, String, Int, Int, Int, Int, Int), DataFrame](
-      16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, String, Int, Int, Int, Int, Int), DataFrame]): Boolean =
-        size() > ClusterCacheMax
-    }
+  private final val ClusterCacheMax = 8
+  private val clusterCache = new ArtifactCache[
+    (String, String, String, Int, Int, Int, Int, Int), DataFrame](
+    "minhashClusters", ClusterCacheMax)
 
   /** [[dedupCorpus]] with a QUALITY-chosen representative: per
     * near-dup cluster keep the member with the highest `scoreCol` in
@@ -1638,36 +1564,20 @@ object Dedup {
     * every near-dup query over the corpus, so serving shouldn't
     * re-tokenize and re-vote 60 bit positions per query. Persisted
     * MEMORY_AND_DISK; plan-keyed so bench warm-up at another SF keys
-    * apart; lifecycle owned by the bounded cache (FIFO unpersist).
+    * apart; lifecycle owned by the bounded cache (LRU unpersist).
     */
   def simhashCached(df: DataFrame, textCol: String, idCol: String,
       eager: Boolean = true): DataFrame = {
-    val key = (planKey(df), textCol, idCol)
-    var built: DataFrame = null
-    val sig = simhashSigCache.synchronized {
-      val hit = simhashSigCache.get(key)
-      if (hit != null) hit
-      else {
-        built = simhash(df, textCol, idCol)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        simhashSigCache.put(key, built)
-        Scratch.noteBuild("simhash")
-        built
-      }
+    val (sig, built) = simhashSigCache.getOrBuild((planKey(df), textCol, idCol)) {
+      simhash(df, textCol, idCol)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    if (eager && (sig eq built)) sig.count()
+    if (eager && built) sig.count()
     sig
   }
 
-  private val simhashSigCache =
-    new java.util.LinkedHashMap[(String, String, String), DataFrame](16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, String), DataFrame]): Boolean = {
-        val evict = size() > ShingleCacheMax
-        if (evict) e.getValue.unpersist(false)
-        evict
-      }
-    }
+  private val simhashSigCache = ArtifactCache.frames[(String, String, String)](
+    "simhash", ShingleCacheMax)
 
   /** Cross-corpus variant of [[bandedHammingPairs]]: every (A element,
     * B element) pair within Hamming distance `maxHam`, with NO
@@ -1777,18 +1687,14 @@ object Dedup {
   val MaxClusterBlock = 4096
 
   /** Row counts for path selection, keyed by the canonicalized source
-    * plan (bounded FIFO): embeddingPairs needs the count once per
+    * plan (bounded LRU): embeddingPairs needs the count once per
     * corpus, not one count job per call. At 100 TB this is table
     * metadata the catalog already knows — recounting per query is the
     * anti-pattern this cache removes.
     */
-  private val RowCountCacheMax = 32
+  private final val RowCountCacheMax = 32
   private val rowCountCache =
-    new java.util.LinkedHashMap[String, java.lang.Long](32, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, java.lang.Long]): Boolean =
-        size() > RowCountCacheMax
-    }
+    new ArtifactCache[String, java.lang.Long]("rowCount", RowCountCacheMax)
 
   /** Pre-populate the row-count cache for `df`. The count is a table
     * statistic the catalog already holds at 100 TB (written at ingest
@@ -1797,16 +1703,8 @@ object Dedup {
     */
   def warmRowCount(df: DataFrame): Long = cachedCount(df)
 
-  private def cachedCount(df: DataFrame): Long = {
-    val key = planKey(df)
-    val hit = rowCountCache.synchronized(rowCountCache.get(key))
-    if (hit != null) hit.longValue()
-    else {
-      val n = df.count()
-      rowCountCache.synchronized(rowCountCache.put(key, n))
-      n
-    }
-  }
+  private def cachedCount(df: DataFrame): Long =
+    rowCountCache.getOrCompute(planKey(df))(df.count()).longValue()
 
   /** IVF cluster count for an n-row dedup corpus: sqrt(n), floored at
     * 64 (the standard IVF sizing). A FIXED cluster count would leave
@@ -2023,7 +1921,7 @@ object Dedup {
     require(kCap >= 1, "calibrateSemDedupK on an empty corpus")
     // probes run UNCACHED (kmeansQuantized, not the Cached form): each
     // probe is a different k, so caching would only churn the shared
-    // assignment FIFO and evict the entries the committed pass reuses
+    // assignment LRU and evict the entries the committed pass reuses
     def volume(k: Int): Long =
       VectorOps.kmeansQuantized(df, idCol, vecCol, k, iters)
         .groupBy(col("cluster")).agg(count(lit(1)).as("n_rows"))

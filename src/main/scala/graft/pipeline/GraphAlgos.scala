@@ -71,38 +71,22 @@ object GraphAlgos {
 
   private def projCached(df: DataFrame, groupCol: String, itemCol: String,
       maxGroupSize: Int, weighted: Boolean, mk: => DataFrame): DataFrame = {
-    val key = (Dedup.planKey(df), groupCol, itemCol, maxGroupSize, weighted)
-    var built: DataFrame = null
-    val e = projCache.synchronized {
-      val hit = projCache.get(key)
-      if (hit != null) hit
-      else {
-        built = mk
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        projCache.put(key, built)
-        Scratch.noteBuild("coOccurrence")
-        built
-      }
+    val (e, built) = projCache.getOrBuild(
+        (Dedup.planKey(df), groupCol, itemCol, maxGroupSize, weighted)) {
+      mk.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    if (e eq built) e.count()
+    if (built) e.count()
     e
   }
 
-  /** FIFO-bounded like TextAnalysis.lmCache: a long-lived server must
+  /** LRU-bounded like TextAnalysis.lmCache: a long-lived server must
     * not accumulate persisted projections across stores; eviction
     * unpersists the frame it owns.
     */
-  private val ProjCacheMax = 8
+  private final val ProjCacheMax = 8
   private val projCache =
-    new java.util.LinkedHashMap[(String, String, String, Int, Boolean), DataFrame](
-      16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, String, Int, Boolean), DataFrame]): Boolean = {
-        val evict = size() > ProjCacheMax
-        if (evict) e.getValue.unpersist(false)
-        evict
-      }
-    }
+    ArtifactCache.frames[(String, String, String, Int, Boolean)](
+      "coOccurrence", ProjCacheMax)
 
   /** Per-vertex degree over a canonical undirected edge frame. One
     * aggregation; vertices with no edges don't appear (join the node
@@ -738,7 +722,7 @@ object GraphAlgos {
     cn.join(canonEdges, Seq("id_a", "id_b"), "left_anti")
   }
 
-  /** [[wedgeCn]] pinned like [[coOccurrenceCached]] (plan-keyed FIFO,
+  /** [[wedgeCn]] pinned like [[coOccurrenceCached]] (plan-keyed LRU,
     * MEMORY_AND_DISK, eviction unpersists): the wedge-candidate frame
     * of a graph is write-time material shared by the whole
     * link-prediction/fan-out family — link prediction and 2-hop stats
@@ -746,33 +730,17 @@ object GraphAlgos {
     * set per query (the r16 "not yet optimized" item).
     */
   def wedgeCnCached(edges: DataFrame, maxNeighborDf: Int = Int.MaxValue): DataFrame = {
-    val key = (Dedup.planKey(edges), maxNeighborDf)
-    var built: DataFrame = null
-    val e = wedgeCache.synchronized {
-      val hit = wedgeCache.get(key)
-      if (hit != null) hit
-      else {
-        built = wedgeCn(edges, maxNeighborDf)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        wedgeCache.put(key, built)
-        Scratch.noteBuild("wedgeCn")
-        built
-      }
+    val (e, built) = wedgeCache.getOrBuild((Dedup.planKey(edges), maxNeighborDf)) {
+      wedgeCn(edges, maxNeighborDf)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    if (e eq built) e.count()
+    if (built) e.count()
     e
   }
 
-  private val WedgeCacheMax = 8
+  private final val WedgeCacheMax = 8
   private val wedgeCache =
-    new java.util.LinkedHashMap[(String, Int), DataFrame](16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Int), DataFrame]): Boolean = {
-        val evict = size() > WedgeCacheMax
-        if (evict) e.getValue.unpersist(false)
-        evict
-      }
-    }
+    ArtifactCache.frames[(String, Int)]("wedgeCn", WedgeCacheMax)
 
   /** Per-node neighborhood fan-out profile: degree and the count of
     * nodes at distance EXACTLY 2 — `(node_id, degree, n_2hop)`. THE

@@ -723,44 +723,26 @@ object Multimodal {
     * the cache-state-appropriate exchange budget (r16 verdict item 8)
     * instead of one ceiling slack enough for both suite orders. */
   private[graft] def mediaCacheHas(ids: DataFrame, idCol: String,
-      only: Option[String] = None): Boolean = {
-    val key = (graft.pipeline.Dedup.planKey(ids), idCol, only.getOrElse("*"))
-    mediaCache.synchronized(mediaCache.get(key) != null)
-  }
+      only: Option[String] = None): Boolean =
+    mediaCache.contains((Dedup.planKey(ids), idCol, only.getOrElse("*")))
 
   def mediaFromIdsCached(ids: DataFrame, idCol: String,
       only: Option[String] = None): DataFrame = {
-    val key = (graft.pipeline.Dedup.planKey(ids), idCol, only.getOrElse("*"))
-    var built: DataFrame = null
-    val m = mediaCache.synchronized {
-      val hit = mediaCache.get(key)
-      if (hit != null) hit
-      else {
-        built = mediaFromIds(ids, idCol, only)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        mediaCache.put(key, built)
-        Scratch.noteBuild("mediaFromIds")
-        built
-      }
+    val (m, built) = mediaCache.getOrBuild(
+        (Dedup.planKey(ids), idCol, only.getOrElse("*"))) {
+      mediaFromIds(ids, idCol, only)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    if (m eq built) m.count()
+    if (built) m.count()
     m
   }
 
-  /** FIFO-bounded like TextAnalysis.lmCache: eviction unpersists the
+  /** LRU-bounded like TextAnalysis.lmCache: eviction unpersists the
     * synthesized media frame it owns (one per modality per corpus).
     */
-  private val MediaCacheMax = 8
-  private val mediaCache =
-    new java.util.LinkedHashMap[(String, String, String), DataFrame](
-      16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, String), DataFrame]): Boolean = {
-        val evict = size() > MediaCacheMax
-        if (evict) e.getValue.unpersist(false)
-        evict
-      }
-    }
+  private final val MediaCacheMax = 8
+  private val mediaCache = ArtifactCache.frames[(String, String, String)](
+    "mediaFromIds", MediaCacheMax)
 
   /** Perceptual average-hash (aHash) of the DECODED image, over the
     * native pixel grid: bit p (row-major, p < 63) is set iff the
@@ -1052,33 +1034,21 @@ object Multimodal {
     * IDENTITY: `mapPartitions` closures canonicalize by instance, so
     * two calls over the same input yield plans that key APART, and
     * every downstream plan-keyed artifact (the shingle set / array
-    * caches) would rebuild per call AND churn the bounded FIFO shared
+    * caches) would rebuild per call AND churn the bounded LRU shared
     * with the text corpus artifacts, evicting frames other queries
     * still serve from. Returning the same frame instance keys the
     * whole downstream chain stably. No persist to own — eviction
     * drops only the reference.
     */
   def audioSymbolsCached(df: DataFrame, win: Int = 4,
-      stride: Int = 2): DataFrame = {
-    val key = (graft.pipeline.Dedup.planKey(df), win, stride)
-    symbolsCache.synchronized {
-      val hit = symbolsCache.get(key)
-      if (hit != null) hit
-      else {
-        val built = audioSymbols(df, win, stride)
-        symbolsCache.put(key, built)
-        Scratch.noteBuild("audioSymbols")
-        built
-      }
-    }
-  }
+      stride: Int = 2): DataFrame =
+    symbolsCache.getOrBuild((Dedup.planKey(df), win, stride)) {
+      audioSymbols(df, win, stride)
+    }._1
 
-  private val symbolsCache =
-    new java.util.LinkedHashMap[(String, Int, Int), DataFrame](16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Int, Int), DataFrame]): Boolean =
-        size() > 16
-    }
+  private final val SymbolsCacheMax = 16
+  private val symbolsCache = new ArtifactCache[(String, Int, Int), DataFrame](
+    "audioSymbols", SymbolsCacheMax)
 
   /** Trim-robust audio near-dup pairs: exact n-gram Jaccard over the
     * [[audioSymbols]] streams — clips pair when their symbol shingle

@@ -314,31 +314,20 @@ object QualityClf {
     * the standalone classifier query instead of re-training per
     * query. Models are small driver artifacts (buckets+1 longs).
     */
-  private val ClfCacheMax = 8
-  private val clfCache = new java.util.LinkedHashMap[
+  private final val ClfCacheMax = 8
+  private val clfCache = new ArtifactCache[
       (String, String, String, String, Int, Int, Long, Long, Long, Long, Long),
-      ClfModel](16, 0.75f, false) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[(String, String, String, String, Int, Int, Long, Long, Long, Long, Long), ClfModel]): Boolean =
-      size() > ClfCacheMax
-  }
+      ClfModel]("qualityClf", ClfCacheMax)
 
   def trainQualityClfCached(labeled: DataFrame, idCol: String,
       textCol: String, labelCol: String, buckets: Int = 1024,
       epochs: Int = 12, sigDiv: Long = 4L, lrWNum: Long = 0L,
-      lrWDen: Long = 1L, lrBNum: Long = 1L, lrBDen: Long = 1L): ClfModel = {
-    val key = (Dedup.planKey(labeled), idCol, textCol, labelCol, buckets,
-      epochs, sigDiv, lrWNum, lrWDen, lrBNum, lrBDen)
-    clfCache.synchronized {
-      val hit = clfCache.get(key)
-      if (hit != null) return hit
+      lrWDen: Long = 1L, lrBNum: Long = 1L, lrBDen: Long = 1L): ClfModel =
+    clfCache.getOrCompute((Dedup.planKey(labeled), idCol, textCol, labelCol,
+        buckets, epochs, sigDiv, lrWNum, lrWDen, lrBNum, lrBDen)) {
+      trainQualityClf(labeled, idCol, textCol, labelCol, buckets,
+        epochs, sigDiv, lrWNum, lrWDen, lrBNum, lrBDen)
     }
-    val m = trainQualityClf(labeled, idCol, textCol, labelCol, buckets,
-      epochs, sigDiv, lrWNum, lrWDen, lrBNum, lrBDen)
-    clfCache.synchronized { clfCache.put(key, m) }
-    Scratch.noteBuild("qualityClf")
-    m
-  }
 
   /** Score a corpus with a trained model: ONE exchange-free codegen
     * scan — the hashed feature array folds against the literal weight

@@ -172,84 +172,74 @@ object TextAnalysis {
     * silently serve another corpus's model). The LM over a reference
     * corpus is a write-time artifact at scale — scoring queries
     * shouldn't re-aggregate the corpus per call. Entries own their
-    * persisted frames; FIFO eviction unpersists.
+    * persisted frames; LRU eviction unpersists.
     */
-  private val LmCacheMax = 8
+  private final val LmCacheMax = 8
   private val lmCache =
-    new java.util.LinkedHashMap[(String, String), DataFrame](16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), DataFrame]): Boolean = {
-        val evict = size() > LmCacheMax
-        if (evict) e.getValue.unpersist(false)
-        evict
-      }
-    }
+    ArtifactCache.frames[(String, String)]("termCounts", LmCacheMax)
 
   /** Cached [[termCounts]]; `eager` materializes on a miss (warm-up
     * path — the build is billed to "write time", not the first query).
     */
   def termCountsCached(df: DataFrame, textCol: String,
       eager: Boolean = true): DataFrame = {
-    val key = (Dedup.planKey(df), textCol)
-    var built: DataFrame = null
-    val counts = lmCache.synchronized {
-      val hit = lmCache.get(key)
-      if (hit != null) hit
-      else {
-        built = termCounts(df, textCol)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        lmCache.put(key, built)
-        Scratch.noteBuild("termCounts")
-        built
-      }
+    val (counts, built) = lmCache.getOrBuild((Dedup.planKey(df), textCol)) {
+      termCounts(df, textCol)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    if (eager && (counts eq built)) counts.count()
+    if (eager && built) counts.count()
     counts
   }
 
-  /** Mapped-closure corpus counts — unigram occurrences AND bigram
-    * occurrences over the capped-vocab `<unk>` closure — as BOUNDED
-    * driver-side model tables (≤ (V+1)² + V+1 rows), memoized per
-    * (corpus plan, text col, vocab) exactly like [[termCountsCached]]
-    * and Bpe.trainMergesCached: at 100 TB the n-gram LM trains once at
-    * write time and is SERVED to every scoring query; rebuilding it
-    * per query was the fit half of both bigram scorers' cost. ONE
-    * tokenize pass emits both populations from a let-bound mapped
-    * array; the bounded collect splits driver-side. Keyed on the
-    * canonicalized corpus plan (the bench warm-up invariant), build
-    * logged to the cache ledger. NOT any query's declared result —
-    * the scorers' per-doc outputs always recompute from the corpus.
+  /** The bigram scorers' capped-vocab model: the top `vocab` terms of
+    * the corpus, and unigram AND bigram occurrence counts over the
+    * `<unk>` closure of those terms — BOUNDED driver-side tables
+    * (≤ (V+1)² + V+1 rows).
     */
-  private val lmBiCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int), (Seq[(String, String, Long)], Seq[(String, Long)])]()
+  private[graft] case class MappedLm(topTerms: Seq[String],
+      biCounts: Seq[(String, String, Long)], uniCounts: Seq[(String, Long)])
+
+  /** [[MappedLm]] memoized per (corpus plan, text col, vocab) exactly
+    * like [[termCountsCached]] and Bpe.trainMergesCached: at 100 TB the
+    * n-gram LM trains once at write time and is SERVED to every scoring
+    * query; rebuilding it per query was the fit half of both bigram
+    * scorers' cost. The vocabulary is derived INSIDE the build, so the
+    * key covers every input of the value. ONE tokenize pass emits both
+    * populations from a let-bound mapped array; the bounded collect
+    * splits driver-side. NOT any query's declared result — the
+    * scorers' per-doc outputs always recompute from the corpus.
+    */
+  private final val LmBiCacheMax = 8
+  private val lmBiCache = new ArtifactCache[(String, String, Int), MappedLm](
+    "lmMappedCounts", LmBiCacheMax)
 
   private[graft] def mappedCorpusCountsCached(lmCorpus: DataFrame,
-      lmTextCol: String, vocab: Int, topTerms: Seq[String])
-      : (Seq[(String, String, Long)], Seq[(String, Long)]) =
-    lmBiCache.computeIfAbsent(
-      (Dedup.planKey(lmCorpus), lmTextCol, vocab), _ => {
-        Scratch.noteBuild("lmMappedCounts")
-        def mapped(c: Column) = transform(tokens(c), t =>
-          when(t.isInCollection(topTerms), t).otherwise(lit("<unk>")))
-        val rows = lmCorpus
-          .select(explode(QualityClf.letEval(mapped(col(lmTextCol))) { mt =>
-            val n1 = greatest(size(mt) - 1, lit(0))
-            concat(
-              transform(mt, t =>
-                struct(lit("u").as("_k"), t.as("_w1"), lit("").as("_w2"))),
-              zip_with(slice(mt, lit(1), n1), slice(mt, lit(2), n1),
-                (a, b) => struct(lit("b").as("_k"), a.as("_w1"), b.as("_w2"))))
-          }).as("r"))
-          .select(col("r._k").as("_k"), col("r._w1").as("_w1"),
-            col("r._w2").as("_w2"))
-          .groupBy(col("_k"), col("_w1"), col("_w2"))
-          .agg(count(lit(1)).as("_c"))
-          .collect()
-        (rows.filter(_.getString(0) == "b").toSeq
+      lmTextCol: String, vocab: Int): MappedLm =
+    lmBiCache.getOrCompute((Dedup.planKey(lmCorpus), lmTextCol, vocab)) {
+      val topTerms = capVocab(termCountsCached(lmCorpus, lmTextCol), vocab)
+        .select(col("term")).collect().map(_.getString(0)).toSeq
+      def mapped(c: Column) = transform(tokens(c), t =>
+        when(t.isInCollection(topTerms), t).otherwise(lit("<unk>")))
+      val rows = lmCorpus
+        .select(explode(QualityClf.letEval(mapped(col(lmTextCol))) { mt =>
+          val n1 = greatest(size(mt) - 1, lit(0))
+          concat(
+            transform(mt, t =>
+              struct(lit("u").as("_k"), t.as("_w1"), lit("").as("_w2"))),
+            zip_with(slice(mt, lit(1), n1), slice(mt, lit(2), n1),
+              (a, b) => struct(lit("b").as("_k"), a.as("_w1"), b.as("_w2"))))
+        }).as("r"))
+        .select(col("r._k").as("_k"), col("r._w1").as("_w1"),
+          col("r._w2").as("_w2"))
+        .groupBy(col("_k"), col("_w1"), col("_w2"))
+        .agg(count(lit(1)).as("_c"))
+        .collect()
+      MappedLm(topTerms,
+        rows.filter(_.getString(0) == "b").toSeq
           .map(r => (r.getString(1), r.getString(2), r.getLong(3))),
-         rows.filter(_.getString(0) == "u").toSeq
+        rows.filter(_.getString(0) == "u").toSeq
           .map(r => (r.getString(1), r.getLong(3))))
-      })
+    }
 
   private[graft] def capVocab(counts: DataFrame, vocab: Int): DataFrame =
     counts.orderBy(col("cnt").desc, col("term")).limit(vocab)
@@ -345,8 +335,10 @@ object TextAnalysis {
       s"vocab $vocab outside [1, $maxVocab]: the bigram table collects " +
         "up to vocab² rows to the driver; raise maxVocab only with the " +
         "memory to hold it")
-    val topTerms = capVocab(termCountsCached(lmCorpus, lmTextCol), vocab)
-      .select(col("term")).collect().map(_.getString(0)).toSeq
+    // model tables served from the bounded memo (one tokenize pass,
+    // shared with the interpolated scorer — see mappedCorpusCountsCached)
+    val MappedLm(topTerms, biCounts, _) =
+      mappedCorpusCountsCached(lmCorpus, lmTextCol, vocab)
     val vSize = topTerms.size + 1
     def mapped(c: Column) = transform(tokens(c), t =>
       when(t.isInCollection(topTerms), t).otherwise(lit("<unk>")))
@@ -361,10 +353,6 @@ object TextAnalysis {
       zip_with(slice(mt, lit(1), n1), slice(mt, lit(2), n1),
         (a, b) => struct(a.as("w1"), b.as("w2")))
     }
-    // model tables served from the bounded memo (one tokenize pass,
-    // shared with the interpolated scorer — see mappedCorpusCountsCached)
-    val (biCounts, _) =
-      mappedCorpusCountsCached(lmCorpus, lmTextCol, vocab, topTerms)
     val spark = docs.sparkSession
     import spark.implicits._
     val corpusBi = biCounts.toDF("_w1", "_w2", "_c2")
@@ -415,8 +403,13 @@ object TextAnalysis {
       s"vocab $vocab outside [1, $maxVocab]: the bigram table collects " +
         "up to vocab² rows to the driver")
     require(lambda > 0.0 && lambda < 1.0, s"lambda in (0,1), got $lambda")
-    val topTerms = capVocab(termCountsCached(lmCorpus, lmTextCol), vocab)
-      .select(col("term")).collect().map(_.getString(0)).toSeq
+    // ONE corpus pass for BOTH model tables (was two: a bigram scan +
+    // a unigram scan, each re-tokenizing the corpus — §1.2 "don't
+    // compute things twice"), served from the bounded memo shared with
+    // the plain bigram scorer (mappedCorpusCountsCached). Counts are
+    // identical to the two-scan form by construction.
+    val MappedLm(topTerms, biCounts, uniRows) =
+      mappedCorpusCountsCached(lmCorpus, lmTextCol, vocab)
     val vSize = topTerms.size + 1
     def mapped(c: Column) = transform(tokens(c), t =>
       when(t.isInCollection(topTerms), t).otherwise(lit("<unk>")))
@@ -427,13 +420,6 @@ object TextAnalysis {
       zip_with(slice(mt, lit(1), n1), slice(mt, lit(2), n1),
         (a, b) => struct(a.as("w1"), b.as("w2")))
     }
-    // ONE corpus pass for BOTH model tables (was two: a bigram scan +
-    // a unigram scan, each re-tokenizing the corpus — §1.2 "don't
-    // compute things twice"), served from the bounded memo shared with
-    // the plain bigram scorer (mappedCorpusCountsCached). Counts are
-    // identical to the two-scan form by construction.
-    val (biCounts, uniRows) =
-      mappedCorpusCountsCached(lmCorpus, lmTextCol, vocab, topTerms)
     val spark = docs.sparkSession
     import spark.implicits._
     val corpusBi = biCounts.toDF("_w1", "_w2", "_c2")

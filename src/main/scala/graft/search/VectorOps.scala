@@ -2,6 +2,7 @@ package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.pipeline.ArtifactCache
 
 /** Vector similarity primitives, expressed with Spark's codegen'd
   * higher-order functions (`zip_with`, `aggregate`) — no UDFs, so the
@@ -523,53 +524,37 @@ object VectorOps {
     * pipeline-API callers). Centroids are small driver objects — no
     * persisted frames to own.
     */
-  private val IvfCacheMax = 16
+  private final val IvfCacheMax = 16
   private val ivfModelCache =
-    new java.util.LinkedHashMap[(String, String, Int), IvfModel](16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Int), IvfModel]): Boolean =
-        size() > IvfCacheMax
-    }
+    new ArtifactCache[(String, String, Int), IvfModel]("ivfModel", IvfCacheMax)
 
   /** [[trainIvf]] memoized per (source plan, vecCol, nlist) — training
     * is a write-time step; deterministic, so the cache never changes a
     * result.
     */
   def trainIvfCached(df: DataFrame, vecCol: String, nlist: Int,
-      iters: Int = 3): IvfModel = {
-    val key = (graft.pipeline.Dedup.planKey(df), vecCol, nlist)
-    ivfModelCache.synchronized {
-      val hit = ivfModelCache.get(key)
-      if (hit != null) return hit
+      iters: Int = 3): IvfModel =
+    ivfModelCache.getOrCompute(
+        (graft.pipeline.Dedup.planKey(df), vecCol, nlist)) {
+      trainIvf(df, vecCol, nlist, iters)
     }
-    val m = trainIvf(df, vecCol, nlist, iters)
-    ivfModelCache.synchronized { ivfModelCache.put(key, m) }
-    graft.pipeline.Scratch.noteBuild("ivfModel")
-    m
-  }
 
   /** Calibrated probe counts per ad-hoc artifact + (k, target) —
     * declared-index calibrations live in [[IndexCache.probes]].
     */
   private val ivfNprobeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Int, Double), Int]()
+    new ArtifactCache[(String, String, Int, Int, Double), Integer](
+      "ivfNprobeCalibration", IvfCacheMax)
 
   /** [[calibrateNprobe]] memoized per (artifact, k, target). */
   def calibrateNprobeCached(corpus: DataFrame, vecCol: String, idCol: String,
       model: IvfModel, k: Int, targetRecall: Double,
-      calibQueries: DataFrame): Int = {
-    val key = (graft.pipeline.Dedup.planKey(corpus), vecCol,
-      model.centroids.length, k, targetRecall)
-    val hit = ivfNprobeCache.get(key)
-    if (hit != 0) hit
-    else {
-      graft.pipeline.Scratch.noteBuild("ivfNprobeCalibration")
-      val np = calibrateNprobe(corpus, vecCol, idCol, model, k,
-        targetRecall, calibQueries)
-      ivfNprobeCache.putIfAbsent(key, np)
-      np
+      calibQueries: DataFrame): Int =
+    ivfNprobeCache.getOrCompute((graft.pipeline.Dedup.planKey(corpus), vecCol,
+        model.centroids.length, k, targetRecall)) {
+      calibrateNprobe(corpus, vecCol, idCol, model, k, targetRecall,
+        calibQueries)
     }
-  }
 
   /** Nearest-centroid id as a column. The native expression carries the
     * centroid matrix as ONE reference object (graft.functions
@@ -925,42 +910,33 @@ object VectorOps {
       .select((idCol +: "_uq" +: extra).map(col): _*)
 
   /** [[stagedUnit]] with the staged frame pinned (MEMORY_AND_DISK,
-    * plan-keyed, FIFO-bounded like GraphAlgos.projCache): the µ-unit
+    * plan-keyed, LRU-bounded like GraphAlgos.projCache): the µ-unit
     * corpus is WRITE-TIME material — at 100 TB it is a materialized
     * column next to the embeddings, not per-query work — and the
     * analytics family (knn/margins/outlier/purity/eval/mmr) re-reads
     * the same staged corpus a dozen times per session. Streaming
-    * micro-batches churn keys through the FIFO harmlessly (an evicted
+    * micro-batches churn keys through the LRU harmlessly (an evicted
     * entry recomputes its one-scan lineage; no correctness loss).
     */
   private[graft] def stagedUnitCached(df: DataFrame, idCol: String,
       vecCol: String, extra: Seq[String] = Nil): DataFrame = {
-    val key = (graft.pipeline.Dedup.planKey(df), idCol, vecCol,
-      extra.mkString(","))
-    var built: DataFrame = null
-    val e = unitCache.synchronized {
-      val hit = unitCache.get(key)
-      if (hit != null) hit
-      else {
-        // persist PRE-PARTITIONED on the id: the family's consumers
-        // join the staged corpus on idCol (asgn joins, pair joins), so
-        // the one build-time exchange here buys exchange-free joins on
-        // every read — the bucketed-by-id layout the materialized
-        // column would have at 100 TB
-        built = stagedUnit(df, idCol, vecCol, extra)
-          .repartition(col(idCol))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        unitCache.put(key, built)
-        graft.pipeline.Scratch.noteBuild("stagedUnit")
-        built
-      }
+    val (e, built) = unitCache.getOrBuild((graft.pipeline.Dedup.planKey(df),
+        idCol, vecCol, extra.mkString(","))) {
+      // persist PRE-PARTITIONED on the id: the family's consumers
+      // join the staged corpus on idCol (asgn joins, pair joins), so
+      // the one build-time exchange here buys exchange-free joins on
+      // every read — the bucketed-by-id layout the materialized
+      // column would have at 100 TB
+      stagedUnit(df, idCol, vecCol, extra)
+        .repartition(col(idCol))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    if (e eq built) e.count()
+    if (built) e.count()
     e
   }
 
-  // LRU (accessOrder = true), 24 entries. The r17 cache-build ledger
-  // caught the old 8-entry INSERTION-order FIFO churning: the
+  // 24 entries. The r17 cache-build ledger caught the old 8-entry
+  // INSERTION-order FIFO churning: the
   // embedding suite stages more than 8 distinct frames (corpus,
   // src/tgt halves, augmented unions...), so a hot entry was evicted
   // by 8 newer inserts even while being read every rep —
@@ -969,17 +945,9 @@ object VectorOps {
   // keeps hot entries; 24 bounds the simultaneous staging footprint
   // (each entry is a bucketed id+unit-vector projection persisted
   // MEMORY_AND_DISK — spillable; eviction still unpersists).
-  private val UnitCacheMax = 24
-  private val unitCache =
-    new java.util.LinkedHashMap[(String, String, String, String), DataFrame](
-      32, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, String, String), DataFrame]): Boolean = {
-        val evict = size() > UnitCacheMax
-        if (evict) e.getValue.unpersist(false)
-        evict
-      }
-    }
+  private final val UnitCacheMax = 24
+  private val unitCache = ArtifactCache.frames[(String, String, String, String)](
+    "stagedUnit", UnitCacheMax)
 
   /** [[knnJoin]] on the INTEGER-DOT contract: ranks by the exact long
     * dot product of [[l2NormalizeQuantized]] µ-unit vectors (`_qdot`
@@ -1960,26 +1928,20 @@ object VectorOps {
     * same write-time trade as the reference's vector indexes), so
     * serving doesn't re-train or re-encode per query; here, repeated
     * queries over the same corpus build the artifact once. Entries own
-    * their persisted frames; FIFO eviction unpersists.
+    * their persisted frames; LRU eviction unpersists.
     */
-  private val PqCacheMax = 8
+  private final val PqCacheMax = 8
   private val pqCache =
-    new java.util.LinkedHashMap[(String, String, Int, Int), (PqModel, DataFrame)](
-        16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Int, Int), (PqModel, DataFrame)]): Boolean = {
-        val evict = size() > PqCacheMax
-        if (evict) e.getValue._2.unpersist(false)
-        evict
-      }
-    }
+    new ArtifactCache[(String, String, Int, Int), (PqModel, DataFrame)](
+      "pqModel", PqCacheMax, _._2.unpersist(false))
 
   /** Calibrated candidate depths per PQ artifact + (k, target) — the
     * [[graft.search.IndexCache]] `probes` discipline: calibration is a
     * write-time measurement, not a per-query cost.
     */
   private val pqRefineCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Int, Int, Double), Int]()
+    new ArtifactCache[(String, String, Int, Int, Int, Double), Integer](
+      "pqRefineCalibration", IvfCacheMax)
 
   /** Train-and-encode as a cached write-time artifact: returns the
     * codebooks and the PERSISTED encoded corpus (original columns +
@@ -1988,22 +1950,13 @@ object VectorOps {
   def trainEncodePqCached(df: DataFrame, vecCol: String, m: Int,
       ks: Int = 256, iters: Int = 10,
       maxTrainRows: Int = 16384): (PqModel, DataFrame) = {
-    val key = (graft.pipeline.Dedup.planKey(df), vecCol, m, ks)
-    var built: DataFrame = null
-    val out = pqCache.synchronized {
-      val hit = pqCache.get(key)
-      if (hit != null) hit
-      else {
-        val model = trainPq(df, vecCol, m, ks, iters, maxTrainRows)
-        built = encodePq(df, vecCol, model)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val entry = (model, built)
-        pqCache.put(key, entry)
-        graft.pipeline.Scratch.noteBuild("pqModel")
-        entry
-      }
+    val (out, built) = pqCache.getOrBuild(
+        (graft.pipeline.Dedup.planKey(df), vecCol, m, ks)) {
+      val model = trainPq(df, vecCol, m, ks, iters, maxTrainRows)
+      (model, encodePq(df, vecCol, model)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     }
-    if (out._2 eq built) built.count()
+    if (built) out._2.count()
     out
   }
 
@@ -2011,19 +1964,12 @@ object VectorOps {
   def calibrateRefineCached(corpus: DataFrame, encoded: DataFrame,
       vecCol: String, idCol: String, model: PqModel, k: Int,
       targetRecall: Double, calibQueries: DataFrame, maxRefine: Int = 64,
-      codeCol: String = "pq_code"): Int = {
-    val key = (graft.pipeline.Dedup.planKey(corpus), vecCol, model.m,
-      model.ks, k, targetRecall)
-    val hit = pqRefineCache.get(key)
-    if (hit != 0) hit
-    else {
-      graft.pipeline.Scratch.noteBuild("pqRefineCalibration")
-      val r = calibrateRefine(corpus, encoded, vecCol, idCol, model, k,
+      codeCol: String = "pq_code"): Int =
+    pqRefineCache.getOrCompute((graft.pipeline.Dedup.planKey(corpus), vecCol,
+        model.m, model.ks, k, targetRecall)) {
+      calibrateRefine(corpus, encoded, vecCol, idCol, model, k,
         targetRecall, calibQueries, maxRefine, codeCol)
-      pqRefineCache.putIfAbsent(key, r)
-      r
     }
-  }
 
   /** Per-query ADC lookup table, flat `m·ks` row-major:
     * `t(s·ks + c) = dot(normalized(query)_sub_s, codebook_s(c))`.
@@ -2475,63 +2421,37 @@ object VectorOps {
     * Centroids are k×dim longs — a small driver artifact, no frames
     * to own.
     */
-  private val KmCacheMax = 16
+  private final val KmCacheMax = 16
   private val kmCentCache =
-    new java.util.LinkedHashMap[(String, String, String, Int, Int), Array[Seq[Long]]](
-      16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, String, Int, Int), Array[Seq[Long]]]): Boolean =
-        size() > KmCacheMax
-    }
+    new ArtifactCache[(String, String, String, Int, Int), Array[Seq[Long]]](
+      "kmeansCentroids", KmCacheMax)
 
   private[graft] def kmeansCentroidsCached(df: DataFrame, idCol: String,
-      vecCol: String, k: Int, iters: Int): Array[Seq[Long]] = {
-    val key = (graft.pipeline.Dedup.planKey(df), idCol, vecCol, k, iters)
-    kmCentCache.synchronized {
-      val hit = kmCentCache.get(key)
-      if (hit != null) return hit
+      vecCol: String, k: Int, iters: Int): Array[Seq[Long]] =
+    kmCentCache.getOrCompute(
+        (graft.pipeline.Dedup.planKey(df), idCol, vecCol, k, iters)) {
+      kmeansCentroidsQuantized(df, idCol, vecCol, k, iters)
     }
-    val c = kmeansCentroidsQuantized(df, idCol, vecCol, k, iters)
-    kmCentCache.synchronized { kmCentCache.put(key, c) }
-    graft.pipeline.Scratch.noteBuild("kmeansCentroids")
-    c
-  }
 
   /** [[kmeansQuantized]] with BOTH halves shared: cached centroids and
-    * the assignment frame pinned (MEMORY_AND_DISK, plan-keyed FIFO —
+    * the assignment frame pinned (MEMORY_AND_DISK, plan-keyed LRU —
     * the stagedUnitCached discipline). The assignment is one scan with
     * a k-literal argmin; pairs/keep/report over the same corpus read
     * the identical block structure, so recomputing it per query is the
     * SemDeDup-family recompute the r15 bench measured at ~2.8×.
     */
-  private val kmAsgnCache =
-    new java.util.LinkedHashMap[(String, String, String, Int, Int), DataFrame](
-      16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, String, Int, Int), DataFrame]): Boolean = {
-        val evict = size() > KmCacheMax
-        if (evict) e.getValue.unpersist(false)
-        evict
-      }
-    }
+  private val kmAsgnCache = ArtifactCache.frames[(String, String, String, Int, Int)](
+    "kmeansQuantized", KmCacheMax)
 
   private[graft] def kmeansQuantizedCached(df: DataFrame, idCol: String,
       vecCol: String, k: Int, iters: Int): DataFrame = {
-    val key = (graft.pipeline.Dedup.planKey(df), idCol, vecCol, k, iters)
-    var built: DataFrame = null
-    val e = kmAsgnCache.synchronized {
-      val hit = kmAsgnCache.get(key)
-      if (hit != null) hit
-      else {
-        built = kmeansAssignQuantized(df, idCol, vecCol,
-            kmeansCentroidsCached(df, idCol, vecCol, k, iters))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        kmAsgnCache.put(key, built)
-        graft.pipeline.Scratch.noteBuild("kmeansQuantized")
-        built
-      }
+    val (e, built) = kmAsgnCache.getOrBuild(
+        (graft.pipeline.Dedup.planKey(df), idCol, vecCol, k, iters)) {
+      kmeansAssignQuantized(df, idCol, vecCol,
+          kmeansCentroidsCached(df, idCol, vecCol, k, iters))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    if (e eq built) e.count()
+    if (built) e.count()
     e
   }
 

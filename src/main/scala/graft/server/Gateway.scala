@@ -89,7 +89,8 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
 
   /** Serving counters as one JSON object (stored-route hit counts
     * sorted by name; `wal_position` present when this gateway logs to
-    * a WAL).
+    * a WAL; `caches`: hit/miss/evict counters of the process's
+    * plan-keyed artifact caches).
     */
   def metricsJson: String = {
     import scala.jdk.CollectionConverters._
@@ -99,7 +100,8 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
       s""","wal_position":${graft.model.GraphWal.commitPosition(r)}""").getOrElse("")
     s"""{"reads":${nReads.get()},"writes":${nWrites.get()},""" +
       s""""errors":${nErrors.get()},"truncated":${nTruncated.get()},""" +
-      s""""routes":$routes$wal}"""
+      s""""routes":$routes$wal,""" +
+      s""""caches":${graft.pipeline.ArtifactCache.countersJson}}"""
   }
   private val stored =
     new java.util.concurrent.ConcurrentHashMap[String, QueryBundle.StoredRoute]()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import graft.pipeline.ArtifactCache
 
 /** Streaming extension (beyond reference parity — the reference has no
   * streaming surface, SURVEY §2.9; its local default storage is even
@@ -543,27 +544,18 @@ object GraphStream {
       vecCol: String, k: Int, minMarginQ: Long): DataFrame => DataFrame = {
     import graft.search.VectorOps
     import graft.pipeline.Dedup
-    val key = (Dedup.planKey(srcRef), Dedup.planKey(tgt), idCol, vecCol, k)
-    var built: DataFrame = null
-    val backSums = backSumCache.synchronized {
-      val hit = backSumCache.get(key)
-      if (hit != null) hit
-      else {
-        built = VectorOps.marginBackwardSums(srcRef, tgt, idCol,
-            vecCol, k)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        backSumCache.put(key, built)
-        graft.pipeline.Scratch.noteBuild("graphBackSum")
-        built
-      }
+    val (backSums, built) = backSumCache.getOrBuild(
+        (Dedup.planKey(srcRef), Dedup.planKey(tgt), idCol, vecCol, k)) {
+      VectorOps.marginBackwardSums(srcRef, tgt, idCol, vecCol, k)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     // materialize the standing artifact once, not per batch
-    if (backSums eq built) backSums.count()
+    if (built) backSums.count()
     batch => VectorOps.marginMineBatch(batch, tgt, backSums, idCol,
       vecCol, k, minMarginQ)
   }
 
-  /** FIFO-bounded like GraphAlgos.projCache: a long-lived ingest
+  /** LRU-bounded like GraphAlgos.projCache: a long-lived ingest
     * server that rebuilds margin filters (the doc's "rebuild when the
     * source distribution moves" rule) must not accumulate persisted
     * back-sum tables; eviction unpersists the frame it owns.
@@ -580,17 +572,10 @@ object GraphStream {
     * .marginMineBatch]] directly; reference-counting closures here
     * would trade that documented cliff for unbounded executor memory
     * on the same workload. */
-  private val BackSumCacheMax = 4
+  private final val BackSumCacheMax = 4
   private val backSumCache =
-    new java.util.LinkedHashMap[(String, String, String, String, Int), DataFrame](
-      8, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, String, String, Int), DataFrame]): Boolean = {
-        val evict = size() > BackSumCacheMax
-        if (evict) e.getValue.unpersist(false)
-        evict
-      }
-    }
+    ArtifactCache.frames[(String, String, String, String, Int)](
+      "graphBackSum", BackSumCacheMax)
 
   /** Quantile gating at ingest — the streaming arm of
     * [[graft.pipeline.Curation.quantileGate]]: the reference corpus's
@@ -1010,7 +995,7 @@ object GraphStream {
     * alerting wants the fresh window, and integer means of means
     * would not compose anyway).
     *
-    * The pinned qrels route through a plan-keyed FIFO cache (the
+    * The pinned qrels route through a plan-keyed LRU cache (the
     * [[backSumCache]] discipline): re-constructing the monitor —
     * or constructing many against the same eval set — reuses one
     * persisted table, and a server cycling through distinct qrels
@@ -1020,22 +1005,14 @@ object GraphStream {
   def rankEvalIngestMonitor(qrels: DataFrame, k: Int)
       : DataFrame => DataFrame = {
     import graft.search.RankEval
-    val key = graft.pipeline.Dedup.planKey(qrels)
-    var built: DataFrame = null
-    val pinned = qrelsCache.synchronized {
-      val hit = qrelsCache.get(key)
-      if (hit != null) hit
-      else {
-        built = qrels
+    val (pinned, built) =
+      qrelsCache.getOrBuild(graft.pipeline.Dedup.planKey(qrels)) {
+        qrels
           .select(col("query_id").cast("long").as("query_id"),
             col("doc_id").cast("long").as("doc_id")).distinct()
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        qrelsCache.put(key, built)
-        graft.pipeline.Scratch.noteBuild("qrels")
-        built
       }
-    }
-    if (pinned eq built) pinned.count() // materialize once, outside the lock
+    if (built) pinned.count() // materialize once, outside the lock
     batch => RankEval.rankEvalSummary(
       RankEval.rankEvalReport(batch, pinned, k))
   }
@@ -1044,16 +1021,8 @@ object GraphStream {
     * same eviction contract as [[backSumCache]]: >cap distinct qrels
     * frames degrade the oldest to recompute-on-next-construction,
     * never to unbounded pinned memory. */
-  private val QrelsCacheMax = 4
-  private val qrelsCache =
-    new java.util.LinkedHashMap[String, DataFrame](8, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, DataFrame]): Boolean = {
-        val evict = size() > QrelsCacheMax
-        if (evict) e.getValue.unpersist(false)
-        evict
-      }
-    }
+  private final val QrelsCacheMax = 4
+  private val qrelsCache = ArtifactCache.frames[String]("qrels", QrelsCacheMax)
 
   /** DSIR quality filtering at ingest — the domain-shaping arm of the
     * filter family (the dedup arms drop what the corpus has SEEN; this

@@ -210,11 +210,17 @@ class GatewaySpec extends GraftSuite {
       assert(synced.contains("n_in") && synced.contains("\"version\""))
       assert(http("POST", "/v1/deploy", Some("not a bundle")).contains("error"))
 
-      // serving counters: the stored-route call above + per-route hits
+      // serving counters: the stored-route call above + per-route hits,
+      // and the artifact caches' hit/miss/evict counters
+      graft.pipeline.Dedup.warmRowCount(spark.range(3).toDF())
       val m = http("GET", "/metrics", None)
       assert(m.contains(""""reads":1"""), m)
       assert(m.contains(""""n_in":1"""), m)
       assert(m.contains(""""errors":0"""), m)
+      val rowCount = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(m).get("caches").get("rowCount")
+      assert(rowCount.get("misses").asLong >= 1 && rowCount.has("hits") &&
+        rowCount.has("evictions"), m)
     } finally gw.stop()
   }
 

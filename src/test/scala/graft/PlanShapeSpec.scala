@@ -363,10 +363,16 @@ class PlanShapeSpec extends GraftSuite {
     val ids = spark.read.parquet(s"$dir/documents.parquet").select("doc_id")
     def allWarm(modalities: Seq[String]): Boolean = modalities.forall(m =>
       graft.pipeline.Multimodal.mediaCacheHas(ids, "doc_id", Some(m)))
-    // measured at HEAD, isolated spec run: cross cold=4, video_wf
-    // cold=4, dhash warm=2, thumb warm=5 (two modalities' banded
-    // paths meet — its warm count IS the r16 ceiling), cross_video_mf
-    // warm=5
+    // per query: the WARM ceiling is the exchange count measured in an
+    // isolated spec run with the query's media artifacts pinned; the
+    // COLD ceiling is the retained r16 value.
+    //   q_media_cross             warm 4, cold 5 (r16)
+    //   q_media_video_neardup_wf  warm 4, cold 5 (r16)
+    //   q_media_dhash_pairs       warm 2, cold 5 (r16)
+    //   q_media_thumb_pairs       warm 5, cold 5 (r16) — two
+    //     modalities' banded paths meet, so its warm count IS the r16
+    //     ceiling
+    //   q_media_cross_video_mf    warm 5, cold 6 (r16)
     val budgets: Seq[(String, Seq[String], Int, Int, Boolean, Int)] = Seq(
       ("q_media_cross", Seq("image"), 5, 4, true, 1),
       ("q_media_video_neardup_wf", Seq("video"), 5, 4, true, 1),
