@@ -456,12 +456,20 @@ class Compiler(
     env.getOrElse(name, batchVars.getOrElse(name,
       throw new TraversalException(s"unknown variable: $name")))
 
+  /** The elements with one of `ids`, read from only the labels that can
+    * hold them (all labels when none can: the filter then finds nothing).
+    */
+  private def idSource(ids: Seq[Long], isEdges: Boolean, hit: Column): Stream = {
+    val held = store.labelsHolding(ids, isEdges)
+    val labels = if (held.nonEmpty) held else if (isEdges) store.edgeLabels else store.nodeLabels
+    val df = if (isEdges) store.edgesUnion(labels) else store.nodesUnion(labels)
+    Stream(df.where(hit), isEdges, Some(labels))
+  }
+
   private def sourceNodes(ref: NodeRef, env: mutable.Map[String, Stream]): Stream = ref match {
     case NodeRef.All => Stream(store.allNodes, isEdges = false, Some(store.nodeLabels))
-    case NodeRef.Id(i) =>
-      Stream(store.allNodes.where(col("_id") === i), isEdges = false, Some(store.nodeLabels))
-    case NodeRef.Ids(is) =>
-      Stream(store.allNodes.where(col("_id").isin(is: _*)), isEdges = false, Some(store.nodeLabels))
+    case NodeRef.Id(i) => idSource(Seq(i), isEdges = false, col("_id") === i)
+    case NodeRef.Ids(is) => idSource(is, isEdges = false, col("_id").isin(is: _*))
     case NodeRef.Var(n) => lookupVar(env, n)
     case NodeRef.Param(n) => params.get(n) match {
       case Some(VI64(i)) => sourceNodes(NodeRef.Id(i), env)
@@ -472,10 +480,8 @@ class Compiler(
 
   private def sourceEdges(ref: EdgeRef, env: mutable.Map[String, Stream]): Stream = ref match {
     case EdgeRef.All => Stream(store.allEdges, isEdges = true, Some(store.edgeLabels))
-    case EdgeRef.Id(i) =>
-      Stream(store.allEdges.where(col("_id") === i), isEdges = true, Some(store.edgeLabels))
-    case EdgeRef.Ids(is) =>
-      Stream(store.allEdges.where(col("_id").isin(is: _*)), isEdges = true, Some(store.edgeLabels))
+    case EdgeRef.Id(i) => idSource(Seq(i), isEdges = true, col("_id") === i)
+    case EdgeRef.Ids(is) => idSource(is, isEdges = true, col("_id").isin(is: _*))
     case EdgeRef.Var(n) => lookupVar(env, n)
     case EdgeRef.Param(n) => params.get(n) match {
       case Some(VI64(i)) => sourceEdges(EdgeRef.Id(i), env)
@@ -742,19 +748,33 @@ class Compiler(
 
   /** Id allocation seed: the store's durable high-water mark when
     * known (stamped by prior writes, persisted in graph_meta.json) —
-    * the `max(_id)` aggregation below is only the FIRST-EVER-write
-    * fallback for stores that predate the mark, never a per-session
-    * cost on a store the engine has written before (at 100 TB that
-    * scan is a whole-corpus job).
+    * the id scan below is only the FIRST-EVER-write fallback for stores
+    * that predate the mark, never a per-session cost on a store the
+    * engine has written before (at 100 TB that scan is a whole-corpus
+    * job). The scan also stamps each label's id range on the store, so
+    * id-targeted sources read only the labels that can hold the ids.
     */
   private lazy val idBase = new java.util.concurrent.atomic.AtomicLong {
     set(idSeedCtl.seed(store.idHighWater.map(_ + 1).getOrElse {
-      val maxNode = if (store.nodeTables.isEmpty) 0L
-        else store.allNodes.agg(max(col("_id"))).head().getLong(0)
-      val maxEdge = if (store.edgeTables.isEmpty) 0L
-        else store.allEdges.agg(max(col("_id"))).head().getLong(0)
-      math.max(maxNode, maxEdge) + 1
+      val ranges = scanIdRanges()
+      store = store.withIdRanges(ranges)
+      ranges.values.map(_._2).foldLeft(0L)(math.max) + 1
     }))
+  }
+
+  /** Every label's `_id` bounds, from one action over a union of
+    * per-label aggregates; a label with no ids gets an empty range.
+    */
+  private def scanIdRanges(): Map[(Boolean, String), (Long, Long)] = {
+    val keys = store.nodeLabels.toSeq.map(false -> _) ++ store.edgeLabels.toSeq.map(true -> _)
+    if (keys.isEmpty) return Map.empty
+    val id = col("_id").cast("long")
+    keys.zipWithIndex.map { case ((e, l), k) =>
+      (if (e) store.edgesFor(l) else store.nodesFor(l)).agg(lit(k), min(id), max(id))
+    }.reduce(_.union(_)).collect().map { r =>
+      keys(r.getInt(0)) ->
+        (if (r.isNullAt(1)) (Long.MaxValue, Long.MinValue) else (r.getLong(1), r.getLong(2)))
+    }.toMap
   }
 
   /** Re-stamp the allocation mark after an id-allocating mutation (the

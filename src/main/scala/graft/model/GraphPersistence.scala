@@ -96,6 +96,13 @@ object GraphPersistence {
     // durable id allocation mark: a reloaded store seeds its id counter
     // from here instead of a full-table max(_id) scan
     store.idHighWater.foreach(meta.put("idHighWater", _))
+    // per-label id bounds of the saved tables: a reloaded store's
+    // id-targeted sources keep reading only the labels that can hold the ids
+    val ranges = meta.putObject("idRanges")
+    val (nodeRanges, edgeRanges) = (ranges.putObject("nodes"), ranges.putObject("edges"))
+    store.frameIdRanges.toSeq.sortBy(_._1).foreach { case ((isEdges, l), (lo, hi)) =>
+      (if (isEdges) edgeRanges else nodeRanges).putArray(l).add(lo).add(hi)
+    }
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$root/graph_meta.json"), mapper.writeValueAsString(meta))
@@ -129,6 +136,13 @@ object GraphPersistence {
       .map(l => l -> readTable("nodes", "_id")(l)).toMap
     val edges = labelsIn(s"$root/edges")
       .map(l => l -> readTable("edges", "_src")(l)).toMap
+    val ranges = metaTree.flatMap(t => Option(t.get("idRanges"))).toSeq.flatMap { r =>
+      Seq("nodes" -> false, "edges" -> true).flatMap { case (kind, isEdges) =>
+        Option(r.get(kind)).toSeq.flatMap(_.properties.asScala.map { e =>
+          (isEdges -> e.getKey) -> (e.getValue.get(0).asLong, e.getValue.get(1).asLong)
+        })
+      }
+    }.toMap
     val (edgeMeta, indexes, hw) = metaTree match {
       case Some(tree) =>
         val em = Option(tree.get("edgeMeta")).map { emn =>
@@ -147,6 +161,6 @@ object GraphPersistence {
         Option.empty[Long])
     }
     new GraphStore(spark, nodes, edges, edgeMeta, indexes,
-      idHighWater = hw)
+      idHighWater = hw, idRanges = ranges)
   }
 }

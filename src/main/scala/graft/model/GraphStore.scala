@@ -86,7 +86,15 @@ final class GraphStore private (
       * path that merges rows with EXTERNAL ids (streaming overlay) must
       * clear it. Persisted in graph_meta.json across save/load.
       */
-    val idHighWater: Option[Long]) {
+    val idHighWater: Option[Long],
+    /** `_id` bounds per label, keyed `(isEdges, label)`: every id in a
+      * ranged label's frame lies in its range or among its overlay's
+      * live ids. Taken by the scan that seeds the id allocator
+      * (Compiler.idBase) and persisted in graph_meta.json. A label
+      * without a range (a store that predates the scan, a frame
+      * replaced by `withNodes`/`withEdges`) may hold any id.
+      */
+    val idRanges: Map[(Boolean, String), (Long, Long)]) {
 
   private def nodeTabs = tabs.nodes
   private def edgeTabs = tabs.edges
@@ -94,11 +102,12 @@ final class GraphStore private (
   def this(spark: SparkSession, nodeTables: Map[String, DataFrame],
       edgeTables: Map[String, DataFrame], edgeMeta: Map[String, EdgeMeta],
       indexes: Set[graft.ast.IndexSpec] = Set.empty,
-      version: String = GraphStore.newVersion(), idHighWater: Option[Long] = None) =
+      version: String = GraphStore.newVersion(), idHighWater: Option[Long] = None,
+      idRanges: Map[(Boolean, String), (Long, Long)] = Map.empty) =
     this(spark, GraphStore.Tabs(
       nodeTables.transform((_, df) => new LabelTable(spark, Some(df), None)),
       edgeTables.transform((_, df) => new LabelTable(spark, Some(df), None))),
-      edgeMeta, indexes, version, idHighWater)
+      edgeMeta, indexes, version, idHighWater, idRanges)
 
   /** Empty store bound to a session (write batches can build a graph
     * from scratch via AddN/AddE).
@@ -109,21 +118,56 @@ final class GraphStore private (
   private def copy(nodeTabs: Map[String, LabelTable] = nodeTabs,
       edgeTabs: Map[String, LabelTable] = edgeTabs, edgeMeta: Map[String, EdgeMeta] = edgeMeta,
       indexes: Set[graft.ast.IndexSpec] = indexes, version: String = GraphStore.newVersion(),
-      idHighWater: Option[Long] = idHighWater): GraphStore =
+      idHighWater: Option[Long] = idHighWater,
+      idRanges: Map[(Boolean, String), (Long, Long)] = idRanges): GraphStore =
     new GraphStore(spark, GraphStore.Tabs(nodeTabs, edgeTabs), edgeMeta, indexes, version,
-      idHighWater)
+      idHighWater, idRanges)
 
-  /** Replace a label's whole frame (its overlay goes with it). */
+  /** Replace a label's whole frame (its overlay and id range go with it). */
   def withNodes(label: String, df: DataFrame): GraphStore =
-    copy(nodeTabs = nodeTabs + (label -> new LabelTable(spark, Some(df), None)))
+    copy(nodeTabs = nodeTabs + (label -> new LabelTable(spark, Some(df), None)),
+      idRanges = idRanges - (false -> label))
   def withEdges(label: String, df: DataFrame, meta: Option[EdgeMeta] = None): GraphStore =
     copy(edgeTabs = edgeTabs + (label -> new LabelTable(spark, Some(df), None)),
-      edgeMeta = meta.map(m => edgeMeta + (label -> m)).getOrElse(edgeMeta))
+      edgeMeta = meta.map(m => edgeMeta + (label -> m)).getOrElse(edgeMeta),
+      idRanges = idRanges - (true -> label))
   def withIndexes(ix: Set[graft.ast.IndexSpec]): GraphStore = copy(indexes = ix, version = version)
   /** Stamp the durable id allocation mark (no data change — version kept). */
   def withIdHighWater(n: Long): GraphStore = copy(version = version, idHighWater = Some(n))
   /** Forget the allocation mark (rows with external ids were merged). */
   def clearIdHighWater: GraphStore = copy(version = version, idHighWater = None)
+  /** Stamp per-label id bounds (no data change — version kept). */
+  def withIdRanges(r: Map[(Boolean, String), (Long, Long)]): GraphStore =
+    copy(version = version, idRanges = r)
+
+  /** Bounds of a label's base ids, when known: its stamped range, or
+    * an empty range when it has no base (its rows are all overlay rows).
+    */
+  private def baseRange(isEdges: Boolean, l: String, t: LabelTable): Option[(Long, Long)] =
+    if (t.base.isEmpty) Some((Long.MaxValue, Long.MinValue)) else idRanges.get(isEdges -> l)
+
+  /** Labels whose frame can hold one of `ids`: its overlay holds one
+    * live, or its base range contains one, or its base range is unknown.
+    */
+  def labelsHolding(ids: Seq[Long], isEdges: Boolean): Set[String] =
+    (if (isEdges) edgeTabs else nodeTabs).collect {
+      case (l, t) if t.overlay.exists(o => ids.exists(o.live.contains)) ||
+          baseRange(isEdges, l, t).forall { case (lo, hi) =>
+            ids.exists(i => lo <= i && i <= hi) } => l
+    }.toSet
+
+  /** Bounds of every id in each label's frame, where known: its base
+    * range widened to its overlay's live ids. A saved copy's ranges.
+    */
+  def frameIdRanges: Map[(Boolean, String), (Long, Long)] = {
+    def of(isEdges: Boolean, tabs: Map[String, LabelTable]) = tabs.flatMap { case (l, t) =>
+      baseRange(isEdges, l, t).map { case (lo, hi) =>
+        val live = t.overlay.map(_.live.keys).getOrElse(Nil)
+        (isEdges -> l) -> (live.foldLeft(lo)(math.min), live.foldLeft(hi)(math.max))
+      }
+    }
+    of(isEdges = false, nodeTabs) ++ of(isEdges = true, edgeTabs)
+  }
 
   /** Merge one mutation's delta into a label's overlay, on the driver:
     * `rows` (laid out as `schema`) become the current version of their

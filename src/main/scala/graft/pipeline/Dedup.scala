@@ -403,13 +403,13 @@ object Dedup {
     arr
   }
 
-  /** Drop and unpersist every cached shingle set / signature artifact. */
-  def clearShingleCache(): Unit = {
-    shingleCache.clear()
-    sigCache.clear()
-    simhashSigCache.clear()
-    winnowFpCache.clear()
-  }
+  /** Drop (and unpersist) every cached dedup artifact: shingle sets and
+    * arrays, signatures, winnowing fingerprints, duplicated-position
+    * and window-count frames, and minhash cluster tables.
+    */
+  def clearShingleCache(): Unit =
+    Seq(shingleCache, arrCache, sigCache, simhashSigCache, winnowFpCache, dupPosCache,
+      clusterCache).foreach(_.clear())
 
   /** Fixed xor-seed family: one md5 per shingle, `numHashes` derived
     * hashes via xor with golden-ratio seeds (60-bit, positive longs).

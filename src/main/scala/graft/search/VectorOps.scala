@@ -1921,19 +1921,20 @@ object VectorOps {
     df.withColumn(codeCol, array(codes: _*))
   }
 
-  /** Bounded cache of trained codebooks + persisted encodings, keyed
-    * by the source plan + params ([[graft.pipeline.Dedup.planKey]]
+  /** Bounded caches of trained codebooks and of persisted encodings,
+    * both keyed by the source plan + params ([[graft.pipeline.Dedup.planKey]]
     * discipline — full canonicalized plan, LocalRelation content
     * hashed). At 100 TB the PQ code column is written at ingest (the
     * same write-time trade as the reference's vector indexes), so
     * serving doesn't re-train or re-encode per query; here, repeated
-    * queries over the same corpus build the artifact once. Entries own
-    * their persisted frames; LRU eviction unpersists.
+    * queries over the same corpus build the artifact once. The encoding
+    * cache owns its persisted frames; LRU eviction unpersists.
     */
   private final val PqCacheMax = 8
-  private val pqCache =
-    new ArtifactCache[(String, String, Int, Int), (PqModel, DataFrame)](
-      "pqModel", PqCacheMax, _._2.unpersist(false))
+  private val pqModelCache =
+    new ArtifactCache[(String, String, Int, Int), PqModel]("pqModel", PqCacheMax)
+  private val pqCodeCache =
+    ArtifactCache.frames[(String, String, Int, Int)]("pqEncoded", PqCacheMax)
 
   /** Calibrated candidate depths per PQ artifact + (k, target) — the
     * [[graft.search.IndexCache]] `probes` discipline: calibration is a
@@ -1945,19 +1946,19 @@ object VectorOps {
 
   /** Train-and-encode as a cached write-time artifact: returns the
     * codebooks and the PERSISTED encoded corpus (original columns +
-    * `pq_code`). The eager materializing count runs outside the lock.
+    * `pq_code`). Training and the eager materializing count both run
+    * outside the caches' locks.
     */
   def trainEncodePqCached(df: DataFrame, vecCol: String, m: Int,
       ks: Int = 256, iters: Int = 10,
       maxTrainRows: Int = 16384): (PqModel, DataFrame) = {
-    val (out, built) = pqCache.getOrBuild(
-        (graft.pipeline.Dedup.planKey(df), vecCol, m, ks)) {
-      val model = trainPq(df, vecCol, m, ks, iters, maxTrainRows)
-      (model, encodePq(df, vecCol, model)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val key = (graft.pipeline.Dedup.planKey(df), vecCol, m, ks)
+    val model = pqModelCache.getOrCompute(key)(trainPq(df, vecCol, m, ks, iters, maxTrainRows))
+    val (enc, built) = pqCodeCache.getOrBuild(key) {
+      encodePq(df, vecCol, model).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    if (built) out._2.count()
-    out
+    if (built) enc.count()
+    (model, enc)
   }
 
   /** [[calibrateRefine]] memoized per (artifact, k, target). */
@@ -2445,10 +2446,12 @@ object VectorOps {
 
   private[graft] def kmeansQuantizedCached(df: DataFrame, idCol: String,
       vecCol: String, k: Int, iters: Int): DataFrame = {
-    val (e, built) = kmAsgnCache.getOrBuild(
-        (graft.pipeline.Dedup.planKey(df), idCol, vecCol, k, iters)) {
-      kmeansAssignQuantized(df, idCol, vecCol,
-          kmeansCentroidsCached(df, idCol, vecCol, k, iters))
+    val key = (graft.pipeline.Dedup.planKey(df), idCol, vecCol, k, iters)
+    // Lloyd rounds run before, not inside, the assignment cache's lock
+    val cents = kmCentCache.getOrCompute(key)(
+      kmeansCentroidsQuantized(df, idCol, vecCol, k, iters))
+    val (e, built) = kmAsgnCache.getOrBuild(key) {
+      kmeansAssignQuantized(df, idCol, vecCol, cents)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     if (built) e.count()

@@ -6,8 +6,8 @@ import org.apache.spark.sql.DataFrame
 import graft.ast.Json
 import graft.exec.BatchExecutor
 import graft.model.GraphStore
+import graft.server.Http.quote
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
 /** Minimal HTTP façade mirroring the reference gateway surface:
@@ -30,6 +30,14 @@ import java.nio.charset.StandardCharsets
   * a second Gateway instance sharing the process would have its cached
   * artifacts evicted (forced rebuild on next query; a perf hazard, not
   * a correctness one).
+  *
+  * Transport: every accepted socket sets TCP_NODELAY, so a response
+  * leaves as soon as it is written instead of waiting out the client's
+  * delayed ACK of its headers (about 40 ms a request; see [[Http]]).
+  * The JDK reads `sun.net.httpserver.nodelay` once per JVM, when its
+  * first HttpServer starts, and `start()` sets it if unset. An
+  * application that embeds graft and creates its own HttpServer before
+  * this one must pass `-Dsun.net.httpserver.nodelay=true` itself.
   */
 class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
     maxResponseRows: Int = 10000, workerThreads: Int = 8,
@@ -433,7 +441,7 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
         countError()
         sc.cancelJobGroup(jobGroup)
         try {
-          val line = s"""{"error":${quote(e.getMessage)}}""" + "\n"
+          val line = Http.error(e.getMessage) + "\n"
           ex.getResponseBody.write(line.getBytes(StandardCharsets.UTF_8))
         } catch { case _: Exception => () } // client is gone
     } finally {
@@ -466,16 +474,14 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
       }
     }
 
-  private def requireAuth(ex: HttpExchange): Boolean =
-    ServerAuth.require(ex,
-      authorized(Option(ex.getRequestHeaders.getFirst("Authorization"))))
+  private def requireAuth(ex: HttpExchange): Boolean = Http.authorize(ex, authorized)
 
   def start(): Unit = {
-    server = HttpServer.create(new InetSocketAddress(port), 0)
+    server = Http.server(port)
     server.createContext("/v1/query", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         if (!requireAuth(ex)) return
-        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+        val body = Http.body(ex)
         val path = ex.getRequestURI.getPath
         // x-helix-* request headers (sdks/rust/src/lib.rs:270-298):
         //  - require-writer: single-writer deployment — this node IS the
@@ -514,12 +520,7 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
             } catch {
               case e: Exception =>
                 countError()
-                val bytes = (s"""{"error":${quote(e.getMessage)}}""" + "\n")
-                  .getBytes(StandardCharsets.UTF_8)
-                ex.getResponseHeaders.set("Content-Type", "application/json")
-                ex.sendResponseHeaders(400, bytes.length)
-                ex.getResponseBody.write(bytes)
-                ex.close()
+                Http.respond(ex, 400, Http.error(e.getMessage) + "\n")
                 return
             }
           parsed match {
@@ -548,32 +549,24 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
             if (sub.nonEmpty) {
               if (warmOnly && !isWarm(sub)) {
                 status = 400
-                (s"""{"error":${quote(s"query not warm: $sub")}}""", false)
+                (Http.error(s"query not warm: $sub"), false)
               } else handleStoredT(sub, body)
             } else handleT(body)
           } catch {
             case e: Exception =>
               countError()
               status = 400
-              (s"""{"error":${quote(e.getMessage)}}""", false)
+              (Http.error(e.getMessage), false)
           }
         if (truncated)
           ex.getResponseHeaders.set("x-graft-truncated", "true")
-        val bytes = resp.getBytes(StandardCharsets.UTF_8)
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        ex.sendResponseHeaders(status, bytes.length)
-        ex.getResponseBody.write(bytes)
-        ex.close()
+        Http.respond(ex, status, resp)
       }
     })
     server.createContext("/metrics", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         if (protectMetrics && !requireAuth(ex)) return
-        val bytes = metricsJson.getBytes(StandardCharsets.UTF_8)
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        ex.sendResponseHeaders(200, bytes.length)
-        ex.getResponseBody.write(bytes)
-        ex.close()
+        Http.respond(ex, 200, metricsJson)
       }
     })
     // bundle deploy/sync over the wire — the `helix push` / `helix
@@ -588,42 +581,23 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
         val resp =
           try {
             if (ex.getRequestMethod == "GET") renderBundle
-            else {
-              val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-              s"""{"deployed":${loadBundle(body)}}"""
-            }
+            else s"""{"deployed":${loadBundle(Http.body(ex))}}"""
           } catch {
-            case e: Exception =>
-              status = 400
-              s"""{"error":${quote(e.getMessage)}}"""
+            case e: Exception => status = 400; Http.error(e.getMessage)
           }
-        val bytes = resp.getBytes(StandardCharsets.UTF_8)
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        ex.sendResponseHeaders(status, bytes.length)
-        ex.getResponseBody.write(bytes)
-        ex.close()
+        Http.respond(ex, status, resp)
       }
     })
     if (mcp) server.createContext("/mcp", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         if (!requireAuth(ex)) return
-        val method = ex.getRequestMethod
-        if (method != "POST") {
-          // the streamable transport's GET opens a server event stream,
-          // which this gateway doesn't offer — 405 per spec
-          ex.sendResponseHeaders(405, -1); ex.close(); return
+        // the streamable transport's GET opens a server event stream,
+        // which this gateway doesn't offer — 405 per spec
+        if (ex.getRequestMethod != "POST") Http.respond(ex, 405, "")
+        else Mcp.handle(Gateway.this, Http.body(ex)) match {
+          case Some(resp) => Http.respond(ex, 200, resp)
+          case None => Http.respond(ex, 202, "") // notification: accepted, no body
         }
-        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-        Mcp.handle(Gateway.this, body) match {
-          case Some(resp) =>
-            val bytes = resp.getBytes(StandardCharsets.UTF_8)
-            ex.getResponseHeaders.set("Content-Type", "application/json")
-            ex.sendResponseHeaders(200, bytes.length)
-            ex.getResponseBody.write(bytes)
-          case None => // notification: accepted, no body
-            ex.sendResponseHeaders(202, -1)
-        }
-        ex.close()
       }
     })
     pool = java.util.concurrent.Executors.newFixedThreadPool(workerThreads)
@@ -634,30 +608,5 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
   def stop(): Unit = {
     if (server != null) server.stop(0)
     if (pool != null) pool.shutdown()
-  }
-
-  private def quote(s: String): String =
-    "\"" + Option(s).getOrElse("").flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-}
-
-/** Shared bearer-auth response for the Gateway and Router HTTP
-  * boundaries: one place owns the 401 contract.
-  */
-private[server] object ServerAuth {
-  def require(ex: HttpExchange, ok: Boolean): Boolean = {
-    if (!ok) {
-      val bytes = """{"error":"unauthorized"}""".getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      ex.sendResponseHeaders(401, bytes.length)
-      ex.getResponseBody.write(bytes)
-      ex.close()
-    }
-    ok
   }
 }

@@ -6,8 +6,6 @@ import org.apache.spark.sql.SparkSession
 import graft.ast.Json
 import graft.model.{GraphStore, GraphWal}
 
-import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Single-writer / many-readers serving topology over one WAL — the
@@ -38,6 +36,9 @@ import java.util.concurrent.atomic.AtomicInteger
   * stands in for the cluster); across machines each replica is the
   * same object tailing the same manifest on shared storage — nothing
   * in the protocol assumes shared memory.
+  *
+  * Transport: the Gateway's ([[Http]]) — TCP_NODELAY on every accepted
+  * socket, JSON responses through one writer.
   */
 final class Router(spark: SparkSession, walRoot: String, port: Int = 6969,
     numReaders: Int = 2, maxResponseRows: Int = 10000,
@@ -170,7 +171,7 @@ final class Router(spark: SparkSession, walRoot: String, port: Int = 6969,
     val (gw, servedBy, pos) = dispatch(sub, parsed, hdr) match {
       case Left((replicaName, errBody)) =>
         ex.getResponseHeaders.set("x-helix-served-by", replicaName)
-        send(ex, errBody, 400)
+        Http.respond(ex, 400, errBody)
         return (true, parsed)
       case Right(t) => t
     }
@@ -217,16 +218,14 @@ final class Router(spark: SparkSession, walRoot: String, port: Int = 6969,
       s""""wal_position":${GraphWal.commitPosition(walRoot)}}"""
   }
 
-  private def requireAuth(ex: HttpExchange): Boolean =
-    ServerAuth.require(ex, writer.authorized(
-      Option(ex.getRequestHeaders.getFirst("Authorization"))))
+  private def requireAuth(ex: HttpExchange): Boolean = Http.authorize(ex, writer.authorized)
 
   def start(): Unit = {
-    server = HttpServer.create(new InetSocketAddress(port), 0)
+    server = Http.server(port)
     server.createContext("/v1/query", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         if (!requireAuth(ex)) return
-        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+        val body = Http.body(ex)
         val sub = ex.getRequestURI.getPath.stripPrefix("/v1/query").stripPrefix("/")
         def hd(n: String) = Option(ex.getRequestHeaders.getFirst(n))
         // NDJSON streaming passthrough: the same opt-in the Gateway
@@ -248,7 +247,7 @@ final class Router(spark: SparkSession, walRoot: String, port: Int = 6969,
             } catch {
               case e: Exception =>
                 nErrors.incrementAndGet()
-                send(ex, s"""{"error":${quote(e.getMessage)}}""", 400)
+                Http.respond(ex, 400, Http.error(e.getMessage))
                 true
             }
           if (handled) return
@@ -259,25 +258,24 @@ final class Router(spark: SparkSession, walRoot: String, port: Int = 6969,
           try route(sub, body, hd, preParsed)
           catch { case e: Exception =>
             nErrors.incrementAndGet()
-            Router.Routed(400, s"""{"error":${quote(e.getMessage)}}""",
-              Map.empty)
+            Router.Routed(400, Http.error(e.getMessage), Map.empty)
           }
         routed.headers.foreach { case (k, v) =>
           ex.getResponseHeaders.set(k, v)
         }
-        send(ex, routed.body, routed.status)
+        Http.respond(ex, routed.status, routed.body)
       }
     })
     server.createContext("/v1/cluster", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         if (protectMetrics && !requireAuth(ex)) return
-        send(ex, status)
+        Http.respond(ex, 200, status)
       }
     })
     server.createContext("/metrics", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         if (protectMetrics && !requireAuth(ex)) return
-        send(ex, metricsJson)
+        Http.respond(ex, 200, metricsJson)
       }
     })
     // deploy reaches the writer AND every replica (Router.loadBundle);
@@ -289,14 +287,11 @@ final class Router(spark: SparkSession, walRoot: String, port: Int = 6969,
         val resp =
           try {
             if (ex.getRequestMethod == "GET") writer.renderBundle
-            else {
-              val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-              s"""{"deployed":${loadBundle(body)}}"""
-            }
+            else s"""{"deployed":${loadBundle(Http.body(ex))}}"""
           } catch {
-            case e: Exception => st = 400; s"""{"error":${quote(e.getMessage)}}"""
+            case e: Exception => st = 400; Http.error(e.getMessage)
           }
-        send(ex, resp, st)
+        Http.respond(ex, st, resp)
       }
     })
     pool = java.util.concurrent.Executors.newFixedThreadPool(workerThreads)
@@ -304,27 +299,10 @@ final class Router(spark: SparkSession, walRoot: String, port: Int = 6969,
     server.start()
   }
 
-  private def send(ex: HttpExchange, resp: String, status: Int = 200): Unit = {
-    val bytes = resp.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(status, bytes.length)
-    ex.getResponseBody.write(bytes)
-    ex.close()
-  }
-
   def stop(): Unit = {
     if (server != null) server.stop(0)
     if (pool != null) pool.shutdown()
   }
-
-  private def quote(s: String): String =
-    "\"" + Option(s).getOrElse("").flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }
 
 object Router {

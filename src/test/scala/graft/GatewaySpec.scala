@@ -939,4 +939,30 @@ class GatewaySpec extends GraftSuite {
     assert(resp.contains("Ann"), resp)
     assert(gwJobs == 0, s"AddN request started $gwJobs jobs")
   }
+
+  test("transport: keep-alive responses skip the delayed-ACK stall and keep their JSON status") {
+    val port = freePort()
+    val gw = new Gateway(TestBase.parityGraph(), port = port, apiKey = Some("k3y"))
+    gw.start()
+    try {
+      val ms = medianGetMs(port, "/metrics")
+      assert(ms < 20.0, s"median keep-alive /metrics round trip $ms ms")
+      val key = Some("Bearer k3y")
+      val q = """{"request_type":"read","query":{"queries":[{"Query":{"name":"n",
+        "steps":[{"N":"All"},"Count"],"condition":null}}],"returns":["n"]},"parameters":{}}"""
+      val cases = Seq(
+        200 -> exchange(port, "POST", "/v1/query", Some(q), key),
+        400 -> exchange(port, "POST", "/v1/query", Some("{nope"), key),
+        401 -> exchange(port, "POST", "/v1/query", Some(q)),
+        200 -> exchange(port, "GET", "/v1/deploy", auth = key),
+        400 -> exchange(port, "POST", "/v1/deploy", Some("{nope"), key),
+        200 -> exchange(port, "POST", "/mcp", Some("""{"jsonrpc":"2.0","id":1,"method":"ping"}"""), key),
+        202 -> exchange(port, "POST", "/mcp",
+          Some("""{"jsonrpc":"2.0","method":"notifications/initialized"}"""), key))
+      cases.foreach { case (want, (code, ctype, body, _)) =>
+        assert(code == want && ctype == "application/json", s"$want: $code $ctype $body")
+      }
+      assert(cases.head._2._3 == """{"n":3}""")
+    } finally gw.stop()
+  }
 }

@@ -288,4 +288,33 @@ class MutationSpec extends GraftSuite {
     comp.run(g().n(10L).drop().t)
     assert(singleLong(comp.run(g().eWithLabel("CITES").count().t)) == 0)
   }
+
+  test("an id-targeted source reads only the labels that can hold the ids, overlay ids exactly") {
+    val s = spark
+    import s.implicits._
+    val docs = Seq((10L, "Doc", "d")).toDF("_id", "_label", "title")
+    val comp = TestBase.compiler(TestBase.parityGraph().withNodes("Doc", docs), write = true)
+    // the first write scans for the id seed and stamps every label's range
+    val tag = ids(comp.run(g().addN("Tag", "name" -> VString("t")).id().t)).head
+    assert(comp.store.idRanges == Map((false, "ParityUser") -> (1L, 3L),
+      (false, "Doc") -> (10L, 10L), (true, "FOLLOWS") -> (100L, 101L)))
+    def labels(c: graft.exec.Compiler, is: Long*) = c.evalToStream(g().n(is: _*).t).labels
+    assert(labels(comp, 10L) == Some(Set("Doc")))
+    assert(labels(comp, 2L, 10L) == Some(Set("ParityUser", "Doc")))
+    assert(comp.store.labelsHolding(Seq(101L), isEdges = true) == Set("FOLLOWS"))
+    // targets only an overlay holds: a new label, and an id past a stamped range
+    assert(labels(comp, tag) == Some(Set("Tag")))
+    val dave = ids(comp.run(g().addN("ParityUser", "name" -> VString("Dave")).id().t)).head
+    assert(dave > 3L && labels(comp, dave) == Some(Set("ParityUser")))
+    assert(rows(comp.run(g().n(dave).values("name").t)) == Seq(Seq("Dave")))
+    comp.run(g().n(1L).addE("LIKES", NodeRef.Ids(Seq(dave, 10L))).t)
+    assert(ids(comp.run(g().n(1L).out("LIKES").id().t)) == Seq(10L, dave))
+    // an id no label can hold: every label is read, nothing matches
+    assert(comp.run(g().n(55L).t).count() == 0)
+    // withNodes replaces a frame and drops its range: the label is always read
+    val docs2 = Seq((5000L, "Doc", "e")).toDF("_id", "_label", "title")
+    val replaced = TestBase.compiler(comp.store.withNodes("Doc", docs2))
+    assert(labels(replaced, 2L) == Some(Set("ParityUser", "Doc")))
+    assert(rows(replaced.run(g().n(5000L).values("title").t)) == Seq(Seq("e")))
+  }
 }

@@ -2685,6 +2685,26 @@ class PipelineSpec extends GraftSuite {
     assert(!(b eq first), "distinct corpora must not share an entry")
   }
 
+  test("clearShingleCache drops every dedup cache: old frames unpersist, rebuilds are new") {
+    val s = spark
+    import s.implicits._
+    val df = Seq((1L, "alpha beta gamma delta epsilon"), (2L, "alpha beta gamma delta zeta"))
+      .toDF("doc_id", "text")
+    def persisted() = Seq(
+      Dedup.shingleArrayCached(df, "text", "doc_id", 3),
+      Dedup.duplicatedPositionsCached(df, "text", "doc_id", 3),
+      Dedup.windowCountsCached(df, "text", "doc_id", 3))
+    def clusters() = Dedup.minhashClustersCached(df, "text", "doc_id",
+      n = 3, numHashes = 6, bands = 3, num = 3, den = 10)
+    val (frames, cl) = (persisted(), clusters())
+    assert(frames.forall(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE))
+    Dedup.clearShingleCache()
+    // checked before the rebuild: a re-persisted equal plan reads as cached
+    frames.foreach(f => assert(f.storageLevel == org.apache.spark.storage.StorageLevel.NONE))
+    persisted().zip(frames).foreach { case (b, a) => assert(!(b eq a), "served a pre-clear frame") }
+    assert(!(clusters() eq cl), "served the pre-clear cluster table")
+  }
+
   test("banded pair paths emit each pair exactly ONCE without a dedup shuffle") {
     val s = spark
     import s.implicits._

@@ -710,4 +710,20 @@ class PlanShapeSpec extends GraftSuite {
       prof("broadcast") == 0,
       s"quality-clf serve must stay a single exchange-free scan: $prof")
   }
+
+  test("an Ids source into Order reads only the Order relation once ranges are stamped") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val store = TestGraph(spark, dir)
+    val orders = store.nodesFor("Order").select("_id").limit(2).collect().map(_.getLong(0))
+    val comp = new Compiler(store, writeEnabled = true)
+    // the first write scans for the id seed and stamps every label's range
+    comp.run(g().addN("Customer", "c_custkey" -> graft.ast.PropertyValue.VI64(9999999L)).t)
+    val df = comp.run(g().n(orders.toSeq: _*).values("o_orderkey").t)
+    val leaves = df.queryExecution.optimizedPlan.collectLeaves()
+    val read = leaves.collect { case LogicalRelation(h: HadoopFsRelation, _, _, _, _) =>
+      h.location.rootPaths.mkString(",") }
+    assert(read.size == leaves.size && read.forall(_.contains("orders")),
+      s"expected only the orders relation: $leaves")
+    assert(df.count() == orders.length)
+  }
 }

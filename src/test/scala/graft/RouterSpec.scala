@@ -358,4 +358,26 @@ class RouterSpec extends GraftSuite {
       assert(new String(conn.getInputStream.readAllBytes(), "UTF-8") == """{"n":3}""")
     } finally router.stop()
   }
+
+  test("transport: keep-alive responses skip the delayed-ACK stall and keep their JSON status") {
+    val port = freePort()
+    val router = new Router(spark, walRoot(), port = port, numReaders = 1,
+      apiKey = Some("k3y"))
+    router.start()
+    try {
+      val ms = medianGetMs(port, "/metrics")
+      assert(ms < 20.0, s"median keep-alive /metrics round trip $ms ms")
+      val key = Some("Bearer k3y")
+      val cases = Seq(
+        200 -> exchange(port, "POST", "/v1/query", Some(countUsers), key),
+        400 -> exchange(port, "POST", "/v1/query", Some("{nope"), key),
+        401 -> exchange(port, "POST", "/v1/query", Some(countUsers)),
+        200 -> exchange(port, "GET", "/v1/cluster"),
+        400 -> exchange(port, "POST", "/v1/deploy", Some("{nope"), key))
+      cases.foreach { case (want, (code, ctype, body, _)) =>
+        assert(code == want && ctype == "application/json", s"$want: $code $ctype $body")
+      }
+      assert(cases.head._2._3 == """{"n":3}""")
+    } finally router.stop()
+  }
 }

@@ -76,6 +76,40 @@ abstract class GraftSuite extends AnyFunSuite {
   def ids(df: DataFrame): Seq[Long] =
     df.select("id").collect().toSeq.map(_.getLong(0)).sorted
 
+  /** A loopback port free at the time of the call. */
+  def freePort(): Int = {
+    val ss = new java.net.ServerSocket(0)
+    try ss.getLocalPort finally ss.close()
+  }
+
+  /** One HTTP exchange with a local server: (status, Content-Type, body,
+    * round trip in ms). The body is read to its end and closed, so the
+    * connection goes back to the keep-alive pool for the next call.
+    */
+  def exchange(port: Int, method: String, path: String, body: Option[String] = None,
+      auth: Option[String] = None): (Int, String, String, Double) = {
+    val start = System.nanoTime()
+    val c = new java.net.URL(s"http://127.0.0.1:$port$path")
+      .openConnection().asInstanceOf[java.net.HttpURLConnection]
+    c.setRequestMethod(method)
+    auth.foreach(c.setRequestProperty("Authorization", _))
+    body.foreach { b => c.setDoOutput(true); c.getOutputStream.write(b.getBytes("UTF-8")) }
+    val code = c.getResponseCode
+    val in = if (code < 400) c.getInputStream else c.getErrorStream
+    val out = if (in == null) "" else try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    (code, c.getContentType, out, (System.nanoTime() - start) / 1e6)
+  }
+
+  /** Median round trip, in ms, of `n` keep-alive GETs of `path`. A
+    * server that leaves Nagle's algorithm on answers each in about
+    * 40 ms: its body segment waits for the client's delayed ACK of the
+    * header segment.
+    */
+  def medianGetMs(port: Int, path: String, n: Int = 20): Double = {
+    val ms = Seq.fill(n)(exchange(port, "GET", path)._4).sorted
+    ms(n / 2)
+  }
+
   /** Runs `body` and counts the Spark jobs it starts from this thread.
     * Jobs carry a per-call local property; a marker job started after
     * `body` proves the in-order listener bus delivered every earlier

@@ -335,4 +335,24 @@ class WalSpec extends GraftSuite {
     assert(planNodes(replica) == bound)
     assert(new Gateway(replica).handle(read) == expected)
   }
+
+  test("id ranges persist across checkpoint and load, widened to the ids written since") {
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("gwal-ranges").toString
+    GraphWal.checkpoint(TestBase.parityGraph(), dir)
+    val gw = new Gateway(GraphWal.recover(spark, dir), walRoot = Some(dir))
+    gw.handle(addN("Dana", 28)) // first-ever write: the id scan stamps the ranges
+    val live = gw.currentStore
+    val dana = live.nodesFor("ParityUser").where(col("name") === "Dana")
+      .select("_id").head().getLong(0)
+    assert(live.idRanges(false -> "ParityUser") == (1L, 3L)) // Dana is an overlay row
+    GraphWal.checkpoint(live, dir)
+    val loaded = GraphWal.recover(spark, dir)
+    assert(loaded.idRanges(false -> "ParityUser") == (1L, dana)) // now a base row
+    assert(loaded.idRanges == live.frameIdRanges)
+    val next = new Gateway(loaded, walRoot = Some(dir))
+    next.handle(write(s"""{"N":{"Ids":[1]}},{"AddE":{"label":"FOLLOWS","to":{"Ids":[$dana]},
+      "properties":[]}}"""))
+    assert(next.currentStore.edgesFor("FOLLOWS").where(col("_dst") === dana).count() == 1L)
+  }
 }
