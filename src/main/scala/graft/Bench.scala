@@ -125,7 +125,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // local-iteration knob passthrough (e.g. graft.suffix.debugTiming):
+    // local-iteration knob passthrough (e.g. graft.suffix.maxSliceTokens):
     // SPARK_GRAFT_CONF="k=v,k2=v2" (split on first '=' per token; a
     // static/non-runtime conf warns instead of aborting the whole run)
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(',').foreach { kv =>

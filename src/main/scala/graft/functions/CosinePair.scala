@@ -15,13 +15,14 @@ import org.apache.spark.sql.types._
   * hot-path cost in the within-cluster and candidate-verify joins);
   * this runs one compiled loop per pair.
   *
-  * Semantics are bit-equal with `VectorOps.cosineSimColsHof` (the
-  * reference formulation, proven against the DuckDB oracle's
-  * `list_cosine_similarity`): left-to-right double accumulation of all
-  * three sums, `dot / (sqrt(na) * sqrt(nb))`, and the HOF's null
-  * contract — a null array, a null element on either side, or a length
-  * mismatch (zip_with pads with null) all yield NULL, never a partial
-  * sum. A parity spec pins fused == HOF across these branches.
+  * Semantics are bit-equal with `HofReference.cosineSimColsHof` in the
+  * test sources (the reference formulation, proven against the DuckDB
+  * oracle's `list_cosine_similarity`): left-to-right double
+  * accumulation of all three sums, `dot / (sqrt(na) * sqrt(nb))`, and
+  * the HOF's null contract — a null array, a null element on either
+  * side, or a length mismatch (zip_with pads with null) all yield NULL,
+  * never a partial sum. A parity spec pins fused == HOF across these
+  * branches.
   *
   * ONE deliberate divergence: a degenerate input (zero-norm vector —
   * 0/0 — or NaN elements) yields NULL, not the raw IEEE NaN. The HOF

@@ -84,12 +84,9 @@ private[graft] object Scratch {
     * schedule. The context checkpoint dir is left untouched — no
     * cross-SparkSession conflict over a context-global setting.
     */
-  def stable(frame: DataFrame,
-      dirKeys: Seq[String] = Seq("graft.scratch.dir")): DataFrame = {
+  def stable(frame: DataFrame): DataFrame = {
     val spark = frame.sparkSession
-    val dir = dirKeys.iterator.map(spark.conf.getOption)
-      .collectFirst { case Some(v) if v.nonEmpty => v }
-    dir match {
+    spark.conf.getOption("graft.scratch.dir").filter(_.nonEmpty) match {
       case Some(d) =>
         val path = s"${stableSessionDir(spark, d)}/frame_${stableSeq.incrementAndGet()}"
         frame.write.mode("error").parquet(path)

@@ -98,13 +98,6 @@ object SuffixDedup {
       n: Int): DataFrame = {
     val spark = df.sparkSession
     val store = frameStore(spark)
-    val debug = spark.conf.getOption("graft.suffix.debugTiming").exists(_.toBoolean)
-    var tMark = System.nanoTime()
-    def mark(label: String): Unit = if (debug) {
-      val now = System.nanoTime()
-      println(f"  SUFFIX $label: ${(now - tMark) / 1e9}%.2f s")
-      tMark = now
-    }
     val maxSliceTokens = spark.conf.getOption("graft.suffix.maxSliceTokens")
       .map(_.toInt).getOrElse(8192)
 
@@ -116,18 +109,16 @@ object SuffixDedup {
         transform(TextAnalysis.tokens(col(textCol)),
           t => conv(substring(md5(t), 1, 15), 16, 10).cast("long")).as("_th"))
       .where(size(col("_th")) > 0), spill = true)
-    mark("toksH")
 
     val statsRow = toksH
       .agg(max(size(col("_th"))), sum(size(col("_th")).cast("long"))).head()
     val maxLen = if (statsRow.isNullAt(0)) 0L else statsRow.getInt(0).toLong
     val total = if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)
     val spill = total >= store.spillRowThreshold
-    mark(s"stats total=$total maxLen=$maxLen")
 
     val out =
-      if (maxLen <= maxSliceTokens) sliceSortPath(spark, toksH, n, mark)
-      else rankRefinePath(spark, store, toksH, n, spill, mark)
+      if (maxLen <= maxSliceTokens) sliceSortPath(spark, toksH, n)
+      else rankRefinePath(spark, store, toksH, n, spill)
     store.release()
     out
   }
@@ -149,8 +140,7 @@ object SuffixDedup {
     * run the scan as a second job) held the full slice frame in
     * storage memory and thrashed everything else in a shared session.
     */
-  private def sliceSortPath(spark: SparkSession, toksH: DataFrame, n: Int,
-      mark: String => Unit): DataFrame = {
+  private def sliceSortPath(spark: SparkSession, toksH: DataFrame, n: Int): DataFrame = {
     // n-token window hash per position; a 64-bit collision can only
     // RETAIN a unique-window position (its exact LCPs stay < n and it
     // reports nothing) — never lose a duplicated one
@@ -216,7 +206,6 @@ object SuffixDedup {
     // collected boundary rows, bounded by 2 × partition count
     val boundary = passed.filter(_._2 != 0)
       .map { case (pi, role, r, s, dl) => (pi, role, r, s, dl) }.collect()
-    mark("slice-sort+scan")
     val byPart = boundary.groupBy(_._1)
     val partsInOrder = byPart.keys.toArray.sorted
     val corr = scala.collection.mutable.HashMap.empty[(Any, Long), Long]
@@ -246,7 +235,6 @@ object SuffixDedup {
         StructField("_dl", LongType, nullable = false)))
     val out = Scratch.stable(spark.createDataFrame(outRdd, schema))
     passed.unpersist(false)
-    mark("fixup+out")
     out
   }
 
@@ -255,8 +243,7 @@ object SuffixDedup {
     * tied set only, no global sort in any round.
     */
   private def rankRefinePath(spark: SparkSession, store: Scratch.FrameStore,
-      toksH: DataFrame, n: Int, spill: Boolean,
-      mark: String => Unit): DataFrame = {
+      toksH: DataFrame, n: Int, spill: Boolean): DataFrame = {
     val pos = toksH
       .select(col("_did"), size(col("_th")).cast("long").as("_len"), col("_th"),
         explode(sequence(lit(0), size(col("_th")) - 1)).as("_p0"))
@@ -288,7 +275,6 @@ object SuffixDedup {
       keyCnt.schema("_ka"),
       StructField("_r", LongType, nullable = false),
       StructField("_c", LongType, nullable = false))))
-    mark("keyrank")
 
     val rem = col("_len") - col("_p")
     val level0 = store.keep(pos.join(ranked0, Seq("_ka"))
@@ -306,7 +292,6 @@ object SuffixDedup {
     var active = level0.where(col("_dup") && rem > n)
       .select("_did", "_len", "_p", "_r")
     var activeCnt = active.count()
-    mark("level0")
 
     // ---- refinement rounds: block-local, over the tied set only
     var h = n.toLong
@@ -357,7 +342,6 @@ object SuffixDedup {
       saFrames += frozen
       active = refined.where(!col("_frz")).select("_did", "_len", "_p", "_r")
       activeCnt = active.count()
-      mark(s"round h=$h active=$activeCnt")
       h = horizon
     }
 
@@ -371,7 +355,6 @@ object SuffixDedup {
       Row.fromSeq(r.toSeq :+ i)
     }
     val sa = spark.createDataFrame(saRdd, ordered.schema.add("_i", LongType))
-    mark("sa-build")
     val adj = sa.select(col("_did").as("_ad"), col("_len").as("_al"),
       col("_p").as("_ap"), col("_i"))
       .join(sa.select(col("_did").as("_bd"), col("_len").as("_bl"),
@@ -405,7 +388,6 @@ object SuffixDedup {
         col("_bp").as("_p"), col("_l")))
       .groupBy(col("_did"), col("_len"), col("_p"))
       .agg(max(col("_l")).as("_dl")))
-    mark("lcp+out")
     out
   }
 

@@ -351,6 +351,20 @@ object IndexCache {
       table: => DataFrame): Long =
     counts.computeIfAbsent((storeVersion, label, prop), _ => table.count()).longValue()
 
+  /** [[migrate]] from store `prev` to its successor `next` over the
+    * labels whose node and edge frames kept reference identity; returns
+    * those labels. The writer's commit and a replica's refresh both run
+    * it before the new store publishes.
+    */
+  def migrateUnchanged(prev: graft.model.GraphStore, next: graft.model.GraphStore): Set[String] = {
+    val unchanged = (prev.nodeTables.keySet ++ prev.edgeTables.keySet).filter { l =>
+      prev.nodeTables.get(l).forall(df => next.nodeTables.get(l).exists(_ eq df)) &&
+        prev.edgeTables.get(l).forall(df => next.edgeTables.get(l).exists(_ eq df))
+    }
+    migrate(prev.version, next.version, unchanged)
+    unchanged
+  }
+
   /** Re-key artifacts of UNCHANGED labels from a superseded store
     * version to its successor. The stores are copy-on-write, so a label
     * whose table kept reference identity across a write has bit-identical

@@ -30,25 +30,17 @@ object VectorOps {
 
   /** Vector-vs-query scoring uses the fused native expression (one
     * loop, codegen'd — graft.functions.CosineToQuery); results are
-    * bit-equal with the HOF formulation below.
+    * bit-equal with the HOF formulation (test-side HofReference).
     */
   def cosineSim(vecCol: Column, query: Seq[Double]): Column =
     graft.functions.CosineToQuery(vecCol, query)
 
-  /** Composable HOF formulation (kept for column-to-column use and as
-    * the reference for the fused expression's semantics).
-    */
-  def cosineSimHof(vecCol: Column, query: Seq[Double]): Column = {
-    val q = array(query.map(lit): _*)
-    val qn = math.sqrt(query.map(x => x * x).sum)
-    dot(vecCol, q) / (norm(vecCol) * lit(qn))
-  }
-
   /** Pairwise cosine via the fused native expression (one compiled
     * loop — graft.functions.CosinePair); bit-equal with the HOF
-    * reference below, parity-spec'd including the null branches. On a
-    * degenerate input (zero-norm vector, NaN elements) the fused form
-    * returns NULL — failing every `>= θ` filter and ranking
+    * reference (test-side HofReference), parity-spec'd including the
+    * null branches. On a degenerate input (zero-norm vector, NaN
+    * elements) the fused form returns NULL — failing every `>= θ`
+    * filter and ranking
     * nulls-last — where the HOF under ANSI threw on the division and
     * a raw NaN would have PASSED every threshold (Spark and DuckDB
     * both compare NaN greater than everything). See the CosinePair
@@ -56,13 +48,6 @@ object VectorOps {
     */
   def cosineSimCols(a: Column, b: Column): Column =
     graft.functions.CosinePair(a, b)
-
-  /** Composable HOF reference formulation for [[cosineSimCols]] (the
-    * semantics contract the fused expression and the DuckDB oracle's
-    * `list_cosine_similarity` both match).
-    */
-  def cosineSimColsHof(a: Column, b: Column): Column =
-    dot(a, b) / (norm(a) * norm(b))
 
   /** The 1e-9 SELECTION grid for every exact-cosine top-k in this
     * module: `round(score · 1e9)` half-away-from-zero, as a long.
@@ -212,13 +197,6 @@ object VectorOps {
   def intDotCol(a: Column, b: Column): Column =
     graft.functions.IntDotProduct(a, b)
 
-  /** The composable HOF reference formulation of [[intDotCol]] — the
-    * contract the fused expression is parity-pinned against (and the
-    * form any plain-Spark reader can replay without this library).
-    */
-  private[graft] def intDotColHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
-
   /** Deterministic ±1 sign for the random projection: parity of the
     * first hex nibble of `md5("rp:<i>:<j>")`. Any engine with a
     * standard MD5 reproduces it — the DuckDB oracle recomputes the
@@ -346,25 +324,6 @@ object VectorOps {
       j += 1
     }
     m
-  }
-
-  /** Higher-order-function form of [[signSignature63]] — kept as the
-    * parity reference for the native [[graft.functions.SrpSignature]]
-    * kernel (SearchSpec asserts bit-equality); 63 interpreted
-    * array-folds per row, ~10× the kernel's cost.
-    */
-  private[graft] def signSignature63Hof(df: DataFrame, vecCol: String,
-      out: String, inDim: Int, scale: Long = 1000000L): DataFrame = {
-    val staged = df.withColumn("_srp_q",
-      transform(col(vecCol), x => round(x.cast("double") * scale).cast("long")))
-    val bits = (0 until 63).map { j =>
-      val signs = array((0 until inDim).map(i => lit(rpSign(i, j))): _*)
-      val comp = aggregate(zip_with(col("_srp_q"), signs, (x, s) => x * s),
-        lit(0L), (a, x) => a + x)
-      when(comp > 0, lit(1L << j)).otherwise(lit(0L))
-    }
-    staged.withColumn(out, bits.reduce((a, b) => a.bitwiseOR(b)))
-      .drop("_srp_q")
   }
 
   /** The [[signSignature63]] BIGINT expression in DuckDB SQL over a

@@ -1,14 +1,16 @@
 package graft.server
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
-import graft.ast.Json
+import graft.ast.{Batch, Json, PropertyValue}
 import graft.exec.BatchExecutor
 import graft.model.GraphStore
+import graft.server.Gateway._
 import graft.server.Http.quote
 
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.atomic.AtomicLong
 
 /** Minimal HTTP façade mirroring the reference gateway surface:
   * `POST /v1/query` accepts the DynamicQueryRequest envelope and
@@ -16,6 +18,14 @@ import java.nio.charset.StandardCharsets
   * (sdks/rust/src/lib.rs:244-247; default local port 6969,
   * helix-cli/src/config.rs:7). Built on the JDK's HttpServer —
   * no extra dependencies.
+  *
+  * One request path ([[answer]]): every `/v1/query` request, buffered
+  * or NDJSON, here or through a [[Router]], goes resolve → dispatch →
+  * serve → sink. It resolves once (the inline envelope parsed, or a
+  * stored route with its coerced params), dispatches to the gateway
+  * that serves it, and [[serve]] renders its results into one of two
+  * sinks: the capped buffered body (one collect per returned result)
+  * or the NDJSON stream.
   *
   * Concurrency model (the reference gateway is a multi-client HTTP
   * service, lib.rs:244-338): requests are served by a fixed thread
@@ -86,14 +96,11 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
   // (metrics/src/lib.rs:50 METRICS_URL); the engine-side counterpart
   // here is LOCAL observability only — counters over this instance's
   // serving, nothing leaves the process.
-  import java.util.concurrent.atomic.AtomicLong
   private val nReads = new AtomicLong
   private val nWrites = new AtomicLong
   private val nErrors = new AtomicLong
   private val nTruncated = new AtomicLong
   private val routeHits = new java.util.concurrent.ConcurrentHashMap[String, AtomicLong]()
-
-  private[server] def countError(): Unit = nErrors.incrementAndGet()
 
   /** Serving counters as one JSON object (stored-route hit counts
     * sorted by name; `wal_position` present when this gateway logs to
@@ -113,8 +120,8 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
   }
   private val stored =
     new java.util.concurrent.ConcurrentHashMap[String, QueryBundle.StoredRoute]()
-  /** Stored routes that have executed at least once — the `x-helix-warm`
-    * serving gate (sdks/rust/src/lib.rs:279-287).
+  /** Stored routes that have executed at least once — the
+    * `x-helix-warm` serving gate (sdks/rust/src/lib.rs:279-287).
     */
   private val warm = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -126,12 +133,6 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
     * drop whichever published first.
     */
   private[server] def replaceStore(s: GraphStore): Unit = { store = s }
-
-  /** Whether a deployed stored route is a write route (None: unknown
-    * name) — the Router's dispatch decision for `/v1/query/<name>`.
-    */
-  private[server] def storedIsWrite(name: String): Option[Boolean] =
-    Option(stored.get(name)).map(_.write)
 
   /** Deploy a stored query (the reference's registered-query surface:
     * `#[register]` fn -> queries.json bundle -> POST /v1/query/<name>
@@ -178,57 +179,66 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
     * element-wise arrays; Bytes rejects).
     */
   def handleStored(name: String, paramsJson: String): String =
-    handleStoredT(name, paramsJson)._1
+    serveBuffered(resolve(name, paramsJson, Steering.Plain)).body
 
-  private[server] def handleStoredT(name: String, paramsJson: String): (String, Boolean) = {
-    val (batch, pmap) = storedBatchParams(name, paramsJson)
-    val rendered = executeBatch(batch, pmap)
-    markServed(name)
-    rendered
-  }
+  def handle(body: String): String =
+    serveBuffered(resolve("", body, Steering.Plain)).body
 
-  /** Record a stored route as served: warms it and bumps its hit
-    * counter (shared by the buffered, streamed, and Router paths).
-    */
-  private[server] def markServed(name: String): Unit = {
+  /** Record a stored route as served: warms it and bumps its hit counter. */
+  private def markServed(name: String): Unit = {
     warm.add(name)
     routeHits.computeIfAbsent(name, _ => new AtomicLong).incrementAndGet()
   }
 
-  /** Resolve a stored route to its batch plus coerced parameters (the
-    * shared front half of the buffered and NDJSON-streamed paths).
+  /** Resolve one request against this gateway's deployed routes, parsing
+    * its body once: `sub` names a stored route, whose plain JSON params
+    * coerce to the declared shapes; "" takes the inline envelope.
     */
-  private[server] def storedBatchParams(name: String,
-      paramsJson: String): (graft.ast.Batch, Map[String, graft.ast.PropertyValue]) = {
-    val route = Option(stored.get(name))
-      .getOrElse(throw new IllegalArgumentException(s"unknown stored query: $name"))
-    val tree = if (paramsJson.trim.isEmpty) QueryBundle.mapper.createObjectNode()
-      else QueryBundle.mapper.readTree(paramsJson)
-    val types = route.params.toMap
-    val params = tree.properties().iterator()
-    val pmap = scala.collection.mutable.Map.empty[String, graft.ast.PropertyValue]
-    while (params.hasNext) {
-      val e = params.next()
-      val raw = Json.readParamValue(e.getValue)
-      pmap(e.getKey) = types.get(e.getKey).map(QueryBundle.coerce(raw, _)).getOrElse(raw)
+  private[server] def resolve(sub: String, body: String, steering: Steering): Request =
+    if (sub.isEmpty) {
+      val req = Json.parseRequest(body)
+      Request(req.batch, req.parameters, None, steering)
+    } else {
+      val route = Option(stored.get(sub))
+        .getOrElse(throw new IllegalArgumentException(s"unknown stored query: $sub"))
+      val tree = if (body.trim.isEmpty) QueryBundle.mapper.createObjectNode()
+        else QueryBundle.mapper.readTree(body)
+      val types = route.params.toMap
+      val params = tree.properties().iterator()
+      val pmap = Map.newBuilder[String, PropertyValue]
+      while (params.hasNext) {
+        val e = params.next()
+        val raw = Json.readParamValue(e.getValue)
+        pmap += e.getKey -> types.get(e.getKey).map(QueryBundle.coerce(raw, _)).getOrElse(raw)
+      }
+      Request(route.batch, pmap.result(), Some(sub), steering)
     }
-    (route.batch, pmap.toMap)
+
+  /** Execute a resolved request on this gateway and render its results
+    * into `sink` — the serving step of every request path. A stored
+    * route asked for warm-only runs only if it has already run here.
+    */
+  private[server] def serve(req: Request, sink: Sink): Unit = {
+    for (name <- req.route if req.steering.warmOnly && !isWarm(name))
+      throw new IllegalArgumentException(s"query not warm: $name")
+    executeBatch(req.batch, req.params, sink)
+    req.route.foreach(markServed)
+  }
+
+  private[server] def serveBuffered(req: Request): Buffered = {
+    val sink = new Buffered(maxResponseRows)
+    serve(req, sink)
+    sink
   }
 
   /** Run one batch: reads on the current snapshot (concurrent), writes
     * under the write lock (serialized; the updated store publishes
-    * before the lock drops).
+    * before the lock drops). A write's result, the mutation summary,
+    * renders before the batch commits ([[answer]] sends writes to the
+    * buffered body only).
     */
-  private def executeBatch(batch: graft.ast.Batch,
-      params: Map[String, graft.ast.PropertyValue]): (String, Boolean) = {
-    val out = executeBatchInner(batch, params)
-    (if (batch.write) nWrites else nReads).incrementAndGet()
-    if (out._2) nTruncated.incrementAndGet()
-    out
-  }
-
-  private def executeBatchInner(batch: graft.ast.Batch,
-      params: Map[String, graft.ast.PropertyValue]): (String, Boolean) = {
+  private def executeBatch(batch: Batch, params: Map[String, PropertyValue],
+      sink: Sink): Unit = {
     if (batch.write) writeLock.synchronized {
       val prev = store
       val out = new BatchExecutor(store, params).execute(batch)
@@ -238,229 +248,99 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
       // the segment is durable before the store publishes, so a crash
       // between the two replays the batch on recovery (same
       // deterministic result) and never loses an acked write
-      val rendered = renderResults(out.results)
+      sink.render(out.results)
       walRoot.foreach(graft.model.GraphWal.logWrite(_, batch, params, out.idSeed))
-      // copy-on-write: labels whose tables kept reference identity are
-      // untouched by this batch — their index artifacts migrate to the
-      // new version instead of rebuilding (only touched labels evict).
-      // Migrate BEFORE the new store publishes: no reader can be on the
-      // new version yet, so migrate's put can never clobber (and orphan)
-      // an artifact a concurrent reader just built for it.
-      val unchanged = (prev.nodeTables.keySet ++ prev.edgeTables.keySet).filter { l =>
-        prev.nodeTables.get(l).forall(df => out.store.nodeTables.get(l).exists(_ eq df)) &&
-          prev.edgeTables.get(l).forall(df => out.store.edgeTables.get(l).exists(_ eq df))
-      }
-      graft.search.IndexCache.migrate(prev.version, out.store.version, unchanged)
+      // copy-on-write: untouched labels keep their index artifacts,
+      // migrated to the new version (only touched labels evict). Migrate
+      // BEFORE the new store publishes: no reader can be on the new
+      // version yet, so migrate's put can never clobber (and orphan) an
+      // artifact a concurrent reader just built for it.
+      graft.search.IndexCache.migrateUnchanged(prev, out.store)
       store = out.store
       graft.search.IndexCache.evictOthers(store.version, liveVersions())
-      rendered
-    } else {
-      val out = new BatchExecutor(store, params).execute(batch)
-      renderResults(out.results)
-    }
+    } else sink.render(new BatchExecutor(store, params).execute(batch).results)
+    (if (batch.write) nWrites else nReads).incrementAndGet()
+    if (sink.truncated) nTruncated.incrementAndGet()
   }
 
-  private def renderResults(results: Map[String, DataFrame]): (String, Boolean) = {
-    var truncated = false
-    val body = results.toSeq.sortBy(_._1)
-      .map { case (k, df) =>
-        val (json, t) = renderDf(df)
-        if (t) truncated = true
-        "\"" + k + "\":" + json
-      }
-      .mkString("{", ",", "}")
-    (body, truncated)
-  }
-
-  /** Render a result frame: single-row single-column -> scalar;
-    * otherwise an array of row objects (CLI prints raw JSON,
-    * commands/query.rs:93-101). Returns the JSON plus whether the row
-    * cap truncated the result (per-request state — no shared field, so
-    * concurrent requests can't cross-flag each other's truncation).
+  /** The `/v1/query` request path of this gateway and of a Router over
+    * it: resolve → dispatch → serve → sink.
+    *  - The request resolves once, on this gateway's deployed routes.
+    *  - `dispatch` picks the gateway that serves it: this one, or a
+    *    Router's writer or read replica. A Left (served-by, message)
+    *    rejects it.
+    *  - That gateway serves it into the capped buffered body, or, when
+    *    `stream` is given and the request is an NDJSON read, straight
+    *    to that exchange under a per-request cancellable Spark job
+    *    group: when the client dies mid-stream the group is cancelled,
+    *    so no stage keeps running for a reader that is gone.
     *
-    * Hand-rolled writer instead of Dataset.toJSON: toJSON OMITS
-    * null-valued fields (row objects would silently lose null
-    * properties, and a single null scalar NPE'd the unwrap path);
-    * the reference's JSON carries explicit nulls. Responses cap at
-    * `maxResponseRows` so one unbounded query can't buffer the whole
-    * table into a driver string. The scalar unwrap keys off the
-    * PRE-truncation count: a capped multi-row single-column result
-    * stays a JSON array even at maxResponseRows=1.
+    * Response headers are set and failures counted here and nowhere
+    * else. Every failure counts once in `errors` and answers 400 with
+    * an `{"error":…}` body (the reference SDK treats any non-200 as
+    * RemoteError{body}, sdks/rust/src/lib.rs:406); a fault after the
+    * NDJSON headers went out can only end the stream with an error
+    * line. Returns the buffered reply, or None once a read streamed.
     */
-  private def renderDf(df: DataFrame): (String, Boolean) = {
-    val collected = df.limit(maxResponseRows + 1).collect()
-    val truncated = collected.length > maxResponseRows
-    val rows = if (truncated) collected.take(maxResponseRows) else collected
-    val names = df.columns
-    val sb = new StringBuilder
-    def writeVal(v: Any): Unit = writeJsonVal(sb, v)
-    if (collected.length == 1 && names.length == 1) writeVal(rows(0).get(0))
-    else {
-      sb.append('[')
-      var i = 0
-      while (i < rows.length) {
-        if (i > 0) sb.append(',')
-        sb.append('{')
-        var j = 0
-        while (j < names.length) {
-          if (j > 0) sb.append(',')
-          sb.append(quote(names(j))).append(':'); writeVal(rows(i).get(j))
-          j += 1
-        }
-        sb.append('}')
-        i += 1
-      }
-      sb.append(']')
-    }
-    (sb.toString, truncated)
-  }
-
-  /** One JSON value — the single writer both the buffered response and
-    * the NDJSON stream render through, so a row prints byte-identically
-    * on either path (explicit nulls, float shortest-form, fixed
-    * LocalDateTime second precision).
-    */
-  private def writeJsonVal(sb: StringBuilder, v: Any): Unit = v match {
-    case null => sb.append("null")
-    case s: String => sb.append(quote(s))
-    case b: Boolean => sb.append(b)
-    case d: Double =>
-      if (d.isNaN || d.isInfinite) sb.append(quote(d.toString)) else sb.append(d)
-    case f: Float =>
-      // Float's own shortest representation — widening to double
-      // would print 0.1f as 0.10000000149011612
-      if (f.isNaN || f.isInfinite) sb.append(quote(f.toString)) else sb.append(f.toString)
-    case d: java.math.BigDecimal => sb.append(d.toPlainString)
-    case t: java.time.LocalDateTime =>
-      // fixed second precision: LocalDateTime.toString drops ":00"
-      // seconds, yielding two formats in one column
-      sb.append(quote(if (t.getNano == 0)
-        t.format(java.time.format.DateTimeFormatter
-          .ofPattern("yyyy-MM-dd'T'HH:mm:ss"))
-      else t.toString))
-    case t: java.sql.Timestamp => sb.append(quote(t.toInstant.toString))
-    case t: java.time.Instant => sb.append(quote(t.toString))
-    case d: java.sql.Date => sb.append(quote(d.toString))
-    case b: Array[Byte] =>
-      sb.append(quote(java.util.Base64.getEncoder.encodeToString(b)))
-    case seq: scala.collection.Seq[_] =>
-      sb.append('[')
-      var first = true
-      seq.foreach { x =>
-        if (!first) sb.append(','); first = false; writeJsonVal(sb, x)
-      }
-      sb.append(']')
-    case m: scala.collection.Map[_, _] =>
-      sb.append('{')
-      var first = true
-      m.foreach { case (k, x) =>
-        if (!first) sb.append(','); first = false
-        sb.append(quote(String.valueOf(k))).append(':'); writeJsonVal(sb, x)
-      }
-      sb.append('}')
-    case r: org.apache.spark.sql.Row =>
-      sb.append('{')
-      val fns = r.schema.fieldNames
-      var i = 0
-      while (i < fns.length) {
-        if (i > 0) sb.append(',')
-        sb.append(quote(fns(i))).append(':'); writeJsonVal(sb, r.get(i))
-        i += 1
-      }
-      sb.append('}')
-    case n @ (_: Long | _: Int | _: Short | _: Byte) => sb.append(n.toString)
-    case other => sb.append(quote(other.toString))
-  }
-
-  /** Stream a READ batch's results as NDJSON: one line per row,
-    * `{"result":<name>,"row":{...}}`, results in name order, rows
-    * fetched via `toLocalIterator` — one partition buffered on the
-    * driver at a time, so the response size is unbounded WITHOUT
-    * unbounded driver memory (the `maxResponseRows` cap exists to
-    * protect the buffered path's driver-side string; a streamed
-    * response needs no cap). Write batches are not streamable (their
-    * response is the mutation summary, inherently small) — callers
-    * fall back to the buffered path.
-    */
-  private[server] def streamBatch(batch: graft.ast.Batch,
-      params: Map[String, graft.ast.PropertyValue],
-      out: java.io.OutputStream): Unit = {
-    require(!batch.write, "NDJSON streaming serves read batches only")
-    val res = new BatchExecutor(store, params).execute(batch)
-    nReads.incrementAndGet()
-    val w = new java.io.BufferedWriter(
-      new java.io.OutputStreamWriter(out, StandardCharsets.UTF_8))
-    res.results.toSeq.sortBy(_._1).foreach { case (name, df) =>
-      val names = df.columns
-      val it = df.toLocalIterator()
-      while (it.hasNext) {
-        val r = it.next()
-        val sb = new StringBuilder
-        sb.append("{\"result\":").append(quote(name)).append(",\"row\":{")
-        var j = 0
-        while (j < names.length) {
-          if (j > 0) sb.append(',')
-          sb.append(quote(names(j))).append(':'); writeJsonVal(sb, r.get(j))
-          j += 1
-        }
-        sb.append("}}\n")
-        w.write(sb.toString)
-      }
-      w.flush()
-    }
-    w.flush()
-  }
-
-  /** Stream a read batch as NDJSON over an exchange: NDJSON headers, a
-    * per-request cancellable job group, mid-stream error lines, and
-    * exchange close. toLocalIterator submits one job per partition
-    * FROM THIS THREAD, so the thread-local job group scopes exactly
-    * the stream's Spark work: when the client dies mid-stream (the
-    * write throws), cancelling the group interrupts any in-flight
-    * stage instead of letting it run to completion for a reader that
-    * is gone — abandoned iterators submit no further jobs either way,
-    * so nothing leaks. Shared by this gateway's handler and the
-    * Router's streaming passthrough (which sets its topology headers
-    * on `ex` before calling).
-    */
-  private[server] def streamServe(ex: HttpExchange, batch: graft.ast.Batch,
-      params: Map[String, graft.ast.PropertyValue],
-      onSuccess: () => Unit): Unit = {
-    ex.getResponseHeaders.set("Content-Type", "application/x-ndjson")
-    ex.sendResponseHeaders(200, 0) // chunked
+  private[server] def answer(sub: String, body: String, hdr: String => Option[String],
+      dispatch: Dispatch, errors: AtomicLong,
+      stream: Option[HttpExchange] = None): Option[Router.Routed] = {
+    val steering = Steering.from(hdr)
+    def headers(servedBy: Option[String], position: Option[Long], truncated: Boolean) =
+      servedBy.map("x-helix-served-by" -> _).toMap ++
+        steering.awaitDurable.map("x-helix-durable" -> _) ++
+        position.map("x-graft-wal-position" -> _.toString) ++
+        (if (truncated) Map("x-graft-truncated" -> "true") else Map.empty)
     val sc = store.spark.sparkContext
-    val jobGroup = s"graft-ndjson-${java.util.UUID.randomUUID()}"
-    sc.setJobGroup(jobGroup, "NDJSON stream", interruptOnCancel = true)
+    lazy val jobGroup = s"graft-ndjson-${java.util.UUID.randomUUID()}"
+    // the writer serves every require-writer request, and says so even
+    // when the request fails before dispatch
+    var servedBy = Option.when(steering.requireWriter)("writer")
+    var streaming: Option[HttpExchange] = None // set once the NDJSON headers are out
     try {
-      streamBatch(batch, params, ex.getResponseBody)
-      onSuccess()
+      val req = resolve(sub, body, steering)
+      val target = dispatch(req, hdr) match {
+        case Right(t) => t
+        case Left((by, msg)) => servedBy = Some(by); throw new IllegalStateException(msg)
+      }
+      servedBy = target.servedBy.orElse(servedBy)
+      stream.filter(_ => steering.stream && !req.write) match {
+        case Some(ex) =>
+          sc.setJobGroup(jobGroup, "NDJSON stream", interruptOnCancel = true)
+          try target.gw.serve(req, new Ndjson(() => {
+            headers(servedBy, target.position(), truncated = false)
+              .foreach { case (k, v) => ex.getResponseHeaders.set(k, v) }
+            ex.getResponseHeaders.set("Content-Type", "application/x-ndjson")
+            ex.sendResponseHeaders(200, 0) // chunked
+            streaming = Some(ex)
+            ex.getResponseBody
+          }))
+          finally sc.clearJobGroup()
+          None
+        case None =>
+          val out = target.gw.serveBuffered(req)
+          // the position reads after the serve: a write acks its commit
+          Some(Router.Routed(200, out.body,
+            headers(servedBy, target.position(), out.truncated)))
+      }
     } catch {
-      // headers are gone; the truncated chunk stream is the only
-      // error signal we can still send
       case e: Exception =>
-        countError()
-        sc.cancelJobGroup(jobGroup)
-        try {
-          val line = Http.error(e.getMessage) + "\n"
-          ex.getResponseBody.write(line.getBytes(StandardCharsets.UTF_8))
-        } catch { case _: Exception => () } // client is gone
-    } finally {
-      sc.clearJobGroup()
-      ex.close()
-    }
+        errors.incrementAndGet()
+        streaming match {
+          case Some(ex) =>
+            sc.cancelJobGroup(jobGroup)
+            try ex.getResponseBody.write(
+              (Http.error(e.getMessage) + "\n").getBytes(StandardCharsets.UTF_8))
+            catch { case _: Exception => () } // the client is gone
+            None
+          case None =>
+            Some(Router.Routed(400, Http.error(e.getMessage), headers(servedBy, None, false)))
+        }
+    } finally streaming.foreach(_.close())
   }
 
-  def handle(body: String): String = handleT(body)._1
-
-  private[server] def handleT(body: String): (String, Boolean) =
-    handleParsedT(Json.parseRequest(body))
-
-  /** Execute an already-parsed envelope (the Router parses once for
-    * its dispatch decision and hands the result here — a bulk-ingest
-    * envelope is megabytes of JSON, not worth decoding twice).
-    */
-  private[server] def handleParsedT(req: Json.Request): (String, Boolean) =
-    executeBatch(req.batch, req.parameters)
+  /** A lone gateway serves every request itself. */
+  private val serveHere: Dispatch = (_, _) => Right(Target(this, None, () => None))
 
   /** Bearer-token check for protected endpoints; constant-time compare
     * so the key is not probeable byte by byte.
@@ -476,93 +356,27 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
 
   private def requireAuth(ex: HttpExchange): Boolean = Http.authorize(ex, authorized)
 
-  def start(): Unit = {
-    server = Http.server(port)
-    server.createContext("/v1/query", new HttpHandler {
+  /** `/v1/query` over HTTP, answered by [[answer]] with `dispatch`:
+    * POST /v1/query/<name> runs a deployed stored query, bare /v1/query
+    * the inline envelope (sdks/rust/src/lib.rs:244-247). A Router mounts
+    * its writer's handler with its own dispatch.
+    */
+  private[server] def queryHandler(dispatch: Dispatch, errors: AtomicLong): HttpHandler =
+    new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         if (!requireAuth(ex)) return
-        val body = Http.body(ex)
-        val path = ex.getRequestURI.getPath
-        // x-helix-* request headers (sdks/rust/src/lib.rs:270-298):
-        //  - require-writer: single-writer deployment — this node IS the
-        //    writer, acknowledged via a response header (routing stub);
-        //  - warm: serve a stored route only if it has already run;
-        //  - await-durable: writes apply synchronously here, so the ack
-        //    is truthful either way.
-        def hdr(n: String): Option[String] =
-          Option(ex.getRequestHeaders.getFirst(n)).map(_.trim.toLowerCase)
-        val warmOnly = hdr("x-helix-warm").contains("true")
-        if (hdr("x-helix-require-writer").contains("true"))
-          ex.getResponseHeaders.set("x-helix-served-by", "writer")
-        hdr("x-helix-await-durable").foreach(v =>
-          ex.getResponseHeaders.set("x-helix-durable", v))
-        // NDJSON streaming opt-in: removes the maxResponseRows cap for
-        // READ batches by streaming one row per line over a chunked
-        // response (toLocalIterator — bounded driver memory). Write
-        // batches and errors fall through to the buffered JSON path.
-        val wantStream = hdr("x-graft-stream").contains("ndjson") ||
-          hdr("accept").exists(_.contains("application/x-ndjson"))
-        if (wantStream) {
-          val sub = path.stripPrefix("/v1/query").stripPrefix("/")
-          val parsed =
-            try {
-              val (batch, params) =
-                if (sub.nonEmpty) {
-                  if (warmOnly && !isWarm(sub))
-                    throw new IllegalArgumentException(s"query not warm: $sub")
-                  storedBatchParams(sub, body)
-                } else {
-                  val req = Json.parseRequest(body)
-                  (req.batch, req.parameters)
-                }
-              if (batch.write) None // mutation summaries buffer below
-              else Some((batch, params))
-            } catch {
-              case e: Exception =>
-                countError()
-                Http.respond(ex, 400, Http.error(e.getMessage) + "\n")
-                return
-            }
-          parsed match {
-            case Some((batch, params)) =>
-              streamServe(ex, batch, params,
-                () => if (sub.nonEmpty) markServed(sub))
-              return
-            case None => // write batch: buffered path below
-          }
+        val sub = ex.getRequestURI.getPath.stripPrefix("/v1/query").stripPrefix("/")
+        answer(sub, Http.body(ex), n => Option(ex.getRequestHeaders.getFirst(n)),
+          dispatch, errors, Some(ex)).foreach { r =>
+          r.headers.foreach { case (k, v) => ex.getResponseHeaders.set(k, v) }
+          Http.respond(ex, r.status, r.body)
         }
-        // ONE error contract with the streaming path: a failed request
-        // is HTTP 400 with an {"error":...} body on both (the
-        // reference SDK treats any non-200 as RemoteError{body} and
-        // only deserializes results on 200 — sdks/rust/src/lib.rs:406;
-        // a 200 error envelope would surface as a confusing
-        // deserialization failure instead). Mid-stream NDJSON faults
-        // remain the documented truncated-chunk exception: their
-        // headers are already gone.
-        var status = 200
-        val (resp, truncated) =
-          try {
-            // POST /v1/query/<name> runs a deployed stored query
-            // (sdks/rust/src/lib.rs:244-247); bare /v1/query takes the
-            // inline envelope
-            val sub = path.stripPrefix("/v1/query").stripPrefix("/")
-            if (sub.nonEmpty) {
-              if (warmOnly && !isWarm(sub)) {
-                status = 400
-                (Http.error(s"query not warm: $sub"), false)
-              } else handleStoredT(sub, body)
-            } else handleT(body)
-          } catch {
-            case e: Exception =>
-              countError()
-              status = 400
-              (Http.error(e.getMessage), false)
-          }
-        if (truncated)
-          ex.getResponseHeaders.set("x-graft-truncated", "true")
-        Http.respond(ex, status, resp)
       }
-    })
+    }
+
+  def start(): Unit = {
+    server = Http.server(port)
+    server.createContext("/v1/query", queryHandler(serveHere, nErrors))
     server.createContext("/metrics", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         if (protectMetrics && !requireAuth(ex)) return
@@ -608,5 +422,189 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
   def stop(): Unit = {
     if (server != null) server.stop(0)
     if (pool != null) pool.shutdown()
+  }
+}
+
+object Gateway {
+  /** The request headers that steer a `/v1/query` request
+    * (sdks/rust/src/lib.rs:270-298, plus graft's NDJSON opt-in), read in
+    * `from` and nowhere else:
+    *  - `warmOnly`: serve a stored route only if it has already run;
+    *  - `requireWriter`: the writer serves it and says so in
+    *    `x-helix-served-by`;
+    *  - `awaitDurable`: echoed as `x-helix-durable` — writes are
+    *    durable before their ack here, so the ack is truthful either way;
+    *  - `stream`: render a read as NDJSON, without the row cap.
+    */
+  private[server] final case class Steering(warmOnly: Boolean, requireWriter: Boolean,
+      awaitDurable: Option[String], stream: Boolean)
+
+  private[server] object Steering {
+    val Plain: Steering = Steering(false, false, None, false)
+
+    def from(hdr: String => Option[String]): Steering = {
+      def h(n: String) = hdr(n).map(_.trim.toLowerCase)
+      Steering(
+        warmOnly = h("x-helix-warm").contains("true"),
+        requireWriter = h("x-helix-require-writer").contains("true"),
+        awaitDurable = h("x-helix-await-durable"),
+        stream = h("x-graft-stream").contains("ndjson") ||
+          h("accept").exists(_.contains("application/x-ndjson")))
+    }
+  }
+
+  /** One resolved request: the batch with its parameters (the inline
+    * envelope, or the stored route named by `route` with its coerced
+    * params) and the headers that steer it.
+    */
+  private[server] final case class Request(batch: Batch, params: Map[String, PropertyValue],
+      route: Option[String], steering: Steering) {
+    def write: Boolean = batch.write
+  }
+
+  /** Where dispatch sends a request: the gateway that serves it, its
+    * `x-helix-served-by` name and its `x-graft-wal-position`, read after
+    * the serve.
+    */
+  private[server] final case class Target(gw: Gateway, servedBy: Option[String],
+      position: () => Option[Long])
+
+  /** Picks the [[Target]] of a resolved request, given its request
+    * headers; a Left (served-by name, message) rejects it.
+    */
+  private[server] type Dispatch =
+    (Request, String => Option[String]) => Either[(String, String), Target]
+
+  /** Where [[Gateway.serve]] renders a batch's returned results. */
+  private[server] sealed trait Sink {
+    /** Renders the results in name order. */
+    def render(results: Map[String, DataFrame]): Unit
+    /** Whether a row cap cut a rendered result. */
+    def truncated: Boolean = false
+  }
+
+  /** The buffered JSON body, keyed by returned name. A result renders
+    * as a scalar when it is one row of one column, otherwise as an array
+    * of row objects (the CLI prints raw JSON, commands/query.rs:93-101).
+    * Each result costs one `limit(maxRows + 1).collect()`; past
+    * `maxRows` rows it is cut and `truncated` is set, so one unbounded
+    * query cannot buffer a whole table into a driver string. The scalar
+    * unwrap keys off the count before the cut: a capped multi-row
+    * single-column result stays an array even at maxRows = 1.
+    */
+  private[server] final class Buffered(maxRows: Int) extends Sink {
+    private val sb = new StringBuilder
+    private var cut = false
+    def body: String = sb.toString
+    override def truncated: Boolean = cut
+
+    def render(results: Map[String, DataFrame]): Unit = {
+      sb.append('{')
+      results.toSeq.sortBy(_._1).zipWithIndex.foreach { case ((name, df), i) =>
+        if (i > 0) sb.append(',')
+        sb.append(quote(name)).append(':')
+        val rows = df.limit(maxRows + 1).collect()
+        val names = df.columns
+        if (rows.length == 1 && names.length == 1) writeJsonVal(sb, rows(0).get(0))
+        else {
+          cut ||= rows.length > maxRows
+          sb.append('[')
+          var r = 0
+          while (r < math.min(rows.length, maxRows)) {
+            if (r > 0) sb.append(',')
+            writeRow(sb, names, rows(r))
+            r += 1
+          }
+          sb.append(']')
+        }
+      }
+      sb.append('}')
+    }
+  }
+
+  /** The NDJSON stream: one `{"result":<name>,"row":{...}}` line per
+    * row, fetched with `toLocalIterator`, so one partition at a time
+    * sits on the driver and a response needs no row cap. `open` sends
+    * the response headers and returns the body; it runs once the batch
+    * has built, so a request that fails to build still answers 400.
+    */
+  private[server] final class Ndjson(open: () => java.io.OutputStream) extends Sink {
+    def render(results: Map[String, DataFrame]): Unit = {
+      val w = new java.io.BufferedWriter(
+        new java.io.OutputStreamWriter(open(), StandardCharsets.UTF_8))
+      results.toSeq.sortBy(_._1).foreach { case (name, df) =>
+        val names = df.columns
+        val prefix = "{\"result\":" + quote(name) + ",\"row\":"
+        val it = df.toLocalIterator()
+        while (it.hasNext) {
+          val sb = new StringBuilder(prefix)
+          writeRow(sb, names, it.next())
+          w.write(sb.append("}\n").toString)
+        }
+        w.flush()
+      }
+    }
+  }
+
+  /** One row as a JSON object — the writer both sinks render rows
+    * through, so a row prints byte-identically buffered or streamed.
+    */
+  private def writeRow(sb: StringBuilder, names: Array[String], r: Row): Unit = {
+    sb.append('{')
+    var j = 0
+    while (j < names.length) {
+      if (j > 0) sb.append(',')
+      sb.append(quote(names(j))).append(':'); writeJsonVal(sb, r.get(j))
+      j += 1
+    }
+    sb.append('}')
+  }
+
+  /** One JSON value. Hand-rolled instead of Dataset.toJSON, which
+    * OMITS null-valued fields: the reference's JSON carries explicit
+    * nulls. Floats print their own shortest form and LocalDateTime a
+    * fixed second precision.
+    */
+  private def writeJsonVal(sb: StringBuilder, v: Any): Unit = v match {
+    case null => sb.append("null")
+    case s: String => sb.append(quote(s))
+    case b: Boolean => sb.append(b)
+    case d: Double =>
+      if (d.isNaN || d.isInfinite) sb.append(quote(d.toString)) else sb.append(d)
+    case f: Float =>
+      // Float's own shortest representation — widening to double
+      // would print 0.1f as 0.10000000149011612
+      if (f.isNaN || f.isInfinite) sb.append(quote(f.toString)) else sb.append(f.toString)
+    case d: java.math.BigDecimal => sb.append(d.toPlainString)
+    case t: java.time.LocalDateTime =>
+      // fixed second precision: LocalDateTime.toString drops ":00"
+      // seconds, yielding two formats in one column
+      sb.append(quote(if (t.getNano == 0)
+        t.format(java.time.format.DateTimeFormatter
+          .ofPattern("yyyy-MM-dd'T'HH:mm:ss"))
+      else t.toString))
+    case t: java.sql.Timestamp => sb.append(quote(t.toInstant.toString))
+    case t: java.time.Instant => sb.append(quote(t.toString))
+    case d: java.sql.Date => sb.append(quote(d.toString))
+    case b: Array[Byte] =>
+      sb.append(quote(java.util.Base64.getEncoder.encodeToString(b)))
+    case seq: scala.collection.Seq[_] =>
+      sb.append('[')
+      var first = true
+      seq.foreach { x =>
+        if (!first) sb.append(','); first = false; writeJsonVal(sb, x)
+      }
+      sb.append(']')
+    case m: scala.collection.Map[_, _] =>
+      sb.append('{')
+      var first = true
+      m.foreach { case (k, x) =>
+        if (!first) sb.append(','); first = false
+        sb.append(quote(String.valueOf(k))).append(':'); writeJsonVal(sb, x)
+      }
+      sb.append('}')
+    case r: Row => writeRow(sb, r.schema.fieldNames, r)
+    case n @ (_: Long | _: Int | _: Short | _: Byte) => sb.append(n.toString)
+    case other => sb.append(quote(other.toString))
   }
 }

@@ -77,17 +77,9 @@ object QueryRunner {
       java.nio.file.Files.readString(java.nio.file.Paths.get(p))))
     val body = a.json.getOrElse(
       java.nio.file.Files.readString(java.nio.file.Paths.get(a.file.get)))
-    if (a.replica) {
-      val isWrite = a.name match {
-        case Some(route) => gw.storedIsWrite(route).getOrElse(false)
-        case None => graft.ast.Json.parseRequest(body).batch.write
-      }
-      require(!isWrite, "--replica serves reads only; route writes to the writer")
-    }
-    a.name match {
-      case Some(route) => gw.handleStored(route, body)
-      case None => gw.handle(body)
-    }
+    val req = gw.resolve(a.name.getOrElse(""), body, Gateway.Steering.Plain)
+    require(!(a.replica && req.write), "--replica serves reads only; route writes to the writer")
+    gw.serveBuffered(req).body
   }
 
   def main(argv: Array[String]): Unit = {

@@ -3,15 +3,15 @@ package graft.server
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
 
-import graft.ast.Json
 import graft.model.{GraphStore, GraphWal}
 
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Single-writer / many-readers serving topology over one WAL — the
   * reference cloud's deployment shape ("queries are routed to the
-  * writer or the read replicas", README.md:221; `x-helix-require-writer`
-  * routing header, sdks/rust/src/lib.rs:270-298), realized Spark-side:
+  * writer or the read replicas", README.md:221; the
+  * `x-helix-require-writer` header, sdks/rust/src/lib.rs:270-298),
+  * realized Spark-side:
   *
   *  - ONE writer [[Gateway]] owns the store lineage: every write batch
   *    commits to the GraphWal segment log before its store publishes.
@@ -20,8 +20,13 @@ import java.util.concurrent.atomic.AtomicInteger
   *    replays only the segments committed since the replica's last
   *    refresh — cost proportional to write traffic, not store size.
   *  - Dispatch: write batches, stored write routes, and requests
-  *    carrying `x-helix-require-writer: true` go to the writer;
-  *    everything else round-robins across replicas.
+  *    that require the writer go to the writer; everything else
+  *    round-robins across replicas.
+  *  - Serving: the Router keeps only dispatch. Every request takes the
+  *    writer Gateway's one request path ([[Gateway.answer]]: resolve →
+  *    dispatch → serve → sink) with this dispatch, buffered or NDJSON,
+  *    so headers, errors and the warm gate behave as on a lone Gateway
+  *    (failures count in `router_errors`).
   *
   * Consistency: a write ack carries `x-graft-wal-position` (the log's
   * monotonic commit position). A client that needs read-your-writes
@@ -75,7 +80,8 @@ final class Router(spark: SparkSession, walRoot: String, port: Int = 6969,
   private var pool: java.util.concurrent.ExecutorService = _
 
   /** Deploy to the writer AND every replica (all serve the route; the
-    * writer's copy is authoritative for the write/read dispatch bit).
+    * writer's copy is the one requests resolve against, so it decides
+    * the write/read dispatch bit).
     */
   def registerQuery(name: String, batch: graft.ast.Batch,
       params: Seq[(String, QueryBundle.PTy)] = Nil): Unit = {
@@ -94,111 +100,34 @@ final class Router(spark: SparkSession, walRoot: String, port: Int = 6969,
   private[graft] def readerVersions: Seq[String] =
     readers.map(_.gateway.currentStore.version).toSeq
 
-  /** Dispatch one request (the in-process entry the HTTP handler and
-    * embedded callers share). `sub` is the stored-route name ("" for
-    * the inline envelope); returns the status, body, and headers
-    * explicitly — the status is part of the public contract (a
-    * replica-behind rejection is 400), not an in-band pseudo-header,
-    * so any transport that forwards `headers` verbatim stays clean.
+  /** Serve one request in-process, buffered: the same path the HTTP
+    * handler takes ([[Gateway.answer]] with this router's dispatch).
+    * `sub` is the stored-route name ("" for the inline envelope); the
+    * status rides in the reply, not as an in-band pseudo-header (a
+    * replica-behind rejection and every failed request are 400), so any
+    * transport that forwards `headers` verbatim stays clean.
     */
-  def route(sub: String, body: String,
-      hdr: String => Option[String],
-      preParsed: Option[Json.Request] = None): Router.Routed = {
-    // parse the inline envelope ONCE: the dispatch decision needs its
-    // write bit, and the serving gateway reuses the parsed request (a
-    // bulk-ingest envelope is megabytes of JSON). `preParsed` lets the
-    // streaming pre-flight hand its parse down when a write falls back
-    // to this buffered path — the envelope is never parsed twice.
-    val parsed =
-      if (sub.isEmpty) Some(preParsed.getOrElse(Json.parseRequest(body)))
-      else None
-    def serve(gw: Gateway): (String, Boolean) = parsed match {
-      case Some(req) => gw.handleParsedT(req)
-      case None => gw.handleStoredT(sub, body)
-    }
-    dispatch(sub, parsed, hdr) match {
-      case Left((replicaName, errBody)) =>
-        Router.Routed(400, errBody,
-          Map("x-helix-served-by" -> replicaName))
-      case Right((gw, servedBy, pos)) =>
-        val (resp, truncated) = serve(gw)
-        // the position thunk evaluates AFTER serve: a write's ack must
-        // carry the position of the commit it just made
-        respond(resp, truncated, servedBy, pos())
-    }
-  }
+  def route(sub: String, body: String, hdr: String => Option[String]): Router.Routed =
+    writer.answer(sub, body, hdr, dispatch, nErrors).get // buffered: always answered
 
-  /** The ONE dispatch front half both the buffered and streamed paths
-    * share: require-writer/write-bit routing, round-robin replica
-    * pick, and the stale/min-position freshness contract. Left =
-    * replica-behind (replica name, error body); Right = (serving
-    * gateway, served-by name, wal-position THUNK — the writer's
-    * position must be read AFTER its serve so a write acks the commit
-    * it just made; a replica's is the refresh result, already fixed).
+  /** Dispatch: write batches, stored write routes and requests that
+    * require the writer go to the writer, whose position is its commit
+    * position after the serve; reads round-robin across replicas under
+    * the freshness contract. Left = replica behind (its name, message).
     */
-  private def dispatch(sub: String, parsed: Option[Json.Request],
-      hdr: String => Option[String])
-      : Either[(String, String), (Gateway, String, () => Long)] = {
-    val toWriter = hdr("x-helix-require-writer").exists(_.trim.toLowerCase == "true") ||
-      parsed.map(_.batch.write)
-        .getOrElse(writer.storedIsWrite(sub).getOrElse(false))
-    if (toWriter)
-      Right((writer, "writer", () => GraphWal.commitPosition(walRoot)))
+  private def dispatch(req: Gateway.Request, hdr: String => Option[String])
+      : Either[(String, String), Gateway.Target] =
+    if (req.steering.requireWriter || req.write)
+      Right(Gateway.Target(writer, Some("writer"),
+        () => Some(GraphWal.commitPosition(walRoot))))
     else {
       val r = readers(math.floorMod(rr.getAndIncrement(), readers.length))
-      val minPos = hdr("x-graft-min-position").flatMap(_.toLongOption).getOrElse(-1L)
+      val minPos = hdr("x-graft-min-position").flatMap(_.trim.toLongOption).getOrElse(-1L)
       val stale = hdr("x-graft-stale").exists(_.trim.toLowerCase == "true")
       val pos = if (stale && r.position >= minPos) r.position else r.refresh()
-      if (pos < minPos)
-        Left((r.name,
-          s"""{"error":"replica behind requested position: $pos < $minPos"}"""))
-      else Right((r.gateway, r.name, () => pos))
+      if (pos < minPos) Left((r.name, s"replica behind requested position: $pos < $minPos"))
+      else Right(Gateway.Target(r.gateway, Some(r.name), () => Some(pos)))
     }
-  }
-
-  /** Dispatch + stream one NDJSON read over `ex`. Returns (handled,
-    * parsed): handled = true when the exchange was answered (streamed,
-    * or a pre-flight client error was sent); a write batch returns
-    * (false, its parse) — those keep the buffered mutation-summary
-    * contract, so the caller falls through to [[route]] WITHOUT
-    * re-parsing the envelope. Parse/route/warm failures throw and the
-    * caller sends the shared 400 contract.
-    */
-  private def routeStreaming(sub: String, body: String,
-      hdr: String => Option[String],
-      ex: HttpExchange): (Boolean, Option[Json.Request]) = {
-    val parsed = if (sub.isEmpty) Some(Json.parseRequest(body)) else None
-    val (gw, servedBy, pos) = dispatch(sub, parsed, hdr) match {
-      case Left((replicaName, errBody)) =>
-        ex.getResponseHeaders.set("x-helix-served-by", replicaName)
-        Http.respond(ex, 400, errBody)
-        return (true, parsed)
-      case Right(t) => t
-    }
-    val warmOnly = hdr("x-helix-warm").exists(_.trim.toLowerCase == "true")
-    if (sub.nonEmpty && warmOnly && !gw.isWarm(sub))
-      throw new IllegalArgumentException(s"query not warm: $sub")
-    val (batch, params) = parsed match {
-      case Some(req) => (req.batch, req.parameters)
-      case None => gw.storedBatchParams(sub, body)
-    }
-    if (batch.write) return (false, parsed) // buffered mutation summary
-    ex.getResponseHeaders.set("x-helix-served-by", servedBy)
-    // reads never commit, so the position thunk is stable here; it
-    // must resolve before the chunked headers go out
-    ex.getResponseHeaders.set("x-graft-wal-position", pos().toString)
-    gw.streamServe(ex, batch, params,
-      () => if (sub.nonEmpty) gw.markServed(sub))
-    (true, parsed)
-  }
-
-  private def respond(resp: String, truncated: Boolean, servedBy: String,
-      pos: Long): Router.Routed = {
-    val base = Map("x-helix-served-by" -> servedBy,
-      "x-graft-wal-position" -> pos.toString)
-    Router.Routed(200, resp,
-      if (truncated) base + ("x-graft-truncated" -> "true") else base)
-  }
 
   /** Cluster status: writer commit position + each replica's ack. */
   def status: String = {
@@ -222,50 +151,7 @@ final class Router(spark: SparkSession, walRoot: String, port: Int = 6969,
 
   def start(): Unit = {
     server = Http.server(port)
-    server.createContext("/v1/query", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        if (!requireAuth(ex)) return
-        val body = Http.body(ex)
-        val sub = ex.getRequestURI.getPath.stripPrefix("/v1/query").stripPrefix("/")
-        def hd(n: String) = Option(ex.getRequestHeaders.getFirst(n))
-        // NDJSON streaming passthrough: the same opt-in the Gateway
-        // honors works through the cluster topology — dispatch picks
-        // the node (round-robin replica or writer, with the same
-        // freshness contract), then that node's gateway streams the
-        // read straight to this exchange. Write batches and
-        // client errors fall to the buffered path / 400 below.
-        val wantStream = hd("x-graft-stream")
-          .exists(_.trim.toLowerCase == "ndjson") ||
-          hd("accept").exists(_.toLowerCase.contains("application/x-ndjson"))
-        var preParsed: Option[Json.Request] = None
-        if (wantStream) {
-          val handled =
-            try {
-              val (h, parsed) = routeStreaming(sub, body, hd, ex)
-              preParsed = parsed
-              h
-            } catch {
-              case e: Exception =>
-                nErrors.incrementAndGet()
-                Http.respond(ex, 400, Http.error(e.getMessage))
-                true
-            }
-          if (handled) return
-        }
-        // same error contract as the Gateway's own HTTP layer: a
-        // failed request is 400 with an {"error":...} body
-        val routed =
-          try route(sub, body, hd, preParsed)
-          catch { case e: Exception =>
-            nErrors.incrementAndGet()
-            Router.Routed(400, Http.error(e.getMessage), Map.empty)
-          }
-        routed.headers.foreach { case (k, v) =>
-          ex.getResponseHeaders.set(k, v)
-        }
-        Http.respond(ex, routed.status, routed.body)
-      }
-    })
+    server.createContext("/v1/query", writer.queryHandler(dispatch, nErrors))
     server.createContext("/v1/cluster", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         if (protectMetrics && !requireAuth(ex)) return
@@ -353,12 +239,8 @@ private[server] final class ReadReplica(spark: SparkSession, walRoot: String,
     val prev = st.served
     val next = GraphWal.advanceReplica(spark, walRoot, st)
     if (next ne st) {
-      val unchanged = (prev.nodeTables.keySet ++ prev.edgeTables.keySet).filter { l =>
-        prev.nodeTables.get(l).forall(df => next.served.nodeTables.get(l).exists(_ eq df)) &&
-          prev.edgeTables.get(l).forall(df => next.served.edgeTables.get(l).exists(_ eq df))
-      }
       inFlight = Some(next.served.version)
-      graft.search.IndexCache.migrate(prev.version, next.served.version, unchanged)
+      val unchanged = graft.search.IndexCache.migrateUnchanged(prev, next.served)
       // position unchanged means no segments replayed: only the stream
       // overlays can have moved, and those are APPEND-ONLY — declared
       // artifacts on the changed labels refresh incrementally (postings

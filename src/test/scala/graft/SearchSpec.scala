@@ -614,7 +614,7 @@ class SearchSpec extends GraftSuite {
     val fused = df.select(col("_id"),
       graft.functions.CosineToQuery(col("emb"), q).as("c")).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val hof = df.select(col("_id"), VectorOps.cosineSimHof(col("emb"), q).as("c")).collect()
+    val hof = df.select(col("_id"), HofReference.cosineSimHof(col("emb"), q).as("c")).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(fused.keySet == hof.keySet)
     fused.foreach { case (k, v) => assert(v == hof(k), s"id $k: $v vs ${hof(k)}") }
@@ -636,7 +636,7 @@ class SearchSpec extends GraftSuite {
       out.select("vec_id", "_sig").collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val native = m(VectorOps.signSignature63(df, "v", "_sig", dim))
-    val hof = m(VectorOps.signSignature63Hof(df, "v", "_sig", dim))
+    val hof = m(HofReference.signSignature63Hof(df, "v", "_sig", dim))
     assert(native == hof, s"${native.size} sigs; first diff: " +
       native.find { case (k, v) => hof(k) != v })
     assert(native(149L) == 0L, "length-mismatch row must sign to 0")
@@ -645,13 +645,13 @@ class SearchSpec extends GraftSuite {
     val ddf = rows.take(20).map { case (id, v) => (id, v.map(_.toDouble)) }
       .toDF("vec_id", "v")
     assert(m(VectorOps.signSignature63(ddf, "v", "_sig", dim)) ==
-      m(VectorOps.signSignature63Hof(ddf, "v", "_sig", dim)))
+      m(HofReference.signSignature63Hof(ddf, "v", "_sig", dim)))
     // a vector containing a NULL element signs to 0 on BOTH paths (the
     // zip_with null-padding contract)
     val nulled = Seq((900L, Seq.tabulate(dim)(i => if (i == 3) null
       else java.lang.Float.valueOf(0.5f)))).toDF("vec_id", "v")
     assert(m(VectorOps.signSignature63(nulled, "v", "_sig", dim)) ==
-      m(VectorOps.signSignature63Hof(nulled, "v", "_sig", dim)))
+      m(HofReference.signSignature63Hof(nulled, "v", "_sig", dim)))
     assert(m(VectorOps.signSignature63(nulled, "v", "_sig", dim))(900L) == 0L)
     // non-finite elements degenerate to signature 0 BY CONTRACT in the
     // kernel (the HOF form's ANSI cast would throw — a poisoned ingest
@@ -1750,7 +1750,7 @@ class SearchSpec extends GraftSuite {
     val df = pairs.toDF("pid", "va", "vb")
     val both = df.select(col("pid"),
       VectorOps.cosineSimCols(col("va"), col("vb")).as("fused"),
-      VectorOps.cosineSimColsHof(col("va"), col("vb")).as("hof"))
+      HofReference.cosineSimColsHof(col("va"), col("vb")).as("hof"))
       .collect()
     both.foreach { r =>
       val f = r.getDouble(1); val h = r.getDouble(2)
@@ -1767,7 +1767,7 @@ class SearchSpec extends GraftSuite {
         .toDF("pid", "va", "vb"))
     val er = edge.select(col("pid"),
       VectorOps.cosineSimCols(col("va"), col("vb")).as("fused"),
-      VectorOps.cosineSimColsHof(col("va"), col("vb")).as("hof"))
+      HofReference.cosineSimColsHof(col("va"), col("vb")).as("hof"))
       .collect()
     er.foreach { r =>
       assert(r.isNullAt(1) == r.isNullAt(2),
@@ -1794,7 +1794,7 @@ class SearchSpec extends GraftSuite {
     }
     intercept[Exception] {
       zdf.where(col("pid") === 9L)
-        .select(VectorOps.cosineSimColsHof(col("va"), col("vb"))).collect()
+        .select(HofReference.cosineSimColsHof(col("va"), col("vb"))).collect()
     }
     // interpreted eval matches the codegen'd DataFrame result
     import org.apache.spark.sql.catalyst.expressions.{Literal => CatLit}
@@ -1826,7 +1826,7 @@ class SearchSpec extends GraftSuite {
       base.take(6).map { case (ib, vb) => (ia * 100 + ib, va, vb) } }
     val both = pairs.toDF("pid", "va", "vb").select(col("pid"),
       VectorOps.intDotCol(col("va"), col("vb")).as("fused"),
-      VectorOps.intDotColHof(col("va"), col("vb")).as("hof"))
+      HofReference.intDotColHof(col("va"), col("vb")).as("hof"))
       .collect()
     both.foreach { r =>
       assert(r.getLong(1) == r.getLong(2),
@@ -1844,7 +1844,7 @@ class SearchSpec extends GraftSuite {
         .toDF("pid", "va", "vb"))
     val er = edge.select(col("pid"),
       VectorOps.intDotCol(col("va"), col("vb")).as("fused"),
-      VectorOps.intDotColHof(col("va"), col("vb")).as("hof"))
+      HofReference.intDotColHof(col("va"), col("vb")).as("hof"))
       .collect()
     er.foreach { r =>
       assert(r.isNullAt(1) == r.isNullAt(2),
@@ -1863,14 +1863,14 @@ class SearchSpec extends GraftSuite {
       ovr.select(VectorOps.intDotCol(col("va"), col("vb"))).collect()
     }
     intercept[Exception] {
-      ovr.select(VectorOps.intDotColHof(col("va"), col("vb"))).collect()
+      ovr.select(HofReference.intDotColHof(col("va"), col("vb"))).collect()
     }
     // ...but a sum that would only overflow AFTER a null pair stays
     // null-poisoned and silent in both forms
     val post = Seq((11L, Seq(None: Option[Long], Some(Long.MaxValue), Some(Long.MaxValue)),
       Seq(Some(1L), Some(1L), Some(1L)))).toDF("pid", "va", "vb")
     val pr = post.select(VectorOps.intDotCol(col("va"), col("vb")).as("f"),
-      VectorOps.intDotColHof(col("va"), col("vb")).as("h")).collect()
+      HofReference.intDotColHof(col("va"), col("vb")).as("h")).collect()
     assert(pr.head.isNullAt(0) && pr.head.isNullAt(1),
       s"post-null sums must poison, not throw: ${pr.head}")
     // interpreted eval matches the codegen'd result
