@@ -1,6 +1,7 @@
 package graft.exec
 
 import graft.ast._
+import graft.functions.ParamLiteral
 import graft.model.{EdgeMeta, GraphStore}
 import graft.pipeline.Scratch
 import org.apache.spark.sql.{Column, DataFrame, Row}
@@ -95,18 +96,22 @@ class Compiler(
     case other => other.toString
   }
 
+  /** A value as a plan literal. Scalars are [[ParamLiteral]]s, so the
+    * code Spark generates for the plan holds none of them and one plan
+    * shape compiles once for every request value.
+    */
   def valueToLit(v: PropertyValue): Column = v match {
     case VNull => lit(null)
-    case VBool(b) => lit(b)
-    case VI64(i) => lit(i)
-    case VF64(d) => lit(d)
-    case VF32(f) => lit(f)
-    case VString(s) => lit(s)
+    case VBool(b) => ParamLiteral(b)
+    case VI64(i) => ParamLiteral(i)
+    case VF64(d) => ParamLiteral(d)
+    case VF32(f) => ParamLiteral(f)
+    case VString(s) => ParamLiteral(s)
     // epoch-ms UTC -> NTZ wall-clock literal (session tz pinned to UTC;
     // the testdata's timestamps read as TIMESTAMP_NTZ)
-    case VDateTime(ms) => lit(java.time.LocalDateTime.ofInstant(
+    case VDateTime(ms) => ParamLiteral(java.time.LocalDateTime.ofInstant(
       java.time.Instant.ofEpochMilli(ms), java.time.ZoneOffset.UTC))
-    case VBytes(b) => lit(b)
+    case VBytes(b) => ParamLiteral(b)
     case VI64Array(a) => array(a.map(lit): _*)
     case VF64Array(a) => array(a.map(lit): _*)
     case VF32Array(a) => array(a.map(lit): _*)
@@ -458,18 +463,20 @@ class Compiler(
 
   /** The elements with one of `ids`, read from only the labels that can
     * hold them (all labels when none can: the filter then finds nothing).
+    * The ids filter as one `InSet`, so the plan's code is the same for
+    * any ids.
     */
-  private def idSource(ids: Seq[Long], isEdges: Boolean, hit: Column): Stream = {
+  private def idSource(ids: Seq[Long], isEdges: Boolean): Stream = {
     val held = store.labelsHolding(ids, isEdges)
     val labels = if (held.nonEmpty) held else if (isEdges) store.edgeLabels else store.nodeLabels
     val df = if (isEdges) store.edgesUnion(labels) else store.nodesUnion(labels)
-    Stream(df.where(hit), isEdges, Some(labels))
+    Stream(df.where(ParamLiteral.isIn(df, "_id", ids)), isEdges, Some(labels))
   }
 
   private def sourceNodes(ref: NodeRef, env: mutable.Map[String, Stream]): Stream = ref match {
     case NodeRef.All => Stream(store.allNodes, isEdges = false, Some(store.nodeLabels))
-    case NodeRef.Id(i) => idSource(Seq(i), isEdges = false, col("_id") === i)
-    case NodeRef.Ids(is) => idSource(is, isEdges = false, col("_id").isin(is: _*))
+    case NodeRef.Id(i) => idSource(Seq(i), isEdges = false)
+    case NodeRef.Ids(is) => idSource(is, isEdges = false)
     case NodeRef.Var(n) => lookupVar(env, n)
     case NodeRef.Param(n) => params.get(n) match {
       case Some(VI64(i)) => sourceNodes(NodeRef.Id(i), env)
@@ -480,8 +487,8 @@ class Compiler(
 
   private def sourceEdges(ref: EdgeRef, env: mutable.Map[String, Stream]): Stream = ref match {
     case EdgeRef.All => Stream(store.allEdges, isEdges = true, Some(store.edgeLabels))
-    case EdgeRef.Id(i) => idSource(Seq(i), isEdges = true, col("_id") === i)
-    case EdgeRef.Ids(is) => idSource(is, isEdges = true, col("_id").isin(is: _*))
+    case EdgeRef.Id(i) => idSource(Seq(i), isEdges = true)
+    case EdgeRef.Ids(is) => idSource(is, isEdges = true)
     case EdgeRef.Var(n) => lookupVar(env, n)
     case EdgeRef.Param(n) => params.get(n) match {
       case Some(VI64(i)) => sourceEdges(EdgeRef.Id(i), env)
@@ -993,7 +1000,7 @@ class Compiler(
               val table = if (isEdges) store.edgesFor(l) else store.nodesFor(l)
               val id = t.fieldIndex("_id")
               GraphStore.conform(spark,
-                table.where(col("_id").isin(value.keys.toSeq: _*)).collect().toSeq,
+                table.where(ParamLiteral.isIn(table, "_id", value.keys)).collect().toSeq,
                 table.schema, t).map(r => patch(r, value(r.getLong(id))))
             }
           publish(l, isEdges, d, rewritten ++ firsts)
@@ -1127,8 +1134,10 @@ class Compiler(
           val cascade = store.outEdgeLabels(ls) ++ store.inEdgeLabels(ls)
           if (cascade.nonEmpty) {
             val ids = hit.map(_.getLong(0))
-            publishDrops(store.edgesUnion(cascade)
-              .where(col("_src").isin(ids: _*) || col("_dst").isin(ids: _*))
+            val incident = store.edgesUnion(cascade)
+            publishDrops(incident
+              .where(ParamLiteral.isIn(incident, "_src", ids) ||
+                ParamLiteral.isIn(incident, "_dst", ids))
               .select("_id", "_label").collect().toSeq, isEdges = true)
           }
         }

@@ -58,7 +58,9 @@ private[model] final class LabelTable(spark: SparkSession, val base: Option[Data
       base match {
         case None => local
         case Some(b) =>
-          val kept = if (ids.isEmpty) b else b.where(!col("_id").isin(ids.toSeq: _*))
+          // an InSet, so the code stays the same as the id list grows
+          val kept = if (ids.isEmpty) b
+            else b.where(!graft.functions.ParamLiteral.isIn(b, "_id", ids))
           kept.unionByName(local, allowMissingColumns = true)
       }
   }

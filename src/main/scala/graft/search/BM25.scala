@@ -27,12 +27,18 @@ object BM25 {
   private def ensurePar(df: DataFrame): DataFrame =
     graft.pipeline.Dedup.ensureParallelism(df)
 
+  /** The rows of `post` whose `_term` is one of `terms`, as one `InSet`:
+    * the plan's code is then the same for any number of query terms.
+    */
+  private def queryTerms(post: DataFrame, terms: Seq[String]): DataFrame =
+    post.where(graft.functions.ParamLiteral.isIn(post, "_term", terms))
+
   /** Per-document postings restricted to `terms`: (_id, len, term, tf). */
   private def postings(df: DataFrame, textCol: String, terms: Seq[String]): DataFrame = {
     val toks = filter(split(lower(col(textCol)), TokenSplit), t => t =!= "")
-    ensurePar(df).select(col("_id"), toks.as("_toks"))
-      .select(col("_id"), size(col("_toks")).as("_len"), explode(col("_toks")).as("_term"))
-      .where(col("_term").isin(terms: _*))
+    queryTerms(ensurePar(df).select(col("_id"), toks.as("_toks"))
+      .select(col("_id"), size(col("_toks")).as("_len"), explode(col("_toks")).as("_term")),
+      terms)
       .groupBy(col("_id"), col("_len"), col("_term"))
       .agg(count(lit(1)).as("_tf"))
   }
@@ -77,9 +83,8 @@ object BM25 {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     toks.count() // eager: stats and postings race on this cache otherwise
     val stats = toks.agg(count(lit(1)).as("_n"), avg(col("_len")).as("_avglen"))
-    val post = toks
-      .select(col("_id"), col("_len"), explode(col("_toks")).as("_term"))
-      .where(col("_term").isin(terms: _*))
+    val post = queryTerms(toks
+      .select(col("_id"), col("_len"), explode(col("_toks")).as("_term")), terms)
       .groupBy(col("_id"), col("_len"), col("_term"))
       .agg(count(lit(1)).as("_tf"))
     val dfreq = post.groupBy(col("_term")).agg(count(lit(1)).as("_df"))
@@ -238,7 +243,7 @@ object BM25 {
   def scoreFromIndex(post: DataFrame, stats: DataFrame, query: String): DataFrame = {
     val terms = tokenize(query).distinct
     require(terms.nonEmpty, "empty query")
-    val qPost = post.where(col("_term").isin(terms: _*))
+    val qPost = queryTerms(post, terms)
     val dfreq = qPost.groupBy(col("_term")).agg(count(lit(1)).as("_df"))
     val idf = log(lit(1.0) + (col("_n") - col("_df") + 0.5) / (col("_df") + 0.5))
     val tfNorm = (col("_tf") * lit(K1 + 1)) /

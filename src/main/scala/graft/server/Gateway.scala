@@ -2,6 +2,10 @@ package graft.server
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalLimit, LogicalPlan,
+  Offset, Project, Sort, SubqueryAlias, Tail}
+import org.apache.spark.sql.execution.SQLExecution
 
 import graft.ast.{Batch, Json, PropertyValue}
 import graft.exec.BatchExecutor
@@ -105,7 +109,9 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
   /** Serving counters as one JSON object (stored-route hit counts
     * sorted by name; `wal_position` present when this gateway logs to
     * a WAL; `caches`: hit/miss/evict counters of the process's
-    * plan-keyed artifact caches).
+    * plan-keyed artifact caches; `codegen`: the classes Spark has
+    * compiled in this process and their compile time in ms, estimated
+    * as the count times the mean of Spark's compile-time histogram).
     */
   def metricsJson: String = {
     import scala.jdk.CollectionConverters._
@@ -113,10 +119,13 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
       .map { case (n, c) => quote(n) + ":" + c.get() }.mkString("{", ",", "}")
     val wal = walRoot.map(r =>
       s""","wal_position":${graft.model.GraphWal.commitPosition(r)}""").getOrElse("")
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val compileMs = math.round(compiles.getSnapshot.getMean * compiles.getCount)
     s"""{"reads":${nReads.get()},"writes":${nWrites.get()},""" +
       s""""errors":${nErrors.get()},"truncated":${nTruncated.get()},""" +
       s""""routes":$routes$wal,""" +
-      s""""caches":${graft.pipeline.ArtifactCache.countersJson}}"""
+      s""""caches":${graft.pipeline.ArtifactCache.countersJson},""" +
+      s""""codegen":{"compiles":${compiles.getCount},"compile_ms":$compileMs}}"""
   }
   private val stored =
     new java.util.concurrent.ConcurrentHashMap[String, QueryBundle.StoredRoute]()
@@ -179,10 +188,17 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
     * element-wise arrays; Bytes rejects).
     */
   def handleStored(name: String, paramsJson: String): String =
-    serveBuffered(resolve(name, paramsJson, Steering.Plain)).body
+    serveCounted(resolve(name, paramsJson, Steering.Plain))
 
-  def handle(body: String): String =
-    serveBuffered(resolve("", body, Steering.Plain)).body
+  def handle(body: String): String = serveCounted(resolve("", body, Steering.Plain))
+
+  /** The buffered body of a request that comes in without HTTP (MCP
+    * tool calls, in-process callers); a failure counts in `errors` as
+    * it does on the `/v1/query` path, and propagates.
+    */
+  private def serveCounted(req: => Request): String =
+    try serveBuffered(req).body
+    catch { case e: Exception => nErrors.incrementAndGet(); throw e }
 
   /** Record a stored route as served: warms it and bumps its hit counter. */
   private def markServed(name: String): Unit = {
@@ -486,11 +502,19 @@ object Gateway {
   /** The buffered JSON body, keyed by returned name. A result renders
     * as a scalar when it is one row of one column, otherwise as an array
     * of row objects (the CLI prints raw JSON, commands/query.rs:93-101).
-    * Each result costs one `limit(maxRows + 1).collect()`; past
+    * Each result fetches its first maxRows + 1 rows ([[firstRows]]); past
     * `maxRows` rows it is cut and `truncated` is set, so one unbounded
     * query cannot buffer a whole table into a driver string. The scalar
     * unwrap keys off the count before the cut: a capped multi-row
     * single-column result stays an array even at maxRows = 1.
+    *
+    * The cap stays out of the plan. A served plan's shape is fixed by
+    * its route and its values arrive as references
+    * ([[graft.functions.ParamLiteral]], `InSet`), so the Java Spark
+    * generates for it is the same on every request and compiles once.
+    * A `limit` on top would break that: Spark pushes a local limit into
+    * each branch of a written label's base ∪ overlay union, and names
+    * that limit's counter afresh for every plan.
     */
   private[server] final class Buffered(maxRows: Int) extends Sink {
     private val sb = new StringBuilder
@@ -503,7 +527,7 @@ object Gateway {
       results.toSeq.sortBy(_._1).zipWithIndex.foreach { case ((name, df), i) =>
         if (i > 0) sb.append(',')
         sb.append(quote(name)).append(':')
-        val rows = df.limit(maxRows + 1).collect()
+        val rows = firstRows(df, maxRows + 1)
         val names = df.columns
         if (rows.length == 1 && names.length == 1) writeJsonVal(sb, rows(0).get(0))
         else {
@@ -519,6 +543,30 @@ object Gateway {
         }
       }
       sb.append('}')
+    }
+  }
+
+  /** The first `n` rows of `df`, taken from its own plan by Spark's
+    * incremental take (`executeTake`: a first round of partitions, then
+    * more until `n` rows arrive, the rounds a root `limit` collects in). A
+    * result that already orders or limits its rows at the root keeps
+    * `limit`, so a capped sort plans as one TakeOrderedAndProject, not a
+    * full sort.
+    */
+  private def firstRows(df: DataFrame, n: Int): Array[Row] = {
+    def ordersOrLimits(p: LogicalPlan): Boolean = p match {
+      case Project(_, c) => ordersOrLimits(c)
+      case Filter(_, c) => ordersOrLimits(c)
+      case SubqueryAlias(_, c) => ordersOrLimits(c)
+      case _: Sort | _: GlobalLimit | _: LocalLimit | _: Offset | _: Tail => true
+      case _ => false
+    }
+    val qe = df.queryExecution
+    if (ordersOrLimits(qe.analyzed)) df.limit(n).collect()
+    else {
+      val toRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
+      SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeTake(n))
+        .map(toRow)
     }
   }
 

@@ -217,10 +217,14 @@ class GatewaySpec extends GraftSuite {
       assert(m.contains(""""reads":1"""), m)
       assert(m.contains(""""n_in":1"""), m)
       assert(m.contains(""""errors":0"""), m)
-      val rowCount = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(m).get("caches").get("rowCount")
+      val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(m)
+      val rowCount = tree.get("caches").get("rowCount")
       assert(rowCount.get("misses").asLong >= 1 && rowCount.has("hits") &&
         rowCount.has("evictions"), m)
+      // Spark's compiled-class count and compile time: the stored-route
+      // call above compiled at least one class in this process
+      val codegen = tree.get("codegen")
+      assert(codegen.get("compiles").asLong >= 1 && codegen.get("compile_ms").asLong >= 0, m)
     } finally gw.stop()
   }
 
@@ -675,6 +679,19 @@ class GatewaySpec extends GraftSuite {
         {"request_type":"read","query":{"queries":[],"returns":[]},
         "parameters":{}}}}}""")
     assert(!bad.has("error"))
+    // a failed query tool call counts in /metrics errors, as a failed
+    // POST /v1/query does
+    def errors = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(gw.metricsJson).get("errors").asLong
+    val before = errors
+    val failed = mcpTree(gw,
+      """{"jsonrpc":"2.0","id":10,"method":"tools/call",
+        "params":{"name":"graft.query","arguments":{"request":
+        {"request_type":"read","query":{"queries":[{"Query":{"name":"n",
+        "steps":[{"N":{"Param":"missing"}}],"condition":null}}],"returns":["n"]},
+        "parameters":{}}}}}""")
+    assert(failed.get("result").get("isError").asBoolean, failed)
+    assert(errors == before + 1)
   }
 
   test("mcp serves over HTTP at /mcp; 202 for notifications; off when disabled") {

@@ -17,6 +17,10 @@ object TestBase {
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
+      // at Spark's default of 100 classes, one BM25 search (about 50)
+      // can evict a shape that a compile-count test expects to find
+      // cached (ServingCodegenSpec)
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
