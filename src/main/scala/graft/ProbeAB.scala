@@ -57,8 +57,35 @@ object ProbeAB {
       Multimodal.mediaFromIdsCached(docsDf.select("doc_id"), "doc_id",
         only = Some("audio")), n = 3, num = 6, den = 10)
 
+    // hops whose near step became a semi join: old = the same plan with
+    // each `edges ⋉ frontier` put back as the inner join
+    // `frontier ⋈ edges` it replaced
+    def innerHops(df: DataFrame): DataFrame = {
+      import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
+      import org.apache.spark.sql.catalyst.plans.logical.{Join, Project}
+      val plan = df.queryExecution.analyzed.transformUp {
+        case Join(edges, frontier, LeftSemi, cond, hint) =>
+          Project(edges.output, Join(frontier, edges, Inner, cond, hint))
+      }
+      new org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row](
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan,
+        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(df.schema))
+    }
+    val hops = Seq("q_choose", "q_choose_else", "q_in", "q_nav_agg", "q_out_count").map { q =>
+      def df = SparkEntry.queries(q)(spark, d)
+      (q, () => innerHops(df), () => df)
+    }
+    // every Customer through a filter that keeps all of them: a
+    // label-sized frontier the compiler does not know is a whole label
+    def everyCustomerHop: DataFrame = {
+      import graft.dsl.Dsl._
+      new graft.exec.Compiler(graft.model.TestGraph(spark, d)).run(g()
+        .nWithLabelWhere("Customer", gt("c_acctbal", -1e9)).out("PLACED").values("o_orderkey").t)
+    }
+
     val allPairs: Seq[(String, () => DataFrame, () => DataFrame)] = Seq(
-      ("audio_shingle_band", () => audioShingle, () => audioShingle))
+      ("audio_shingle_band", () => audioShingle, () => audioShingle),
+      ("hop_every_customer", () => innerHops(everyCustomerHop), () => everyCustomerHop)) ++ hops
 
     val pairs =
       if (nameArgs.isEmpty) allPairs else allPairs.filter(p => nameArgs.contains(p._1))

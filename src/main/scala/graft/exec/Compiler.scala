@@ -20,8 +20,16 @@ import scala.collection.mutable
   * which per-label tables are unioned/joined (partition pruning at the
   * plan level; on a real cluster this is the difference between reading
   * one label's files and reading all of them).
+  *
+  * `distinct`: each `_id` occurs at most once. The source steps and
+  * `Dedup` set it, row filters and reorders keep it, every other step
+  * clears it (`Compiler.keepsDistinct`); it lets a hop plan its near
+  * join as a semi join. `whole`: the stream is every element of its
+  * labels (a source that filters on nothing but labels); a hop out of
+  * it keeps the inner join (`Compiler.nearJoin`).
   */
-final case class Stream(df: DataFrame, isEdges: Boolean, labels: Option[Set[String]]) {
+final case class Stream(df: DataFrame, isEdges: Boolean, labels: Option[Set[String]],
+    distinct: Boolean = false, whole: Boolean = false) {
   def bindingCols: Seq[String] = df.columns.toSeq.filter(_.startsWith("_b_"))
 }
 
@@ -35,6 +43,31 @@ object Compiler {
     */
   val AddEBands = 64L
   val AddEBandCap: Long = 1L << 33
+
+  /** Steps after which a stream keeps the `distinct` flag the step gave
+    * it: the sources and `Dedup` set it, row filters and reorders pass
+    * it on. Every other step clears it: a union, a hop or a variable
+    * can repeat a node, and sub-traversals, repeats and mutations are
+    * not tracked.
+    */
+  private def keepsDistinct(step: Step): Boolean = step match {
+    case _: Step.N | _: Step.NWhere | _: Step.E | _: Step.EWhere | Step.Dedup => true
+    case _: Step.Has | _: Step.HasLabel | _: Step.HasKey | _: Step.Where => true
+    case _: Step.EdgeHas | _: Step.EdgeHasLabel | _: Step.Within | _: Step.Without => true
+    case _: Step.Limit | _: Step.Skip | _: Step.Range => true
+    case _: Step.LimitBy | _: Step.SkipBy | _: Step.RangeBy => true
+    case _: Step.OrderBy | _: Step.OrderByMultiple => true
+    case _ => false
+  }
+
+  /** Steps after which a stream keeps its `whole` flag: the sources set
+    * it, and a label filter leaves every element of the labels it keeps.
+    */
+  private def keepsWhole(step: Step): Boolean = step match {
+    case _: Step.N | _: Step.NWhere | _: Step.E | _: Step.EWhere => true
+    case _: Step.HasLabel | _: Step.EdgeHasLabel => true
+    case _ => false
+  }
 
   /** Batch-scoped control of the id-allocation seed. The first seed a
     * batch computes can come from a max-scan fallback whose result
@@ -273,7 +306,8 @@ class Compiler(
     * (sub-traversal) -> not provably props-free.
     */
   private def propsFreeSteps(rest: List[Step]): Boolean = rest.forall {
-    case Step.Count | Step.Exists | Step.Id | Step.Dedup => true
+    case Step.Count | Step.Exists | Step.Id | Step.Label | Step.Dedup => true
+    case Step.Values(ps) => ps.forall(p => p == "$id" || p == "$label")
     case _: Step.Within | _: Step.Without => true
     case _: Step.Limit | _: Step.Skip | _: Step.Range => true
     case _ => false
@@ -285,6 +319,26 @@ class Compiler(
   private def propsFreeNavOnly(t: Traversal): Boolean = t.steps.forall {
     case _: Step.Out | _: Step.In | _: Step.Both => true
     case other => propsFreeSteps(List(other))
+  }
+
+  /** The near step of a hop: the `edges` whose `nearCol` is a frontier
+    * `_id`, with that id as column `as` and the frontier's bindings.
+    * A distinct frontier without bindings is a semi join: it yields
+    * each edge once, as the inner join does, and Spark sizes it as the
+    * edge label instead of the product of both inputs, so the far join
+    * builds on whichever side is smaller. A frontier that repeats nodes
+    * or carries bindings keeps the inner join: one row per repeat, and
+    * the bindings. So does a whole label: every edge passes its near
+    * step, so the semi join would shrink nothing and only move the far
+    * join's hash onto the edge label, which in a many-to-one hop holds
+    * more rows than the target and waits on the frontier's broadcast.
+    */
+  private def nearJoin(cur: Stream, edges: DataFrame, nearCol: String, as: String): DataFrame = {
+    val keep = keepCols(cur)
+    val frontier = cur.df.select(col("_id").as(as) +: keep.map(col): _*)
+    if (cur.distinct && !cur.whole && keep.isEmpty)
+      edges.join(frontier, col(nearCol) === col(as), "left_semi").withColumn(as, col(nearCol))
+    else frontier.join(edges, col(as) === col(nearCol))
   }
 
   /** node stream -> neighbor node stream via out/in edges. Per edge
@@ -305,12 +359,11 @@ class Compiler(
     val eLabels = if (pruned.isEmpty) store.edgeLabels else pruned
     val (nearCol, farCol) = if (outDir) ("_src", "_dst") else ("_dst", "_src")
     val keep = keepCols(cur)
-    val left = cur.df.select(col("_id").as("__cur") +: keep.map(col): _*)
     val skipJoin = propsFreeTail
     val branches = eLabels.toSeq.sorted.map { el =>
       val tls = if (outDir) store.dstLabelsOf(Set(el)) else store.srcLabelsOf(Set(el))
       val edges = store.edgesFor(el).select(col(nearCol), col(farCol))
-      val mid = left.join(edges, col("__cur") === col(nearCol))
+      val mid = nearJoin(cur, edges, nearCol, "__cur")
         .select(col(farCol).as("__far") +: keep.map(col): _*)
       val df =
         if (skipJoin && tls.size == 1)
@@ -334,10 +387,7 @@ class Compiler(
       if (outDir) store.outEdgeLabels(cur.labels) else store.inEdgeLabels(cur.labels))
     val eLabels = if (pruned.isEmpty) store.edgeLabels else pruned
     val nearCol = if (outDir) "_src" else "_dst"
-    val edges = store.edgesUnion(eLabels)
-    val keep = keepCols(cur)
-    val left = cur.df.select(col("_id").as("_came") +: keep.map(col): _*)
-    val res = left.join(edges, col("_came") === col(nearCol))
+    val res = nearJoin(cur, store.edgesUnion(eLabels), nearCol, "_came")
     Stream(res, isEdges = true, Some(eLabels))
   }
 
@@ -470,11 +520,12 @@ class Compiler(
     val held = store.labelsHolding(ids, isEdges)
     val labels = if (held.nonEmpty) held else if (isEdges) store.edgeLabels else store.nodeLabels
     val df = if (isEdges) store.edgesUnion(labels) else store.nodesUnion(labels)
-    Stream(df.where(ParamLiteral.isIn(df, "_id", ids)), isEdges, Some(labels))
+    Stream(df.where(ParamLiteral.isIn(df, "_id", ids)), isEdges, Some(labels), distinct = true)
   }
 
   private def sourceNodes(ref: NodeRef, env: mutable.Map[String, Stream]): Stream = ref match {
-    case NodeRef.All => Stream(store.allNodes, isEdges = false, Some(store.nodeLabels))
+    case NodeRef.All =>
+      Stream(store.allNodes, isEdges = false, Some(store.nodeLabels), distinct = true, whole = true)
     case NodeRef.Id(i) => idSource(Seq(i), isEdges = false)
     case NodeRef.Ids(is) => idSource(is, isEdges = false)
     case NodeRef.Var(n) => lookupVar(env, n)
@@ -486,7 +537,8 @@ class Compiler(
   }
 
   private def sourceEdges(ref: EdgeRef, env: mutable.Map[String, Stream]): Stream = ref match {
-    case EdgeRef.All => Stream(store.allEdges, isEdges = true, Some(store.edgeLabels))
+    case EdgeRef.All =>
+      Stream(store.allEdges, isEdges = true, Some(store.edgeLabels), distinct = true, whole = true)
     case EdgeRef.Id(i) => idSource(Seq(i), isEdges = true)
     case EdgeRef.Ids(is) => idSource(is, isEdges = true)
     case EdgeRef.Var(n) => lookupVar(env, n)
@@ -575,7 +627,8 @@ class Compiler(
               Stream(store.nodesUnion(ls), isEdges = false, Some(ls))
             case _ => Stream(store.allNodes, isEdges = false, Some(store.nodeLabels))
           }
-          cur = Some(base.copy(df = base.df.where(compilePred(base.df, p))))
+          cur = Some(base.copy(df = base.df.where(compilePred(base.df, p)),
+            distinct = true, whole = pinsOnly(p)))
         case Step.E(ref) => cur = Some(sourceEdges(ref, env))
         case Step.EWhere(p) =>
           val pinned = pinnedLabels(p)
@@ -584,7 +637,8 @@ class Compiler(
               Stream(store.edgesUnion(ls), isEdges = true, Some(ls))
             case _ => Stream(store.allEdges, isEdges = true, Some(store.edgeLabels))
           }
-          cur = Some(base.copy(df = base.df.where(compilePred(base.df, p))))
+          cur = Some(base.copy(df = base.df.where(compilePred(base.df, p)),
+            distinct = true, whole = pinsOnly(p)))
         case Step.VectorSearchNodes(label, prop, tenant, qv, k) =>
           cur = Some(vectorSearch(store.nodesFor(label), Set(label), prop,
             tenant.map(resolveInputValue),
@@ -630,12 +684,12 @@ class Compiler(
         case Step.Has(p, v) =>
           cur = Some(s.copy(df = s.df.where(compilePred(s.df, Predicate.Eq(p, v)))))
         case Step.HasLabel(l) =>
-          cur = Some(Stream(s.df.where(col("_label") === l), s.isEdges,
-            s.labels.map(_.intersect(Set(l))).orElse(Some(Set(l)))))
+          cur = Some(s.copy(df = s.df.where(col("_label") === l),
+            labels = s.labels.map(_.intersect(Set(l))).orElse(Some(Set(l)))))
         case Step.HasKey(p) =>
           cur = Some(s.copy(df = s.df.where(compilePred(s.df, Predicate.HasKey(p)))))
         case Step.Where(p) => cur = Some(s.copy(df = s.df.where(compilePred(s.df, p))))
-        case Step.Dedup => cur = Some(s.copy(df = s.df.dropDuplicates("_id")))
+        case Step.Dedup => cur = Some(s.copy(df = s.df.dropDuplicates("_id"), distinct = true))
         case Step.Within(v) =>
           cur = Some(s.copy(df = s.df.join(
             lookupVar(env, v).df.select("_id"), Seq("_id"), "left_semi")))
@@ -649,7 +703,7 @@ class Compiler(
           }
           cur = Some(s.copy(df = s.df.where(resolveProp(s.df, p) === c)))
         case Step.EdgeHasLabel(l) =>
-          cur = Some(Stream(s.df.where(col("_label") === l), s.isEdges, Some(Set(l))))
+          cur = Some(s.copy(df = s.df.where(col("_label") === l), labels = Some(Set(l))))
 
         // sort / page
         case Step.OrderBy(p, o) =>
@@ -713,8 +767,9 @@ class Compiler(
           cur = Some(unionStreams(branches.map(b => runSub(b, s, env))))
         case Step.Choose(p, thenT, elseT) =>
           val c = compilePred(s.df, p)
-          val thenS = runSub(thenT, s.copy(df = s.df.where(coalesce(c, lit(false)))), env)
-          val elseIn = s.copy(df = s.df.where(!coalesce(c, lit(false))))
+          val thenIn = s.copy(df = s.df.where(coalesce(c, lit(false))), whole = false)
+          val thenS = runSub(thenT, thenIn, env)
+          val elseIn = s.copy(df = s.df.where(!coalesce(c, lit(false))), whole = false)
           val elseS = elseT.map(t => runSub(t, elseIn, env)).getOrElse(elseIn)
           cur = Some(unionStreams(Seq(thenS, elseS)))
         case Step.Coalesce(branches) =>
@@ -747,6 +802,8 @@ class Compiler(
 
         case m => cur = Some(applyMutation(m, cur, env))
       }
+      cur = cur.map(st => st.copy(distinct = st.distinct && Compiler.keepsDistinct(step),
+        whole = st.whole && Compiler.keepsWhole(step)))
     }
     cur.map(Right(_)).getOrElse(Left(spark.emptyDataFrame))
   }
@@ -1215,6 +1272,13 @@ class Compiler(
     case _ => None
   }
 
+  /** The predicate filters on nothing but `$label`. */
+  private def pinsOnly(p: Predicate): Boolean = p match {
+    case Predicate.Eq("$label", VString(_)) | Predicate.IsIn("$label", _) => true
+    case Predicate.And(ps) => ps.forall(pinsOnly)
+    case _ => false
+  }
+
   private def orderCol(c: Column, o: SortOrder): Column = o match {
     case SortOrder.Asc => c.asc_nulls_first
     case SortOrder.Desc => c.desc_nulls_last
@@ -1348,7 +1412,9 @@ class Compiler(
       if (stop) done = true
       else {
         if (cfg.emit == EmitBehavior.Before) pushEmitted(emitFilter(frontier))
-        val next = runSub(cfg.traversal, frontier, env, bodyTailPropsFree)
+        // distinctness is not tracked through the loop: the body re-enters
+        // with its own output, so it always starts from an untracked frontier
+        val next = runSub(cfg.traversal, frontier.copy(distinct = false), env, bodyTailPropsFree)
         depth += 1
         frontier = if (depth % 5 == 0) next.copy(df = Scratch.stable(next.df)) else next
         if (cfg.emit == EmitBehavior.After || cfg.emit == EmitBehavior.All)

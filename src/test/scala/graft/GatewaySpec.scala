@@ -896,6 +896,31 @@ class GatewaySpec extends GraftSuite {
       s"served lookup ran $servedJobs jobs, its render collect alone $renderJobs")
   }
 
+  test("job budget: a stored 1-hop route runs at most 3 jobs, a stored point route 1") {
+    import graft.ast._
+    import graft.dsl.Dsl._
+    val user = g().nWithLabel("ParityUser")
+      .where(Predicate.EqExpr("externalId", Expr.Param("externalId")))
+    def route(name: String, t: graft.dsl.Tr) =
+      Batch(Seq(BatchEntry.Query(NamedQuery(Some(name), t.t))), returns = Seq(name))
+    // one parquet file per label, as the served sf0.1 tables are, so a
+    // render's take ends after its first round
+    import graft.model.{GraphStore, GraphWal}
+    val p = TestBase.parityGraph()
+    def one(ts: Map[String, org.apache.spark.sql.DataFrame]) =
+      ts.map { case (l, d) => l -> d.coalesce(1) }
+    val dir = java.nio.file.Files.createTempDirectory("parity-one-file").toString
+    GraphWal.checkpoint(new GraphStore(spark, one(p.nodeTables), one(p.edgeTables), p.edgeMeta), dir)
+    val gw = new Gateway(GraphWal.recover(spark, dir))
+    gw.registerQuery("point", route("u", user.valueMap("externalId", "name")))
+    gw.registerQuery("hop", route("f", user.out("FOLLOWS").values("name", "age")))
+    val (point, pointJobs) = countJobs(gw.handleStored("point", """{"externalId":"u1"}"""))
+    assert(point.contains("Alice") && pointJobs == 1, s"$pointJobs jobs: $point")
+    // the frontier's broadcast, the edges' semi join, the far join
+    val (hop, hopJobs) = countJobs(gw.handleStored("hop", """{"externalId":"u1"}"""))
+    assert(hop.contains("Bob") && !hop.contains("Carol") && hopJobs <= 3, s"$hopJobs jobs: $hop")
+  }
+
   private def writeReq(steps: String): String =
     s"""{"request_type":"write","query":{"queries":[{"Query":{"name":"w",
       "steps":[$steps],"condition":null}}],"returns":["w"]},"parameters":{}}"""

@@ -20,21 +20,26 @@ class PlanShapeSpec extends GraftSuite {
   private def compiled(tr: graft.dsl.Tr): DataFrame =
     new Compiler(TestGraph(spark, dir)).run(tr.t)
 
-  private def scans(df: DataFrame): Seq[FileSourceScanExec] = {
+  /** The parquet scans of `df`'s final plan; with `broadcast`, only the
+    * scans under a broadcast exchange (the build sides of hash joins).
+    */
+  private def scans(df: DataFrame, broadcast: Boolean = false): Seq[FileSourceScanExec] = {
     df.collect() // finalize adaptive plans so stages are resolved
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] =
+    def walk(p: org.apache.spark.sql.execution.SparkPlan, built: Boolean): Seq[FileSourceScanExec] =
       p match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          walk(a.executedPlan)
+          walk(a.executedPlan, built)
         case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          walk(q.plan)
+          walk(q.plan, built)
         case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-          walk(r.child)
-        case s: FileSourceScanExec => Seq(s)
+          walk(r.child, built)
+        case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
+          walk(b.child, built = true)
+        case s: FileSourceScanExec => if (built || !broadcast) Seq(s) else Nil
         case other =>
-          other.children.flatMap(walk) ++ other.subqueries.flatMap(walk)
+          other.children.flatMap(walk(_, built)) ++ other.subqueries.flatMap(walk(_, built))
       }
-    walk(df.queryExecution.executedPlan)
+    walk(df.queryExecution.executedPlan, built = false)
   }
 
   test("NWhere predicate pushes to the parquet scan") {
@@ -709,6 +714,24 @@ class PlanShapeSpec extends GraftSuite {
     assert(prof("shuffle") == 0 && prof("smj") == 0 && prof("bhj") == 0 &&
       prof("broadcast") == 0,
       s"quality-clf serve must stay a single exchange-free scan: $prof")
+  }
+
+  test("a stored-route hop hashes its frontier, not the Order label; a small target is still built") {
+    import graft.ast.{Expr, Predicate, PropertyValue}
+    val key = 7L
+    val hop = new Compiler(TestGraph(spark, dir), Map("key" -> PropertyValue.VI64(key))).run(
+      g().nWithLabelWhere("Customer", Predicate.EqExpr("c_custkey", Expr.Param("key")))
+        .out("PLACED").values("o_orderkey", "o_totalprice").t)
+    val built = scans(hop, broadcast = true).map(_.metadata("ReadSchema"))
+    assert(built.nonEmpty && !built.exists(_.contains("o_totalprice")),
+      s"the far join hashes the Order rows: $built")
+    def bag(df: DataFrame) = df.collect().map(_.mkString("|")).sorted.toSeq
+    assert(bag(hop) == bag(spark.read.parquet(s"$dir/orders.parquet")
+      .where(s"o_custkey = $key").select("o_orderkey", "o_totalprice")))
+    // a whole-label hop into a smaller label keeps hashing the target
+    val toPart = compiled(g().nWithLabel("Lineitem").out("OF_PART").values("p_size"))
+    val partBuilt = scans(toPart, broadcast = true).map(_.metadata("ReadSchema"))
+    assert(partBuilt.exists(_.contains("p_size")), s"Part is not the build side: $partBuilt")
   }
 
   test("an Ids source into Order reads only the Order relation once ranges are stamped") {
