@@ -184,16 +184,39 @@ object StreamBound {
 }
 
 /** Index DDL spec (dsl.rs:2580-2658). */
-sealed trait IndexSpec extends Serializable
+sealed trait IndexSpec extends Serializable {
+  def label: String
+  def property: String
+}
 object IndexSpec {
+  /** A text or vector index: the kinds served from cached artifacts
+    * (graft.search.IndexCache).
+    */
+  sealed trait Artifact extends IndexSpec {
+    def tenantProperty: Option[String]
+    def isEdges: Boolean
+    def isText: Boolean
+  }
   final case class NodeEquality(label: String, property: String, unique: Boolean = false) extends IndexSpec
   final case class NodeRange(label: String, property: String, descending: Boolean = false) extends IndexSpec
   final case class EdgeEquality(label: String, property: String) extends IndexSpec
   final case class EdgeRange(label: String, property: String, descending: Boolean = false) extends IndexSpec
-  final case class NodeVector(label: String, property: String, tenantProperty: Option[String] = None) extends IndexSpec
-  final case class NodeText(label: String, property: String, tenantProperty: Option[String] = None) extends IndexSpec
-  final case class EdgeVector(label: String, property: String, tenantProperty: Option[String] = None) extends IndexSpec
-  final case class EdgeText(label: String, property: String, tenantProperty: Option[String] = None) extends IndexSpec
+  final case class NodeVector(label: String, property: String,
+      tenantProperty: Option[String] = None) extends Artifact {
+    def isEdges = false; def isText = false
+  }
+  final case class NodeText(label: String, property: String,
+      tenantProperty: Option[String] = None) extends Artifact {
+    def isEdges = false; def isText = true
+  }
+  final case class EdgeVector(label: String, property: String,
+      tenantProperty: Option[String] = None) extends Artifact {
+    def isEdges = true; def isText = false
+  }
+  final case class EdgeText(label: String, property: String,
+      tenantProperty: Option[String] = None) extends Artifact {
+    def isEdges = true; def isText = true
+  }
 }
 
 /** The Step enum (dsl.rs:2795-3262). One case per wire variant. */

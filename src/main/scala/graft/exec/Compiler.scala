@@ -851,13 +851,17 @@ class Compiler(
     case PropertyInput.FromExpr(e) => compileExpr(df, e)
   }
 
+  /** The text (or vector) index declared on (label, prop), if any. */
+  private def declaredIndex(label: String, prop: String, isEdges: Boolean,
+      text: Boolean): Option[IndexSpec.Artifact] =
+    store.indexes.collectFirst {
+      case s: IndexSpec.Artifact if s.isEdges == isEdges && s.isText == text &&
+        s.label == label && s.property == prop => s
+    }
+
   /** Declared vector index on (label, prop)? */
   private def vectorIndexed(label: String, prop: String, isEdges: Boolean): Boolean =
-    store.indexes.exists {
-      case IndexSpec.NodeVector(l, p, _) => !isEdges && l == label && p == prop
-      case IndexSpec.EdgeVector(l, p, _) => isEdges && l == label && p == prop
-      case _ => false
-    }
+    declaredIndex(label, prop, isEdges, text = false).isDefined
 
   /** Engine-side write embedding (Embedder doc): a STRING written to a
     * vector-indexed property stores its embedding instead — the
@@ -1436,15 +1440,14 @@ class Compiler(
     * matching exact variant used for parity (SURVEY §2.1, dsl.rs:2813-2832).
     */
   /** Tenant partition column for a (label, property) search: the
-    * declared index's tenant_property (IndexSpec, dsl.rs:2618-2658),
-    * else the conventional `tenantId`/`tenant` column.
+    * declared node (or edge) index's tenant_property (IndexSpec,
+    * dsl.rs:2618-2658), else the conventional `tenantId`/`tenant` column.
     */
-  private def tenantColumn(base: DataFrame, label: String, prop: String): String = {
+  private def tenantColumn(base: DataFrame, label: String, prop: String,
+      isEdges: Boolean): String = {
     val declared = store.indexes.collectFirst {
-      case IndexSpec.NodeVector(l, p, Some(t)) if l == label && p == prop => t
-      case IndexSpec.NodeText(l, p, Some(t)) if l == label && p == prop => t
-      case IndexSpec.EdgeVector(l, p, Some(t)) if l == label && p == prop => t
-      case IndexSpec.EdgeText(l, p, Some(t)) if l == label && p == prop => t
+      case s: IndexSpec.Artifact if s.isEdges == isEdges && s.label == label &&
+        s.property == prop && s.tenantProperty.isDefined => s.tenantProperty.get
     }
     declared.getOrElse(if (base.columns.contains("tenantId")) "tenantId" else "tenant")
   }
@@ -1453,7 +1456,7 @@ class Compiler(
       tenant: Option[PropertyValue], qv: Seq[Double], k: Int, isEdges: Boolean): Stream = {
     val label = labels.head
     val filtered = tenant match {
-      case Some(t) => base.where(col(tenantColumn(base, label, prop)) === valueToLit(t))
+      case Some(t) => base.where(col(tenantColumn(base, label, prop, isEdges)) === valueToLit(t))
       case None => base
     }
     // Declared vector index + large table -> IVF partition-pruned scan
@@ -1466,16 +1469,16 @@ class Compiler(
     // tenant-filtered queries from per-tenant centroids (trained on —
     // and sized by — that tenant's corpus only); the two mismatched
     // combinations stay exact brute scans.
-    val declaredTenant: Option[Option[String]] = store.indexes.collectFirst {
-      case IndexSpec.NodeVector(l, p, t) if !isEdges && l == label && p == prop => t
-      case IndexSpec.EdgeVector(l, p, t) if isEdges && l == label && p == prop => t
-    }
-    val ivfServing: Option[(DataFrame, String)] = (declaredTenant, tenant) match {
-      case (Some(None), None) => Some((base, prop))
-      case (Some(Some(_)), Some(tv)) =>
-        Some((filtered, graft.search.IndexCache.tenantKey(prop, valueKey(tv))))
-      case _ => None
-    }
+    import graft.search.IndexCache
+    val ivfServing: Option[(DataFrame, IndexCache.Key)] =
+      declaredIndex(label, prop, isEdges, text = false).flatMap { spec =>
+        (spec.tenantProperty, tenant) match {
+          case (None, None) => Some((base, IndexCache.Key(store.version, spec)))
+          case (Some(_), Some(tv)) =>
+            Some((filtered, IndexCache.Key(store.version, spec, Some(valueKey(tv)))))
+          case _ => None
+        }
+      }
     val threshold = spark.conf.get("graft.search.ivfThreshold", "100000").toLong
     // Third serving tier: above pqThreshold even the probed clusters'
     // full float vectors are too expensive to score per query, so the
@@ -1486,9 +1489,8 @@ class Compiler(
     val pqThreshold = spark.conf.get("graft.search.pqThreshold", "10000000").toLong
     val pqM = spark.conf.get("graft.search.pqM", "8").toInt
     val top = ivfServing match {
-      case Some((tbl, propKey))
-          if graft.search.IndexCache.rowCount(store.version, label, propKey, tbl) >= threshold =>
-        val n = graft.search.IndexCache.rowCount(store.version, label, propKey, tbl)
+      case Some((tbl, key)) if IndexCache.rowCount(key, tbl) >= threshold =>
+        val n = IndexCache.rowCount(key, tbl)
         // nlist ~ sqrt(n) (IVF rule of thumb); nprobe is CALIBRATED at
         // build time to the smallest probe count meeting the recall
         // target on a held sample (VectorOps.calibrateNprobe) — the
@@ -1496,17 +1498,13 @@ class Compiler(
         // profile, instead of a fixed nlist/4 guess that only holds on
         // clustered data
         val nlist = math.max(16, math.min(4096, math.sqrt(n.toDouble).toInt))
-        val model = graft.search.IndexCache.ivfModel(
-          store.version, label, propKey, nlist, tbl, vecCol = prop)
+        val model = IndexCache.ivfModel(key, nlist, tbl)
         val target = spark.conf.get("graft.search.recallTarget", "0.9").toDouble
         val calibN = spark.conf.get("graft.search.calibQueries", "64").toInt
-        val nprobe = graft.search.IndexCache.nprobe(store.version, label,
-          propKey, model, tbl, vecCol = prop, target = target, calibN = calibN)
+        val nprobe = IndexCache.nprobe(key, model, tbl, target = target, calibN = calibN)
         if (n >= pqThreshold && qv.length % pqM == 0) {
-          val (pqModel, enc) = graft.search.IndexCache.pqArtifact(
-            store.version, label, propKey, m = pqM, ks = 256, tbl, vecCol = prop)
-          val refine = graft.search.IndexCache.pqRefine(store.version, label,
-            propKey, pqModel, enc, tbl, vecCol = prop, target = target,
+          val (pqModel, enc) = IndexCache.pqArtifact(key, m = pqM, ks = 256, tbl)
+          val refine = IndexCache.pqRefine(key, pqModel, enc, tbl, target = target,
             calibN = calibN)
           graft.search.VectorOps.ivfPqTopK(enc, prop, model, pqModel, qv, k,
             nprobe, refine)
@@ -1532,24 +1530,16 @@ class Compiler(
       tenant: Option[PropertyValue], query: String, k: Int, isEdges: Boolean): Stream = {
     val label = labels.head
     // the declared index, if any, carries its tenant-partitioning prop
-    val declared: Option[Option[String]] = store.indexes.collectFirst {
-      case IndexSpec.NodeText(l, p, t) if !isEdges && l == label && p == prop => t
-      case IndexSpec.EdgeText(l, p, t) if isEdges && l == label && p == prop => t
-    }
+    val declared = declaredIndex(label, prop, isEdges, text = true)
     // exact-serving matrix: a plain index serves untenanted queries; a
     // tenant-partitioned index serves tenant-filtered queries (its
     // per-tenant stats equal on-the-fly scoring of that tenant's
     // corpus). The two mismatched combinations score on the fly —
     // always exact, never approximated stats.
-    val indexed = declared match {
-      case Some(None) => tenant.isEmpty
-      case Some(Some(_)) => tenant.isDefined
-      case None => false
-    }
-    val top = if (indexed) {
-      val tenantProp = declared.get
+    val indexed = declared.filter(_.tenantProperty.isDefined == tenant.isDefined)
+    val top = if (indexed.isDefined) {
       val (post, stats) = graft.search.IndexCache.textIndex(
-        store.version, label, prop, base, tenantProp)
+        graft.search.IndexCache.Key(store.version, indexed.get), base)
       val (qPost, qStats) = tenant match {
         case Some(tv) =>
           val lit0 = valueToLit(tv)
@@ -1560,7 +1550,7 @@ class Compiler(
       val scores = graft.search.BM25.scoreFromIndex(qPost, qStats, query)
       val scoped = tenant match {
         case Some(tv) =>
-          base.where(col(tenantColumn(base, label, prop)) === valueToLit(tv))
+          base.where(col(tenantColumn(base, label, prop, isEdges)) === valueToLit(tv))
         case None => base
       }
       scoped.join(scores, "_id")
@@ -1568,7 +1558,7 @@ class Compiler(
         .withColumnRenamed("_bm25", "_score")
     } else {
       val filtered = tenant match {
-        case Some(t) => base.where(col(tenantColumn(base, label, prop)) === valueToLit(t))
+        case Some(t) => base.where(col(tenantColumn(base, label, prop, isEdges)) === valueToLit(t))
         case None => base
       }
       graft.search.BM25.topK(filtered, prop, query, k, keepScore = true)

@@ -76,7 +76,9 @@ final class GraphStore private (
       * postings/IVF artifacts can never be served for stale data.
       * DDL-only changes (withIndexes) keep the version — the data behind
       * any existing artifact is unchanged, so evicting it would only
-      * force rebuilds.
+      * force rebuilds. An artifact is keyed by version AND declared
+      * index (IndexCache.Key), so a redeclared index never inherits the
+      * dropped one's artifact.
       */
     val version: String,
     /** Highest id ever allocated in this store, when known — the write

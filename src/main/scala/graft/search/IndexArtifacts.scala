@@ -1,6 +1,6 @@
 package graft.search
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ast.IndexSpec
@@ -9,7 +9,8 @@ import graft.model.GraphStore
 /** Durable index artifacts: the batch-built equivalents of the
   * reference's always-on HNSW/BM25 index files (config.rs:166-209),
   * persisted as parquet tables next to the graph
-  * (`root/_index/text/<label>/<prop>/…`, `root/_index/ivf/<label>/<prop>`).
+  * (`root/_index/text/<label>/<prop>/…`, `root/_index/ivf/<label>/<prop>`;
+  * an edge index's under `edge_text`, `edge_ivf`, `edge_pq`).
   *
   * At 100 TB these are produced by the WRITE path (a nightly or
   * incremental index build job), and query serving only ever reads
@@ -18,35 +19,37 @@ import graft.model.GraphStore
   */
 object IndexArtifacts {
 
-  def save(store: GraphStore, root: String): Unit = {
+  /** Where a declared index's artifact of `kind` (text, ivf, pq) lives;
+    * a node and an edge label of one name never share a directory.
+    */
+  private def dir(root: String, kind: String, spec: IndexSpec.Artifact): String =
+    s"$root/_index/${if (spec.isEdges) "edge_" else ""}$kind/${spec.label}/${spec.property}"
+
+  def save(store: GraphStore, root: String): Unit =
     store.indexes.foreach {
-      case IndexSpec.NodeText(l, p, t) if store.nodeTables.contains(l) =>
-        saveText(store, store.nodesFor(l).sparkSession, l, p, isEdges = false, root, t)
-      case IndexSpec.EdgeText(l, p, t) if store.edgeTables.contains(l) =>
-        saveText(store, store.edgesFor(l).sparkSession, l, p, isEdges = true, root, t)
-      case IndexSpec.NodeVector(l, p, t) if store.nodeTables.contains(l) =>
-        saveIvf(store, l, p, isEdges = false, root, t)
-        savePq(store, l, p, isEdges = false, root, t)
-      case IndexSpec.EdgeVector(l, p, t) if store.edgeTables.contains(l) =>
-        saveIvf(store, l, p, isEdges = true, root, t)
-        savePq(store, l, p, isEdges = true, root, t)
+      case spec: IndexSpec.Artifact =>
+        (if (spec.isEdges) store.edgeTables else store.nodeTables).get(spec.label)
+          .foreach { table =>
+            val (p, t) = (spec.property, spec.tenantProperty)
+            if (spec.isText) saveText(table, p, dir(root, "text", spec), t)
+            else {
+              saveIvf(table, p, dir(root, "ivf", spec), t)
+              savePq(table, p, dir(root, "pq", spec), t)
+            }
+          }
       case _ => ()
     }
-  }
 
-  private def saveText(store: GraphStore, spark: SparkSession, label: String,
-      prop: String, isEdges: Boolean, root: String,
-      tenantCol: Option[String] = None): Unit = {
-    val table = if (isEdges) store.edgesFor(label) else store.nodesFor(label)
+  private def saveText(table: DataFrame, prop: String, path: String,
+      tenantCol: Option[String]): Unit = {
     val (post, stats) = BM25.buildIndex(table, prop, tenantCol)
     // postings bucketed by term hash: a query's term lookup prunes to
     // its buckets (partitionBy("_term") would explode the namespace)
     post.withColumn("_tb", pmod(hash(col("_term")), lit(64)))
       .repartition(col("_tb"))
       .write.mode(SaveMode.Overwrite).partitionBy("_tb")
-      .parquet(s"$root/_index/text/$label/$prop/postings")
-    stats.write.mode(SaveMode.Overwrite)
-      .parquet(s"$root/_index/text/$label/$prop/stats")
+      .parquet(s"$path/postings")
+    stats.write.mode(SaveMode.Overwrite).parquet(s"$path/stats")
   }
 
   /** For a tenant-partitioned index (tenant_property declared), one
@@ -56,12 +59,10 @@ object IndexArtifacts {
     * bounded by the number of above-threshold tenants (each holding
     * >= threshold rows, so at most corpus/threshold of them).
     */
-  private def saveIvf(store: GraphStore, label: String, prop: String,
-      isEdges: Boolean, root: String, tenantCol: Option[String] = None): Unit = {
-    val table = if (isEdges) store.edgesFor(label) else store.nodesFor(label)
+  private def saveIvf(table: DataFrame, prop: String, path: String,
+      tenantCol: Option[String]): Unit = {
     val spark = table.sparkSession
     import spark.implicits._
-    val path = s"$root/_index/ivf/$label/$prop"
     tenantCol match {
       case None =>
         val n = table.count()
@@ -99,15 +100,13 @@ object IndexArtifacts {
     * Vector dims indivisible by `graft.search.pqM` save nothing — the
     * serving path falls back to plain IVF for them anyway.
     */
-  private def savePq(store: GraphStore, label: String, prop: String,
-      isEdges: Boolean, root: String, tenantCol: Option[String] = None): Unit = {
-    val table = if (isEdges) store.edgesFor(label) else store.nodesFor(label)
+  private def savePq(table: DataFrame, prop: String, path: String,
+      tenantCol: Option[String]): Unit = {
     val spark = table.sparkSession
     import spark.implicits._
     val m = spark.conf.get("graft.search.pqM", "8").toInt
     val dimRow = table.select(size(col(prop))).head()
     if (dimRow.isNullAt(0) || dimRow.getInt(0) % m != 0) return
-    val path = s"$root/_index/pq/$label/$prop"
     tenantCol match {
       case None =>
         val model = VectorOps.trainPq(table, prop, m)
@@ -141,81 +140,54 @@ object IndexArtifacts {
     * (they build lazily on first query as usual).
     */
   def load(spark: SparkSession, root: String, store: GraphStore): Int = {
-    var loaded = 0
     def exists(p: String) = new java.io.File(p).isDirectory
-    store.indexes.foreach {
-      case IndexSpec.NodeText(l, p, _) if exists(s"$root/_index/text/$l/$p/postings") =>
-        val post = spark.read.parquet(s"$root/_index/text/$l/$p/postings").drop("_tb")
-        val stats = spark.read.parquet(s"$root/_index/text/$l/$p/stats")
-        IndexCache.putText(store.version, l, p, post, stats)
-        loaded += 1
-      case IndexSpec.EdgeText(l, p, _) if exists(s"$root/_index/text/$l/$p/postings") =>
-        val post = spark.read.parquet(s"$root/_index/text/$l/$p/postings").drop("_tb")
-        val stats = spark.read.parquet(s"$root/_index/text/$l/$p/stats")
-        IndexCache.putText(store.version, l, p, post, stats)
-        loaded += 1
-      case IndexSpec.NodeVector(l, p, t) if exists(s"$root/_index/ivf/$l/$p") =>
-        loaded += loadIvf(spark, s"$root/_index/ivf/$l/$p", store.version, l, p, t)
-        if (exists(s"$root/_index/pq/$l/$p"))
-          loaded += loadPq(spark, s"$root/_index/pq/$l/$p", store.version, l, p, t)
-      case IndexSpec.EdgeVector(l, p, t) if exists(s"$root/_index/ivf/$l/$p") =>
-        loaded += loadIvf(spark, s"$root/_index/ivf/$l/$p", store.version, l, p, t)
-        if (exists(s"$root/_index/pq/$l/$p"))
-          loaded += loadPq(spark, s"$root/_index/pq/$l/$p", store.version, l, p, t)
-      case _ => ()
-    }
-    loaded
+    store.indexes.toSeq.map {
+      case spec: IndexSpec.Artifact =>
+        val key = IndexCache.Key(store.version, spec)
+        val (text, ivf, pq) = (dir(root, "text", spec), dir(root, "ivf", spec), dir(root, "pq", spec))
+        if (spec.isText) {
+          if (!exists(s"$text/postings")) 0
+          else {
+            IndexCache.putText(key, spark.read.parquet(s"$text/postings").drop("_tb"),
+              spark.read.parquet(s"$text/stats"))
+            1
+          }
+        } else if (!exists(ivf)) 0
+        else loadVector(spark, ivf, key)(readIvf)(IndexCache.putIvf) +
+          (if (!exists(pq)) 0 else loadVector(spark, pq, key)(readPq)(IndexCache.putPq))
+      case _ => 0
+    }.sum
   }
 
-  private def loadIvf(spark: SparkSession, path: String, version: String,
-      label: String, prop: String, tenantCol: Option[String]): Int =
-    tenantCol match {
+  /** Put one model per durable artifact: the index's own, or one per
+    * tenant of a tenant-partitioned index (rows carry `_tenant`; the
+    * collect is bounded by (above-threshold tenants) × model size).
+    * Returns the number of models put.
+    */
+  private def loadVector[M](spark: SparkSession, path: String, key: IndexCache.Key)(
+      read: Seq[Row] => M)(put: (IndexCache.Key, M) => Unit): Int = {
+    val rows = spark.read.parquet(path).collect().toSeq
+    key.spec.tenantProperty match {
       case None =>
-        IndexCache.putIvf(version, label, prop, readIvf(spark, path))
+        put(key, read(rows))
         1
       case Some(_) =>
-        // per-tenant models: rows are (tenant, centroid_id, centroid);
-        // the collect is bounded by (above-threshold tenants) × nlist
-        val rows = spark.read.parquet(path)
-          .orderBy("_tenant", "centroid_id").collect()
-        val byTenant = rows.groupBy(_.getString(0))
-        byTenant.foreach { case (tv, rs) =>
-          IndexCache.putIvf(version, label, IndexCache.tenantKey(prop, tv),
-            VectorOps.IvfModel(rs.map(_.getSeq[Double](2).toArray)))
-        }
+        val byTenant = rows.groupBy(_.getAs[String]("_tenant"))
+        byTenant.foreach { case (tv, rs) => put(key.copy(tenant = Some(tv)), read(rs)) }
         byTenant.size
     }
-
-  private def readIvf(spark: SparkSession, path: String): VectorOps.IvfModel = {
-    val rows = spark.read.parquet(path).orderBy("centroid_id").collect()
-    VectorOps.IvfModel(rows.map(_.getSeq[Double](1).toArray))
   }
 
-  private def pqFromRows(
-      rows: Array[(Int, Int, Array[Double])]): VectorOps.PqModel = {
-    val books = rows.groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (_, rs) => rs.sortBy(_._2).map(_._3) }.toArray
+  private def centroids(rows: Seq[Row]): Array[Array[Double]] =
+    rows.sortBy(_.getAs[Int]("centroid_id"))
+      .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray).toArray
+
+  private def readIvf(rows: Seq[Row]): VectorOps.IvfModel =
+    VectorOps.IvfModel(centroids(rows))
+
+  private def readPq(rows: Seq[Row]): VectorOps.PqModel = {
+    val books = rows.groupBy(_.getAs[Int]("subspace")).toSeq.sortBy(_._1)
+      .map { case (_, rs) => centroids(rs) }.toArray
     VectorOps.PqModel(books(0)(0).length, books)
   }
-
-  private def loadPq(spark: SparkSession, path: String, version: String,
-      label: String, prop: String, tenantCol: Option[String]): Int =
-    tenantCol match {
-      case None =>
-        val rows = spark.read.parquet(path)
-          .orderBy("subspace", "centroid_id").collect()
-          .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-        IndexCache.putPq(version, label, prop, pqFromRows(rows))
-        1
-      case Some(_) =>
-        val rows = spark.read.parquet(path)
-          .orderBy("_tenant", "subspace", "centroid_id").collect()
-        val byTenant = rows.groupBy(_.getString(0))
-        byTenant.foreach { case (tv, rs) =>
-          IndexCache.putPq(version, label, IndexCache.tenantKey(prop, tv),
-            pqFromRows(rs.map(r =>
-              (r.getInt(1), r.getInt(2), r.getSeq[Double](3).toArray))))
-        }
-        byTenant.size
-    }
 }

@@ -5,45 +5,72 @@ import org.apache.spark.storage.StorageLevel
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.jdk.CollectionConverters._
+
+import graft.ast.IndexSpec
+import graft.model.GraphStore
+
 /** Session-lived artifacts behind declared indexes (SURVEY §4.1: the
   * vector/text index DDL maps to batch index artifacts, not B-trees).
   *
-  * Keyed by `GraphStore.version` (a UUID minted per data mutation) so a
-  * post-mutation store can never be served another store's artifact —
-  * identity-hash keys could collide once the old store is GC'd. A
-  * long-running gateway calls `evictOthers(current)` after each write
-  * batch to unpersist superseded artifacts instead of leaking cached
-  * blocks until executor-store pressure evicts them.
+  * One [[Entry]] per [[Key]]: store version, declared index and tenant
+  * value. `GraphStore.version` is a UUID minted per data mutation, so a
+  * post-mutation store can never be served another store's artifact;
+  * the declared `IndexSpec` names node or edge, label, property and
+  * tenant column, so a node and an edge label of one name, or an index
+  * dropped and redeclared with another tenant column, never share one.
+  *
+  * Two lifecycle steps, shared by the writer and the read replicas:
+  * [[advance]] carries a store's entries to its successor before the
+  * successor publishes, and [[evictOthers]] releases every version
+  * other than the live ones (the stores a write batch built in
+  * between).
   */
 object IndexCache {
-  type Key = (String, String, String) // (storeVersion, label, property)
 
-  /** Composite property key for a tenant-partitioned artifact: a vector
-    * index declared with a tenant_property (IndexSpec, dsl.rs:2618-2658)
-    * keeps one IVF model / row count PER TENANT, so a tenant-filtered
-    * search serves from centroids trained on that tenant's corpus only
-    * (mirroring the per-tenant postings/stats the text path keeps).
+  /** `tenant` is the tenant value of a tenant-partitioned vector
+    * index's per-tenant models (IndexSpec tenant_property,
+    * dsl.rs:2618-2658), so a tenant-filtered search serves from
+    * centroids trained on that tenant's corpus only. A tenant-partitioned
+    * text index keeps every tenant in one artifact (postings carry
+    * `_tenant`, stats are per tenant) under `tenant = None`.
     */
-  def tenantKey(prop: String, tenant: String): String = s"$prop#tenant=$tenant"
+  final case class Key(version: String, spec: IndexSpec.Artifact,
+      tenant: Option[String] = None)
 
-  private val text = new ConcurrentHashMap[Key, (DataFrame, DataFrame)]()
-  private val ivf = new ConcurrentHashMap[Key, VectorOps.IvfModel]()
-  private val counts = new ConcurrentHashMap[Key, java.lang.Long]()
-  private val probes = new ConcurrentHashMap[Key, java.lang.Integer]()
-  // PQ codebooks and the persisted encoded corpus are SEPARATE maps:
-  // on an append-only change the codebooks stay valid (new rows encode
-  // against them) but the encoded frame is stale — migrate carries
-  // models/refines forward and drops encodings for re-scan.
-  private val pqModels = new ConcurrentHashMap[Key, VectorOps.PqModel]()
-  private val pqEnc = new ConcurrentHashMap[Key, DataFrame]()
-  private val pqRefines = new ConcurrentHashMap[Key, java.lang.Integer]()
-  // indexed row count AT CALIBRATION TIME for each calibrated depth —
-  // the baseline the append-drift gate compares against. One baseline
-  // PER KNOB: an IVF-PQ tier calibrates nprobe AND refine under the
-  // same (version, label, propKey), and resetting one must not mask
-  // the other's drift. Carried forward with the depths themselves.
-  private val nprobeBase = new ConcurrentHashMap[Key, java.lang.Long]()
-  private val refineBase = new ConcurrentHashMap[Key, java.lang.Long]()
+  /** A calibrated serving depth and the indexed row count it was
+    * calibrated at: the baseline the append-drift gate compares against.
+    */
+  private final case class Depth(value: Int, rows: Long)
+
+  /** One declared index's artifacts on one store version. Each field is
+    * built at most once, under the entry's lock. The PQ codebooks and
+    * the PQ-encoded corpus are separate fields: on an append the
+    * codebooks stay valid (new rows encode against them) but the
+    * encoding is stale.
+    */
+  private final class Entry {
+    @volatile var text: Option[(DataFrame, DataFrame)] = None
+    @volatile var ivf: Option[VectorOps.IvfModel] = None
+    @volatile var rows: Option[Long] = None
+    @volatile var pq: Option[VectorOps.PqModel] = None
+    @volatile var pqEnc: Option[DataFrame] = None
+    @volatile var nprobe: Option[Depth] = None
+    @volatile var refine: Option[Depth] = None
+    @volatile var released = false
+
+    /** Unpersist the entry's frames. A build that lands after this call
+      * sees `released` and releases again, so no block is orphaned.
+      */
+    def release(): Unit = {
+      released = true
+      text.foreach { case (p, s) => p.unpersist(false); s.unpersist(false) }
+      pqEnc.foreach(_.unpersist(false))
+    }
+  }
+
+  private val entries = new ConcurrentHashMap[Key, Entry]()
+  private def entry(k: Key): Entry = entries.computeIfAbsent(k, _ => new Entry)
 
   /** Appended-rows fraction past which a carried-forward calibration
     * re-validates: centroids carry across appends by design (IVF
@@ -59,73 +86,212 @@ object IndexCache {
   private[graft] val DriftRecheckFraction = 0.2
 
   /** Full posting builds, for tests asserting the incremental append
-    * path (appendText) was taken instead of a rebuild.
+    * path was taken instead of a rebuild.
     */
   private[graft] val textBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** The calibrated nprobe already computed for an artifact, if any —
-    * test visibility for the per-tenant calibration contract (a
-    * tenant-partitioned artifact keys by [[tenantKey]], so a skewed
-    * tenant owns its own calibration, not the global one).
+  /** The value `get` reads from `k`'s entry; when absent, `build` makes
+    * it and `set` stores it, once, under the entry's lock.
     */
-  private[graft] def calibratedNprobe(storeVersion: String, label: String,
-      propKey: String): Option[Int] =
-    Option(probes.get((storeVersion, label, propKey))).map(_.intValue)
+  private def memo[A](k: Key)(get: Entry => Option[A])(set: (Entry, A) => Unit)(
+      build: => A): A = {
+    val e = entry(k)
+    get(e).getOrElse(e.synchronized {
+      get(e).getOrElse {
+        val a = build
+        set(e, a)
+        if (e.released) e.release()
+        a
+      }
+    })
+  }
 
-  /** Postings + corpus stats for a declared text index, built once per
-    * (store version, label, property) and cached persisted. A declared
-    * tenant property makes the artifact tenant-partitioned (postings
-    * carry `_tenant`; stats are per tenant).
+  private def persisted(df: DataFrame): DataFrame =
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** A recall-calibrated serving depth with the append-drift gate: a
+    * depth carried forward across appends re-validates once the corpus
+    * grew past [[DriftRecheckFraction]] since ITS calibration; within
+    * the gate the cached depth serves as-is.
     */
-  def textIndex(storeVersion: String, label: String, prop: String,
-      table: => DataFrame, tenantCol: Option[String] = None): (DataFrame, DataFrame) =
-    text.computeIfAbsent((storeVersion, label, prop), _ => {
+  private def calibrated(k: Key, table: => DataFrame, what: String)(
+      get: Entry => Option[Depth])(set: (Entry, Depth) => Unit)(calibrate: => Int): Int = {
+    val e = entry(k)
+    e.synchronized {
+      lazy val cur = rowCount(k, table)
+      get(e) match {
+        case Some(d) if cur <= d.rows * (1 + DriftRecheckFraction) => d.value
+        case prior =>
+          if (prior.isEmpty) graft.pipeline.Scratch.noteBuild(what)
+          val d = Depth(calibrate, cur)
+          set(e, d)
+          d.value
+      }
+    }
+  }
+
+  /** A deterministic calibration batch of `calibN` corpus rows
+    * (hash-ordered pick — a uniform, reproducible sample).
+    */
+  private def calibSample(table: DataFrame, calibN: Int): DataFrame = {
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    table.orderBy(xxhash64(col("_id")), col("_id")).limit(calibN)
+  }
+
+  /** The calibrated nprobe already computed for an artifact, if any —
+    * test visibility for the per-tenant calibration contract.
+    */
+  private[graft] def calibratedNprobe(k: Key): Option[Int] =
+    Option(entries.get(k)).flatMap(_.nprobe).map(_.value)
+
+  /** Postings + corpus stats for a declared text index, cached
+    * persisted. A declared tenant property makes the artifact
+    * tenant-partitioned (postings carry `_tenant`; stats are per tenant).
+    */
+  def textIndex(k: Key, table: => DataFrame): (DataFrame, DataFrame) =
+    memo(k)(_.text)((e, t) => e.text = Some(t)) {
       textBuilds.incrementAndGet()
-      val (post, stats) = BM25.buildIndex(table, prop, tenantCol)
-      val p = post.persist(StorageLevel.MEMORY_AND_DISK)
-      val s = stats.persist(StorageLevel.MEMORY_AND_DISK)
+      val (post, stats) = BM25.buildIndex(table, k.spec.property, k.spec.tenantProperty)
+      val (p, s) = (persisted(post), persisted(stats))
       p.count(); s.count()
       (p, s)
-    })
+    }
 
-  /** Incremental text-artifact refresh for an APPEND-ONLY data change
-    * (streaming sink commits): the raw postings carry no idf — df/idf
-    * derive at query time — so `old postings ∪ postings(delta)` IS the
-    * exact new artifact, and corpus stats merge in closed form
-    * (N' = N + n_delta, avglen' re-weighted; per tenant when the index
-    * is tenant-partitioned). Cost is one pass over the DELTA plus a
-    * cached-artifact copy, not a full-corpus re-tokenize. The merged
-    * frames materialize eagerly, BEFORE the superseded version's
-    * artifact is unpersisted, so the copy reads the warm cache.
+  /** IVF centroids for a declared vector index, trained on `table`. */
+  def ivfModel(k: Key, nlist: Int, table: => DataFrame): VectorOps.IvfModel =
+    memo(k)(_.ivf)((e, m) => e.ivf = Some(m))(
+      VectorOps.trainIvf(table, k.spec.property, nlist))
+
+  /** Recall-calibrated nprobe for a declared vector index: the smallest
+    * probe count meeting `target` mean recall@10 on [[calibSample]].
+    * See VectorOps.calibrateNprobe for cost. Recall@10 is the serving
+    * quality bar; larger k only widens the probe set through the same
+    * gate.
+    */
+  def nprobe(k: Key, model: VectorOps.IvfModel, table: => DataFrame,
+      target: Double, calibN: Int): Int =
+    calibrated(k, table, "nprobeCalibration")(_.nprobe)((e, d) => e.nprobe = Some(d)) {
+      VectorOps.calibrateNprobe(table, k.spec.property, "_id", model, k = 10,
+        targetRecall = target, calibQueries = calibSample(table, calibN))
+    }
+
+  /** PQ codebooks + persisted encoded corpus for a declared vector
+    * index above the PQ serving threshold. The encoded frame is the
+    * query-time stand-in for the ingest-written code column a 100 TB
+    * deployment would store.
+    */
+  def pqArtifact(k: Key, m: Int, ks: Int,
+      table: => DataFrame): (VectorOps.PqModel, DataFrame) = {
+    val model = memo(k)(_.pq)((e, p) => e.pq = Some(p))(
+      VectorOps.trainPq(table, k.spec.property, m, ks))
+    val enc = memo(k)(_.pqEnc)((e, d) => e.pqEnc = Some(d)) {
+      val d = persisted(VectorOps.encodePq(table, k.spec.property, model))
+      d.count()
+      d
+    }
+    (model, enc)
+  }
+
+  /** Recall-calibrated ADC candidate depth (refine) per PQ artifact —
+    * the [[nprobe]] discipline applied to the second serving knob.
+    */
+  def pqRefine(k: Key, model: VectorOps.PqModel, encoded: DataFrame,
+      table: => DataFrame, target: Double, calibN: Int): Int =
+    calibrated(k, table, "pqRefineCalibration")(_.refine)((e, d) => e.refine = Some(d)) {
+      VectorOps.calibrateRefine(table, encoded, k.spec.property, "_id", model, k = 10,
+        targetRecall = target, calibQueries = calibSample(table, calibN))
+    }
+
+  /** Table row count — drives the brute-vs-IVF serving decision without
+    * re-counting per query (on parquet sources a metadata-only job).
+    */
+  def rowCount(k: Key, table: => DataFrame): Long =
+    memo(k)(_.rows)((e, n) => e.rows = Some(n))(table.count())
+
+  /** Pre-populate from durable artifacts (IndexArtifacts.load). */
+  def putText(k: Key, post: DataFrame, stats: DataFrame): Unit =
+    entry(k).text = Some((persisted(post), persisted(stats)))
+  def putIvf(k: Key, model: VectorOps.IvfModel): Unit = entry(k).ivf = Some(model)
+  def putPq(k: Key, model: VectorOps.PqModel): Unit = entry(k).pq = Some(model)
+
+  /** The label table a declared index summarises. */
+  private def tableOf(store: GraphStore, spec: IndexSpec.Artifact): Option[DataFrame] =
+    (if (spec.isEdges) store.edgeTables else store.nodeTables).get(spec.label)
+
+  /** Carry the entries of store `prev` to its successor `next`. The
+    * writer's commit and a replica's refresh both run it before `next`
+    * publishes, so no reader can be on `next` yet.
+    *  - An entry whose index is still declared and whose label table
+    *    kept reference identity moves whole: the stores are
+    *    copy-on-write, so its data is bit-identical.
+    *  - With `appendOnly` (the caller knows every changed table only
+    *    gained rows, as a replica's stream-only refresh does), an entry
+    *    on a changed table keeps its IVF centroids, PQ codebooks and
+    *    calibrated depths (new rows assign to the existing centroids and
+    *    encode against the codebooks — the IVF serving discipline; the
+    *    drift gate re-validates the depths) and merges its postings
+    *    exactly ([[appendText]]). Its row count and PQ encoding re-derive
+    *    on demand.
+    *  - Every other entry of `prev` is released.
+    */
+  def advance(prev: GraphStore, next: GraphStore, appendOnly: Boolean): Unit =
+    entries.forEach { (k, e) =>
+      if (k.version == prev.version) {
+        val to = k.copy(version = next.version)
+        val declared = next.indexes.contains(k.spec)
+        (tableOf(prev, k.spec), tableOf(next, k.spec)) match {
+          case (Some(b), Some(a)) if declared && (a eq b) =>
+            // keep-existing merge: if an equivalent entry is already
+            // there, keep it and release the moving one
+            if (to != k && entries.remove(k, e) && entries.putIfAbsent(to, e) != null)
+              e.release()
+          case (Some(b), Some(a)) if declared && appendOnly =>
+            val n = new Entry
+            n.text = e.text.flatMap(appendText(_, k.spec, b, a))
+            n.ivf = e.ivf; n.pq = e.pq; n.nprobe = e.nprobe; n.refine = e.refine
+            if (entries.putIfAbsent(to, n) != null) n.release()
+            if (entries.remove(k, e)) e.release()
+          case _ =>
+            if (entries.remove(k, e)) e.release()
+        }
+      }
+    }
+
+  /** The postings of `prev` merged with those of the rows `next` adds:
+    * the raw postings carry no idf — df/idf derive at query time — so
+    * `old postings ∪ postings(delta)` IS the exact new artifact, and
+    * corpus stats merge in closed form (N' = N + n_delta, avglen'
+    * re-weighted; per tenant when the index is tenant-partitioned).
+    * Cost is one pass over the DELTA plus a cached-artifact copy, not a
+    * full-corpus re-tokenize. The merged frames materialize eagerly,
+    * BEFORE the superseded artifact is unpersisted, so the copy reads
+    * the warm cache.
     *
-    * Returns false — leaving the next query to cold-build against the
-    * true table — when nothing is cached under `from`, or when the
-    * APPEND-ONLY INVARIANT fails its gate: |prev| + |delta| must equal
-    * |next| (a delete or re-keyed row disagrees). A same-`_id` rewrite
-    * of the indexed text passes the count gate but violates the
+    * None — leaving the next query to cold-build against the true table
+    * — when the APPEND-ONLY INVARIANT fails its gate: |prev| + |delta|
+    * must equal |next| (a delete or re-keyed row disagrees). A same-`_id`
+    * rewrite of the indexed text passes the count gate but violates the
     * documented append-only sink contract; set
     * `graft.index.verifyAppendContent=true` to also xor-hash
     * (`_id`, text) on both sides — one shuffle-free scan of the
     * standing corpus per refresh, so it is opt-in rather than the
     * steady-state default.
     */
-  def appendText(from: String, to: String, label: String, prop: String,
-      prev: DataFrame, next: DataFrame,
-      tenantCol: Option[String] = None): Boolean = {
-    val old = text.get((from, label, prop))
-    if (old == null) return false
+  private def appendText(old: (DataFrame, DataFrame), spec: IndexSpec.Artifact,
+      prev: DataFrame, next: DataFrame): Option[(DataFrame, DataFrame)] = {
     import org.apache.spark.sql.functions._
+    val (prop, tenantCol) = (spec.property, spec.tenantProperty)
     val delta = next.join(prev.select("_id"), Seq("_id"), "left_anti")
-    if (prev.count() + delta.count() != next.count()) return false
+    if (prev.count() + delta.count() != next.count()) return None
     if (prev.sparkSession.conf.getOption("graft.index.verifyAppendContent")
         .exists(_.toBoolean)) {
       def sig(df: DataFrame): Long = df
         .select(xxhash64(col("_id"), col(prop)).as("_h"))
         .agg(coalesce(expr("bit_xor(_h)"), lit(0L))).head().getLong(0)
-      if ((sig(prev) ^ sig(delta)) != sig(next)) return false
+      if ((sig(prev) ^ sig(delta)) != sig(next)) return None
     }
     val (dPost, dStats) = BM25.buildIndex(delta, prop, tenantCol)
-    val post = old._1.unionByName(dPost).persist(StorageLevel.MEMORY_AND_DISK)
+    val post = persisted(old._1.unionByName(dPost))
     val stats = {
       val merged = tenantCol match {
         case None =>
@@ -147,346 +313,24 @@ object IndexCache {
         when(n + dn === 0, lit(0.0))
           .otherwise((n * coalesce(col("_avglen"), lit(0.0)) +
             dn * coalesce(col("_davg"), lit(0.0))) / (n + dn)).as("_avglen"))
-      merged.select(outCols: _*).persist(StorageLevel.MEMORY_AND_DISK)
+      persisted(merged.select(outCols: _*))
     }
     post.count(); stats.count()
-    val prior = text.putIfAbsent((to, label, prop), (post, stats))
-    if (prior != null) { post.unpersist(false); stats.unpersist(false) }
-    true
+    Some((post, stats))
   }
 
-  /** Carry a vector index's centroids (and calibrated nprobe) forward
-    * across an append-only change: new rows assign to the EXISTING
-    * centroids — the standard IVF serving discipline (append-time
-    * assignment, periodic retrain). Recall degrades gracefully with
-    * drift; the next full rebuild re-trains and re-calibrates. The row
-    * count is deliberately NOT carried (it re-counts on demand, keeping
-    * the brute-vs-IVF threshold decision fresh). Tenant-partitioned
-    * artifacts live under `tenantKey(prop, tenant)` composites — they
-    * migrate too (each tenant's appended vectors assign to that
-    * tenant's existing centroids).
+  /** Release every entry built for a store version other than `current`
+    * and `alsoLive` — the post-write lifecycle hook.
     */
-  def migrateIvfAppend(from: String, to: String, label: String,
-      prop: String): Unit = {
-    val tenantPfx = s"$prop#tenant="
-    def matches(k: Key): Boolean = k._1 == from && k._2 == label &&
-      (k._3 == prop || k._3.startsWith(tenantPfx))
-    ivf.keySet.forEach { k =>
-      if (matches(k)) {
-        val m = ivf.get(k)
-        if (m != null) ivf.putIfAbsent((to, k._2, k._3), m)
-      }
+  def evictOthers(current: String, alsoLive: Set[String] = Set.empty): Unit =
+    entries.forEach { (k, e) =>
+      if (k.version != current && !alsoLive.contains(k.version) && entries.remove(k, e))
+        e.release()
     }
-    probes.keySet.forEach { k =>
-      if (matches(k)) {
-        val np = probes.get(k)
-        if (np != null) probes.putIfAbsent((to, k._2, k._3), np)
-      }
-    }
-    // PQ codebooks and calibrated depths carry forward (new rows encode
-    // against the existing codebooks); the encoded frame does NOT — it
-    // is stale the moment rows append, so the next query re-encodes by
-    // one scan (no re-training).
-    pqModels.keySet.forEach { k =>
-      if (matches(k)) {
-        val m = pqModels.get(k)
-        if (m != null) pqModels.putIfAbsent((to, k._2, k._3), m)
-      }
-    }
-    pqRefines.keySet.forEach { k =>
-      if (matches(k)) {
-        val r = pqRefines.get(k)
-        if (r != null) pqRefines.putIfAbsent((to, k._2, k._3), r)
-      }
-    }
-    // the calibration-time baselines ride along: the drift gate
-    // compares the NEW version's (freshly re-counted) rows against the
-    // count the depth was calibrated at, across any number of appends
-    Seq(nprobeBase, refineBase).foreach { m =>
-      m.keySet.forEach { k =>
-        if (matches(k)) {
-          val b = m.get(k)
-          if (b != null) m.putIfAbsent((to, k._2, k._3), b)
-        }
-      }
-    }
-  }
 
-  /** IVF centroids for a declared vector index. `prop` is the CACHE key
-    * (possibly a tenantKey composite); `vecCol` names the actual vector
-    * column to train on when the two differ.
-    */
-  def ivfModel(storeVersion: String, label: String, prop: String, nlist: Int,
-      table: => DataFrame, vecCol: String = null): VectorOps.IvfModel =
-    ivf.computeIfAbsent((storeVersion, label, prop), _ =>
-      VectorOps.trainIvf(table, Option(vecCol).getOrElse(prop), nlist))
+  /** Store versions that hold an entry (tests/diagnostics). */
+  private[graft] def versions: Set[String] = entries.keySet.asScala.map(_.version).toSet
 
-  /** Recall-calibrated nprobe for a declared vector index: the smallest
-    * probe count meeting `target` mean recall@10 on a deterministic
-    * calibration batch of `calibN` corpus vectors (hash-ordered pick —
-    * a uniform, reproducible sample). Computed once per artifact like
-    * the centroids themselves; see VectorOps.calibrateNprobe for cost.
-    * Recall@10 is the serving quality bar; larger k only widens the
-    * probe set through the same gate.
-    */
-  def nprobe(storeVersion: String, label: String, prop: String,
-      model: VectorOps.IvfModel, table: => DataFrame, vecCol: String,
-      target: Double, calibN: Int, idCol: String = "_id"): Int = {
-    val key = (storeVersion, label, prop)
-    def calibrate(t: DataFrame): Int = {
-      val calib = t.orderBy(
-        org.apache.spark.sql.functions.xxhash64(
-          org.apache.spark.sql.functions.col(idCol)),
-        org.apache.spark.sql.functions.col(idCol)).limit(calibN)
-      VectorOps.calibrateNprobe(t, vecCol, idCol, model, k = 10,
-        targetRecall = target, calibQueries = calib)
-    }
-    val cached = probes.get(key)
-    if (cached != null) {
-      // append-drift gate: a depth carried forward across appends
-      // re-validates once growth since ITS calibration exceeds the
-      // fraction; within the gate the cached depth serves as-is
-      val base = Option(nprobeBase.get(key)).map(_.longValue)
-      lazy val cur = rowCount(storeVersion, label, prop, table)
-      if (base.forall(b => cur <= b * (1 + DriftRecheckFraction))) {
-        if (base.isEmpty) nprobeBase.putIfAbsent(key, cur)
-        cached.intValue
-      } else {
-        val np = calibrate(table)
-        probes.put(key, np)
-        nprobeBase.put(key, cur)
-        np
-      }
-    } else {
-      val np = probes.computeIfAbsent(key, _ => {
-        graft.pipeline.Scratch.noteBuild("nprobeCalibration"); calibrate(table)
-      }).intValue
-      nprobeBase.putIfAbsent(key,
-        rowCount(storeVersion, label, prop, table))
-      np
-    }
-  }
-
-  /** PQ codebooks + persisted encoded corpus for a declared vector
-    * index above the PQ serving threshold. Trained/encoded once per
-    * (store version, label, propKey) like the IVF centroids; the
-    * encoded frame is the query-time stand-in for the ingest-written
-    * code column a 100 TB deployment would store.
-    */
-  def pqArtifact(storeVersion: String, label: String, prop: String,
-      m: Int, ks: Int, table: => DataFrame,
-      vecCol: String): (VectorOps.PqModel, DataFrame) = {
-    val key = (storeVersion, label, prop)
-    val model = pqModels.computeIfAbsent(key, _ =>
-      VectorOps.trainPq(table, vecCol, m, ks))
-    val enc = pqEnc.computeIfAbsent(key, _ => {
-      val e = VectorOps.encodePq(table, vecCol, model)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      e.count()
-      e
-    })
-    (model, enc)
-  }
-
-  /** Recall-calibrated ADC candidate depth (refine) per PQ artifact —
-    * the [[nprobe]] discipline applied to the second serving knob.
-    */
-  def pqRefine(storeVersion: String, label: String, prop: String,
-      model: VectorOps.PqModel, encoded: DataFrame, table: => DataFrame,
-      vecCol: String, target: Double, calibN: Int,
-      idCol: String = "_id"): Int = {
-    val key = (storeVersion, label, prop)
-    def calibrate(t: DataFrame): Int = {
-      val calib = t.orderBy(
-        org.apache.spark.sql.functions.xxhash64(
-          org.apache.spark.sql.functions.col(idCol)),
-        org.apache.spark.sql.functions.col(idCol)).limit(calibN)
-      VectorOps.calibrateRefine(t, encoded, vecCol, idCol, model, k = 10,
-        targetRecall = target, calibQueries = calib)
-    }
-    // the nprobe append-drift gate, applied to the second serving
-    // knob, with its own baseline map (same key, different knob)
-    val cached = pqRefines.get(key)
-    if (cached != null) {
-      val base = Option(refineBase.get(key)).map(_.longValue)
-      lazy val cur = rowCount(storeVersion, label, prop, table)
-      if (base.forall(b => cur <= b * (1 + DriftRecheckFraction))) {
-        if (base.isEmpty) refineBase.putIfAbsent(key, cur)
-        cached.intValue
-      } else {
-        val r = calibrate(table)
-        pqRefines.put(key, r)
-        refineBase.put(key, cur)
-        r
-      }
-    } else {
-      val r = pqRefines.computeIfAbsent(key, _ => {
-        graft.pipeline.Scratch.noteBuild("pqRefineCalibration"); calibrate(table)
-      }).intValue
-      refineBase.putIfAbsent(key,
-        rowCount(storeVersion, label, prop, table))
-      r
-    }
-  }
-
-  /** Pre-populate from durable artifacts (IndexArtifacts.load). */
-  def putText(storeVersion: String, label: String, prop: String,
-      post: DataFrame, stats: DataFrame): Unit = {
-    val p = post.persist(StorageLevel.MEMORY_AND_DISK)
-    val s = stats.persist(StorageLevel.MEMORY_AND_DISK)
-    text.put((storeVersion, label, prop), (p, s))
-  }
-  def putIvf(storeVersion: String, label: String, prop: String,
-      model: VectorOps.IvfModel): Unit =
-    ivf.put((storeVersion, label, prop), model)
-  def putPq(storeVersion: String, label: String, prop: String,
-      model: VectorOps.PqModel): Unit =
-    pqModels.put((storeVersion, label, prop), model)
-
-  /** Table row count, computed once per (store version, label, prop) —
-    * drives the brute-vs-IVF serving decision without re-counting per
-    * query (on parquet sources this is a metadata-only job anyway).
-    */
-  def rowCount(storeVersion: String, label: String, prop: String,
-      table: => DataFrame): Long =
-    counts.computeIfAbsent((storeVersion, label, prop), _ => table.count()).longValue()
-
-  /** [[migrate]] from store `prev` to its successor `next` over the
-    * labels whose node and edge frames kept reference identity; returns
-    * those labels. The writer's commit and a replica's refresh both run
-    * it before the new store publishes.
-    */
-  def migrateUnchanged(prev: graft.model.GraphStore, next: graft.model.GraphStore): Set[String] = {
-    val unchanged = (prev.nodeTables.keySet ++ prev.edgeTables.keySet).filter { l =>
-      prev.nodeTables.get(l).forall(df => next.nodeTables.get(l).exists(_ eq df)) &&
-        prev.edgeTables.get(l).forall(df => next.edgeTables.get(l).exists(_ eq df))
-    }
-    migrate(prev.version, next.version, unchanged)
-    unchanged
-  }
-
-  /** Re-key artifacts of UNCHANGED labels from a superseded store
-    * version to its successor. The stores are copy-on-write, so a label
-    * whose table kept reference identity across a write has bit-identical
-    * data — its postings/IVF/count artifacts stay valid. Called by the
-    * write path before `evictOthers`, this turns "any write evicts every
-    * artifact" into "a write evicts only the labels it touched" — at
-    * 100 TB an ingest stream into one table no longer forces rebuilds
-    * of every other table's indexes.
-    */
-  def migrate(from: String, to: String, unchangedLabels: Set[String]): Unit = {
-    if (from == to) return
-    text.keySet.forEach { k =>
-      if (k._1 == from && unchangedLabels.contains(k._2)) {
-        val v = text.remove(k)
-        // keep-existing merge: if a reader already serving `to` built an
-        // equivalent artifact concurrently, keep theirs and unpersist the
-        // migrating copy — never silently orphan persisted blocks
-        if (v != null && text.putIfAbsent((to, k._2, k._3), v) != null) {
-          v._1.unpersist(false); v._2.unpersist(false)
-        }
-      }
-    }
-    ivf.keySet.forEach { k =>
-      if (k._1 == from && unchangedLabels.contains(k._2)) {
-        val v = ivf.remove(k)
-        if (v != null) ivf.putIfAbsent((to, k._2, k._3), v)
-      }
-    }
-    counts.keySet.forEach { k =>
-      if (k._1 == from && unchangedLabels.contains(k._2)) {
-        val v = counts.remove(k)
-        if (v != null) counts.putIfAbsent((to, k._2, k._3), v)
-      }
-    }
-    probes.keySet.forEach { k =>
-      if (k._1 == from && unchangedLabels.contains(k._2)) {
-        val v = probes.remove(k)
-        if (v != null) probes.putIfAbsent((to, k._2, k._3), v)
-      }
-    }
-    pqModels.keySet.forEach { k =>
-      if (k._1 == from && unchangedLabels.contains(k._2)) {
-        val v = pqModels.remove(k)
-        if (v != null) pqModels.putIfAbsent((to, k._2, k._3), v)
-      }
-    }
-    pqEnc.keySet.forEach { k =>
-      if (k._1 == from && unchangedLabels.contains(k._2)) {
-        val v = pqEnc.remove(k)
-        if (v != null && pqEnc.putIfAbsent((to, k._2, k._3), v) != null)
-          v.unpersist(false)
-      }
-    }
-    pqRefines.keySet.forEach { k =>
-      if (k._1 == from && unchangedLabels.contains(k._2)) {
-        val v = pqRefines.remove(k)
-        if (v != null) pqRefines.putIfAbsent((to, k._2, k._3), v)
-      }
-    }
-    Seq(nprobeBase, refineBase).foreach { m =>
-      m.keySet.forEach { k =>
-        if (k._1 == from && unchangedLabels.contains(k._2)) {
-          val v = m.remove(k)
-          if (v != null) m.putIfAbsent((to, k._2, k._3), v)
-        }
-      }
-    }
-  }
-
-  /** Drop (and unpersist) every artifact built for a store version other
-    * than `current` — the post-write lifecycle hook.
-    */
-  def evictOthers(current: String, alsoLive: Set[String] = Set.empty): Unit = {
-    val keep = alsoLive + current
-    text.keySet.forEach { k =>
-      if (!keep.contains(k._1)) {
-        val v = text.remove(k)
-        if (v != null) { v._1.unpersist(false); v._2.unpersist(false) }
-      }
-    }
-    ivf.keySet.forEach { k => if (!keep.contains(k._1)) ivf.remove(k) }
-    counts.keySet.forEach { k => if (!keep.contains(k._1)) counts.remove(k) }
-    probes.keySet.forEach { k => if (!keep.contains(k._1)) probes.remove(k) }
-    pqModels.keySet.forEach { k => if (!keep.contains(k._1)) pqModels.remove(k) }
-    pqEnc.keySet.forEach { k =>
-      if (!keep.contains(k._1)) {
-        val v = pqEnc.remove(k)
-        if (v != null) v.unpersist(false)
-      }
-    }
-    pqRefines.keySet.forEach { k => if (!keep.contains(k._1)) pqRefines.remove(k) }
-    nprobeBase.keySet.forEach { k => if (!keep.contains(k._1)) nprobeBase.remove(k) }
-    refineBase.keySet.forEach { k => if (!keep.contains(k._1)) refineBase.remove(k) }
-  }
-
-  /** Evict ONE version's artifacts (a replica dropping its superseded
-    * view migrates unchanged labels forward first, then clears the
-    * remainder here — the replica-side mirror of the writer's
-    * migrate + evictOthers sequence).
-    */
-  def evictVersion(version: String): Unit = {
-    text.keySet.forEach { k =>
-      if (k._1 == version) {
-        val v = text.remove(k)
-        if (v != null) { v._1.unpersist(false); v._2.unpersist(false) }
-      }
-    }
-    ivf.keySet.forEach { k => if (k._1 == version) ivf.remove(k) }
-    counts.keySet.forEach { k => if (k._1 == version) counts.remove(k) }
-    probes.keySet.forEach { k => if (k._1 == version) probes.remove(k) }
-    pqModels.keySet.forEach { k => if (k._1 == version) pqModels.remove(k) }
-    pqEnc.keySet.forEach { k =>
-      if (k._1 == version) {
-        val v = pqEnc.remove(k)
-        if (v != null) v.unpersist(false)
-      }
-    }
-    pqRefines.keySet.forEach { k => if (k._1 == version) pqRefines.remove(k) }
-    nprobeBase.keySet.forEach { k => if (k._1 == version) nprobeBase.remove(k) }
-    refineBase.keySet.forEach { k => if (k._1 == version) refineBase.remove(k) }
-  }
-
-  /** Number of cached artifacts (for tests/diagnostics). */
-  def size: Int = text.size + ivf.size
+  /** Number of cached text postings plus IVF models (tests/diagnostics). */
+  def size: Int = entries.values.asScala.iterator.map(e => e.text.size + e.ivf.size).sum
 }

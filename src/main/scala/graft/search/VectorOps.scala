@@ -499,7 +499,7 @@ object VectorOps {
     }
 
   /** Calibrated probe counts per ad-hoc artifact + (k, target) —
-    * declared-index calibrations live in [[IndexCache.probes]].
+    * declared-index calibrations live in [[IndexCache]] entries.
     */
   private val ivfNprobeCache =
     new ArtifactCache[(String, String, Int, Int, Double), Integer](

@@ -39,11 +39,13 @@ import java.util.concurrent.atomic.AtomicLong
   * new store publishes via the volatile field, so every read sees
   * either the pre- or post-write store, never a torn one.
   *
-  * Single-live-store assumption: IndexCache.evictOthers after a write
-  * assumes this Gateway's store is the only live lineage in the JVM —
-  * a second Gateway instance sharing the process would have its cached
-  * artifacts evicted (forced rebuild on next query; a perf hazard, not
-  * a correctness one).
+  * Single-live-store assumption: after a write, IndexCache.advance
+  * carries the artifacts of indexes on untouched tables to the new
+  * store version, and IndexCache.evictOthers releases every version
+  * but the new one and the read replicas' (`liveVersions`). That
+  * assumes no other Gateway lineage shares the JVM: a second Gateway
+  * in the process would have its cached artifacts released (forced
+  * rebuild on next query; a perf hazard, not a correctness one).
   *
   * Transport: every accepted socket sets TCP_NODELAY, so a response
   * leaves as soon as it is written instead of waiting out the client's
@@ -266,12 +268,12 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
       // deterministic result) and never loses an acked write
       sink.render(out.results)
       walRoot.foreach(graft.model.GraphWal.logWrite(_, batch, params, out.idSeed))
-      // copy-on-write: untouched labels keep their index artifacts,
-      // migrated to the new version (only touched labels evict). Migrate
-      // BEFORE the new store publishes: no reader can be on the new
-      // version yet, so migrate's put can never clobber (and orphan) an
+      // copy-on-write: indexes on untouched tables keep their artifacts,
+      // carried to the new version (only touched ones are released).
+      // Carry BEFORE the new store publishes: no reader can be on the
+      // new version yet, so the carry can never clobber (and orphan) an
       // artifact a concurrent reader just built for it.
-      graft.search.IndexCache.migrateUnchanged(prev, out.store)
+      graft.search.IndexCache.advance(prev, out.store, appendOnly = false)
       store = out.store
       graft.search.IndexCache.evictOthers(store.version, liveVersions())
     } else sink.render(new BatchExecutor(store, params).execute(batch).results)

@@ -228,42 +228,23 @@ private[server] final class ReadReplica(spark: SparkSession, walRoot: String,
   /** Catch up to the log head; no-op (one manifest read) when nothing
     * new committed. Returns the acked position.
     *
-    * Artifact continuity mirrors the writer's write path: labels whose
-    * tables kept reference identity across the advance migrate their
-    * cached BM25/IVF artifacts to the new store version (incremental
-    * replay leaves untouched labels `eq`), then the superseded
-    * version's remainder evicts — a refresh only cold-starts the
-    * labels the replayed writes actually touched.
+    * Artifact continuity is the writer's carry step
+    * (IndexCache.advance): declared indexes on tables that kept
+    * reference identity across the advance (incremental replay leaves
+    * untouched labels `eq`) move to the new store version, and the
+    * superseded version's remainder is released. An unchanged position
+    * means no segment replayed, so only the stream overlays moved, and
+    * those are APPEND-ONLY: postings on the changed tables then merge
+    * with the appended rows' postings and IVF centroids carry forward
+    * instead of cold-starting.
     */
   def refresh(): Long = synchronized {
     val prev = st.served
     val next = GraphWal.advanceReplica(spark, walRoot, st)
     if (next ne st) {
       inFlight = Some(next.served.version)
-      val unchanged = graft.search.IndexCache.migrateUnchanged(prev, next.served)
-      // position unchanged means no segments replayed: only the stream
-      // overlays can have moved, and those are APPEND-ONLY — declared
-      // artifacts on the changed labels refresh incrementally (postings
-      // merge with the appended rows' postings; IVF centroids carry
-      // forward and new vectors assign to them) instead of cold-starting
-      if (next.position == st.position) {
-        import graft.ast.IndexSpec
-        val (from, to) = (prev.version, next.served.version)
-        next.served.indexes.foreach {
-          case IndexSpec.NodeText(l, p, t) if !unchanged.contains(l) =>
-            for (pt <- prev.nodeTables.get(l); nt <- next.served.nodeTables.get(l))
-              graft.search.IndexCache.appendText(from, to, l, p, pt, nt, t)
-          case IndexSpec.EdgeText(l, p, t) if !unchanged.contains(l) =>
-            for (pt <- prev.edgeTables.get(l); nt <- next.served.edgeTables.get(l))
-              graft.search.IndexCache.appendText(from, to, l, p, pt, nt, t)
-          case IndexSpec.NodeVector(l, p, _) if !unchanged.contains(l) =>
-            graft.search.IndexCache.migrateIvfAppend(from, to, l, p)
-          case IndexSpec.EdgeVector(l, p, _) if !unchanged.contains(l) =>
-            graft.search.IndexCache.migrateIvfAppend(from, to, l, p)
-          case _ =>
-        }
-      }
-      graft.search.IndexCache.evictVersion(prev.version)
+      graft.search.IndexCache.advance(prev, next.served,
+        appendOnly = next.position == st.position)
       // store BEFORE position: a concurrent stale read that observes the
       // new position must find the new store behind it (the store may
       // lead the advertised position, never lag it — publishing st

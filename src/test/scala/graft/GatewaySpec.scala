@@ -456,10 +456,11 @@ class GatewaySpec extends GraftSuite {
   }
 
   test("write batches keep index artifacts of untouched labels") {
-    val gw = new Gateway(TestBase.parityGraph())
+    import graft.search.IndexCache
+    val bio = graft.ast.IndexSpec.NodeText("ParityUser", "bio", None)
+    val gw = new Gateway(TestBase.parityGraph().withIndexes(Set(bio)))
     val v0 = gw.currentStore.version
-    graft.search.IndexCache.textIndex(v0, "ParityUser", "bio",
-      gw.currentStore.nodesFor("ParityUser"))
+    IndexCache.textIndex(IndexCache.Key(v0, bio), gw.currentStore.nodesFor("ParityUser"))
     // a write that only creates a NEW label leaves ParityUser untouched
     gw.handle(
       """{"request_type":"write","query":{"queries":[{"Query":{"name":"c",
@@ -470,7 +471,7 @@ class GatewaySpec extends GraftSuite {
     assert(v1 != v0)
     // migrated artifact serves under the new version — the rebuild
     // thunk must never run
-    graft.search.IndexCache.textIndex(v1, "ParityUser", "bio",
+    IndexCache.textIndex(IndexCache.Key(v1, bio),
       throw new RuntimeException("artifact rebuilt despite untouched label"))
     // a write that DOES touch ParityUser evicts its artifact
     gw.handle(
@@ -479,7 +480,7 @@ class GatewaySpec extends GraftSuite {
         ["name",{"Value":{"String":"Eve"}}]]}}],"condition":null}}],
         "returns":["c"]},"parameters":{}}""")
     var rebuilt = false
-    graft.search.IndexCache.textIndex(gw.currentStore.version, "ParityUser", "bio",
+    IndexCache.textIndex(IndexCache.Key(gw.currentStore.version, bio),
       { rebuilt = true; gw.currentStore.nodesFor("ParityUser") })
     assert(rebuilt, "touched label's artifact must rebuild")
   }

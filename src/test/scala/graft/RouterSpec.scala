@@ -94,17 +94,20 @@ class RouterSpec extends GraftSuite {
 
   test("writer writes spare reader artifacts; refresh migrates untouched labels") {
     import graft.search.IndexCache
-    val router = new Router(spark, walRoot(), numReaders = 1)
+    val name = graft.ast.IndexSpec.NodeText("ParityUser", "name", None)
+    val dir = java.nio.file.Files.createTempDirectory("grouter").toString
+    GraphWal.checkpoint(TestBase.parityGraph().withIndexes(Set(name)), dir)
+    val router = new Router(spark, dir, numReaders = 1)
     val rv0 = router.readerVersions.head
     val users = TestBase.parityGraph().nodesFor("ParityUser")
-    val (p1, _) = IndexCache.textIndex(rv0, "ParityUser", "name", users)
+    val (p1, _) = IndexCache.textIndex(IndexCache.Key(rv0, name), users)
     // a write to a DIFFERENT label must not cold-start the reader's
     // ParityUser artifact (writer eviction spares live reader versions)
     router.route("",
       """{"request_type":"write","query":{"queries":[{"Query":{"name":"c",
         "steps":[{"AddN":{"label":"Other","properties":[]}}],"condition":null}}],
         "returns":["c"]},"parameters":{}}""", noHdr)
-    val (p2, _) = IndexCache.textIndex(rv0, "ParityUser", "name",
+    val (p2, _) = IndexCache.textIndex(IndexCache.Key(rv0, name),
       sys.error("artifact was evicted"): org.apache.spark.sql.DataFrame)
     assert(p2 eq p1)
     // refresh replays the write; ParityUser kept reference identity, so
@@ -112,7 +115,7 @@ class RouterSpec extends GraftSuite {
     router.route("", countUsers, noHdr)
     val rv1 = router.readerVersions.head
     assert(rv1 != rv0)
-    val (p3, _) = IndexCache.textIndex(rv1, "ParityUser", "name",
+    val (p3, _) = IndexCache.textIndex(IndexCache.Key(rv1, name),
       sys.error("artifact was not migrated"): org.apache.spark.sql.DataFrame)
     assert(p3 eq p1)
   }

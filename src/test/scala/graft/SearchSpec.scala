@@ -928,10 +928,9 @@ class SearchSpec extends GraftSuite {
       // and the calibrations are genuinely per-tenant: the skewed
       // tenant's nprobe is strictly higher than the clustered one's
       import graft.search.IndexCache
-      val npC = IndexCache.calibratedNprobe(store.version, "Vec",
-        IndexCache.tenantKey("emb", "tc"))
-      val npS = IndexCache.calibratedNprobe(store.version, "Vec",
-        IndexCache.tenantKey("emb", "ts"))
+      val spec = IndexSpec.NodeVector("Vec", "emb", Some("tenantId"))
+      val npC = IndexCache.calibratedNprobe(IndexCache.Key(store.version, spec, Some("tc")))
+      val npS = IndexCache.calibratedNprobe(IndexCache.Key(store.version, spec, Some("ts")))
       assert(npC.isDefined && npS.isDefined, s"calibrations missing: $npC $npS")
       assert(npS.get > npC.get,
         s"skewed tenant must calibrate past the clustered one: $npS vs $npC")
@@ -1179,31 +1178,41 @@ class SearchSpec extends GraftSuite {
     import s.implicits._
     // distinct plans per version (as real mutated stores have): Spark's
     // cache manager is plan-keyed, so identical plans would share storage
+    import graft.search.IndexCache
     val docs = Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("_id", "text")
-    graft.search.IndexCache.textIndex("v-old-test", "D", "text", docs.where("_id <= 2"))
-    graft.search.IndexCache.textIndex("v-new-test", "D", "text", docs)
-    graft.search.IndexCache.evictOthers("v-new-test")
+    val spec = graft.ast.IndexSpec.NodeText("D", "text")
+    IndexCache.textIndex(IndexCache.Key("v-old-test", spec), docs.where("_id <= 2"))
+    IndexCache.textIndex(IndexCache.Key("v-new-test", spec), docs)
+    IndexCache.evictOthers("v-new-test")
     // old version's artifact gone; current one still served from cache
-    val (p1, _) = graft.search.IndexCache.textIndex("v-new-test", "D", "text",
+    val (p1, _) = IndexCache.textIndex(IndexCache.Key("v-new-test", spec),
       sys.error("must be cached"): org.apache.spark.sql.DataFrame)
     assert(p1.storageLevel.useMemory || p1.storageLevel.useDisk)
-    graft.search.IndexCache.evictOthers("none")
+    IndexCache.evictOthers("none")
   }
 
-  test("migrateIvfAppend carries tenant-partitioned models and probes forward") {
+  test("an append carries tenant-partitioned models and probes forward") {
+    import graft.ast.IndexSpec
     import graft.search.{IndexCache, VectorOps}
+    val s = spark
+    import s.implicits._
     val model = VectorOps.IvfModel(Array(Array(1.0, 0.0)))
-    IndexCache.putIvf("v-mig-a", "L", "emb", model)
-    IndexCache.putIvf("v-mig-a", "L", IndexCache.tenantKey("emb", "t1"), model)
-    IndexCache.putIvf("v-mig-a", "L", "other", model) // different prop: stays
-    IndexCache.migrateIvfAppend("v-mig-a", "v-mig-b", "L", "emb")
-    // bare + tenant-composite keys both present under the new version
-    assert(IndexCache.ivfModel("v-mig-b", "L", "emb", 1,
+    val bare = IndexSpec.NodeVector("L", "emb")
+    val tenanted = IndexSpec.NodeVector("L", "emb", Some("tenantId"))
+    def rows(n: Int) = (1 to n).map(i => (i.toLong, "L", "t1", Seq(1.0, 0.0)))
+      .toDF("_id", "_label", "tenantId", "emb")
+    val a = new graft.model.GraphStore(s, Map("L" -> rows(1)), Map.empty, Map.empty)
+      .withIndexes(Set(bare, tenanted))
+    val b = a.withNodes("L", rows(2))
+    IndexCache.putIvf(IndexCache.Key(a.version, bare), model)
+    IndexCache.putIvf(IndexCache.Key(a.version, tenanted, Some("t1")), model)
+    IndexCache.advance(a, b, appendOnly = true)
+    // the bare and the per-tenant models both serve under the new version
+    assert(IndexCache.ivfModel(IndexCache.Key(b.version, bare), 1,
       sys.error("must be cached"): org.apache.spark.sql.DataFrame) eq model)
-    assert(IndexCache.ivfModel("v-mig-b", "L", IndexCache.tenantKey("emb", "t1"), 1,
+    assert(IndexCache.ivfModel(IndexCache.Key(b.version, tenanted, Some("t1")), 1,
       sys.error("must be cached"): org.apache.spark.sql.DataFrame) eq model)
-    IndexCache.evictVersion("v-mig-a")
-    IndexCache.evictVersion("v-mig-b")
+    IndexCache.evictOthers("none")
   }
 
   test("tenant-partitioned text index serves tenant queries exactly") {
@@ -1254,8 +1263,9 @@ class SearchSpec extends GraftSuite {
       // the served model must be the PRE-POPULATED one: equal to a
       // deterministic fresh train, with no rebuild cost hidden here
       val (served, _) = graft.search.IndexCache.pqArtifact(
-        loaded.version, "Vec", "emb", m = 4, ks = 256,
-        loaded.nodesFor("Vec"), vecCol = "emb")
+        graft.search.IndexCache.Key(loaded.version,
+          graft.ast.IndexSpec.NodeVector("Vec", "emb", None)),
+        m = 4, ks = 256, loaded.nodesFor("Vec"))
       val fresh = VectorOps.trainPq(nodes, "emb", m = 4)
       assert(served.m == fresh.m && served.subDim == fresh.subDim)
       (0 until fresh.m).foreach { sI =>
@@ -1345,9 +1355,11 @@ class SearchSpec extends GraftSuite {
     // v1: 400 clustered vectors — calibration lands a small nprobe
     val clustered = vecs(400, 16).cache()
     val model = VectorOps.trainIvf(clustered, "emb", nlist = 16, iters = 2)
-    val v1 = "drift-v1-" + java.util.UUID.randomUUID()
-    val np1 = IndexCache.nprobe(v1, "Vec", "emb", model, clustered, "emb",
-      target = 0.95, calibN = 48)
+    val spec = graft.ast.IndexSpec.NodeVector("Vec", "emb")
+    val v1 = new graft.model.GraphStore(s, Map("Vec" -> clustered), Map.empty, Map.empty)
+      .withIndexes(Set(spec))
+    def key(st: graft.model.GraphStore) = IndexCache.Key(st.version, spec)
+    val np1 = IndexCache.nprobe(key(v1), model, clustered, target = 0.95, calibN = 48)
     assert(np1 <= 8, s"clustered corpus calibrated to nprobe=$np1")
     // a SKEWED append: +400 structureless vectors (100% growth, far
     // past the 20% drift gate) whose cosine neighborhoods the carried
@@ -1355,15 +1367,14 @@ class SearchSpec extends GraftSuite {
     val appended = clustered.unionAll(
       uniformVecs(400, 16).select((col("_id") + 1000).as("_id"), col("emb")))
       .cache()
-    val v2 = "drift-v2-" + java.util.UUID.randomUUID()
-    IndexCache.migrateIvfAppend(v1, v2, "Vec", "emb")
-    assert(IndexCache.calibratedNprobe(v2, "Vec", "emb").contains(np1),
+    val v2 = v1.withNodes("Vec", appended)
+    IndexCache.advance(v1, v2, appendOnly = true)
+    assert(IndexCache.calibratedNprobe(key(v2)).contains(np1),
       "append must carry the calibrated depth forward")
-    val np2 = IndexCache.nprobe(v2, "Vec", "emb", model, appended, "emb",
-      target = 0.95, calibN = 48)
+    val np2 = IndexCache.nprobe(key(v2), model, appended, target = 0.95, calibN = 48)
     assert(np2 > np1,
       s"drift gate must recalibrate past the stale depth: $np2 vs $np1")
-    assert(IndexCache.calibratedNprobe(v2, "Vec", "emb").contains(np2))
+    assert(IndexCache.calibratedNprobe(key(v2)).contains(np2))
     // the gate HOLDS: heldout queries from the appended (skewed) half
     // meet the recall bar at the recalibrated depth — and provably
     // would not have at the stale one
@@ -1383,12 +1394,11 @@ class SearchSpec extends GraftSuite {
       s"fixture must make the stale depth lossy: $stale vs $fresh")
     // a below-gate append (+10%) serves the cached depth — no
     // recalibration job in steady state
-    val v3 = "drift-v3-" + java.util.UUID.randomUUID()
-    IndexCache.migrateIvfAppend(v2, v3, "Vec", "emb")
     val small = appended.unionAll(
       uniformVecs(80, 16).select((col("_id") + 5000).as("_id"), col("emb")))
-    val np3 = IndexCache.nprobe(v3, "Vec", "emb", model, small, "emb",
-      target = 0.95, calibN = 48)
+    val v3 = v2.withNodes("Vec", small)
+    IndexCache.advance(v2, v3, appendOnly = true)
+    val np3 = IndexCache.nprobe(key(v3), model, small, target = 0.95, calibN = 48)
     assert(np3 == np2, s"below-gate append must serve the cached depth: $np3")
     clustered.unpersist(); appended.unpersist()
   }
@@ -2436,16 +2446,23 @@ class SearchSpec extends GraftSuite {
         stats: org.apache.spark.sql.DataFrame, q: String) =
       BM25.scoreFromIndex(post, stats, q).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    IndexCache.textIndex("vap-0", "D", "text", a)
+    val spec = graft.ast.IndexSpec.NodeText("D", "text")
+    val vap0 = new graft.model.GraphStore(s, Map("D" -> a), Map.empty, Map.empty)
+      .withIndexes(Set(spec))
+    def key(st: graft.model.GraphStore) = IndexCache.Key(st.version, spec)
+    def merged(st: graft.model.GraphStore) =
+      IndexCache.textIndex(key(st), sys.error("must be cached"): org.apache.spark.sql.DataFrame)
+    IndexCache.textIndex(key(vap0), a)
     val builds0 = IndexCache.textBuilds.get()
     val u1 = a.unionByName(d1)
-    assert(IndexCache.appendText("vap-0", "vap-1", "D", "text", a, u1),
-      "first append must take the merge path")
+    val vap1 = vap0.withNodes("D", u1)
+    IndexCache.advance(vap0, vap1, appendOnly = true)
+    assert(scala.util.Try(merged(vap1)).isSuccess, "first append must take the merge path")
     val u2 = u1.unionByName(d2)
-    assert(IndexCache.appendText("vap-1", "vap-2", "D", "text", u1, u2),
-      "second append must take the merge path")
-    val (pApp, sApp) = IndexCache.textIndex("vap-2", "D", "text",
-      sys.error("must be cached"): org.apache.spark.sql.DataFrame)
+    val vap2 = vap1.withNodes("D", u2)
+    IndexCache.advance(vap1, vap2, appendOnly = true)
+    assert(scala.util.Try(merged(vap2)).isSuccess, "second append must take the merge path")
+    val (pApp, sApp) = merged(vap2)
     // the whole chain cost one delta-build per append, zero rebuilds
     // of the standing corpus through textIndex
     assert(IndexCache.textBuilds.get() == builds0,
@@ -2464,8 +2481,6 @@ class SearchSpec extends GraftSuite {
         s"appended artifact must serve the rebuild's exact scores " +
           s"for '$q': $gotApp vs $gotCold")
     }
-    IndexCache.evictVersion("vap-0")
-    IndexCache.evictVersion("vap-1")
-    IndexCache.evictVersion("vap-2")
+    IndexCache.evictOthers("none")
   }
 }
