@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":...,"queries":{...}}.
@@ -109,22 +108,7 @@ object Bench {
     // 32-thread load and systematically reads high — r9's committed
     // artifact was judged "taken under load" partly on that basis
     val loadStart = lv
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // count(*) on raw parquet resolves from footers, not a scan
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      // let AQE coalesce stages DOWNSTREAM of persisted frames (the
-      // dedup pipelines cache signature/candidate frames): without it
-      // every post-cache shuffle keeps the static partition count even
-      // when the data is tiny — at scale this is the knob that lets
-      // runtime stats, not a static number, size each exchange
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
     // local-iteration knob passthrough (e.g. graft.suffix.maxSliceTokens):
     // SPARK_GRAFT_CONF="k=v,k2=v2" (split on first '=' per token; a
     // static/non-runtime conf warns instead of aborting the whole run)

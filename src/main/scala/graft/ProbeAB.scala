@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import graft.pipeline.Multimodal
 
 /** Intra-JVM A/B measurement harness: times an old formulation against
@@ -37,16 +37,7 @@ object ProbeAB {
     val nameArgs = args.drop(repsArg.size).toSet
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
 
     def docsDf = spark.read.parquet(s"$d/documents.parquet")
 
@@ -57,35 +48,8 @@ object ProbeAB {
       Multimodal.mediaFromIdsCached(docsDf.select("doc_id"), "doc_id",
         only = Some("audio")), n = 3, num = 6, den = 10)
 
-    // hops whose near step became a semi join: old = the same plan with
-    // each `edges ⋉ frontier` put back as the inner join
-    // `frontier ⋈ edges` it replaced
-    def innerHops(df: DataFrame): DataFrame = {
-      import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
-      import org.apache.spark.sql.catalyst.plans.logical.{Join, Project}
-      val plan = df.queryExecution.analyzed.transformUp {
-        case Join(edges, frontier, LeftSemi, cond, hint) =>
-          Project(edges.output, Join(frontier, edges, Inner, cond, hint))
-      }
-      new org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row](
-        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan,
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(df.schema))
-    }
-    val hops = Seq("q_choose", "q_choose_else", "q_in", "q_nav_agg", "q_out_count").map { q =>
-      def df = SparkEntry.queries(q)(spark, d)
-      (q, () => innerHops(df), () => df)
-    }
-    // every Customer through a filter that keeps all of them: a
-    // label-sized frontier the compiler does not know is a whole label
-    def everyCustomerHop: DataFrame = {
-      import graft.dsl.Dsl._
-      new graft.exec.Compiler(graft.model.TestGraph(spark, d)).run(g()
-        .nWithLabelWhere("Customer", gt("c_acctbal", -1e9)).out("PLACED").values("o_orderkey").t)
-    }
-
     val allPairs: Seq[(String, () => DataFrame, () => DataFrame)] = Seq(
-      ("audio_shingle_band", () => audioShingle, () => audioShingle),
-      ("hop_every_customer", () => innerHops(everyCustomerHop), () => everyCustomerHop)) ++ hops
+      ("audio_shingle_band", () => audioShingle, () => audioShingle))
 
     val pairs =
       if (nameArgs.isEmpty) allPairs else allPairs.filter(p => nameArgs.contains(p._1))

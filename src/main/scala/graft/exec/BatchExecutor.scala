@@ -31,7 +31,11 @@ class BatchExecutor(initialStore: GraphStore,
       /** First id-allocation seed the batch used (None: allocated no
         * ids) — logged into the WAL segment for deterministic replay.
         */
-      idSeed: Option[Long])
+      idSeed: Option[Long],
+      /** Whether a build read a parameter or ran a loop on the driver
+        * ([[Compiler.readsOnDriver]]; every `ForEach` does).
+        */
+      readsOnDriver: Boolean)
 
   def execute(batch: Batch): Result = {
     val vars = mutable.Map.empty[String, Stream]
@@ -44,6 +48,7 @@ class BatchExecutor(initialStore: GraphStore,
     val streamProbes = new java.util.IdentityHashMap[Stream, Probe]()
     var store = initialStore
     var prev = new Probe(true)
+    var driverReads = false
 
     def probeOf(s: Stream): Probe =
       streamProbes.computeIfAbsent(s, s => new Probe(!s.df.isEmpty))
@@ -78,8 +83,10 @@ class BatchExecutor(initialStore: GraphStore,
             }
             probes += prev
             store = comp.store
+            driverReads ||= comp.readsOnDriver
           }
         case BatchEntry.ForEach(param, body) =>
+          driverReads = true
           // one execution of the body per object element of the array
           // param, with that object's fields visible as params
           // (dsl.rs:4458-4468, parity fixtures 012/013)
@@ -204,7 +211,7 @@ class BatchExecutor(initialStore: GraphStore,
     // fails the batch
     val rendered = returned.values.map(_._2).toSet
     probes.foreach(p => if (!rendered(p)) p.nonEmpty)
-    Result(returned.map { case (n, (df, _)) => n -> df }, store, seedCtl.firstSeed)
+    Result(returned.map { case (n, (df, _)) => n -> df }, store, seedCtl.firstSeed, driverReads)
   }
 
   /** Whether one executed entry's frame has rows: run on first read, at

@@ -36,6 +36,25 @@ final case class Stream(df: DataFrame, isEdges: Boolean, labels: Option[Set[Stri
 class TraversalException(msg: String) extends RuntimeException(msg)
 
 object Compiler {
+  import PropertyValue._
+
+  /** A scalar request value as the Scala value `lit` takes; None for a
+    * null, an array or an object, which are no single literal.
+    */
+  def scalarOf(v: PropertyValue): Option[Any] = v match {
+    case VBool(b) => Some(b)
+    case VI64(i) => Some(i)
+    case VF64(d) => Some(d)
+    case VF32(f) => Some(f)
+    case VString(s) => Some(s)
+    // epoch-ms UTC -> NTZ wall-clock literal (session tz pinned to UTC;
+    // the testdata's timestamps read as TIMESTAMP_NTZ)
+    case VDateTime(ms) => Some(java.time.LocalDateTime.ofInstant(
+      java.time.Instant.ofEpochMilli(ms), java.time.ZoneOffset.UTC))
+    case VBytes(b) => Some(b)
+    case _ => None
+  }
+
   /** AddE id allocation: new-edge rows hash into `AddEBands` bands, each
     * band numbering up to `AddEBandCap` edges with its own window; one
     * AddE call reserves Bands*Cap ids arithmetically — no global-window
@@ -112,6 +131,20 @@ class Compiler(
 
   private val spark = store.spark
 
+  /** Whether the build read a request parameter other than as a slotted
+    * literal ([[valueToLit]] of an `Expr.Param`), or resolved an input
+    * or ran a loop on the driver: an id source's label pruning, a
+    * bound, a search's vector, terms or tenant, a `Repeat`. Such a plan
+    * depends on its request beyond its literals' values, so no other
+    * request may rebind it. Search inputs count even when constant: the
+    * plan then holds index artifacts that live as long as their cache
+    * entry, not as long as the store snapshot.
+    */
+  private var driverReads = false
+  def readsOnDriver: Boolean = driverReads
+
+  private def param(n: String): Option[PropertyValue] = { driverReads = true; params.get(n) }
+
   // ---------------------------------------------------------------- values
 
   /** Raw string form of a scalar value — stable cache/artifact keys
@@ -131,28 +164,26 @@ class Compiler(
 
   /** A value as a plan literal. Scalars are [[ParamLiteral]]s, so the
     * code Spark generates for the plan holds none of them and one plan
-    * shape compiles once for every request value.
+    * shape compiles once for every request value. `slot` names the
+    * parameter the value came from; a parameter whose value is no
+    * scalar becomes part of the plan, a driver read.
     */
-  def valueToLit(v: PropertyValue): Column = v match {
-    case VNull => lit(null)
-    case VBool(b) => ParamLiteral(b)
-    case VI64(i) => ParamLiteral(i)
-    case VF64(d) => ParamLiteral(d)
-    case VF32(f) => ParamLiteral(f)
-    case VString(s) => ParamLiteral(s)
-    // epoch-ms UTC -> NTZ wall-clock literal (session tz pinned to UTC;
-    // the testdata's timestamps read as TIMESTAMP_NTZ)
-    case VDateTime(ms) => ParamLiteral(java.time.LocalDateTime.ofInstant(
-      java.time.Instant.ofEpochMilli(ms), java.time.ZoneOffset.UTC))
-    case VBytes(b) => ParamLiteral(b)
-    case VI64Array(a) => array(a.map(lit): _*)
-    case VF64Array(a) => array(a.map(lit): _*)
-    case VF32Array(a) => array(a.map(lit): _*)
-    case VStringArray(a) => array(a.map(lit): _*)
-    case VArray(a) => array(a.map(valueToLit): _*)
-    case VObject(m) =>
-      map(m.toSeq.sortBy(_._1).flatMap { case (k, x) => Seq(lit(k), valueToLit(x)) }: _*)
-  }
+  def valueToLit(v: PropertyValue, slot: Option[String] = None): Column =
+    Compiler.scalarOf(v) match {
+      case Some(x) => ParamLiteral(x, slot)
+      case None =>
+        if (slot.isDefined) driverReads = true
+        v match {
+          case VI64Array(a) => array(a.map(lit): _*)
+          case VF64Array(a) => array(a.map(lit): _*)
+          case VF32Array(a) => array(a.map(lit): _*)
+          case VStringArray(a) => array(a.map(lit): _*)
+          case VArray(a) => array(a.map(valueToLit(_)): _*)
+          case VObject(m) =>
+            map(m.toSeq.sortBy(_._1).flatMap { case (k, x) => Seq(lit(k), valueToLit(x)) }: _*)
+          case _ => lit(null)
+        }
+    }
 
   /** Resolve a property name against the current stream. `$id`/`$label`
     * virtual fields (dsl.rs:2948-2951); dot-paths reach into struct
@@ -180,12 +211,15 @@ class Compiler(
   /** Resolve a PropertyInput to a literal PropertyValue (for inputs that
     * must be known at plan time: query vectors, tenants, bounds).
     */
-  def resolveInputValue(in: PropertyInput): PropertyValue = in match {
-    case PropertyInput.Value(v) => v
-    case PropertyInput.FromExpr(Expr.Constant(v)) => v
-    case PropertyInput.FromExpr(Expr.Param(n)) =>
-      params.getOrElse(n, throw new TraversalException(s"missing param: $n"))
-    case other => throw new TraversalException(s"input not resolvable at plan time: $other")
+  def resolveInputValue(in: PropertyInput): PropertyValue = {
+    driverReads = true
+    in match {
+      case PropertyInput.Value(v) => v
+      case PropertyInput.FromExpr(Expr.Constant(v)) => v
+      case PropertyInput.FromExpr(Expr.Param(n)) =>
+        param(n).getOrElse(throw new TraversalException(s"missing param: $n"))
+      case other => throw new TraversalException(s"input not resolvable at plan time: $other")
+    }
   }
 
   private def asDoubles(v: PropertyValue): Seq[Double] = v match {
@@ -232,7 +266,7 @@ class Compiler(
     case Expr.DateTimeNow => current_timestamp()
     case Expr.Constant(v) => valueToLit(v)
     case Expr.Param(n) =>
-      valueToLit(params.getOrElse(n, throw new TraversalException(s"missing param: $n")))
+      valueToLit(params.getOrElse(n, throw new TraversalException(s"missing param: $n")), Some(n))
     case Expr.Add(l, r) => compileExpr(df, l) + compileExpr(df, r)
     case Expr.Sub(l, r) => compileExpr(df, l) - compileExpr(df, r)
     case Expr.Mul(l, r) => compileExpr(df, l) * compileExpr(df, r)
@@ -277,7 +311,7 @@ class Compiler(
         // single In predicate (not an ===-OR chain): a 10k-element list
         // stays one pushdown-friendly node instead of a 10k-deep tree
         if (vs.isEmpty) lit(false)
-        else r(n).isin(vs.map(valueToLit): _*)
+        else r(n).isin(vs.map(valueToLit(_)): _*)
       case IsInExpr(n, e) => array_contains(compileExpr(df, e), r(n))
       case And(ps) => ps.map(compilePred(df, _)).reduce(_ && _)
       case Or(ps) => ps.map(compilePred(df, _)).reduce(_ || _)
@@ -529,7 +563,7 @@ class Compiler(
     case NodeRef.Id(i) => idSource(Seq(i), isEdges = false)
     case NodeRef.Ids(is) => idSource(is, isEdges = false)
     case NodeRef.Var(n) => lookupVar(env, n)
-    case NodeRef.Param(n) => params.get(n) match {
+    case NodeRef.Param(n) => param(n) match {
       case Some(VI64(i)) => sourceNodes(NodeRef.Id(i), env)
       case Some(VI64Array(is)) => sourceNodes(NodeRef.Ids(is), env)
       case other => throw new TraversalException(s"bad node param $n: $other")
@@ -542,7 +576,7 @@ class Compiler(
     case EdgeRef.Id(i) => idSource(Seq(i), isEdges = true)
     case EdgeRef.Ids(is) => idSource(is, isEdges = true)
     case EdgeRef.Var(n) => lookupVar(env, n)
-    case EdgeRef.Param(n) => params.get(n) match {
+    case EdgeRef.Param(n) => param(n) match {
       case Some(VI64(i)) => sourceEdges(EdgeRef.Id(i), env)
       case Some(VI64Array(is)) => sourceEdges(EdgeRef.Ids(is), env)
       case other => throw new TraversalException(s"bad edge param $n: $other")
@@ -921,7 +955,7 @@ class Compiler(
         case PropertyInput.Value(v) => v
         case PropertyInput.FromExpr(Expr.Constant(v)) => v
         case PropertyInput.FromExpr(Expr.Param(n)) =>
-          fields.getOrElse(n, params.getOrElse(n, VNull))
+          fields.getOrElse(n, param(n).getOrElse(VNull))
         case other => throw new UnsupportedBulkType(s"expr not bulk-resolvable: $other")
       }
     def typeOf(v: PropertyValue): DataType = v match {
@@ -1293,7 +1327,7 @@ class Compiler(
 
   private def resolveBound(e: Expr): Int = e match {
     case Expr.Constant(VI64(n)) => n.toInt
-    case Expr.Param(n) => params.get(n) match {
+    case Expr.Param(n) => param(n) match {
       case Some(VI64(v)) => v.toInt
       case other => throw new TraversalException(s"bad bound param $n: $other")
     }
@@ -1371,6 +1405,7 @@ class Compiler(
     */
   private def repeat(start: Stream, cfg: RepeatConfig,
       env: mutable.Map[String, Stream], tailPropsFree: Boolean = false): Stream = {
+    driverReads = true // the loop probes and materializes this request's frontiers
     // Bounded emit accumulation: one stream is emitted per depth, and a
     // flat union of maxDepth branches (100+ on deep repeats) makes the
     // final plan — and every analysis pass over it — O(depth). Fold the

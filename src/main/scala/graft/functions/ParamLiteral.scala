@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpression}
 import org.apache.spark.sql.catalyst.expressions.{Cast, InSet, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.DataType
@@ -18,8 +19,17 @@ import scala.collection.immutable.HashSet
   * plan shape shares one compiled class. It is still a `Literal` to
   * every rule that matches one: constant folding, `OptimizeIn`, and
   * the `Literal(v, t)` patterns that push filters into a data source.
+  *
+  * `slot` names the request parameter the value came from (None for a
+  * constant of the query), so a prepared plan takes another request's
+  * values by [[ParamLiteral.rebind]]. A rule that folds the literal
+  * into a plain `Literal` drops the slot; [[ParamLiteral.slotCounts]]
+  * shows that.
   */
-final class ParamLiteral(value: Any, dataType: DataType) extends Literal(value, dataType) {
+final class ParamLiteral(value: Any, dataType: DataType, val slot: Option[String])
+    extends Literal(value, dataType) {
+  override protected def otherCopyArgs: Seq[AnyRef] = slot :: Nil
+
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     // non-primitive literals (strings, binaries, decimals) are already
     // referenced, and a null has no value to ship
@@ -32,11 +42,29 @@ final class ParamLiteral(value: Any, dataType: DataType) extends Literal(value, 
 }
 
 object ParamLiteral {
-  /** `v`, any value `lit` takes, as a request value. */
-  def apply(v: Any): Column = {
+  /** `v`, any value `lit` takes, as a request value of `slot`. */
+  def apply(v: Any, slot: Option[String] = None): Column = {
     val l = Literal(v)
-    toColumn(new ParamLiteral(l.value, l.dataType))
+    toColumn(new ParamLiteral(l.value, l.dataType, slot))
   }
+
+  /** The number of slotted literals per (slot, type) in `plan`'s
+    * expressions, the ones [[rebind]] reaches.
+    */
+  def slotCounts(plan: LogicalPlan): Map[(String, DataType), Int] =
+    plan.flatMap(_.expressions.flatMap(_.collect {
+      case p: ParamLiteral if p.slot.isDefined => (p.slot.get, p.dataType)
+    })).groupMapReduce(identity)(_ => 1)(_ + _)
+
+  /** `plan` with every literal of a slot in `values` holding that
+    * value (a Catalyst literal of the slot's type). Every ancestor of a
+    * changed literal is a new node; the rest of the plan is shared.
+    */
+  def rebind(plan: LogicalPlan, values: Map[String, Literal]): LogicalPlan =
+    plan.transformAllExpressions {
+      case p: ParamLiteral if p.slot.exists(values.contains) =>
+        new ParamLiteral(values(p.slot.get).value, p.dataType, p.slot)
+    }
 
   /** `df(name) IN values` as Spark's `InSet`, whose code looks the value
     * up in a referenced set: Spark would write a list of up to ten

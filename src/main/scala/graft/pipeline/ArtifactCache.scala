@@ -21,6 +21,10 @@ import java.util.concurrent.atomic.AtomicLong
   *  - [[getOrCompute]]: driver-side values (models, tables, counts)
   *    are computed outside the lock; when two callers race on one
   *    key, the first stored value wins and the loser's is released.
+  *  - [[get]] then [[put]]: a value another piece of work yields on the
+  *    way (a prepared plan is the plan a render already optimized);
+  *    the caller looks it up, does that work on a miss, and stores the
+  *    value when it may be kept.
   *
   * Keys must cover every input the value depends on — for a source
   * frame that means [[Dedup.planKey]], which names file sources by
@@ -76,6 +80,37 @@ final class ArtifactCache[K, V <: AnyRef](val name: String, max: Int,
       val raced = map.get(key)
       if (raced == null) { map.put(key, v); v }
       else { release(v); raced }
+    }
+  }
+
+  /** The cached value for `key`, counted as a hit when there is one. A
+    * caller that then builds the value itself stores it with [[put]].
+    */
+  def get(key: K): Option[V] = {
+    val v = synchronized(map.get(key))
+    if (v != null) hits.incrementAndGet()
+    Option(v)
+  }
+
+  /** Store a value the caller built (counted as a miss); a value it
+    * replaces is released.
+    */
+  def put(key: K, v: V): Unit = {
+    misses.incrementAndGet()
+    synchronized {
+      val old = map.put(key, v)
+      if (old != null && (old ne v)) release(old)
+    }
+  }
+
+  /** Drop every entry whose key matches through `release`, counted as
+    * evictions.
+    */
+  def removeIf(p: K => Boolean): Unit = synchronized {
+    val it = map.entrySet.iterator
+    while (it.hasNext) {
+      val e = it.next()
+      if (p(e.getKey)) { evictions.incrementAndGet(); release(e.getValue); it.remove() }
     }
   }
 

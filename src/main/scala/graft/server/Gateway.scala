@@ -111,12 +111,16 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
   /** Serving counters as one JSON object (stored-route hit counts
     * sorted by name; `wal_position` present when this gateway logs to
     * a WAL; `caches`: hit/miss/evict counters of the process's
-    * plan-keyed artifact caches; `codegen`: the classes Spark has
+    * plan-keyed artifact caches, prepared stored routes among them;
+    * `prepared_fallbacks`: stored-route requests the full build served,
+    * by reason ([[PreparedRoutes]]); `codegen`: the classes Spark has
     * compiled in this process and their compile time in ms, estimated
     * as the count times the mean of Spark's compile-time histogram).
     */
   def metricsJson: String = {
     import scala.jdk.CollectionConverters._
+    // first: it creates the prepared-plan cache, so `caches` lists it
+    val prepared = PreparedRoutes.fallbacksJson
     val routes = routeHits.asScala.toSeq.sortBy(_._1)
       .map { case (n, c) => quote(n) + ":" + c.get() }.mkString("{", ",", "}")
     val wal = walRoot.map(r =>
@@ -127,6 +131,7 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
       s""""errors":${nErrors.get()},"truncated":${nTruncated.get()},""" +
       s""""routes":$routes$wal,""" +
       s""""caches":${graft.pipeline.ArtifactCache.countersJson},""" +
+      s""""prepared_fallbacks":$prepared,""" +
       s""""codegen":{"compiles":${compiles.getCount},"compile_ms":$compileMs}}"""
   }
   private val stored =
@@ -143,7 +148,11 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
     * local writes — a swap racing a local write batch would silently
     * drop whichever published first.
     */
-  private[server] def replaceStore(s: GraphStore): Unit = { store = s }
+  private[server] def replaceStore(s: GraphStore): Unit = {
+    val prev = store
+    store = s
+    PreparedRoutes.dropStore(prev)
+  }
 
   /** Deploy a stored query (the reference's registered-query surface:
     * `#[register]` fn -> queries.json bundle -> POST /v1/query/<name>
@@ -239,7 +248,7 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
   private[server] def serve(req: Request, sink: Sink): Unit = {
     for (name <- req.route if req.steering.warmOnly && !isWarm(name))
       throw new IllegalArgumentException(s"query not warm: $name")
-    executeBatch(req.batch, req.params, sink)
+    executeBatch(req, sink)
     req.route.foreach(markServed)
   }
 
@@ -253,11 +262,15 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
     * under the write lock (serialized; the updated store publishes
     * before the lock drops). A write's result, the mutation summary,
     * renders before the batch commits ([[answer]] sends writes to the
-    * buffered body only).
+    * buffered body only). A stored read binds its values into the
+    * route's prepared plan on this snapshot when there is one, and
+    * otherwise builds in full and keeps the plan for the next request
+    * ([[PreparedRoutes]]).
     */
-  private def executeBatch(batch: Batch, params: Map[String, PropertyValue],
-      sink: Sink): Unit = {
+  private def executeBatch(req: Request, sink: Sink): Unit = {
+    val (batch, params) = (req.batch, req.params)
     if (batch.write) writeLock.synchronized {
+      req.route.foreach(_ => PreparedRoutes.fallback("shape"))
       val prev = store
       val out = new BatchExecutor(store, params).execute(batch)
       // commit order: render, then segment, then publish. The render is
@@ -275,8 +288,23 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
       // artifact a concurrent reader just built for it.
       graft.search.IndexCache.advance(prev, out.store, appendOnly = false)
       store = out.store
+      PreparedRoutes.dropStore(prev)
       graft.search.IndexCache.evictOthers(store.version, liveVersions())
-    } else sink.render(new BatchExecutor(store, params).execute(batch).results)
+    } else {
+      val snap = store
+      req.route.flatMap(_ => PreparedRoutes.results(batch, snap, params)) match {
+        case Some(results) => sink.render(results)
+        case None =>
+          val out = new BatchExecutor(snap, params).execute(batch)
+          sink.render(out.results)
+          req.route.foreach { _ =>
+            PreparedRoutes.keep(batch, snap, out)
+            // a store published since this read began may have dropped
+            // snap's plans before this one landed
+            if (store ne snap) PreparedRoutes.dropStore(snap)
+          }
+      }
+    }
     (if (batch.write) nWrites else nReads).incrementAndGet()
     if (sink.truncated) nTruncated.incrementAndGet()
   }
@@ -556,13 +584,6 @@ object Gateway {
     * full sort.
     */
   private def firstRows(df: DataFrame, n: Int): Array[Row] = {
-    def ordersOrLimits(p: LogicalPlan): Boolean = p match {
-      case Project(_, c) => ordersOrLimits(c)
-      case Filter(_, c) => ordersOrLimits(c)
-      case SubqueryAlias(_, c) => ordersOrLimits(c)
-      case _: Sort | _: GlobalLimit | _: LocalLimit | _: Offset | _: Tail => true
-      case _ => false
-    }
     val qe = df.queryExecution
     if (ordersOrLimits(qe.analyzed)) df.limit(n).collect()
     else {
@@ -570,6 +591,15 @@ object Gateway {
       SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeTake(n))
         .map(toRow)
     }
+  }
+
+  /** Whether a plan orders or limits its rows at the root. */
+  private[server] def ordersOrLimits(p: LogicalPlan): Boolean = p match {
+    case Project(_, c) => ordersOrLimits(c)
+    case Filter(_, c) => ordersOrLimits(c)
+    case SubqueryAlias(_, c) => ordersOrLimits(c)
+    case _: Sort | _: GlobalLimit | _: LocalLimit | _: Offset | _: Tail => true
+    case _ => false
   }
 
   /** The NDJSON stream: one `{"result":<name>,"row":{...}}` line per

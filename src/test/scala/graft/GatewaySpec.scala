@@ -167,7 +167,9 @@ class GatewaySpec extends GraftSuite {
     import graft.ast._
     import graft.dsl.Dsl._
     import graft.server.QueryBundle
-    val gw = new Gateway(TestBase.parityGraph(), port = 16972)
+    // on disk: a plan over in-memory rows is never prepared
+    val gw = new Gateway(TestBase.parityGraphOnDisk(), port = 16972)
+    val start = new com.fasterxml.jackson.databind.ObjectMapper().readTree(gw.metricsJson)
     // author a bundle: one read route with a DateTime param + an I64 array
     val batch = Batch(Seq(
       BatchEntry.Query(NamedQuery(Some("n"),
@@ -225,6 +227,26 @@ class GatewaySpec extends GraftSuite {
       // call above compiled at least one class in this process
       val codegen = tree.get("codegen")
       assert(codegen.get("compiles").asLong >= 1 && codegen.get("compile_ms").asLong >= 0, m)
+
+      // prepared stored routes: n_in above reads its id list on the
+      // driver (a fallback); a scalar-parameter route keeps its plan on
+      // its first call (a miss) and binds into it on its second (a hit)
+      gw.registerQuery("older", Batch(Seq(BatchEntry.Query(NamedQuery(Some("n"),
+        g().nWithLabel("ParityUser").where(Predicate.GteExpr("age", Expr.Param("min_age")))
+          .count().t))), returns = Seq("n")), Seq("min_age" -> QueryBundle.Scalar("I64")))
+      assert(gw.handleStored("older", """{"min_age": 30}""") == """{"n":2}""")
+      assert(gw.handleStored("older", """{"min_age": 40}""") == """{"n":1}""")
+      val end = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(http("GET", "/metrics", None))
+      def moved(section: String, key: String) =
+        end.get(section).get(key).asLong - start.get(section).get(key).asLong
+      import scala.jdk.CollectionConverters._
+      val fallbacks = end.get("prepared_fallbacks").fieldNames.asScala.map(moved("prepared_fallbacks", _))
+      val prepared = Seq("hits", "misses").map(k =>
+        end.get("caches").get("prepared_routes").get(k).asLong -
+          start.get("caches").get("prepared_routes").get(k).asLong)
+      assert(prepared == Seq(1, 1) && fallbacks.sum == 1 &&
+        moved("prepared_fallbacks", "driver_read") == 1, end)
     } finally gw.stop()
   }
 
@@ -920,6 +942,12 @@ class GatewaySpec extends GraftSuite {
     // the frontier's broadcast, the edges' semi join, the far join
     val (hop, hopJobs) = countJobs(gw.handleStored("hop", """{"externalId":"u1"}"""))
     assert(hop.contains("Bob") && !hop.contains("Carol") && hopJobs <= 3, s"$hopJobs jobs: $hop")
+    // the same budgets when each route binds into its prepared plan
+    val (point2, point2Jobs) = countJobs(gw.handleStored("point", """{"externalId":"u2"}"""))
+    assert(point2.contains("Bob") && point2Jobs == 1, s"$point2Jobs jobs: $point2")
+    val (hop2, hop2Jobs) = countJobs(gw.handleStored("hop", """{"externalId":"u2"}"""))
+    assert(hop2.contains("Carol") && !hop2.contains("Bob") && hop2Jobs <= 3,
+      s"$hop2Jobs jobs: $hop2")
   }
 
   private def writeReq(steps: String): String =

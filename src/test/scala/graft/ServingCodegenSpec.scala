@@ -1,9 +1,8 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.model.TestGraph
 import graft.server.{Gateway, QueryBundle}
@@ -125,28 +124,6 @@ class ServingCodegenSpec extends GraftSuite with AdaptiveSparkPlanHelper {
         s.metadata("PushedFilters")
     }.mkString
     assert(pushed.contains("EqualTo(c_custkey,42)"), s"predicate not pushed: $pushed")
-  }
-
-  /** The physical plans of the actions `f` runs, as the listener bus
-    * delivers them.
-    */
-  private def plansOf(f: => Unit): Seq[QueryExecution] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val marker = spark.range(1).toDF("m")
-    val l = new QueryExecutionListener {
-      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
-      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(l)
-    try {
-      f
-      marker.collect() // the bus delivers in order: once this shows, so have f's actions
-      val deadline = System.currentTimeMillis() + 10000
-      while (!seen.contains(marker.queryExecution) &&
-        System.currentTimeMillis() < deadline) Thread.sleep(20)
-    } finally spark.listenerManager.unregister(l)
-    import scala.jdk.CollectionConverters._
-    seen.asScala.toSeq.filterNot(_ eq marker.queryExecution)
   }
 
   test("an unordered result past the cap renders maxRows rows, truncated, without a limit operator") {

@@ -80,6 +80,29 @@ abstract class GraftSuite extends AnyFunSuite {
   def ids(df: DataFrame): Seq[Long] =
     df.select("id").collect().toSeq.map(_.getLong(0)).sorted
 
+  /** The query executions of the actions `f` runs, as the listener bus
+    * delivers them.
+    */
+  def plansOf(f: => Unit): Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val marker = spark.range(1).toDF("m")
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      f
+      marker.collect() // the bus delivers in order: once this shows, so have f's actions
+      val deadline = System.currentTimeMillis() + 10000
+      while (!seen.contains(marker.queryExecution) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(l)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq.filterNot(_ eq marker.queryExecution)
+  }
+
   /** A loopback port free at the time of the call. */
   def freePort(): Int = {
     val ss = new java.net.ServerSocket(0)
