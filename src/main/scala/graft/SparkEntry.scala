@@ -397,9 +397,7 @@ object SparkEntry {
     // measured instead of asserted
     "q_vector_recall_batch" -> ((s, d) => {
       val e = emb(s, d)
-      val n = e.count()
-      val nlist = math.max(16, math.min(4096, math.sqrt(n.toDouble).toInt))
-      val model = VectorOps.trainIvfCached(e, "embedding", nlist)
+      val model = VectorOps.trainIvfCached(e, "embedding", VectorOps.ivfNlist(e.count()))
       val calib = e.where(col("vec_id") >= 100)
         .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(64)
       val np = VectorOps.calibrateNprobeCached(e, "embedding", "vec_id", model,
@@ -481,9 +479,7 @@ object SparkEntry {
     // disjoint batch so the composed error still clears the 0.9 gate.
     "q_vector_ivfpq_recall" -> ((s, d) => {
       val e = emb(s, d)
-      val n = e.count()
-      val nlist = math.max(16, math.min(4096, math.sqrt(n.toDouble).toInt))
-      val ivf = VectorOps.trainIvfCached(e, "embedding", nlist)
+      val ivf = VectorOps.trainIvfCached(e, "embedding", VectorOps.ivfNlist(e.count()))
       val (pq, enc) = VectorOps.trainEncodePqCached(e, "embedding",
         m = 8, ks = 256)
       val calib = e.where(col("vec_id") >= 100)

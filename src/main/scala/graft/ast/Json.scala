@@ -732,24 +732,38 @@ object Json {
     else bad("unsupported parameter value", n)
   }
 
-  /** Coerce a parsed parameter to a declared QueryParamType name
-    * (query_generator.rs:17-38): notably DateTime accepts RFC3339
-    * strings (dsl.rs:4671-4675) and F32/F64/I64 normalize numerics.
+  /** Declared parameter shape (QueryParamType, query_generator.rs:17-38):
+    * scalars are bare names; Array, the only tagged form, nests an
+    * element shape.
     */
-  def coerceParam(v: PropertyValue, tpe: String): PropertyValue = {
+  sealed trait PTy
+  final case class Scalar(name: String) extends PTy
+  final case class Arr(inner: PTy) extends PTy
+
+  def readPTy(n: JsonNode): PTy =
+    if (n.isTextual) Scalar(n.asText)
+    else if (n.isObject && n.size == 1 && n.has("Array")) Arr(readPTy(n.get("Array")))
+    else throw new IllegalArgumentException(s"bad QueryParamType: $n")
+
+  /** Coerce a parsed parameter to its declared shape, arrays element by
+    * element: notably DateTime accepts RFC3339 strings
+    * (dsl.rs:4671-4675) and F32/F64/I64 normalize numerics.
+    */
+  def coerceParam(v: PropertyValue, t: PTy): PropertyValue = {
     import PropertyValue._
-    (tpe, v) match {
+    (t, v) match {
+      case (Arr(inner), VArray(xs)) => VArray(xs.map(coerceParam(_, inner)))
       // the reference rejects Bytes on the dynamic JSON route
       // (DynamicQueryError::UnsupportedBytesParameter, dsl.rs:4669-4670)
-      case ("Bytes", _) => throw new IllegalArgumentException(
+      case (Scalar("Bytes"), _) => throw new IllegalArgumentException(
         "unsupported parameter type Bytes in the dynamic JSON query route")
-      case ("DateTime", VString(rfc)) =>
+      case (Scalar("DateTime"), VString(rfc)) =>
         VDateTime(java.time.OffsetDateTime.parse(rfc).toInstant.toEpochMilli)
-      case ("DateTime", VI64(ms)) => VDateTime(ms)
-      case ("F32", VF64(d)) => VF32(d.toFloat)
-      case ("F32", VI64(i)) => VF32(i.toFloat)
-      case ("F64", VI64(i)) => VF64(i.toDouble)
-      case ("I64", VF64(d)) if d.isWhole => VI64(d.toLong)
+      case (Scalar("DateTime"), VI64(ms)) => VDateTime(ms)
+      case (Scalar("F32"), VF64(d)) => VF32(d.toFloat)
+      case (Scalar("F32"), VI64(i)) => VF32(i.toFloat)
+      case (Scalar("F64"), VI64(i)) => VF64(i.toDouble)
+      case (Scalar("I64"), VF64(d)) if d.isWhole => VI64(d.toLong)
       case _ => v
     }
   }
@@ -761,15 +775,9 @@ object Json {
     val entries = q.get("queries").elements.asScala.map(readEntry).toSeq
     val returns = Option(q.get("returns")).filterNot(_.isNull)
       .map(_.elements.asScala.map(_.asText).toSeq).getOrElse(Nil)
-    val types: Map[String, String] =
+    val types: Map[String, PTy] =
       Option(root.get("parameter_types")).filterNot(_.isNull).map { tn =>
-        tn.properties.asScala.map { e =>
-          // QueryParamType is a bare string for scalars; keep the tag
-          // name for tagged forms like {"Array": ...}
-          val t = if (e.getValue.isTextual) e.getValue.asText
-            else e.getValue.fieldNames().next()
-          e.getKey -> t
-        }.toMap
+        tn.properties.asScala.map(e => e.getKey -> readPTy(e.getValue)).toMap
       }.getOrElse(Map.empty)
     val params: Map[String, PropertyValue] =
       Option(root.get("parameters")).filterNot(_.isNull).map { pn =>

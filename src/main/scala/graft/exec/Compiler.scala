@@ -1398,8 +1398,8 @@ class Compiler(
     * frontier leaving one (1..n); All = every visited depth (0..n).
     * `until`-satisfying elements exit the loop as results. A
     * lineage-truncating materialization every few iterations
-    * ([[Scratch.stable]]: localCheckpoint locally, reliable checkpoint
-    * under `graft.scratch.dir` on a cluster — a depth-50 traversal
+    * ([[Scratch.stable]]: localCheckpoint locally, parquet under
+    * `graft.scratch.dir` on a cluster — a depth-50 traversal
     * must survive executor loss) cuts lineage growth on deep repeats
     * (the BFS pattern, cf. GraphFrames).
     */
@@ -1532,15 +1532,14 @@ class Compiler(
         // measured counterpart of the reference's ef_search=768 quality
         // profile, instead of a fixed nlist/4 guess that only holds on
         // clustered data
-        val nlist = math.max(16, math.min(4096, math.sqrt(n.toDouble).toInt))
-        val model = IndexCache.ivfModel(key, nlist, tbl)
-        val target = spark.conf.get("graft.search.recallTarget", "0.9").toDouble
-        val calibN = spark.conf.get("graft.search.calibQueries", "64").toInt
-        val nprobe = IndexCache.nprobe(key, model, tbl, target = target, calibN = calibN)
+        import graft.search.VectorOps.{CalibQueries, RecallTarget}
+        val model = IndexCache.ivfModel(key, graft.search.VectorOps.ivfNlist(n), tbl)
+        val nprobe = IndexCache.nprobe(key, model, tbl, target = RecallTarget,
+          calibN = CalibQueries)
         if (n >= pqThreshold && qv.length % pqM == 0) {
           val (pqModel, enc) = IndexCache.pqArtifact(key, m = pqM, ks = 256, tbl)
-          val refine = IndexCache.pqRefine(key, pqModel, enc, tbl, target = target,
-            calibN = calibN)
+          val refine = IndexCache.pqRefine(key, pqModel, enc, tbl, target = RecallTarget,
+            calibN = CalibQueries)
           graft.search.VectorOps.ivfPqTopK(enc, prop, model, pqModel, qv, k,
             nprobe, refine)
         } else

@@ -1,8 +1,14 @@
 package graft.pipeline
 
-import scala.collection.mutable.ArrayBuffer
+import java.lang.ref.Cleaner
 
+import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Reliable persistence for the per-round frames of ITERATIVE passes
   * (label propagation, star contraction, suffix refinement).
@@ -14,11 +20,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the blocks live on executors with lineage TRUNCATED, so losing one
   * executor mid-pass leaves every later round unrecoverable — no
   * lineage to recompute, no replica. On a real cluster set
-  * `graft.scratch.dir`: frames of passes whose size estimate is at
-  * least `graft.scratch.spillRowThreshold` rows (or whose caller
-  * always spills) write to per-run parquet under that directory —
-  * reliable storage that survives executor loss. Run directories are
-  * deleted on `release()` unless `graft.scratch.keep=true`.
+  * `graft.scratch.dir`: every kept or stable frame is then written as
+  * parquet to its own directory under it — reliable storage that
+  * survives executor loss — and deleted once no plan can read it,
+  * unless `graft.scratch.keep=true`.
   */
 private[graft] object Scratch {
 
@@ -65,11 +70,12 @@ private[graft] object Scratch {
     * results that must outlive any [[FrameStore]] (query results
     * returned to a caller, cached index artifacts, Repeat's
     * accumulated emit streams). Locally this is eager
-    * `localCheckpoint` (fast, executor-resident). With a scratch dir
-    * configured the frame is written ONCE as parquet under
-    * `<dir>/stable/<session-uuid>/` and read back — reliable storage
-    * that survives executor loss, the posture a 1000-executor cluster
-    * needs for results it will consume minutes later.
+    * `localCheckpoint` (fast, executor-resident; Spark's
+    * ContextCleaner drops its blocks once the frame is unreachable).
+    * With a scratch dir configured the frame goes through [[spill]] —
+    * reliable storage that survives executor loss, the posture a
+    * 1000-executor cluster needs for results it will consume minutes
+    * later — and lives exactly as long as something can read it.
     *
     * Parquet write/read beats `Dataset.checkpoint(eager = true)`
     * here on BOTH counts the latter was flagged for: checkpoint runs
@@ -78,87 +84,82 @@ private[graft] object Scratch {
     * the write — doubling every 5-depth Repeat segment), and its
     * files under the context checkpoint dir are never reclaimed
     * (`spark.cleaner.referenceTracking.cleanCheckpoints` defaults to
-    * false). The session subdir is deleted by a JVM shutdown hook, so
-    * a long-lived server reclaims stable frames when it exits;
-    * operators can sweep `<dir>/stable` of dead sessions on a
-    * schedule. The context checkpoint dir is left untouched — no
+    * false). The context checkpoint dir is left untouched — no
     * cross-SparkSession conflict over a context-global setting.
     */
-  def stable(frame: DataFrame): DataFrame = {
-    val spark = frame.sparkSession
-    spark.conf.getOption("graft.scratch.dir").filter(_.nonEmpty) match {
-      case Some(d) =>
-        val path = s"${stableSessionDir(spark, d)}/frame_${stableSeq.incrementAndGet()}"
-        frame.write.mode("error").parquet(path)
-        spark.read.parquet(path)
+  def stable(frame: DataFrame): DataFrame =
+    scratchDir(frame.sparkSession) match {
+      case Some(d) => spill(frame, d)._1
       case None => frame.localCheckpoint(true)
     }
+
+  private def scratchDir(spark: SparkSession): Option[String] =
+    spark.conf.getOption("graft.scratch.dir").filter(_.nonEmpty)
+
+  private val cleaner = Cleaner.create()
+
+  /** The one spill writer: `frame` written once as parquet to its own
+    * directory directly under `dir` and read back. Unless
+    * `graft.scratch.keep=true`, a [[Cleaner]] action deletes that
+    * directory once the read-back relation's file index is unreachable
+    * — every frame derived from the read-back shares that index, so
+    * the files go exactly when no plan can read them — or earlier,
+    * when the caller runs the returned `Cleanable`.
+    */
+  private def spill(frame: DataFrame, dir: String): (DataFrame, Option[Cleaner.Cleanable]) = {
+    val spark = frame.sparkSession
+    val path = s"${dir.stripSuffix("/")}/frame_${java.util.UUID.randomUUID()}"
+    frame.write.mode("error").parquet(path)
+    val back = spark.read.parquet(path)
+    val keep = spark.conf.getOption("graft.scratch.keep").exists(_.toBoolean)
+    val cleanup = Option.when(!keep) {
+      val index = back.queryExecution.analyzed.collectFirst {
+        case l: LogicalRelation => l.relation.asInstanceOf[HadoopFsRelation].location
+      }.get
+      cleaner.register(index, new Delete(path, spark.sparkContext.hadoopConfiguration))
+    }
+    (back, cleanup)
   }
 
-  private val stableSeq = new java.util.concurrent.atomic.AtomicLong(0)
-  private val stableDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** One stable-frame subdir per (JVM, base dir) — keyed by the base
-    * so two SparkSessions with DIFFERENT `graft.scratch.dir` values
-    * never cross-write (the conflict class the old context-global
-    * checkpoint dir had) — created lazily and deleted on shutdown (by
-    * then nothing consumes the frames anymore).
+  /** The cleanup action. It holds only the path and the Hadoop
+    * configuration: a reference to the frame would keep it reachable.
     */
-  private def stableSessionDir(spark: SparkSession, base: String): String =
-    stableDirs.computeIfAbsent(base.stripSuffix("/"), b => {
-      val d = s"$b/stable/session-${java.util.UUID.randomUUID()}"
-      val hconf = spark.sparkContext.hadoopConfiguration
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try {
-          val p = new org.apache.hadoop.fs.Path(d)
-          p.getFileSystem(hconf).delete(p, true)
-        } catch { case _: Throwable => () }))
-      d
-    })
+  private final class Delete(path: String, hconf: Configuration) extends Runnable {
+    def run(): Unit =
+      try {
+        val p = new Path(path)
+        p.getFileSystem(hconf).delete(p, true)
+      } catch { case NonFatal(_) => () }
+  }
 
-  final class FrameStore(spark: SparkSession,
-      dirKeys: Seq[String] = Seq("graft.scratch.dir"),
-      thresholdKeys: Seq[String] = Seq("graft.scratch.spillRowThreshold"),
-      keepKeys: Seq[String] = Seq("graft.scratch.keep")) {
-    private def confOpt(keys: Seq[String]): Option[String] =
-      keys.iterator.map(spark.conf.getOption)
-        .collectFirst { case Some(v) if v.nonEmpty => v }
-    private val scratch = confOpt(dirKeys)
-    private val keepScratch = confOpt(keepKeys).exists(_.toBoolean)
-    val spillRowThreshold: Long =
-      confOpt(thresholdKeys).map(_.toLong).getOrElse(10000000L)
-    private val runDir = scratch.map(d =>
-      s"${d.stripSuffix("/")}/run-${java.util.UUID.randomUUID()}")
+  /** Per-round frames of one iterative pass. With a scratch dir each
+    * kept frame goes through [[spill]]; otherwise it is an eager
+    * `localCheckpoint`. CONTRACT: a kept frame is only valid until
+    * `release()` — derive and materialize the pass's final result
+    * (e.g. via [[stable]]) first. `release()` deletes the pass's
+    * spilled frames and unpersists its checkpoints at once; a pass
+    * that throws before it gets there leaves its spilled frames to
+    * the Cleaner.
+    */
+  final class FrameStore(spark: SparkSession) {
+    private val dir = scratchDir(spark)
     private val persisted = ArrayBuffer.empty[DataFrame]
-    private var seq = 0
+    private val spilled = ArrayBuffer.empty[Cleaner.Cleanable]
 
-    /** Materialize `frame` with truncated lineage: scratch parquet
-      * when a dir is configured and the caller marked it `spill`,
-      * eager localCheckpoint otherwise. CONTRACT: the returned frame
-      * is only valid until `release()` — derive and materialize the
-      * pass's final result (e.g. a terminal localCheckpoint) first.
-      */
-    def keep(frame: DataFrame, spill: Boolean = true): DataFrame =
-      runDir.filter(_ => spill) match {
-        case Some(dir) =>
-          seq += 1
-          val path = s"$dir/frame_$seq"
-          frame.write.mode("error").parquet(path)
-          spark.read.parquet(path)
-        case None =>
-          val p = frame.localCheckpoint(true)
-          persisted += p
-          p
-      }
+    def keep(frame: DataFrame): DataFrame = dir match {
+      case Some(d) =>
+        val (back, cleanup) = spill(frame, d)
+        spilled ++= cleanup
+        back
+      case None =>
+        val p = frame.localCheckpoint(true)
+        persisted += p
+        p
+    }
 
     def release(): Unit = {
       persisted.foreach(_.unpersist(false))
-      if (!keepScratch) runDir.foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(p, true)
-      }
+      spilled.foreach(_.clean())
     }
   }
 }

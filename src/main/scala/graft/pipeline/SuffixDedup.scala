@@ -68,24 +68,13 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * Scale posture: one aggregation + one global sort of the retained
   * minority (primary path). Level frames persist through
   * `Scratch.FrameStore`: `localCheckpoint` locally (executor-resident),
-  * or RELIABLE scratch parquet on a real cluster
-  * (`graft.suffix.scratchDir`, spilling when the corpus exceeds
-  * `graft.suffix.spillRowThreshold` positions) so losing an executor
-  * mid-pass cannot strand a lineage-truncated frame.
+  * or RELIABLE scratch parquet on a real cluster (`graft.scratch.dir`)
+  * so losing an executor mid-pass cannot strand a lineage-truncated
+  * frame.
   */
 object SuffixDedup {
 
   private val Fan = 4
-
-  /** The shared iterative-pass store ([[Scratch.FrameStore]]), with
-    * this pass's original `graft.suffix.*` keys honored ahead of the
-    * generic `graft.scratch.*` ones.
-    */
-  private def frameStore(spark: SparkSession) = new Scratch.FrameStore(spark,
-    dirKeys = Seq("graft.suffix.scratchDir", "graft.scratch.dir"),
-    thresholdKeys =
-      Seq("graft.suffix.spillRowThreshold", "graft.scratch.spillRowThreshold"),
-    keepKeys = Seq("graft.suffix.keepScratch", "graft.scratch.keep"))
 
   /** Positions that can participate in a >= `n`-token repeat, with
     * their maximal duplicated-substring length: `(_did, _len, _p,
@@ -97,7 +86,7 @@ object SuffixDedup {
   private def dupLengths(df: DataFrame, textCol: String, idCol: String,
       n: Int): DataFrame = {
     val spark = df.sparkSession
-    val store = frameStore(spark)
+    val store = new Scratch.FrameStore(spark)
     val maxSliceTokens = spark.conf.getOption("graft.suffix.maxSliceTokens")
       .map(_.toInt).getOrElse(8192)
 
@@ -108,17 +97,14 @@ object SuffixDedup {
       .select(col(idCol).as("_did"),
         transform(TextAnalysis.tokens(col(textCol)),
           t => conv(substring(md5(t), 1, 15), 16, 10).cast("long")).as("_th"))
-      .where(size(col("_th")) > 0), spill = true)
+      .where(size(col("_th")) > 0))
 
-    val statsRow = toksH
-      .agg(max(size(col("_th"))), sum(size(col("_th")).cast("long"))).head()
+    val statsRow = toksH.agg(max(size(col("_th")))).head()
     val maxLen = if (statsRow.isNullAt(0)) 0L else statsRow.getInt(0).toLong
-    val total = if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)
-    val spill = total >= store.spillRowThreshold
 
     val out =
       if (maxLen <= maxSliceTokens) sliceSortPath(spark, toksH, n)
-      else rankRefinePath(spark, store, toksH, n, spill)
+      else rankRefinePath(spark, store, toksH, n)
     store.release()
     out
   }
@@ -243,7 +229,7 @@ object SuffixDedup {
     * tied set only, no global sort in any round.
     */
   private def rankRefinePath(spark: SparkSession, store: Scratch.FrameStore,
-      toksH: DataFrame, n: Int, spill: Boolean): DataFrame = {
+      toksH: DataFrame, n: Int): DataFrame = {
     val pos = toksH
       .select(col("_did"), size(col("_th")).cast("long").as("_len"), col("_th"),
         explode(sequence(lit(0), size(col("_th")) - 1)).as("_p0"))
@@ -279,7 +265,7 @@ object SuffixDedup {
     val rem = col("_len") - col("_p")
     val level0 = store.keep(pos.join(ranked0, Seq("_ka"))
       .select(col("_did"), col("_len"), col("_p"), col("_r"),
-        (col("_c") >= 2).as("_dup")), spill)
+        (col("_c") >= 2).as("_dup")))
     kcRdd.unpersist(false)
 
     // retained = positions in a >= 2-member key block; of those, the
@@ -335,7 +321,7 @@ object SuffixDedup {
           .select(col("_did"), col("_len"), col("_p"),
             col("_rn").as("_r"),
             (col("_sc") === 1 || col("_len") - col("_p") <= horizon)
-              .as("_frz")), spill)
+              .as("_frz")))
       val frozen = refined.where(col("_frz"))
         .select("_did", "_len", "_p", "_r")
       frozenLookups += frozen.select("_did", "_p", "_r")

@@ -33,8 +33,9 @@ object IndexArtifacts {
             val (p, t) = (spec.property, spec.tenantProperty)
             if (spec.isText) saveText(table, p, dir(root, "text", spec), t)
             else {
-              saveIvf(table, p, dir(root, "ivf", spec), t)
-              savePq(table, p, dir(root, "pq", spec), t)
+              val tenants = t.map(tp => tp -> bigTenants(table, tp))
+              saveIvf(table, p, dir(root, "ivf", spec), tenants)
+              savePq(table, p, dir(root, "pq", spec), tenants)
             }
           }
       case _ => ()
@@ -52,36 +53,39 @@ object IndexArtifacts {
     stats.write.mode(SaveMode.Overwrite).parquet(s"$path/stats")
   }
 
-  /** For a tenant-partitioned index (tenant_property declared), one
-    * centroid set PER TENANT whose corpus clears the IVF serving
-    * threshold — smaller tenants serve exact brute scans anyway, so a
-    * centroid artifact for them would never be read. The driver loop is
-    * bounded by the number of above-threshold tenants (each holding
-    * >= threshold rows, so at most corpus/threshold of them).
+  /** The tenants of a tenant-partitioned vector index (tenant_property
+    * declared) whose corpus clears the IVF serving threshold, with their
+    * row counts — smaller tenants serve exact brute scans anyway, so an
+    * artifact for them would never be read. The IVF and PQ driver loops
+    * are bounded by their number (each holds >= threshold rows, so at
+    * most corpus/threshold of them).
+    */
+  private def bigTenants(table: DataFrame, tp: String): Seq[(Any, Long)] = {
+    val threshold =
+      table.sparkSession.conf.get("graft.search.ivfThreshold", "100000").toLong
+    table.groupBy(col(tp)).count().where(col("count") >= threshold).collect()
+      .toSeq.map(r => (r.get(0), r.getLong(1)))
+  }
+
+  /** One centroid set, or for a tenant-partitioned index one PER
+    * above-threshold tenant (`tenants`: the tenant column and
+    * [[bigTenants]]).
     */
   private def saveIvf(table: DataFrame, prop: String, path: String,
-      tenantCol: Option[String]): Unit = {
+      tenants: Option[(String, Seq[(Any, Long)])]): Unit = {
     val spark = table.sparkSession
     import spark.implicits._
-    tenantCol match {
+    tenants match {
       case None =>
-        val n = table.count()
-        val nlist = math.max(16, math.min(4096, math.sqrt(n.toDouble).toInt))
-        val model = VectorOps.trainIvf(table, prop, nlist)
+        val model = VectorOps.trainIvf(table, prop, VectorOps.ivfNlist(table.count()))
         model.centroids.zipWithIndex
           .map { case (c, i) => (i, c.toSeq) }.toSeq
           .toDF("centroid_id", "centroid")
           .write.mode(SaveMode.Overwrite).parquet(path)
-      case Some(tp) =>
-        val threshold =
-          spark.conf.get("graft.search.ivfThreshold", "100000").toLong
-        val bigTenants = table.groupBy(col(tp)).count()
-          .where(col("count") >= threshold).collect()
-        val rows = bigTenants.toSeq.flatMap { r =>
-          val tv = r.get(0)
-          val n = r.getLong(1)
-          val nlist = math.max(16, math.min(4096, math.sqrt(n.toDouble).toInt))
-          val model = VectorOps.trainIvf(table.where(col(tp) === tv), prop, nlist)
+      case Some((tp, big)) =>
+        val rows = big.flatMap { case (tv, n) =>
+          val model = VectorOps.trainIvf(table.where(col(tp) === tv), prop,
+            VectorOps.ivfNlist(n))
           model.centroids.zipWithIndex.map { case (c, i) =>
             (String.valueOf(tv), i, c.toSeq)
           }
@@ -101,27 +105,22 @@ object IndexArtifacts {
     * serving path falls back to plain IVF for them anyway.
     */
   private def savePq(table: DataFrame, prop: String, path: String,
-      tenantCol: Option[String]): Unit = {
+      tenants: Option[(String, Seq[(Any, Long)])]): Unit = {
     val spark = table.sparkSession
     import spark.implicits._
     val m = spark.conf.get("graft.search.pqM", "8").toInt
     val dimRow = table.select(size(col(prop))).head()
     if (dimRow.isNullAt(0) || dimRow.getInt(0) % m != 0) return
-    tenantCol match {
+    tenants match {
       case None =>
         val model = VectorOps.trainPq(table, prop, m)
         model.codebooks.toSeq.zipWithIndex.flatMap { case (cb, s) =>
           cb.toSeq.zipWithIndex.map { case (c, i) => (s, i, c.toSeq) }
         }.toDF("subspace", "centroid_id", "centroid")
           .write.mode(SaveMode.Overwrite).parquet(path)
-      case Some(tp) =>
-        val threshold =
-          spark.conf.get("graft.search.ivfThreshold", "100000").toLong
-        val bigTenants = table.groupBy(col(tp)).count()
-          .where(col("count") >= threshold).collect()
-        if (bigTenants.isEmpty) return
-        val rows = bigTenants.toSeq.flatMap { r =>
-          val tv = r.get(0)
+      case Some((tp, big)) =>
+        if (big.isEmpty) return
+        val rows = big.flatMap { case (tv, _) =>
           val model = VectorOps.trainPq(table.where(col(tp) === tv), prop, m)
           model.codebooks.toSeq.zipWithIndex.flatMap { case (cb, s) =>
             cb.toSeq.zipWithIndex.map { case (c, i) =>

@@ -273,7 +273,8 @@ object IndexCache {
     * rewrite of the indexed text passes the count gate but violates the
     * documented append-only sink contract; set
     * `graft.index.verifyAppendContent=true` to also xor-hash
-    * (`_id`, text) on both sides — one shuffle-free scan of the
+    * (`_id`, text, and the tenant column of a tenant-partitioned index)
+    * on both sides — one shuffle-free scan of the
     * standing corpus per refresh, so it is opt-in rather than the
     * steady-state default.
     */
@@ -285,8 +286,9 @@ object IndexCache {
     if (prev.count() + delta.count() != next.count()) return None
     if (prev.sparkSession.conf.getOption("graft.index.verifyAppendContent")
         .exists(_.toBoolean)) {
+      val hashed = Seq(col("_id"), col(prop)) ++ tenantCol.map(col)
       def sig(df: DataFrame): Long = df
-        .select(xxhash64(col("_id"), col(prop)).as("_h"))
+        .select(xxhash64(hashed: _*).as("_h"))
         .agg(coalesce(expr("bit_xor(_h)"), lit(0L))).head().getLong(0)
       if ((sig(prev) ^ sig(delta)) != sig(next)) return None
     }

@@ -443,6 +443,20 @@ object VectorOps {
     */
   final case class IvfModel(centroids: Array[Array[Double]])
 
+  /** IVF list count for an `n`-row corpus: nlist ~ sqrt(n), the IVF
+    * rule of thumb, clamped to [16, 4096].
+    */
+  def ivfNlist(n: Long): Int = math.max(16, math.min(4096, math.sqrt(n.toDouble).toInt))
+
+  /** Recall the serving tier calibrates nprobe and the PQ refine depth
+    * to, and the held-out queries it measures that recall on.
+    */
+  final val RecallTarget = 0.9
+  final val CalibQueries = 64
+
+  /** IVF list count of an automatic escalation off the exact k-NN path. */
+  final val KnnEscalateNlist = 64
+
   def trainIvf(df: DataFrame, vecCol: String, nlist: Int, iters: Int = 3): IvfModel = {
     // Deterministic init: nlist DISTINCT vectors ordered by a hash of
     // the vector (ties broken by the vector itself). A bare limit()
@@ -821,8 +835,7 @@ object VectorOps {
     val cf = corpus.select(col(idCol).cast("long").as("neighbor_id"),
         col(qvecCol).as("_nv"), labelExpr.as("_nl"))
       .withColumn("_fv", fv(col("_nv")))
-    val model = trainIvfCached(cf, "_fv", corpus.sparkSession.conf
-      .get("graft.search.knnEscalateNlist", "64").toInt)
+    val model = trainIvfCached(cf, "_fv", KnnEscalateNlist)
     val nlist = model.centroids.length
     val c = assignCluster(cf, "_fv", model.centroids).drop("_fv")
     val q = queries.select(col(idCol).cast("long").as("query_id"),
@@ -1546,11 +1559,8 @@ object VectorOps {
     * equal to the broadcast path — it only changes WHERE the pairs meet
     * (an equi-join on the cluster id instead of a driver broadcast).
     */
-  private def escalationModel(corpus: DataFrame, vecCol: String): IvfModel = {
-    val nlist = corpus.sparkSession.conf
-      .get("graft.search.knnEscalateNlist", "64").toInt
-    trainIvfCached(corpus, vecCol, nlist)
-  }
+  private def escalationModel(corpus: DataFrame, vecCol: String): IvfModel =
+    trainIvfCached(corpus, vecCol, KnnEscalateNlist)
 
   private def knnJoinPruned(corpus: DataFrame, queries: DataFrame,
       vecCol: String, idCol: String, k: Int, excludeSelf: Boolean,

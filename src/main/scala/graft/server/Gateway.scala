@@ -159,7 +159,7 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
     * with a JSON params body, SURVEY §3.3).
     */
   def registerQuery(name: String, batch: graft.ast.Batch,
-      params: Seq[(String, QueryBundle.PTy)] = Nil): Unit = {
+      params: Seq[(String, Json.PTy)] = Nil): Unit = {
     stored.put(name, QueryBundle.StoredRoute(batch, params, batch.write))
     warm.remove(name) // a replaced route is a new, cold query
   }
@@ -236,7 +236,7 @@ class Gateway(@volatile private var store: GraphStore, port: Int = 6969,
       while (params.hasNext) {
         val e = params.next()
         val raw = Json.readParamValue(e.getValue)
-        pmap += e.getKey -> types.get(e.getKey).map(QueryBundle.coerce(raw, _)).getOrElse(raw)
+        pmap += e.getKey -> types.get(e.getKey).map(Json.coerceParam(raw, _)).getOrElse(raw)
       }
       Request(route.batch, pmap.result(), Some(sub), steering)
     }

@@ -3,6 +3,8 @@ package graft.server
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
 
+import graft.ast.Json
+
 import scala.jdk.CollectionConverters._
 
 /** MCP (Model Context Protocol) surface for the Gateway.
@@ -106,8 +108,8 @@ object Mcp {
     * tags map to the empty schema (accept anything) rather than
     * guessing wrong.
     */
-  private[server] def schemaOf(t: QueryBundle.PTy): ObjectNode = t match {
-    case QueryBundle.Scalar(n) =>
+  private[server] def schemaOf(t: Json.PTy): ObjectNode = t match {
+    case Json.Scalar(n) =>
       val o = F.objectNode()
       n match {
         case "I8" | "I16" | "I32" | "I64" |
@@ -120,7 +122,7 @@ object Mcp {
         case _ => ()
       }
       o
-    case QueryBundle.Arr(inner) =>
+    case Json.Arr(inner) =>
       val o = F.objectNode()
       o.put("type", "array")
       o.set[JsonNode]("items", schemaOf(inner))

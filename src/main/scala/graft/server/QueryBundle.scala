@@ -3,7 +3,8 @@ package graft.server
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.JsonNodeFactory
 
-import graft.ast.{Batch, Json, PropertyValue}
+import graft.ast.{Batch, Json}
+import graft.ast.Json.{Arr, PTy, Scalar}
 
 import scala.jdk.CollectionConverters._
 
@@ -18,24 +19,7 @@ object QueryBundle {
   val Version = 5
   val SupportedVersions: Set[Int] = Set(4, 5)
 
-  /** Declared parameter shape (QueryParamType, query_generator.rs:17-38):
-    * scalars are bare names; Array nests an element shape.
-    */
-  sealed trait PTy
-  final case class Scalar(name: String) extends PTy
-  final case class Arr(inner: PTy) extends PTy
-
   final case class StoredRoute(batch: Batch, params: Seq[(String, PTy)], write: Boolean)
-
-  /** Coerce a parsed dynamic parameter to its declared shape; arrays
-    * coerce element-wise. Bytes rejects (Json.coerceParam).
-    */
-  def coerce(v: PropertyValue, t: PTy): PropertyValue = (v, t) match {
-    case (PropertyValue.VArray(xs), Arr(inner)) =>
-      PropertyValue.VArray(xs.map(coerce(_, inner)))
-    case (x, Scalar(n)) => Json.coerceParam(x, n)
-    case (x, _) => x
-  }
 
   private val F = JsonNodeFactory.instance
   /** Thread-safe once configured: shared by bundle parsing and every
@@ -48,10 +32,6 @@ object QueryBundle {
     case Arr(i) =>
       val o = F.objectNode(); o.set[JsonNode]("Array", writePTy(i)); o
   }
-  private def readPTy(n: JsonNode): PTy =
-    if (n.isTextual) Scalar(n.asText)
-    else if (n.isObject && n.has("Array")) Arr(readPTy(n.get("Array")))
-    else throw new IllegalArgumentException(s"bad QueryParamType: $n")
 
   /** Serialize routes to a v5 bundle (sorted maps, as BTreeMap emits). */
   def render(routes: Map[String, StoredRoute]): String = {
@@ -100,7 +80,7 @@ object QueryBundle {
       Option(root.get(section)).filterNot(_.isNull).map { n =>
         n.properties.asScala.map { e =>
           e.getKey -> e.getValue.elements.asScala.map { p =>
-            p.get("name").asText -> readPTy(p.get("ty"))
+            p.get("name").asText -> Json.readPTy(p.get("ty"))
           }.toSeq
         }.toMap
       }.getOrElse(Map.empty)

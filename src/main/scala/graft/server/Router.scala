@@ -3,6 +3,7 @@ package graft.server
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
 
+import graft.ast.Json
 import graft.model.{GraphStore, GraphWal}
 
 import java.util.concurrent.atomic.AtomicInteger
@@ -84,7 +85,7 @@ final class Router(spark: SparkSession, walRoot: String, port: Int = 6969,
     * the write/read dispatch bit).
     */
   def registerQuery(name: String, batch: graft.ast.Batch,
-      params: Seq[(String, QueryBundle.PTy)] = Nil): Unit = {
+      params: Seq[(String, Json.PTy)] = Nil): Unit = {
     writer.registerQuery(name, batch, params)
     readers.foreach(_.gateway.registerQuery(name, batch, params))
   }

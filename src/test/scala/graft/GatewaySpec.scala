@@ -178,9 +178,9 @@ class GatewaySpec extends GraftSuite {
           .where(Predicate.IsInExpr("$id", Expr.Param("ids")))
           .count().t))), returns = Seq("n"))
     val routes = Map("n_in" -> QueryBundle.StoredRoute(batch,
-      Seq("min_age" -> QueryBundle.Scalar("I64"),
-        "ids" -> QueryBundle.Arr(QueryBundle.Scalar("I64")),
-        "since" -> QueryBundle.Scalar("DateTime")), write = false))
+      Seq("min_age" -> Json.Scalar("I64"),
+        "ids" -> Json.Arr(Json.Scalar("I64")),
+        "since" -> Json.Scalar("DateTime")), write = false))
     val doc = QueryBundle.render(routes)
     // bundle document round-trips exactly
     assert(QueryBundle.parse(doc).map { case (k, r) => k -> (r.batch, r.params, r.write) } ==
@@ -233,7 +233,7 @@ class GatewaySpec extends GraftSuite {
       // its first call (a miss) and binds into it on its second (a hit)
       gw.registerQuery("older", Batch(Seq(BatchEntry.Query(NamedQuery(Some("n"),
         g().nWithLabel("ParityUser").where(Predicate.GteExpr("age", Expr.Param("min_age")))
-          .count().t))), returns = Seq("n")), Seq("min_age" -> QueryBundle.Scalar("I64")))
+          .count().t))), returns = Seq("n")), Seq("min_age" -> Json.Scalar("I64")))
       assert(gw.handleStored("older", """{"min_age": 30}""") == """{"n":2}""")
       assert(gw.handleStored("older", """{"min_age": 40}""") == """{"n":1}""")
       val end = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -576,7 +576,7 @@ class GatewaySpec extends GraftSuite {
         g().nWithLabel("ParityUser")
           .where(Predicate.GteExpr("age", Expr.Param("min_age"))).count().t))),
       returns = Seq("n")),
-      params = Seq("min_age" -> QueryBundle.Scalar("I64")))
+      params = Seq("min_age" -> Json.Scalar("I64")))
     val tools = mcpTree(gw,
       """{"jsonrpc":"2.0","id":3,"method":"tools/list"}""")
       .get("result").get("tools")
@@ -607,7 +607,7 @@ class GatewaySpec extends GraftSuite {
         g().nWithLabel("ParityUser")
           .where(Predicate.GteExpr("age", Expr.Param("min_age"))).count().t))),
       returns = Seq("n")),
-      params = Seq("min_age" -> QueryBundle.Scalar("I64")))
+      params = Seq("min_age" -> Json.Scalar("I64")))
     val call = mcpTree(gw,
       """{"jsonrpc":"2.0","id":5,"method":"tools/call",
         "params":{"name":"users_over","arguments":{"min_age":30}}}""")
@@ -1034,6 +1034,49 @@ class GatewaySpec extends GraftSuite {
         assert(code == want && ctype == "application/json", s"$want: $code $ctype $body")
       }
       assert(cases.head._2._3 == """{"n":3}""")
+    } finally gw.stop()
+  }
+
+  test("inline parameter_types coerce like a stored route's, arrays element by element") {
+    import graft.ast._
+    import graft.dsl.Dsl._
+    val s = spark
+    import s.implicits._
+    val events = Seq(
+      (1L, "Event", java.time.LocalDateTime.of(2024, 1, 1, 0, 0)),
+      (2L, "Event", java.time.LocalDateTime.of(2024, 6, 1, 0, 0)),
+    ).toDF("_id", "_label", "at")
+    val port = freePort()
+    val gw = new Gateway(TestBase.parityGraph().withNodes("Event", events), port = port)
+    def batch(param: String) = Batch(Seq(BatchEntry.Query(NamedQuery(Some("n"),
+      g().nWithLabel("Event").where(Predicate.IsInExpr("at", Expr.Param(param))).count().t))),
+      returns = Seq("n"))
+    gw.registerQuery("at_dates", batch("dates"), Seq("dates" -> Json.Arr(Json.Scalar("DateTime"))))
+    gw.registerQuery("at_blobs", batch("blobs"), Seq("blobs" -> Json.Arr(Json.Scalar("Bytes"))))
+    def inline(param: String, ty: String, values: String) =
+      Json.writeRequest(Json.Request(false, None, batch(param), Map.empty))
+        .stripSuffix("}") + s""","parameter_types":{"$param":$ty},"parameters":{"$param":$values}}"""
+    val dates = """["2024-06-01T00:00:00Z","2025-01-01T00:00:00Z"]"""
+    val inlineDates = inline("dates", """{"Array":"DateTime"}""", dates)
+    assert(Json.parseRequest(inlineDates).parameters("dates") == PropertyValue.VArray(Seq(
+      PropertyValue.VDateTime(1717200000000L), PropertyValue.VDateTime(1735689600000L))))
+    gw.start()
+    try {
+      val viaInline = exchange(port, "POST", "/v1/query", Some(inlineDates))
+      val viaStored = exchange(port, "POST", "/v1/query/at_dates", Some(s"""{"dates":$dates}"""))
+      assert((viaInline._1, viaInline._3) == (200, """{"n":1}"""), viaInline)
+      assert((viaStored._1, viaStored._3) == (viaInline._1, viaInline._3), viaStored)
+      // the dynamic route rejects Bytes, inside an array too
+      val blobs = """["AAE="]"""
+      val inlineBlobs = exchange(port, "POST", "/v1/query",
+        Some(inline("blobs", """{"Array":"Bytes"}""", blobs)))
+      val storedBlobs = exchange(port, "POST", "/v1/query/at_blobs", Some(s"""{"blobs":$blobs}"""))
+      for (r <- Seq(inlineBlobs, storedBlobs))
+        assert(r._1 == 400 && r._3.contains("Bytes"), r)
+      // a malformed type answers 400 inline, as a bundle deploy does
+      val malformed = exchange(port, "POST", "/v1/query",
+        Some(inline("dates", """{"List":"DateTime"}""", dates)))
+      assert(malformed._1 == 400 && malformed._3.contains("QueryParamType"), malformed)
     } finally gw.stop()
   }
 }

@@ -108,22 +108,37 @@ class IndexCacheSpec extends GraftSuite {
     val after = Seq((1L, "alpha beta"), (2L, "delta epsilon")).toDF("_id", "text")
     def scores(a: (DataFrame, DataFrame)) =
       BM25.scoreFromIndex(a._1, a._2, "delta").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    def carry(): (Int, Map[Long, Double]) = {
+    def carry(spec: IndexSpec.NodeText, before: DataFrame,
+        after: DataFrame): (Int, (DataFrame, DataFrame)) = {
       val prev = new GraphStore(s, Map("D" -> before), Map.empty, Map.empty).withIndexes(Set(spec))
       val next = prev.withNodes("D", after)
       IndexCache.textIndex(IndexCache.Key(prev.version, spec), before)
       IndexCache.advance(prev, next, appendOnly = true)
       val builds = IndexCache.textBuilds.get()
-      val served = scores(IndexCache.textIndex(IndexCache.Key(next.version, spec), after))
+      val served = IndexCache.textIndex(IndexCache.Key(next.version, spec), after)
       (IndexCache.textBuilds.get() - builds, served)
     }
+    // a tenant-partitioned index: one `_id` moves to another tenant and
+    // keeps its text
+    val tenanted = IndexSpec.NodeText("D", "text", Some("tenant"))
+    val beforeT = Seq((1L, "alpha beta", "t1"), (2L, "beta gamma", "t1"))
+      .toDF("_id", "text", "tenant")
+    val afterT = Seq((1L, "alpha beta", "t1"), (2L, "beta gamma", "t2"))
+      .toDF("_id", "text", "tenant")
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
     try {
       // off (the default): the rewrite passes the count gate and merges
-      assert(carry()._1 == 0)
+      assert(carry(spec, before, after)._1 == 0)
+      assert(carry(tenanted, beforeT, afterT)._1 == 0)
       spark.conf.set("graft.index.verifyAppendContent", "true")
-      val (rebuilds, served) = carry()
+      val (rebuilds, served) = carry(spec, before, after)
       assert(rebuilds == 1, "the content check must force a rebuild, not a merge")
-      assert(served == scores(BM25.buildIndex(after, "text")) && served.keySet == Set(2L))
+      assert(scores(served) == scores(BM25.buildIndex(after, "text")) &&
+        scores(served).keySet == Set(2L))
+      val (rebuildsT, servedT) = carry(tenanted, beforeT, afterT)
+      assert(rebuildsT == 1, "a tenant move must force a rebuild, not a merge")
+      val fresh = BM25.buildIndex(afterT, "text", Some("tenant"))
+      assert(rows(servedT._1) == rows(fresh._1) && rows(servedT._2) == rows(fresh._2))
     } finally {
       spark.conf.unset("graft.index.verifyAppendContent")
       IndexCache.evictOthers("none")

@@ -53,7 +53,7 @@ class QueryRunnerSpec extends GraftSuite {
     val bundlePath = s"$dir/queries.json"
     Files.writeString(Paths.get(bundlePath), QueryBundle.render(Map(
       "users_over" -> QueryBundle.StoredRoute(batch,
-        Seq("min_age" -> QueryBundle.Scalar("I64")), write = false))))
+        Seq("min_age" -> Json.Scalar("I64")), write = false))))
     assert(QueryRunner.run(spark, Seq("--store", dir, "--bundle", bundlePath,
       "--name", "users_over", "--json", """{"min_age": 30}""")) == """{"n":2}""")
   }

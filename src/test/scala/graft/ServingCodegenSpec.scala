@@ -49,7 +49,7 @@ class ServingCodegenSpec extends GraftSuite with AdaptiveSparkPlanHelper {
     val gw = new Gateway(TestGraph(spark, dir))
     gw.registerQuery("cust_point",
       graft.ast.Json.parseRequest(read("c", pointSteps)).batch,
-      Seq("key" -> QueryBundle.Scalar("I64")))
+      Seq("key" -> graft.ast.Json.Scalar("I64")))
     assert(gw.handleStored("cust_point", """{"key":1}""").contains("Customer#"))
     val (answers, n) = compilesIn((10 until 20).map(k =>
       gw.handleStored("cust_point", s"""{"key":$k}""")))

@@ -139,9 +139,8 @@ class SuffixDedupSpec extends GraftSuite {
     val s = spark
     import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-suffix").toString
-    s.conf.set("graft.suffix.scratchDir", dir)
-    s.conf.set("graft.suffix.spillRowThreshold", "0")
-    s.conf.set("graft.suffix.keepScratch", "true")
+    s.conf.set("graft.scratch.dir", dir)
+    s.conf.set("graft.scratch.keep", "true")
     try {
       val docs = randomDocs(43, nDocs = 6, maxLen = 18)
       val got = SuffixDedup.maximalRepeats(docs.toDF("doc_id", "text"),
@@ -156,18 +155,21 @@ class SuffixDedupSpec extends GraftSuite {
       assert(frames.exists(p => p.contains("/frame_") && p.endsWith(".parquet")),
         "frames must be parquet")
 
-      // default lifecycle: the per-run directory is removed on release
-      s.conf.set("graft.suffix.keepScratch", "false")
+      // default lifecycle: release removes the level frames at once;
+      // the stable result goes once the collected frame is unreachable
+      s.conf.set("graft.scratch.keep", "false")
       val dir2 = java.nio.file.Files.createTempDirectory("graft-suffix2").toString
-      s.conf.set("graft.suffix.scratchDir", dir2)
+      s.conf.set("graft.scratch.dir", dir2)
       SuffixDedup.maximalRepeats(docs.toDF("doc_id", "text"),
         "text", "doc_id", n = 3).collect()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (Option(new java.io.File(dir2).listFiles()).exists(_.nonEmpty) &&
+          System.nanoTime() < deadline) { System.gc(); Thread.sleep(100) }
       val left = new java.io.File(dir2).listFiles()
       assert(left == null || left.isEmpty, s"run dir not cleaned: ${left.toSeq}")
     } finally {
-      s.conf.unset("graft.suffix.scratchDir")
-      s.conf.unset("graft.suffix.spillRowThreshold")
-      s.conf.unset("graft.suffix.keepScratch")
+      s.conf.unset("graft.scratch.dir")
+      s.conf.unset("graft.scratch.keep")
     }
   }
 

@@ -28,7 +28,7 @@ class PreparedRouteSpec extends GraftSuite {
   private val byKey = g().nWithLabelWhere("Customer", Predicate.EqExpr("c_custkey", Expr.Param("key")))
   private val point = batchOf("c", byKey.values("c_custkey", "c_name", "c_acctbal"))
   private val hop = batchOf("o", byKey.out("PLACED").values("o_orderkey", "o_totalprice"))
-  private val keyTy = Seq("key" -> QueryBundle.Scalar("I64"))
+  private val keyTy = Seq("key" -> Json.Scalar("I64"))
 
   private def lookups(): Gateway = {
     val gw = new Gateway(TestGraph(spark, dir))
